@@ -130,7 +130,7 @@ def main() -> int:
         metrics = {k: result["metrics"][k] for k in common.END_TO_END}
     print(
         f"# {a.workload} seed {a.seed}: {result['op_samples']} warm op samples, "
-        f"set-ups {[round(s, 3) for s in result['setup_times_s']]}, "
+        f"set-up {result['setup_s']:.3f} s, "
         f"passes {[round(s, 3) for s in result['passes_s']]}",
         file=sys.stderr,
     )

@@ -26,12 +26,11 @@ import traceback
 import common
 import spans as tr
 
-SETUPS = 3  # the cold set-up plus two session restarts in the same JVM
 PROBES = 5
 # a run measures for --seconds and for at least this many samples, so each
 # median is taken over enough values to drop one disturbed sample
 MIN_PASSES = 3
-MIN_UPDATES = 2
+MIN_UPDATES = 3
 WARMUP_PASSES = 3
 
 
@@ -90,31 +89,24 @@ class Client:
         self.conf = _session_conf(a, sf_dir)
         self.attempted = 0
         self.failed = 0
-        self.setup_times: list[float] = []
+        self.setup_s = 0.0
         self.spark = None
 
     def setup(self) -> None:
-        """``SETUPS`` session set-ups; the first is timed from process start."""
+        """The session set-up, timed from the start of the process."""
         from science_datalake_spark.catalog import bootstrap_session, register_views
         from science_datalake_spark.session import get_spark
 
         tracer = self.tracer
         tracer.phase = "setup"
-        for i in range(SETUPS):
-            t = time.perf_counter()
-            if self.spark is not None:
-                self.spark.stop()
-            with tracer.span("session.get_spark"):
-                self.spark = get_spark("perfbench", **self.conf)
-            tracer.bind(self.spark)
-            if self.sf_dir is not None:
-                with tracer.span("catalog.register_views"):
-                    bootstrap_session(self.spark, self.sf_dir)
-                    register_views(self.spark, self.sf_dir)
-            if i == 0:
-                self.setup_times.append(time.time() - self.a.t0)
-            else:
-                self.setup_times.append(time.perf_counter() - t)
+        with tracer.span("session.get_spark"):
+            self.spark = get_spark("perfbench", **self.conf)
+        tracer.bind(self.spark)
+        if self.sf_dir is not None:
+            with tracer.span("catalog.register_views"):
+                bootstrap_session(self.spark, self.sf_dir)
+                register_views(self.spark, self.sf_dir)
+        self.setup_s = time.time() - self.a.t0
 
     def record(self, ok: bool) -> None:
         self.attempted += 1
@@ -124,8 +116,7 @@ class Client:
         spans = self.tracer.spans
         out = {}
         for name in ("session.get_spark", "catalog.register_views"):
-            d = [s["end"] - s["start"] for s in spans if s["name"] == name]
-            out[f"{name}_s"] = statistics.median(d) if d else 0.0
+            out[f"{name}_s"] = sum(s["end"] - s["start"] for s in spans if s["name"] == name)
         return out
 
 
@@ -494,7 +485,7 @@ def main() -> None:
     client, e2e, traced = runner(a)
     attempted, failed = client.attempted, client.failed
     metrics = {
-        "setup_s": (statistics.median(client.setup_times), "s"),
+        "setup_s": (client.setup_s, "s"),
         "mix_warm_s": (e2e["mix_warm_s"], "s"),
         "ok_frac": ((attempted - failed) / attempted if attempted else 0.0, "ratio"),
     }
@@ -504,7 +495,7 @@ def main() -> None:
         "failed": failed,
         "metrics": {k: {"value": v, "unit": u} for k, (v, u) in metrics.items()},
         "op_samples": e2e["op_samples"],
-        "setup_times_s": client.setup_times,
+        "setup_s": client.setup_s,
         "passes_s": traced["detail"].get("warm_passes") or traced["detail"].get("updates_s"),
     }
     if a.trace:
