@@ -128,6 +128,10 @@ def train_quality_model(
         standardization=False,
     )
     model = lr.fit(feats)
+    # Drop the unread training summary: it holds the SparkSession, which the
+    # scoring closure then carries, and after an Observation (sinks' verified
+    # writes) Spark 4.1 cannot serialize a session (see sources/sinks.py).
+    model._java_obj.setSummary(feats.sparkSession._jvm.scala.Option.apply(None))
     return QualityModel(model, text_col, num_features, ngram)
 
 

@@ -4,10 +4,11 @@ materialize) as a single-session Spark job graph.
 
 Stages:
 1. ingest: NDJSON source dirs → parquet shards (incremental, checkpointed)
-2. compact: merge small shards (count-verified atomic swap)
-3. catalog: register views over the converted tables
+2. compact: merge NEW shards holding more than one data file (count-verified
+   atomic swap); a single-file shard is already compact and stays untouched
+3. read: all shards, after crash recovery of any half-swapped compaction
 4. materialize: unified papers + fulltext dedup → verified parquet
-5. validate: sanity suite over the materialized outputs
+5. validate: the core sanity checks, one action over the read-back table
 
 The reference runs these as subprocesses with per-process DuckDB budgets;
 here they are one SparkSession with lazy plans materialized at write
@@ -24,7 +25,7 @@ from pyspark.sql import SparkSession
 from science_datalake_spark import sanity
 from science_datalake_spark.fulltext import unify_fulltext
 from science_datalake_spark.sources.incremental import IncrementalJsonIngest
-from science_datalake_spark.sources.sinks import compact, write_parquet
+from science_datalake_spark.sources.sinks import compact, data_file_count, write_parquet
 from science_datalake_spark.unify import build_unified_papers
 
 
@@ -45,7 +46,6 @@ def run_pipeline(
     source_dirs: dict[str, str],
     work_dir: str,
     schemas: dict[str, str] | None = None,
-    compact_after: bool = True,
 ) -> PipelineResult:
     """``source_dirs``: logical name → NDJSON directory for the three big
     sources ('openalex', 's2ag', 'sciscinet') plus optional 'retractions',
@@ -65,14 +65,13 @@ def run_pipeline(
             schema=schemas.get(name),
         )
         os.makedirs(os.path.dirname(ing.checkpoint_path), exist_ok=True)
-        ingest_result = ing.run()
-        if compact_after:
-            # only NEWLY converted shards — re-compacting unchanged shards
-            # would turn an incremental no-op run into a full-data rewrite
-            for fname in ingest_result.converted:
-                shard = os.path.join(out, ing._shard_name(fname))
-                if os.path.isdir(shard):
-                    compact(spark, shard, target_files=1)
+        # compact only NEW shards (re-compacting the rest would make a no-op
+        # run a full rewrite) written as several files: rewriting one file
+        # into one file costs a verified write and changes nothing
+        for fname in ing.run().converted:
+            shard = os.path.join(out, ing._shard_name(fname))
+            if os.path.isdir(shard) and data_file_count(shard) > 1:
+                compact(spark, shard, target_files=1)
         df = ing.read_all()
         tables[name] = df
         result.ingested_rows[name] = df.count()

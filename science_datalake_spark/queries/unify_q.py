@@ -2,18 +2,19 @@
 
 ``build_unified_papers`` (unify.py) is the engine's re-expression of the
 reference's defining job (materialize_unified_papers.py: per-source DOI
-normalization → top-1-per-DOI window dedup → distinct spine → 6-way
-left-join fan-in → coverage flags). The testdata has no paper tables, so
-the three source shapes are synthesized DETERMINISTICALLY from the TPC-H
-tables over a shared DOI key domain (overlapping moduli → every coverage
-combination occurs, duplicate keys → the dedup windows do real work, a
-NULL/short-DOI band → the junk filter does real work), and the DuckDB
-oracle replays the identical pipeline relationally: synth → regex clean →
-validity filter → row_number dedup → spine → joins → 2^5 coverage UpSet.
+normalization → top-1-per-DOI dedup → 6-way DOI fan-in → coverage flags;
+here one groupBy-argmin shuffle does dedup and fan-in). The testdata has
+no paper tables, so the three source shapes are synthesized
+DETERMINISTICALLY from the TPC-H tables over a shared DOI key domain
+(overlapping moduli → every coverage combination occurs, duplicate keys
+→ the dedup does real work, a NULL/short-DOI band → the junk filter does
+real work), and the DuckDB oracle replays the identical pipeline
+relationally: synth → regex clean → validity filter → row_number dedup →
+spine → joins → 2^5 coverage UpSet.
 
 Dialect notes (memory'd gotchas): DOUBLE→BIGINT casts round in DuckDB but
 truncate in Spark, so citation counts go through an explicit floor() on
-both sides; every window order carries a unique id tiebreak.
+both sides; every dedup order carries a unique id tiebreak.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from science_datalake_spark.catalog import table
 from science_datalake_spark.functions import synth_doi
 from science_datalake_spark.queries import query
-from science_datalake_spark.unify import build_unified_papers_grouped, coverage_upset
+from science_datalake_spark.unify import build_unified_papers, coverage_upset
 
 #: Shared DOI key domains: oa 0..599, s2 0..399, sci 100..599 — pairwise
 #: overlaps and per-source exclusives, so all flag combinations appear.
@@ -231,9 +232,7 @@ def _synth_unified(spark: SparkSession, sf_dir: str) -> DataFrame:
         synth_doi((F.col("s_suppkey") * 7) % _OA_MOD, F.lit("p")).alias("doi")
     )
 
-    # the one-shuffle grouped strategy (equality-tested against the
-    # windowed build in tests/test_unify.py): fewer stages, same rows
-    u = build_unified_papers_grouped(
+    u = build_unified_papers(
         oa, s2, sci, retractions=rw, code_links=pwc
     ).persist()
     while _UNIFIED_CACHE and len(_UNIFIED_CACHE) >= _UNIFIED_CACHE_CAP:
@@ -256,8 +255,8 @@ def unify_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Coverage-flag UpSet of the flagship 6-way unification over synthetic
     source shapes derived from the testdata spine (see module docstring).
     Exercises the full materialization path end-to-end: clean_doi on three
-    wild formats, the junk-DOI filter, per-source top-1 windows, the
-    distinct spine, broadcast existence dims, and the 2^5 rollup
+    wild formats, the junk-DOI filter, the per-source top-1 argmin
+    fan-in, broadcast existence dims, and the 2^5 rollup
     (materialize_unified_papers.py:502-509)."""
     return coverage_upset(_synth_unified(spark, sf_dir))
 

@@ -106,12 +106,18 @@ class IncrementalJsonIngest:
         return IngestResult(converted=converted, skipped=skipped, rows_written=rows)
 
     def read_all(self):
-        """All shards as one DataFrame (schema union across shards)."""
+        """All shards as one DataFrame (schema union across shards). A
+        crash in ``sinks.compact``'s swap can leave a converted shard only
+        in ``__old-*``/``__compact-*`` orphans; those shards are recovered
+        first (``sinks.recover_shard`` raises if one cannot be)."""
+        from science_datalake_spark.sources.json_source import read_parquet_merged
+        from science_datalake_spark.sources.sinks import orphaned_shards, recover_shard
+
+        for shard in orphaned_shards(self.output_dir):
+            recover_shard(shard)
         shards = [
             os.path.join(self.output_dir, d)
             for d in sorted(os.listdir(self.output_dir))
             if d.endswith(".parquet")
         ]
-        from science_datalake_spark.sources.json_source import read_parquet_merged
-
         return read_parquet_merged(self.spark, shards)

@@ -15,21 +15,39 @@ coalesces to 1 task, only for small dims. Atomicity: Spark's commit
 protocol stages to ``_temporary`` and renames on job commit, so the
 reference's hand-rolled tmp-dance is only needed for the REPLACE step of
 compaction, where we keep it (write-new → verify → swap).
+
+Verification contract (``write_parquet``, ``compact``): an ``Observation``
+counts the rows the plan hands to the writer, in the write's own job; the
+written files are read back and counted, and any difference raises
+``RuntimeError`` (``compact`` then does not swap). A separate ``count()``
+would re-run the whole plan being written just to check it. Spark 4.1
+caveat: after its first Observation a session can no longer be serialized
+(``SparkSession.observationManager`` is not transient), so nothing may
+carry the session into a task closure (see quality_model's LR summary).
 """
 
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 #: Row-group byte targets per table shape (parquet.block.size).
 ROW_GROUP_FAT_TEXT = 8 * 1024 * 1024
 ROW_GROUP_DEFAULT = 128 * 1024 * 1024
+#: ``compact``'s tmp (``__compact-``) and backup (``__old-``) dirs of a shard.
+_ORPHAN = re.compile(r"(.+)__(?:old|compact)-[0-9a-f]+$")
+
+
+def _observe_rows(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with a row counter riding along its next action."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
 def write_parquet(
@@ -38,21 +56,21 @@ def write_parquet(
     compression: str = "zstd",
     row_group_bytes: int = ROW_GROUP_DEFAULT,
     single_file: bool = False,
-    verify: bool = True,
 ) -> int:
-    """Write + optional count verification. Returns the verified row count
-    (recount from the written files, like the reference's post-COPY check)."""
-    out = df.coalesce(1) if single_file else df
+    """Write + count verification. Returns the verified row count: the rows
+    read back from the written files, which must equal the rows observed
+    flowing into the write (else ``RuntimeError``)."""
+    out, obs = _observe_rows(df)
+    if single_file:
+        out = out.coalesce(1)
     (
         out.write.mode("overwrite")
         .option("compression", compression)
         .option("parquet.block.size", str(row_group_bytes))
         .parquet(path)
     )
-    if not verify:
-        return -1
     written = df.sparkSession.read.parquet(path).count()
-    expected = df.count()
+    expected = obs.get["rows"]
     if written != expected:
         raise RuntimeError(f"write verification failed: {written} != {expected}")
     return written
@@ -88,53 +106,78 @@ def write_parquet_partitioned(
     )
 
 
-def compact(
-    spark: SparkSession,
-    shard_dir: str,
-    target_files: int = 1,
-    compression: str = "zstd",
-) -> int:
-    """Merge a shard directory in place: count → write compacted copy →
-    verify count → atomic swap; orphaned tmp dirs from a crash are
-    recovered or removed first (the reference's recovery path,
-    convert_openalex.py:1536-1552). Refuses to swap on count mismatch.
+def data_file_count(table_dir: str) -> int:
+    """Data files directly in a parquet table directory (Spark's commit
+    markers and checksum files — ``_``/``.``-prefixed — excluded)."""
+    return sum(1 for f in os.listdir(table_dir) if not f.startswith(("_", ".")))
+
+
+def orphaned_shards(parent: str) -> list[str]:
+    """Shards under ``parent`` with ``compact`` orphans beside them or in
+    their place (``<shard>__old-*``/``<shard>__compact-*``)."""
+    found = {m.group(1) for d in os.listdir(parent) if (m := _ORPHAN.match(d))}
+    return [os.path.join(parent, b) for b in sorted(found)]
+
+
+def recover_shard(shard_dir: str) -> None:
+    """Crash recovery for ``compact``'s swap (the reference's recovery
+    path, convert_openalex.py:1536-1552): restore a missing ``shard_dir``
+    from its orphan, then delete the remaining ``__old-*``/``__compact-*``
+    orphans. Raises ``FileNotFoundError`` if the shard is missing and no
+    orphan can take its place.
 
     Crash windows: a crash between the two swap renames leaves NO
     shard_dir — the data survives only in ``__old-*`` (the original) or
     ``__compact-*`` (the verified copy). Recovery must therefore rename an
     orphan back into place BEFORE deleting orphans; unconditionally
     deleting them first would destroy the only copies."""
-    parent = os.path.dirname(shard_dir.rstrip("/"))
+    parent = os.path.dirname(shard_dir.rstrip("/")) or "."
     base = os.path.basename(shard_dir.rstrip("/"))
     # tmp/backup names must NOT start with '.' — Spark's hidden-path filter
     # refuses to read dot-prefixed directories even as the read root
+    orphans = [
+        s
+        for s in sorted(os.listdir(parent))
+        if s.startswith(f"{base}__old-") or s.startswith(f"{base}__compact-")
+    ]
     if not os.path.exists(shard_dir):
         # prefer the original (__old-*) — it is always complete; a
         # __compact-* orphan may predate its count verification
-        candidates = sorted(
-            s for s in os.listdir(parent or ".") if s.startswith(f"{base}__old-")
-        ) or sorted(
-            s for s in os.listdir(parent or ".") if s.startswith(f"{base}__compact-")
-        )
+        candidates = [s for s in orphans if s.startswith(f"{base}__old-")] or orphans
         if not candidates:
             raise FileNotFoundError(
                 f"{shard_dir} missing and no __old-/__compact- orphan to recover"
             )
         os.rename(os.path.join(parent, candidates[0]), shard_dir)
-    for stale in os.listdir(parent or "."):
-        if stale.startswith(f"{base}__compact-") or stale.startswith(f"{base}__old-"):
-            shutil.rmtree(os.path.join(parent, stale), ignore_errors=True)
+        orphans.remove(candidates[0])
+    for stale in orphans:
+        shutil.rmtree(os.path.join(parent, stale), ignore_errors=True)
 
-    src = spark.read.parquet(shard_dir)
-    expected = src.count()
+
+def compact(
+    spark: SparkSession,
+    shard_dir: str,
+    target_files: int = 1,
+    compression: str = "zstd",
+) -> int:
+    """Merge a shard directory in place: write compacted copy (rows
+    observed on the way) → verify the read-back count → atomic swap;
+    orphaned tmp dirs from a crash are recovered or removed first
+    (``recover_shard``). Refuses to swap on count mismatch."""
+    recover_shard(shard_dir)
+    parent = os.path.dirname(shard_dir.rstrip("/"))
+    base = os.path.basename(shard_dir.rstrip("/"))
+    # observed AFTER the shuffle: the counter sits in the write stage,
+    # whose task results are applied once per partition
+    out, obs = _observe_rows(spark.read.parquet(shard_dir).repartition(target_files))
     tmp = os.path.join(parent, f"{base}__compact-{uuid.uuid4().hex[:8]}")
     (
-        src.repartition(target_files)
-        .write.mode("overwrite")
+        out.write.mode("overwrite")
         .option("compression", compression)
         .parquet(tmp)
     )
     actual = spark.read.parquet(tmp).count()
+    expected = obs.get["rows"]
     if actual != expected:
         shutil.rmtree(tmp, ignore_errors=True)
         raise RuntimeError(f"compaction verification failed: {actual} != {expected}")

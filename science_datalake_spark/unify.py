@@ -4,19 +4,20 @@ Re-expresses the reference's ``materialize_unified_papers.py`` as one
 declarative DataFrame job:
 
 1. per-source DOI normalization + junk filter (``:80-124``)
-2. per-source window dedup — top-1 per DOI by citation priority (``:126-264``)
-3. distinct-DOI spine + left-join fan-in (``:266-407``)
+2. per-source dedup — top-1 per DOI by citation priority (``:126-264``)
+3. fan-in of the three sources on DOI (``:266-407``)
 4. COALESCE source-preference columns + coverage flags (``:348-396``)
 
 Scale design (the reference does this at 293M output rows / 588M inputs):
-- null/short DOIs filtered BEFORE the dedup windows (kills the null-key
-  skew bucket; reference line :116).
-- every per-source dedup and the fan-in join shuffle on the SAME key
-  (doi), so Spark reuses the partitioning across stages where possible.
-- small sources (retractions ~60K, code links ~141K) broadcast — the
-  6-way join then costs one shuffle of each big side, nothing more.
-- deterministic tie-breaks (unique id appended to every window order) so
-  golden counts reproduce under any parallelism (SURVEY §7.4).
+- null/short DOIs filtered BEFORE the dedup (kills the null-key skew
+  bucket; reference line :116).
+- steps 2 and 3 are ONE shuffle: the keyed sources union into one tall
+  relation and a single ``groupBy(doi)`` takes each source's top-1 row
+  with an argmin aggregate (map-side partial ``min_by``) — no per-source
+  window sort, no spine distinct, no fan-in joins.
+- small sources (retractions ~60K, code links ~141K) broadcast.
+- deterministic tie-breaks (unique id in every dedup order) so golden
+  counts reproduce under any parallelism (SURVEY §7.4).
 """
 
 from __future__ import annotations
@@ -25,11 +26,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from science_datalake_spark.functions import clean_doi
-from science_datalake_spark.operators.windows import top1_per_key
 
 
 def _keyed(df: DataFrame, doi_col: str) -> DataFrame:
-    """Normalize + filter the DOI key (junk/null rows never reach windows).
+    """Normalize + filter the DOI key (junk/null rows never reach the dedup).
 
     Filter order matters for CPU, not just semantics: a filter on the
     CLEANED column gets the whole clean_doi expression inlined per
@@ -49,6 +49,7 @@ def _keyed(df: DataFrame, doi_col: str) -> DataFrame:
 
 
 def _openalex_keyed(works: DataFrame) -> DataFrame:
+    """OpenAlex-shaped input: url-prefixed ids, https-prefixed DOIs."""
     return _keyed(
         works.select(
             F.col("id").alias("openalex_id"),
@@ -62,16 +63,9 @@ def _openalex_keyed(works: DataFrame) -> DataFrame:
     ).drop("raw_doi")
 
 
-def prepare_openalex(works: DataFrame) -> DataFrame:
-    """OpenAlex-shaped input: url-prefixed ids, https-prefixed DOIs."""
-    return top1_per_key(
-        _openalex_keyed(works),
-        keys=["doi"],
-        order=[F.desc_nulls_last("oa_cited_by_count"), F.asc("openalex_id")],
-    )
-
-
 def _s2ag_keyed(papers: DataFrame) -> DataFrame:
+    """S2AG-shaped input: corpusid PK, DOI nested at externalids.DOI
+    (struct projection P1, create_unified_db.py:81-90)."""
     return _keyed(
         papers.select(
             F.col("corpusid"),
@@ -84,17 +78,8 @@ def _s2ag_keyed(papers: DataFrame) -> DataFrame:
     ).drop("raw_doi")
 
 
-def prepare_s2ag(papers: DataFrame) -> DataFrame:
-    """S2AG-shaped input: corpusid PK, DOI nested at externalids.DOI
-    (struct projection P1, create_unified_db.py:81-90)."""
-    return top1_per_key(
-        _s2ag_keyed(papers),
-        keys=["doi"],
-        order=[F.desc_nulls_last("s2_citationcount"), F.asc("corpusid")],
-    )
-
-
 def _sciscinet_keyed(metrics: DataFrame) -> DataFrame:
+    """SciSciNet-shaped input: bare W-ids, https-prefixed DOIs, metrics."""
     return _keyed(
         metrics.select(
             F.col("paperid").alias("sci_paperid"),
@@ -108,15 +93,6 @@ def _sciscinet_keyed(metrics: DataFrame) -> DataFrame:
     ).drop("raw_doi")
 
 
-def prepare_sciscinet(metrics: DataFrame) -> DataFrame:
-    """SciSciNet-shaped input: bare W-ids, https-prefixed DOIs, metrics."""
-    return top1_per_key(
-        _sciscinet_keyed(metrics),
-        keys=["doi"],
-        order=[F.desc_nulls_last("sci_citation_count"), F.asc("sci_paperid")],
-    )
-
-
 def build_unified_papers(
     oa: DataFrame,
     s2: DataFrame,
@@ -124,123 +100,39 @@ def build_unified_papers(
     retractions: DataFrame | None = None,
     code_links: DataFrame | None = None,
 ) -> DataFrame:
-    """The 6-way DOI fan-in with coverage flags.
+    """The 6-way DOI fan-in with coverage flags, in ONE shuffle.
+
+    The three keyed sources union into one tall relation tagged by
+    source, and a single ``groupBy(doi)`` computes each source's
+    top-1-by-citation row (``desc_nulls_last(citation), asc(id)``) as
+    ``min_by(struct(cols), order_key)``. ``order_key`` encodes that order
+    as an ascending struct ``(null_flag, nan_flag, -citation_as_double,
+    id)`` — see ``_ord`` for why each field exists; rows from other
+    sources carry a NULL order key, which min_by ignores, so a DOI absent
+    from a source gets a NULL struct exactly like a left join would.
 
     ``retractions`` needs a ``original_paper_doi`` column; ``code_links``
     a ``doi`` column. Both are treated as broadcast-sized dims.
-    """
-    oa_k = prepare_openalex(oa)
-    s2_k = prepare_s2ag(s2)
-    sci_k = prepare_sciscinet(sci)
 
-    # The spine derives from the WINDOWED frames on purpose: top-1-per-DOI
-    # keeps exactly one row per distinct DOI, so building it from the
-    # pre-window keyed frames would be semantically identical — but the
-    # shared subplan here lets Spark reuse each source's window exchange
-    # between the spine and its fan-in join (measured: the "cheaper"
-    # pre-window spine more than doubled the job by recomputing every
-    # source prep, 3.5s → 8s at sf0.1).
-    spine = (
-        oa_k.select("doi")
-        .unionByName(s2_k.select("doi"))
-        .unionByName(sci_k.select("doi"))
-        .distinct()
-    )
-
-    unified = (
-        spine.join(oa_k, "doi", "left")
-        .join(s2_k, "doi", "left")
-        .join(sci_k, "doi", "left")
-    )
-
-    if retractions is not None:
-        rw = (
-            _keyed(retractions, "original_paper_doi")
-            .select("doi")
-            .distinct()
-            .withColumn("rw_hit", F.lit(True))
-        )
-        unified = unified.join(F.broadcast(rw), "doi", "left")
-    else:
-        unified = unified.withColumn("rw_hit", F.lit(None).cast("boolean"))
-
-    if code_links is not None:
-        pwc = (
-            _keyed(code_links, "doi")
-            .select("doi")
-            .distinct()
-            .withColumn("pwc_hit", F.lit(True))
-        )
-        unified = unified.join(F.broadcast(pwc), "doi", "left")
-    else:
-        unified = unified.withColumn("pwc_hit", F.lit(None).cast("boolean"))
-
-    return unified.select(
-        "doi",
-        F.coalesce("oa_title", "s2_title").alias("title"),
-        F.coalesce("oa_year", "s2_year").alias("year"),
-        "openalex_id",
-        "corpusid",
-        "sci_paperid",
-        "oa_cited_by_count",
-        "s2_citationcount",
-        "sci_citation_count",
-        "disruption",
-        F.col("openalex_id").isNotNull().alias("has_openalex"),
-        F.col("corpusid").isNotNull().alias("has_s2ag"),
-        F.col("sci_paperid").isNotNull().alias("has_sciscinet"),
-        F.coalesce(F.col("pwc_hit"), F.lit(False)).alias("has_pwc"),
-        F.coalesce(F.col("rw_hit"), F.lit(False)).alias("has_retraction"),
-        # OR of both signals: an OpenAlex false must not mask a Retraction
-        # Watch hit (OA lags RW), or is_retracted would contradict
-        # has_retraction on the same row
-        (
-            F.coalesce("oa_is_retracted", F.lit(False))
-            | F.coalesce(F.col("rw_hit"), F.lit(False))
-        ).alias("is_retracted"),
-    )
-
-
-def build_unified_papers_grouped(
-    oa: DataFrame,
-    s2: DataFrame,
-    sci: DataFrame,
-    retractions: DataFrame | None = None,
-    code_links: DataFrame | None = None,
-) -> DataFrame:
-    """``build_unified_papers`` with a ONE-SHUFFLE physical strategy.
-
-    Identical output (tests assert row-for-row equality with the windowed
-    build): the three keyed sources union into one tall relation tagged by
-    source, and a single ``groupBy(doi)`` computes each source's
-    top-1-by-citation row as ``min_by(struct(cols), order_key)`` — the
-    argmin aggregate replaces three window sorts, the spine distinct, and
-    three fan-in joins. ``order_key`` encodes ``desc_nulls_last(citation),
-    asc(id)`` as an ascending struct ``(null_flag, nan_flag,
-    -citation_as_double, id)`` — see ``_ord`` for why each field exists;
-    rows from other sources carry a NULL order key, which min_by ignores,
-    so absence falls out as a NULL struct exactly like a left join.
-
-    Scale: each source is scanned once and shuffled ONCE on doi (map-side
-    partial min_by), vs the windowed build's shuffle+sort per source plus
-    the spine/join stages. The windowed build remains the
-    reference-shaped implementation (W1 pattern); this is the plan to
-    reach for when the fan-in dominates a pipeline.
+    Scale: each source is scanned once and shuffled ONCE on doi. The
+    reference-shaped plan (window top-1 per source, distinct spine, three
+    fan-in joins) gives the same rows and was 3x slower at 2M OpenAlex
+    rows (BENCH_NOTES.md); tests/test_unify.py keeps it as the equality
+    reference.
     """
     def _ord(cite: str, ident: str) -> F.Column:
         # encodes desc_nulls_last(citation), asc(id) as an ASCENDING
         # struct: a null flag first (nulls rank last, no sentinel value a
-        # real citation could collide with), then a NaN class flag (the
-        # windowed desc order ranks NaN strictly ABOVE +inf, and no
+        # real citation could collide with), then a NaN class flag (a
+        # desc sort order ranks NaN strictly ABOVE +inf, and no
         # double can sort below -inf, so NaN gets its own leading field
         # instead of a -inf sentinel that +inf citations would tie with),
         # then the NEGATED citation as DOUBLE — double, not long: a long
-        # cast truncates fractional citation metrics and could pick a
-        # different top-1 row than the windowed build (review finding;
-        # doubles are exact for integer citations < 2^53, far beyond any
-        # real citation count). The id keeps its NATIVE type — casting a
-        # numeric id to string would order "10" before "9" and silently
-        # diverge from asc(id).
+        # cast truncates fractional citation metrics and would pick the
+        # wrong top-1 row (doubles are exact for integer citations < 2^53,
+        # far beyond any real citation count). The id keeps its NATIVE
+        # type — casting a numeric id to string would order "10" before
+        # "9" and silently diverge from asc(id).
         cd = F.col(cite).cast("double")
         return F.struct(
             F.when(F.col(cite).isNull(), 1).otherwise(0).alias("n"),
@@ -252,7 +144,7 @@ def build_unified_papers_grouped(
     # Each source's half carries its columns in their NATIVE types; the
     # union pads every frame's missing columns as typed NULLs derived from
     # the owning frame's actual schema, so no hardcoded cast can diverge
-    # from what build_unified_papers would have passed through.
+    # from the source column types.
     oa_t = _openalex_keyed(oa).select(
         "doi",
         F.struct(
@@ -354,7 +246,6 @@ def materialize_unified_papers(
     retractions: DataFrame | None = None,
     code_links: DataFrame | None = None,
     view_name: str = "unified_papers",
-    grouped: bool = True,
 ) -> DataFrame:
     """Build the unified table ONCE, write it doi-clustered to parquet,
     register it as a catalog view, and return the read-back DataFrame —
@@ -375,10 +266,11 @@ def materialize_unified_papers(
     """
     from science_datalake_spark.sources.sinks import write_parquet
 
-    build = build_unified_papers_grouped if grouped else build_unified_papers
-    unified = build(oa, s2, sci, retractions=retractions, code_links=code_links)
+    unified = build_unified_papers(
+        oa, s2, sci, retractions=retractions, code_links=code_links
+    )
     clustered = unified.repartitionByRange(F.col("doi")).sortWithinPartitions("doi")
-    write_parquet(clustered, out_path, verify=True)
+    write_parquet(clustered, out_path)
     out = spark.read.parquet(out_path)
     out.createOrReplaceTempView(view_name)
     return out

@@ -45,6 +45,18 @@ def test_quality_model_separates_heldout_classes(spark):
             assert r["quality_prob"] < 0.5 and not r["model_keep"], r
 
 
+def test_quality_model_scores_after_observed_write(spark, tmp_path):
+    """A verified write observes its row count, which leaves the session
+    unserializable on Spark 4.1; a model trained afterwards must still
+    score (it must not carry the session into task closures)."""
+    from science_datalake_spark.sources.sinks import write_parquet
+
+    assert write_parquet(spark.range(3), str(tmp_path / "w.parquet")) == 3
+    d = _labeled(spark, n=20)
+    model = train_quality_model(d, "label", num_features=1 << 10)
+    assert len(score_quality(model, d).collect()) == 40
+
+
 def test_quality_scoring_is_map_only(spark):
     """Scoring must add no join/exchange: the model rides the closure and
     every stage is a narrow transform — the 100 TB contract."""

@@ -117,6 +117,82 @@ def test_compact_recovers_from_crash_between_renames(spark, tmp_path):
     assert spark.read.parquet(out).count() == 500
 
 
+def _skew_readback(monkeypatch, path_marker: str) -> None:
+    """Make every parquet read whose path contains ``path_marker`` return
+    one row fewer than the files hold — a corrupt write as the read-back
+    sees it."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    real = DataFrameReader.parquet
+
+    def skewed(self, *paths, **kw):
+        df = real(self, *paths, **kw)
+        if any(path_marker in str(p) for p in paths):
+            return df.limit(max(df.count() - 1, 0))
+        return df
+
+    monkeypatch.setattr(DataFrameReader, "parquet", skewed)
+
+
+def test_write_parquet_raises_when_readback_differs(spark, tmp_path, monkeypatch):
+    out = str(tmp_path / "w.parquet")
+    df = spark.range(300).withColumn("k", F.col("id") % 5)
+    _skew_readback(monkeypatch, "w.parquet")
+    with pytest.raises(RuntimeError, match="write verification failed: 299 != 300"):
+        write_parquet(df.filter(F.col("k") >= 0), out)
+    # single_file's coalesce must not hide the observed count either
+    with pytest.raises(RuntimeError, match="299 != 300"):
+        write_parquet(df, out, single_file=True)
+    monkeypatch.undo()
+    assert write_parquet(df, out, single_file=True) == 300
+
+
+def test_compact_refuses_swap_when_readback_differs(spark, tmp_path, monkeypatch):
+    out = str(tmp_path / "c.parquet")
+    write_parquet(spark.range(400).repartition(4), out)
+    before = sorted(os.listdir(out))
+    _skew_readback(monkeypatch, "__compact-")
+    with pytest.raises(RuntimeError, match="compaction verification failed: 399 != 400"):
+        compact(spark, out, target_files=1)
+    monkeypatch.undo()
+    # no swap: the shard keeps its original files, and no tmp is left
+    assert sorted(os.listdir(out)) == before
+    assert [d for d in os.listdir(tmp_path) if "__" in d] == []
+    assert spark.read.parquet(out).count() == 400
+
+
+def test_recover_shard_raises_without_orphan(tmp_path):
+    from science_datalake_spark.sources.sinks import recover_shard
+
+    with pytest.raises(FileNotFoundError, match="no __old-/__compact- orphan"):
+        recover_shard(str(tmp_path / "gone.parquet"))
+
+
+def test_read_all_recovers_shard_orphaned_by_compaction_crash(spark, tmp_path):
+    """A crash between compact()'s two renames leaves a converted file's
+    rows only in ``<shard>__old-*`` while the checkpoint already marks the
+    file converted: later runs skip the file, so read_all must restore the
+    shard instead of listing only ``*.parquet`` and dropping its rows."""
+    import shutil
+
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_ndjson(str(src / "f1.jsonl"), [{"id": i} for i in range(5)])
+    _write_ndjson(str(src / "f2.jsonl"), [{"id": i} for i in range(5, 8)])
+    out = tmp_path / "out"
+    ing = IncrementalJsonIngest(
+        spark, str(src), str(out), str(tmp_path / "ckpt.json"), schema="id LONG"
+    )
+    ing.run()
+    shard = out / "f1.jsonl.parquet"
+    shutil.copytree(shard, out / "f1.jsonl.parquet__compact-0badf00d")
+    os.rename(shard, out / "f1.jsonl.parquet__old-deadbeef")
+
+    assert ing.run().converted == []  # the checkpoint already has f1
+    assert ing.read_all().count() == 8
+    assert sorted(os.listdir(out)) == ["f1.jsonl.parquet", "f2.jsonl.parquet"]
+
+
 def test_incremental_ingest_checkpoint(spark, tmp_path):
     src = tmp_path / "src"
     src.mkdir()

@@ -15,6 +15,76 @@ from science_datalake_spark.unify import build_unified_papers, coverage_upset
 from tests import fixtures
 
 
+def _windowed_reference(oa, s2, sci, retractions=None, code_links=None):
+    """The reference-shaped unify plan — window top-1 per source, distinct
+    DOI spine, three left fan-in joins — kept here only as the equality
+    reference for ``build_unified_papers``'s one-shuffle argmin build."""
+    from science_datalake_spark.operators.windows import top1_per_key
+    from science_datalake_spark.unify import (
+        _keyed,
+        _openalex_keyed,
+        _s2ag_keyed,
+        _sciscinet_keyed,
+    )
+
+    oa_k = top1_per_key(
+        _openalex_keyed(oa),
+        keys=["doi"],
+        order=[F.desc_nulls_last("oa_cited_by_count"), F.asc("openalex_id")],
+    )
+    s2_k = top1_per_key(
+        _s2ag_keyed(s2),
+        keys=["doi"],
+        order=[F.desc_nulls_last("s2_citationcount"), F.asc("corpusid")],
+    )
+    sci_k = top1_per_key(
+        _sciscinet_keyed(sci),
+        keys=["doi"],
+        order=[F.desc_nulls_last("sci_citation_count"), F.asc("sci_paperid")],
+    )
+    spine = (
+        oa_k.select("doi")
+        .unionByName(s2_k.select("doi"))
+        .unionByName(sci_k.select("doi"))
+        .distinct()
+    )
+    unified = (
+        spine.join(oa_k, "doi", "left")
+        .join(s2_k, "doi", "left")
+        .join(sci_k, "doi", "left")
+    )
+    for dim, col, hit in (
+        (retractions, "original_paper_doi", "rw_hit"),
+        (code_links, "doi", "pwc_hit"),
+    ):
+        if dim is not None:
+            hits = _keyed(dim, col).select("doi").distinct().withColumn(hit, F.lit(True))
+            unified = unified.join(F.broadcast(hits), "doi", "left")
+        else:
+            unified = unified.withColumn(hit, F.lit(None).cast("boolean"))
+    return unified.select(
+        "doi",
+        F.coalesce("oa_title", "s2_title").alias("title"),
+        F.coalesce("oa_year", "s2_year").alias("year"),
+        "openalex_id",
+        "corpusid",
+        "sci_paperid",
+        "oa_cited_by_count",
+        "s2_citationcount",
+        "sci_citation_count",
+        "disruption",
+        F.col("openalex_id").isNotNull().alias("has_openalex"),
+        F.col("corpusid").isNotNull().alias("has_s2ag"),
+        F.col("sci_paperid").isNotNull().alias("has_sciscinet"),
+        F.coalesce(F.col("pwc_hit"), F.lit(False)).alias("has_pwc"),
+        F.coalesce(F.col("rw_hit"), F.lit(False)).alias("has_retraction"),
+        (
+            F.coalesce("oa_is_retracted", F.lit(False))
+            | F.coalesce(F.col("rw_hit"), F.lit(False))
+        ).alias("is_retracted"),
+    )
+
+
 @pytest.fixture(scope="module")
 def unified(spark):
     return build_unified_papers(
@@ -32,6 +102,46 @@ def test_unified_sanity_suite(unified):
     for r in results:
         print(r)
     assert all(r.passed for r in results), [str(r) for r in results if not r.passed]
+
+
+def _one_by_one(df):
+    return [
+        sanity.check_doi_format(df),
+        sanity.check_flags_match_nullness(df),
+        sanity.check_pk_unique(df),
+        sanity.check_citation_corr(df),
+        sanity.check_year_distribution(df),
+        sanity.check_retraction_rate(df),
+    ]
+
+
+def test_run_core_equals_checks_one_by_one(spark, unified):
+    """run_core's single fused aggregate must report exactly what the six
+    check_* functions report one action at a time — on a passing table
+    and on one that breaks every check it can."""
+    fused = sanity.run_core(unified)
+    assert fused == _one_by_one(unified)
+    assert all(c.passed for c in fused)
+
+    proto = unified.orderBy("doi").first().asDict()
+
+    def bad(i, **kw):
+        return {**proto, "doi": f"10.9999/bad{i}", "has_retraction": True, "year": None, **kw}
+
+    rows = [
+        bad(0, doi="10.9999/UPPER"),
+        bad(1, doi="10.9999/dup"),
+        bad(2, doi="10.9999/dup"),
+        bad(3, has_openalex=not proto["has_openalex"]),
+        bad(4),
+    ]
+    broken = unified.unionByName(spark.createDataFrame(rows, unified.schema))
+    fused = sanity.run_core(broken)
+    assert fused == _one_by_one(broken)
+    failed = {c.name for c in fused if not c.passed}
+    assert failed == {
+        "doi_format", "flags_nullness", "pk_unique", "year_distribution", "retraction_rate"
+    }, [str(c) for c in fused]
 
 
 def test_unified_golden_counts(unified):
@@ -105,20 +215,16 @@ def test_inverted_index_reconstruction(spark):
 
 
 def test_grouped_build_equals_windowed_build(spark):
-    """build_unified_papers_grouped (one-shuffle min_by fan-in) must
-    produce row-for-row the SAME relation as the windowed reference-shaped
-    build — same dedup winners (desc_nulls_last citation, asc id
-    tie-break), same left-join absence semantics, same flags."""
+    """build_unified_papers (one-shuffle min_by fan-in) must produce
+    row-for-row the SAME relation as the windowed reference-shaped plan —
+    same dedup winners (desc_nulls_last citation, asc id tie-break), same
+    left-join absence semantics, same flags."""
     from science_datalake_spark.synth import (
         synth_code_links,
         synth_openalex,
         synth_retractions,
         synth_s2ag,
         synth_sciscinet,
-    )
-    from science_datalake_spark.unify import (
-        build_unified_papers,
-        build_unified_papers_grouped,
     )
 
     oa, s2, sci = (
@@ -127,29 +233,24 @@ def test_grouped_build_equals_windowed_build(spark):
         synth_sciscinet(spark, 2000),
     )
     rw, cl = synth_retractions(spark, 200), synth_code_links(spark, 300)
-    a = build_unified_papers(oa, s2, sci, retractions=rw, code_links=cl)
-    b = build_unified_papers_grouped(oa, s2, sci, retractions=rw, code_links=cl)
+    a = _windowed_reference(oa, s2, sci, retractions=rw, code_links=cl)
+    b = build_unified_papers(oa, s2, sci, retractions=rw, code_links=cl)
     assert a.columns == b.columns
     ra = sorted(map(tuple, a.collect()))
     rb = sorted(map(tuple, b.collect()))
     assert ra == rb
     # and the no-dims variants agree on the null-flag padding path too
-    a0 = build_unified_papers(oa, s2, sci)
-    b0 = build_unified_papers_grouped(oa, s2, sci)
+    a0 = _windowed_reference(oa, s2, sci)
+    b0 = build_unified_papers(oa, s2, sci)
     assert sorted(map(tuple, a0.collect())) == sorted(map(tuple, b0.collect()))
 
 
 def test_grouped_build_handles_fractional_citations(spark):
-    """The grouped build's argmin order key must NOT truncate fractional
-    citation metrics (a long cast tied 10.9 with 10.2 and let the id
-    tie-break pick the WRONG top-1 row — review finding): with
-    DOUBLE-typed citations both builds must keep the 10.9 row."""
-    import pyspark.sql.functions as F
-
-    from science_datalake_spark.unify import (
-        build_unified_papers,
-        build_unified_papers_grouped,
-    )
+    """The argmin order key must NOT truncate fractional citation metrics
+    (a long cast tied 10.9 with 10.2 and let the id tie-break pick the
+    WRONG top-1 row): with DOUBLE-typed citations both the build and the
+    windowed reference must keep the 10.9 row, and both must rank NaN
+    above +inf."""
 
     def src_oa(rows):
         return spark.createDataFrame(
@@ -164,6 +265,10 @@ def test_grouped_build_handles_fractional_citations(spark):
             ("A", "10.1/x", "t", 2020, 10.2, False),
             ("C", "10.2/y", "t", 2021, None, False),  # null citation ranks last
             ("D", "10.2/y", "t", 2021, 1.0, False),
+            # a desc sort ranks NaN above +inf; the lower id breaks a tie
+            ("G", "10.3/z", "t", 2022, float("inf"), False),
+            ("F", "10.3/z", "t", 2022, float("nan"), False),
+            ("E", "10.3/z", "t", 2022, float("nan"), False),
         ]
     )
     s2 = spark.createDataFrame(
@@ -174,11 +279,11 @@ def test_grouped_build_handles_fractional_citations(spark):
         [("P1", "10.1/x", 3, "0.5")],
         "paperid STRING, doi STRING, citation_count LONG, disruption STRING",
     )
-    a = build_unified_papers(oa, s2, sci)
-    b = build_unified_papers_grouped(oa, s2, sci)
+    a = _windowed_reference(oa, s2, sci)
+    b = build_unified_papers(oa, s2, sci)
     wa = {r["doi"]: r["openalex_id"] for r in a.collect()}
     wb = {r["doi"]: r["openalex_id"] for r in b.collect()}
-    assert wa == wb == {"10.1/x": "B", "10.2/y": "D"}, (wa, wb)
+    assert wa == wb == {"10.1/x": "B", "10.2/y": "D", "10.3/z": "E"}, (wa, wb)
 
 
 def test_synth_unified_materialized_once_per_session(spark, sf_smoke):
@@ -239,11 +344,7 @@ def test_materialize_unified_papers_durable(spark, tmp_path):
         synth_s2ag,
         synth_sciscinet,
     )
-    from science_datalake_spark.unify import (
-        build_unified_papers_grouped,
-        coverage_upset,
-        materialize_unified_papers,
-    )
+    from science_datalake_spark.unify import materialize_unified_papers
 
     oa, s2, sci = (
         synth_openalex(spark, 400),
@@ -255,7 +356,7 @@ def test_materialize_unified_papers_durable(spark, tmp_path):
     got = materialize_unified_papers(
         spark, oa, s2, sci, out_dir, retractions=rw, code_links=pwc
     )
-    want = build_unified_papers_grouped(oa, s2, sci, retractions=rw, code_links=pwc)
+    want = build_unified_papers(oa, s2, sci, retractions=rw, code_links=pwc)
     a = sorted(map(tuple, coverage_upset(got).collect()))
     b = sorted(map(tuple, coverage_upset(want).collect()))
     assert a == b and got.count() == want.count() > 0

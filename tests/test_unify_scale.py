@@ -56,7 +56,7 @@ def test_hot_key_collapses_deterministically(unified_scale):
     rows = unified_scale.filter(F.col("doi") == HOT).collect()
     assert len(rows) == 1
     row = rows[0]
-    # python mirror of prepare_openalex's window: ids with id%10==4
+    # python mirror of the openalex top-1 dedup: ids with id%10==4
     best_oa = max(
         (i for i in range(N_OA) if i % 10 == 4),
         key=lambda i: ((i * 37) % 1000, -i),
