@@ -201,7 +201,6 @@ def minhash_signatures(
     n: int = 3,
     num_hashes: int = 8,
     hash_fn: str = "md5",
-    shingle_hash: str = "occurrence",
 ) -> DataFrame:
     """Per-document MinHash signature: num_hashes salted-hash minima over
     word n-grams. Documents with fewer than n words drop out (no shingles).
@@ -211,27 +210,10 @@ def minhash_signatures(
     leading hash input — an 8-byte long min instead of a 32-char hex
     string min, the fast path for corpora where no DuckDB twin is needed.
 
-    ``shingle_hash="occurrence"`` (default) hashes every (doc, shingle)
-    row map-only — no exchange before the signature aggregate.
-    ``shingle_hash="vocab"`` computes the salted hashes once per
-    DISTINCT shingle and joins them back (min over a multiset equals min
-    over its support — value-identical, pinned by test). Unlike the dsir
-    vocab strategy this was measured WORSE on the fixtures (sigs 2.6 ->
-    3.2-4.0 s sf3; dedup_minhash_lsh 7 -> 46+ s through the persisted
-    self-join): dsir's scoring join exists in both strategies, so
-    deduping the hash work there was free — here the vocab join ADDS a
-    corpus-sized shingle-string exchange the map-only path never had.
-    Kept as an option for corpora whose shingle repetition is extreme
-    enough to invert that trade (BENCH_NOTES round 14b).
-
-    Scale: explode is linear in corpus token count; the vocab distinct is
-    a map-side-combined shuffle of the same stream; the groupBy(id) agg
-    is one shuffle with map-side partial min — no pairwise work.
+    Every (doc, shingle) occurrence is hashed map-only, so the only
+    exchange is the groupBy(id) agg — one shuffle with map-side partial
+    min, linear in corpus token count, no pairwise work.
     """
-    if shingle_hash not in ("vocab", "occurrence"):
-        raise ValueError(
-            f"shingle_hash must be 'vocab' or 'occurrence', got {shingle_hash!r}"
-        )
     ng = (
         with_word_ngrams(_spread(df.select(id_col, text_col), id_col), text_col, n)
         .select(id_col, F.explode("ng").alias("__ng"))
@@ -248,12 +230,7 @@ def minhash_signatures(
         ]
     else:
         raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
-    if shingle_hash == "vocab":
-        vh = ng.select("__ng").distinct().select(F.col("__ng"), *hashes)
-        scored = ng.join(vh.hint("shuffle_hash"), "__ng")
-    else:
-        scored = ng.select(id_col, *hashes)
-    return scored.groupBy(id_col).agg(
+    return ng.select(id_col, *hashes).groupBy(id_col).agg(
         *[F.min(f"__h{b}").alias(f"mh{b}") for b in range(num_hashes)]
     )
 

@@ -24,13 +24,10 @@ computable verbatim by the DuckDB twin (``('0x' || substr(md5(..),1,8))
 ::BIGINT``).
 
 Scale shape: two bounded aggregations (≤ num_buckets rows each, map-side
-combined), then scoring. The default ``score_strategy="join"`` broadcasts
-the ≤num_buckets-row ratio onto the token stream (one data-sized per-doc
-shuffle); ``score_strategy="vocab"`` hashes features once per DISTINCT
-token and scores through a token-keyed join. See dsir_log_weights for
-the measured trade-offs — the join default stands only under proper scan
-fan-out (files.openCostInBytes small enough that the map-only hash pass
-parallelizes; session.SCAN_OPEN_COST_BYTES).
+combined), then scoring: the ≤num_buckets-row ratio is broadcast onto the
+per-occurrence token stream (one data-sized per-doc shuffle). The
+map-only hash pass relies on scan fan-out to parallelize
+(session.SCAN_OPEN_COST_BYTES).
 """
 
 from __future__ import annotations
@@ -72,7 +69,6 @@ def dsir_log_weights(
     num_buckets: int = 1024,
     alpha: float = 0.5,
     persist_tokens: bool | str = True,
-    score_strategy: str = "join",
 ) -> DataFrame:
     """Per-raw-document DSIR log importance weight.
 
@@ -83,55 +79,18 @@ def dsir_log_weights(
     ln of a precomputed ratio) keeps each term exactly reproducible by the
     SQL twin.
 
-    Two result-identical scoring shapes (pinned by test):
+    Scoring md5s every token occurrence into an (id, array<bucket>)
+    relation, broadcasts the ≤B-row ratio onto the exploded stream and
+    sums per doc. ``dsir_score_with_model`` keeps the map-only fold shape
+    for stateless scoring of NEW batches/streams against a frozen model.
 
-    - ``score_strategy="join"`` (default): md5 every token occurrence
-      into a persisted (id, array<bucket>) relation, broadcast the ≤B-row
-      ratio onto the exploded stream, sum per doc. Map-only hashing —
-      immune to adversarial vocabularies, and the fastest shape whenever
-      the scan fans out enough for the hash pass to parallelize.
-    - ``score_strategy="vocab"``: hash features per DISTINCT token — a
-      word-count aggregation (map-side-combined, zipf-compressed far
-      below token count) materialized once as a small (token, count,
-      bucket) relation; md5/bucketing runs once per vocabulary entry, and
-      per-doc scoring joins the token stream to the vocabulary's (token,
-      log-ratio) relation — SHUFFLE_HASH-hinted, never force-broadcast
-      (vocabularies are data-sized in the worst case); AQE still promotes
-      the join to broadcast while the vocabulary fits.
-
-    MEASUREMENT CAVEAT (round 14, committed as a correction): vocab was
-    briefly adopted as the default on an A/B whose session LACKED the
-    bench's ``files.openCostInBytes`` scan fan-out — with the small-file
-    scan pinned to ~2 tasks, the per-occurrence md5 chain measured as
-    ~60% of the operator and the vocab dedup of that work won (sf1 1.59
-    vs 2.50). Re-measured under the true session config (fan-out
-    restored) the ranking INVERTS at every scale (sf0.1 1.10 vs 1.23,
-    sf1 1.24 vs 1.43, sf3 1.42 vs 1.59 best-of-3 interleaved): a
-    map-only pass that parallelizes beats hash-dedup + an extra join.
-    The strategy choice is a function of scan parallelism, not corpus
-    zipf alone.
-
-    A third shape — collect the bounded ratio and fold map-only over the
-    bucket arrays via element_at, eliminating the per-doc shuffle — was
-    measured and REJECTED: higher-order-function evaluation is
-    CodegenFallback (interpreted per element), and it lost ~0.3-0.5 s to
-    the codegen'd broadcast-probe+hash-agg at sf1/sf3 (BENCH_NOTES
-    round 14). ``dsir_score_with_model`` keeps that shape for what it is
-    uniquely good at: stateless map-only scoring of NEW batches/streams
-    against a frozen model.
-
-    In the join strategy the raw corpus is needed TWICE (its feature
-    distribution, then per-doc scoring); ``persist_tokens=True``
-    materializes the hashed token stream ONCE into a persisted skinny
-    (id, array<bucket>) relation (~8 bytes/token, MEMORY_AND_DISK blocks
-    so it spills instead of OOMing) so the md5 tokenization doesn't run
-    twice — the same work shape a columnar engine gets by materializing
+    The raw corpus is needed TWICE (its feature distribution, then
+    per-doc scoring); ``persist_tokens=True`` materializes the hashed
+    token stream ONCE into a persisted skinny (id, array<bucket>)
+    relation (~8 bytes/token, MEMORY_AND_DISK blocks so it spills
+    instead of OOMing) so the md5 tokenization doesn't run twice — the same work shape a columnar engine gets by materializing
     the twice-referenced CTE. Pass False to recompute when the token
-    stream exceeds what the cluster wants to hold. The vocab strategy
-    instead materializes the small vocabulary relation (consumed by both
-    the bucket counts and the scoring join) and deliberately recomputes
-    the split+explode token stream — cheaper than checkpointing
-    corpus-sized exploded rows, since there is no per-token md5 to save.
+    stream exceeds what the cluster wants to hold.
 
     Cache lifetime: the materialization is a lazy ``localCheckpoint``,
     not a CacheManager persist — ContextCleaner releases the blocks once
@@ -146,10 +105,6 @@ def dsir_log_weights(
     MEMORY_AND_DISK persist instead — accepting that the CacheManager
     entry outlives the query until unpersisted (round-12 advice).
     """
-    if score_strategy not in ("vocab", "join"):
-        raise ValueError(
-            f"score_strategy must be 'vocab' or 'join', got {score_strategy!r}"
-        )
     if isinstance(persist_tokens, str) and persist_tokens != "persist":
         # any other truthy string ("Persist", "cache") would silently fall
         # through to the localCheckpoint branch, defeating the
@@ -157,8 +112,6 @@ def dsir_log_weights(
         raise ValueError(
             f"persist_tokens must be a bool or 'persist', got {persist_tokens!r}"
         )
-    if score_strategy == "vocab":
-        return _log_weights_vocab(raw, target, id_col, text_col, num_buckets, alpha)
     rtoks_arr = raw.select(
         F.col(id_col),
         F.transform(
@@ -212,65 +165,6 @@ def _ratio_relation(tc: DataFrame, rc: DataFrame, num_buckets: int, alpha: float
     )
 
 
-def _log_weights_vocab(
-    raw: DataFrame,
-    target: DataFrame,
-    id_col: str,
-    text_col: str,
-    num_buckets: int,
-    alpha: float,
-) -> DataFrame:
-    """The vocab scoring shape (see dsir_log_weights): md5/bucket once per
-    DISTINCT token, score through a token-keyed join."""
-
-    def toks(df: DataFrame) -> DataFrame:
-        return df.select(
-            F.col(id_col),
-            F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("__tok"),
-        )
-
-    rtoks = toks(raw)
-    # (token, occurrences, bucket): word-count agg, md5 per distinct token.
-    # Materialized once — consumed by BOTH the bucket counts and the
-    # scoring join; lazy localCheckpoint so ContextCleaner releases the
-    # (vocabulary-sized, zipf-small) blocks with the query's handles.
-    vb = (
-        rtoks.groupBy("__tok")
-        .agg(F.count("*").alias("__n"))
-        .select("__tok", "__n", hashed_token_bucket(F.col("__tok"), num_buckets))
-        .localCheckpoint(eager=False)
-    )
-    # the target leg gets the same per-distinct-token treatment (counts
-    # identical to feature_counts — pinned by the mirror test); its vocab
-    # relation is consumed once, so no materialization
-    tc = (
-        toks(target)
-        .groupBy("__tok")
-        .agg(F.count("*").alias("__n"))
-        .select("__n", hashed_token_bucket(F.col("__tok"), num_buckets))
-        .groupBy("__b")
-        .agg(F.sum("__n").alias("__ct"))
-    )
-    rc = vb.groupBy("__b").agg(F.sum("__n").alias("__ct"))
-    ratio = _ratio_relation(tc, rc, num_buckets, alpha)
-    # ratio is ≤B rows by construction → bounded broadcast. The vocabulary
-    # relation is NOT force-broadcast (data-sized in the worst case); it
-    # carries a SHUFFLE_HASH hint instead: without it the static planner
-    # broadcasts the WRONG side — it under-estimates the exploded token
-    # stream from the parquet scan stats and builds a corpus-sized
-    # single-threaded hash relation (measured 5.3 s vs 1.6 s at sf3, the
-    # round-11 top_customers_flagged trap) — while the checkpointed vocab
-    # side has no stats at all. The hint makes the vocab side the build
-    # (its per-partition hash build is vocab-bounded), the per-doc
-    # consumer is order-free so SMJ's sorts buy nothing, and AQE still
-    # promotes the join to broadcast at runtime when the vocabulary fits.
-    vocab_lr = vb.join(F.broadcast(ratio), "__b").select("__tok", "__lr")
-    scored = rtoks.join(vocab_lr.hint("shuffle_hash"), "__tok")
-    return scored.groupBy(id_col).agg(
-        F.count("*").alias("n_tokens"), F.sum("__lr").alias("log_weight")
-    )
-
-
 def gumbel_noise(key: F.Column, seed: int = 42) -> F.Column:
     """Deterministic standard-Gumbel draw keyed by md5 of the row key:
     g = −ln(−ln(u)), u = (uint32 + 0.5) / 2^32 ∈ (0,1) strictly (the +0.5
@@ -294,24 +188,15 @@ def dsir_sample(
     alpha: float = 0.5,
     seed: int = 42,
     persist_tokens: bool = True,
-    score_strategy: str = "join",
 ) -> DataFrame:
     """Gumbel top-k resampling over DSIR log weights: a without-replacement
     sample of ``n`` raw documents distributed as softmax(log_weight).
     Returns (id_col, n_tokens, log_weight, score) sorted by score desc.
 
-    Plan: dsir_log_weights (default join strategy: one data-sized per-doc
-    shuffle) + map-only Gumbel perturbation + TakeOrderedAndProject.
+    Plan: dsir_log_weights (one data-sized per-doc shuffle) + map-only Gumbel perturbation + TakeOrderedAndProject.
     """
     w = dsir_log_weights(
-        raw,
-        target,
-        id_col,
-        text_col,
-        num_buckets,
-        alpha,
-        persist_tokens,
-        score_strategy,
+        raw, target, id_col, text_col, num_buckets, alpha, persist_tokens
     )
     scored = w.withColumn("score", F.col("log_weight") + gumbel_noise(F.col(id_col), seed))
     return scored.orderBy(F.desc("score"), id_col).limit(n)

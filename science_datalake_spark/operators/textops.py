@@ -307,122 +307,6 @@ def _gate_reason(
     )
 
 
-def _gate_counts_udf(stopwords: tuple[str, ...] = EN_STOPWORDS):
-    """Arrow-vectorized gate signal counts: ONE pandas UDF that returns
-    ``struct<n_tokens:int, n_bigrams:int, n_distinct_bigrams:int,
-    n_stop:int>`` per text, replacing the interpreted higher-order
-    lambdas (``filter``/``zip_with`` are CodegenFallback — every element
-    pays an interpreted-expression call, and the dup-bigram tree
-    evaluates ``zip_with`` three times per row).
-
-    Semantics replicate the expression form EXACTLY:
-
-    - tokenizer = ``split(trim(text), '\\s+', -1)``: Python ``strip(' ')``
-      matches Spark's ``trim`` (0x20 only), and the compiled class
-      ``[ \\t\\n\\x0B\\f\\r]+`` matches Java's ASCII ``\\s`` (Python's own
-      ``\\s`` is Unicode-aware and would diverge on NBSP etc.); both
-      engines keep leading/trailing empty fields (Java ``split`` with
-      limit -1), so ``""`` tokenizes to one empty token on both.
-    - NULL text returns (-1, -1, -1, -1): ``size(NULL)`` is -1 under the
-      legacy conf, and downstream arithmetic reproduces the expression
-      form's NULL behavior from those sentinels.
-    - distinct bigrams are counted on token PAIRS — the definition the
-      DuckDB oracle uses (``list_distinct`` over the joined strings);
-      the expression form counts distinct ``xxhash64(a, b)`` values,
-      identical up to a 64-bit hash collision (none exist in any
-      fixture — results are oracle-hash-pinned either way).
-    """
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    stopset = frozenset(stopwords)
-
-    stop_list = sorted(stopset)
-
-    def gate_counts(texts):
-        # fully vectorized (guide §4.2: hand whole batches to native
-        # code): Arrow C++ does trim/regex-split/flatten/stopword-InSet/
-        # dictionary-encode, numpy does the segmented per-document sums
-        # and the within-document distinct-bigram count. Tokenizer
-        # equivalence with Spark's split(trim(text), '\s+', -1) —
-        # including leading/trailing empty fields and ASCII-only \s —
-        # is pinned against the expression engine in tests.
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        arr = pa.Array.from_pandas(texts, type=pa.string())
-        nrows = len(arr)
-        if nrows == 0:
-            empty = np.zeros(0, dtype=np.int32)
-            return pd.DataFrame(
-                {
-                    "n_tokens": empty,
-                    "n_bigrams": empty,
-                    "n_distinct_bigrams": empty,
-                    "n_stop": empty,
-                }
-            )
-        null_mask = pc.is_null(arr).to_numpy(zero_copy_only=False)
-        trimmed = pc.utf8_trim(pc.fill_null(arr, ""), " ")
-        toks = pc.split_pattern_regex(trimmed, pattern="[ \\t\\n\\x0B\\f\\r]+")
-        offs = toks.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
-        starts, ends = offs[:-1], offs[1:]
-        n = ends - starts  # >= 1 always: split of "" is [""]
-        flat = pc.list_flatten(toks)
-        hits = pc.is_in(
-            flat, value_set=pa.array(stop_list, type=pa.string())
-        ).to_numpy(zero_copy_only=False)
-        cs = np.concatenate(([0], np.cumsum(hits, dtype=np.int64)))
-        ns = cs[ends] - cs[starts]
-        nb = n - 1
-        total = len(flat)
-        if total > 1:
-            # exact distinct-bigram count per document: dictionary codes
-            # (exact string identity — no hash collisions by
-            # construction), adjacent-pair keys, then one lexsort and a
-            # transition count per document segment
-            codes = (
-                pc.dictionary_encode(flat)
-                .indices.to_numpy(zero_copy_only=False)
-                .astype(np.int64)
-            )
-            k = int(codes.max()) + 1
-            pair = codes[:-1] * k + codes[1:]
-            doc_of_tok = np.repeat(np.arange(nrows, dtype=np.int64), n)
-            valid = doc_of_tok[:-1] == doc_of_tok[1:]
-            vp, vd = pair[valid], doc_of_tok[:-1][valid]
-            order = np.lexsort((vp, vd))
-            sp, sd = vp[order], vd[order]
-            new = np.ones(sp.size, dtype=np.int64)
-            if sp.size > 1:
-                new[1:] = (sd[1:] != sd[:-1]) | (sp[1:] != sp[:-1])
-            cf = np.concatenate(([0], np.cumsum(new)))
-            seg_ends = np.cumsum(nb)
-            nd = cf[seg_ends] - cf[seg_ends - nb]
-        else:
-            nd = np.zeros(nrows, dtype=np.int64)
-        # NULL text sentinel: size(NULL) = -1 under the legacy conf
-        if null_mask.any():
-            for v in (n, nb, nd, ns):
-                v[null_mask] = -1
-        return pd.DataFrame(
-            {
-                "n_tokens": n.astype(np.int32),
-                "n_bigrams": nb.astype(np.int32),
-                "n_distinct_bigrams": nd.astype(np.int32),
-                "n_stop": ns.astype(np.int32),
-            }
-        )
-
-    # real type objects (file-wide postponed annotations would leave
-    # unresolvable strings — pandas is imported locally on purpose)
-    gate_counts.__annotations__ = {"texts": pd.Series, "return": pd.DataFrame}
-    return pandas_udf(
-        "n_tokens int, n_bigrams int, n_distinct_bigrams int, n_stop int"
-    )(gate_counts)
-
-
 def quality_gate_flags(
     df: "DataFrame",
     text_col: str = "text",
@@ -431,7 +315,6 @@ def quality_gate_flags(
     max_dup_bigram: float = 0.2,
     min_stopword: float = 0.05,
     lang_threshold: float = 0.10,
-    engine: str = "expr",
 ) -> "DataFrame":
     """:func:`quality_gate` as a DataFrame transform that evaluates each
     signal ONCE: adds ``n_tokens``, ``dup_bigram_frac``, ``stop_ratio``,
@@ -448,47 +331,15 @@ def quality_gate_flags(
     built from the materialized signal COLUMNS in a second projection —
     layered so CollapseProject won't inline a non-cheap producer into
     multiple consumers (each signal stays evaluated once).
-
-    ``engine="arrow"`` (round 15): the token-derived COUNTS come from one
-    Arrow-vectorized pandas UDF (:func:`_gate_counts_udf`) instead of the
-    interpreted ``filter``/``zip_with`` lambdas, and every ratio,
-    rounding and threshold stays in the SAME JVM expressions — identical
-    double arithmetic, identical results (equality-pinned in
-    tests/test_operators.py). The expression form remains the default
-    and the zero-Python-dependency fallback.
     """
-    if engine not in ("expr", "arrow"):
-        raise ValueError(f"engine must be 'expr' or 'arrow', got {engine!r}")
-    if engine == "arrow":
-        q = df.withColumn("__q", _gate_counts_udf()(F.col(text_col)))
-        out = q.withColumns(
-            {
-                "n_tokens": F.col("__q.n_tokens"),
-                "dup_bigram_frac": F.when(
-                    F.col("__q.n_bigrams") <= 0, F.lit(0.0)
-                ).otherwise(
-                    F.round(
-                        F.lit(1.0)
-                        - F.col("__q.n_distinct_bigrams")
-                        / F.col("__q.n_bigrams"),
-                        4,
-                    )
-                ),
-                "__stop_raw": F.col("__q.n_stop")
-                / F.greatest(F.col("__q.n_tokens"), F.lit(1)),
-            }
-        ).drop("__q")
-        scratch = ("__stop_raw",)
-    else:
-        t = F.split(F.trim(F.col(text_col)), r"\s+")
-        out = df.withColumn("__toks", t).withColumns(
-            {
-                "n_tokens": F.size("__toks"),
-                "dup_bigram_frac": dup_bigram_fraction_from_tokens(F.col("__toks")),
-                "__stop_raw": stopword_ratio_from_tokens(F.col("__toks")),
-            }
-        )
-        scratch = ("__toks", "__stop_raw")
+    t = F.split(F.trim(F.col(text_col)), r"\s+")
+    out = df.withColumn("__toks", t).withColumns(
+        {
+            "n_tokens": F.size("__toks"),
+            "dup_bigram_frac": dup_bigram_fraction_from_tokens(F.col("__toks")),
+            "__stop_raw": stopword_ratio_from_tokens(F.col("__toks")),
+        }
+    )
     return out.withColumns(
         {
             "stop_ratio": F.round(F.col("__stop_raw"), 4),
@@ -503,7 +354,7 @@ def quality_gate_flags(
                 lang_threshold,
             ),
         }
-    ).drop(*scratch)
+    ).drop("__toks", "__stop_raw")
 
 
 def chunk_text(

@@ -1541,12 +1541,9 @@ def join_range_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         iv,
         bucket_width=16.0,
         on=["l_partkey", "l_suppkey"],
+        # shuffled-hash keyed join: the ~7-row key groups bound each
+        # partition's in-memory build (~560k rows at sf3)
         strategy="keyed",
-        # round 13: the overlap post-filter consumes the join unordered,
-        # so SMJ's two 18M-row sorts were pure overhead — shuffled-hash
-        # measured 3.92 -> 2.74 s at sf3, rows identical; per-partition
-        # build ~560k rows fits comfortably and SHJ spills since 3.2
-        keyed_join="shuffle_hash",
     ).filter(F.col("uid") < F.col("uid_r"))
     return (
         pairs.groupBy("l_suppkey")
@@ -1591,7 +1588,7 @@ def join_range_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_range_overlap_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """join_range_overlap's sibling that exercises BOTH
     interval_overlap_join branches in one oracle-checked result (round-9
-    verdict item 6: the long×all theta branch, rangejoin.py:126-147, was
+    verdict item 6: the long×all theta branch of the banded strategy was
     test-pinned only). A deterministic rare subset (l_orderkey % 1009 ==
     0, ~1/1000 of intervals at any SF) gets an open-ended +5000-day
     transit window — spans of 5000+ days vs <=50 for the rest — so with

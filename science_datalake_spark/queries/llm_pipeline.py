@@ -3608,12 +3608,8 @@ def corpus_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     target corpus. Scale shape (operators/dsir.py): both feature
     distributions aggregate to <=1024 rows (map-side combined), the ratio
     relation is broadcast onto the token stream, and the only data-sized
-    shuffle is the per-doc sum. Round 14 measured two alternatives —
-    map-only fold scoring (lost: interpreted HOFs) and per-distinct-token
-    hashing (wins only when the scan can't fan out; see the dsir
-    docstring's measurement-caveat correction) — and kept this shape.
-    The DuckDB twin replays the identical md5
-    bucket hash, four-term smoothed log ratio, and md5-keyed Gumbel
+    shuffle is the per-doc sum. The DuckDB twin replays the identical
+    md5 bucket hash, four-term smoothed log ratio, and md5-keyed Gumbel
     noise."""
     from science_datalake_spark.operators.dsir import dsir_sample
 

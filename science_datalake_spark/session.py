@@ -37,8 +37,8 @@ _DEFAULTS: dict[str, str] = {
     # an SHJ build cannot spill, and a cap that fits on an idle heap
     # does not fit after 19 heavy queries' caches fragment it. Guide
     # §3.1's stated risk, observed. Sort-merge spills gracefully and
-    # stays the default; callers who KNOW a build side is bounded can
-    # opt in per join (rangejoin banded_join/keyed_join="shuffle_hash").
+    # stays the default; a join whose build side is bounded by
+    # construction hints shuffle_hash itself (rangejoin strategy="keyed").
     "spark.sql.ansi.enabled": "false",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.parquet.compression.codec": "zstd",

@@ -75,14 +75,15 @@ def _df(spark, docs):
 
 def test_log_weights_match_pure_python_mirror(spark):
     raw, target = _df(spark, RAW), _df(spark, TARGET)
-    got = {
-        r["doc_id"]: r["log_weight"]
-        for r in dsir_log_weights(raw, target, "doc_id", "text", B, ALPHA).collect()
-    }
+    rows = dsir_log_weights(raw, target, "doc_id", "text", B, ALPHA).collect()
+    got = {r["doc_id"]: r["log_weight"] for r in rows}
     want = _mirror_log_weights(RAW, TARGET)
     assert set(got) == set(want)
     for k in want:
         assert abs(got[k] - want[k]) < 1e-9, (k, got[k], want[k])
+    assert {r["doc_id"]: r["n_tokens"] for r in rows} == {
+        k: len(v.split()) for k, v in RAW.items()
+    }
 
 
 def test_log_weights_persist_mode_matches_checkpoint_mode(spark):
@@ -92,9 +93,7 @@ def test_log_weights_persist_mode_matches_checkpoint_mode(spark):
     raw, target = _df(spark, RAW), _df(spark, TARGET)
     base = {
         r["doc_id"]: r["log_weight"]
-        for r in dsir_log_weights(
-            raw, target, "doc_id", "text", B, ALPHA, score_strategy="join"
-        ).collect()
+        for r in dsir_log_weights(raw, target, "doc_id", "text", B, ALPHA).collect()
     }
     got = {
         r["doc_id"]: r["log_weight"]
@@ -106,7 +105,6 @@ def test_log_weights_persist_mode_matches_checkpoint_mode(spark):
             B,
             ALPHA,
             persist_tokens="persist",
-            score_strategy="join",
         ).collect()
     }
     assert got == base
@@ -127,43 +125,6 @@ def test_target_vocabulary_docs_outrank_disjoint_docs(spark):
     plan = plans.physical_plan(sample)
     assert "BroadcastHashJoin" in plan, plan  # ratio relation rides a broadcast
     assert plans.is_take_ordered(sample), plan
-    # the vocab strategy's scoring join must stay a hinted
-    # ShuffledHashJoin (AQE may promote it to broadcast at runtime):
-    # without the hint the static planner broadcasts the WRONG side —
-    # the corpus-sized token stream — because the checkpointed vocab
-    # relation has no stats (round-14 estimator trap, third recurrence)
-    sample_v = dsir_sample(
-        raw, target, "doc_id", "text", n=2, num_buckets=B, score_strategy="vocab"
-    )
-    plan_v = plans.physical_plan(sample_v)
-    assert "ShuffledHashJoin" in plan_v, plan_v
-    assert plans.is_take_ordered(sample_v), plan_v
-
-
-def test_vocab_and_join_scoring_are_result_identical(spark):
-    """The two score strategies must agree doc-for-doc: same doc set, same
-    n_tokens, log_weight within float-sum-reorder tolerance."""
-    raw, target = _df(spark, RAW), _df(spark, TARGET)
-    vocab = {
-        r["doc_id"]: (r["n_tokens"], r["log_weight"])
-        for r in dsir_log_weights(
-            raw, target, "doc_id", "text", B, ALPHA, score_strategy="vocab"
-        ).collect()
-    }
-    join = {
-        r["doc_id"]: (r["n_tokens"], r["log_weight"])
-        for r in dsir_log_weights(
-            raw, target, "doc_id", "text", B, ALPHA, score_strategy="join"
-        ).collect()
-    }
-    assert set(vocab) == set(join)
-    for k in join:
-        assert vocab[k][0] == join[k][0], (k, vocab[k], join[k])
-        assert abs(vocab[k][1] - join[k][1]) < 1e-9, (k, vocab[k], join[k])
-    with pytest.raises(ValueError, match="score_strategy"):
-        dsir_log_weights(
-            raw, target, "doc_id", "text", B, ALPHA, score_strategy="fold"
-        )
 
 
 def test_feature_counts_bounded_by_num_buckets(spark):

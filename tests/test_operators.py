@@ -233,11 +233,13 @@ def test_minhash_xxhash64_fast_path(spark):
             (1, "the quick brown fox jumps over the lazy dog"),
             (2, "the quick brown fox jumps over the lazy dog"),
             (3, "completely different words appear in this one here"),
+            (4, "too short"),  # fewer than n=3 words: no shingles
         ],
         "doc_id INT, text STRING",
     )
     sigs = minhash_signatures(docs, "doc_id", "text", hash_fn="xxhash64")
     assert dict(sigs.dtypes)["mh0"] == "bigint"
+    assert sorted(r["doc_id"] for r in sigs.collect()) == [1, 2, 3]
     pairs = lsh_candidate_pairs(sigs, "doc_id")
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (1, 2) in got and (1, 3) not in got
@@ -659,51 +661,6 @@ def test_lsh_candidate_pairs_bucket_cap_guards_degenerate_corpus(spark):
         sigs.unpersist()
 
 
-def test_minhash_vocab_hashing_matches_occurrence_hashing(spark):
-    """shingle_hash='vocab' (hash per distinct shingle + join) must be
-    row-identical to the direct per-occurrence hashing for BOTH hash
-    functions — min over a multiset equals min over its support."""
-    from science_datalake_spark.operators.dedup import minhash_signatures
-
-    docs = [
-        (1, "alpha beta gamma alpha beta gamma alpha beta gamma"),
-        (2, "alpha beta gamma delta epsilon zeta eta theta iota"),
-        (3, "one two three four five six"),
-        (4, "too short"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id LONG, text STRING")
-    for fn in ("md5", "xxhash64"):
-        vocab = {
-            tuple(r)
-            for r in minhash_signatures(
-                df,
-                "doc_id",
-                "text",
-                n=3,
-                num_hashes=4,
-                hash_fn=fn,
-                shingle_hash="vocab",
-            ).collect()
-        }
-        occ = {
-            tuple(r)
-            for r in minhash_signatures(
-                df,
-                "doc_id",
-                "text",
-                n=3,
-                num_hashes=4,
-                hash_fn=fn,
-                shingle_hash="occurrence",
-            ).collect()
-        }
-        assert vocab == occ, fn
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="shingle_hash"):
-        minhash_signatures(df, "doc_id", "text", shingle_hash="distinct")
-
-
 def test_lsh_star_edges_connectivity_equals_clique_pairs(spark):
     """lsh_star_edges must induce EXACTLY the clique pairs' connected
     components (a bucket is a clique; a star spans it), with strictly
@@ -873,8 +830,12 @@ def test_quality_gate_reason_order_and_keep(spark):
 def test_quality_gate_flags_matches_column_form(spark):
     """quality_gate_flags (the evaluate-each-signal-once DataFrame form
     the curation funnel uses — round-9 refactor) must emit the identical
-    values as the Column form for every signal, including NULL text and
-    the boundary docs that pick each reject reason."""
+    values as the Column form for every signal, including NULL text, the
+    boundary docs that pick each reject reason, and adversarial
+    tokenizer inputs: pure whitespace, leading/trailing tabs (Java split
+    keeps the empty fields), every ASCII \\s separator, Unicode NBSP
+    (Java's ASCII \\s must NOT split on it) and stopword-only docs.
+    Scratch columns never leak into the output."""
     from science_datalake_spark.operators.textops import (
         quality_gate,
         quality_gate_flags,
@@ -889,6 +850,15 @@ def test_quality_gate_flags_matches_column_form(spark):
         (5, " ".join(["the"] * 10 + [f"u{i}" for i in range(190)])),
         (6, None),
         (7, ""),
+        (8, "   "),
+        (9, "\ta b\t"),
+        (10, "a b c"),
+        (11, "the the the the"),
+        (12, " ".join(["the"] * 16)),
+        (13, "one\n\ntwo\r\nthree\x0bfour\ffive"),
+        (14, "  leading and trailing  "),
+        # NBSP is NOT whitespace to Java's ASCII \s: "a<NBSP>b" is ONE token
+        (15, "a\u00a0b " + " ".join(["the"] * 15)),
     ]
     df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
     g = quality_gate(F.col("text"))
@@ -902,11 +872,18 @@ def test_quality_gate_flags_matches_column_form(spark):
             g["reject_reason"].alias("r"),
         ).collect()
     }
+    flagged = quality_gate_flags(df, "text")
     got = {
         r["doc_id"]: (r["n_tokens"], r["dup_bigram_frac"], r["stop_ratio"], r["quality_reject"])
-        for r in quality_gate_flags(df, "text").collect()
+        for r in flagged.collect()
     }
     assert got == want
+    assert got[9][0] == 4  # "", "a", "b", "" — trim strips spaces only
+    assert got[13][0] == 5
+    assert got[15][0] == 16
+    assert flagged.columns == [
+        *df.columns, "n_tokens", "dup_bigram_frac", "stop_ratio", "quality_reject"
+    ]
 
 
 def test_pack_greedy_matches_python_mirror_and_is_partition_invariant(spark):
@@ -1937,55 +1914,3 @@ def test_bm25_batch_matches_single_query_scorer(spark, sf_oracle):
     got2 = {r["doc_id"] for r in batch if r["qid"] == 2}
     assert got2  # 'data' occurs in the fixture corpus
     assert got2 != set(got1)
-
-
-def test_quality_gate_flags_arrow_engine_matches_expr(spark):
-    """quality_gate_flags(engine='arrow') — the Arrow-vectorized count
-    UDF replacing the interpreted filter/zip_with lambdas (round 15) —
-    must emit IDENTICAL values to the expression engine for every
-    signal, on adversarial tokenizer inputs: NULL/empty text, pure
-    whitespace, leading/trailing tabs (Java split keeps the empty
-    fields), Unicode NBSP (Java's ASCII \\s must NOT split on it),
-    repeated bigrams, stopword-only docs, and the boundary docs for each
-    reject reason. Also validates the engine argument."""
-    import pytest as _pytest
-
-    from science_datalake_spark.operators.textops import quality_gate_flags
-
-    en = "the cat sat of the mat and the dog is to run in the house again"
-    rows = [
-        (1, en),
-        (2, "short text"),
-        (3, " ".join(["spam ham"] * 40)),
-        (4, " ".join(f"w{i}" for i in range(20))),
-        (5, " ".join(["the"] * 10 + [f"u{i}" for i in range(190)])),
-        (6, None),
-        (7, ""),
-        (8, "   "),
-        (9, "\ta b\t"),
-        (10, "a b c"),
-        (11, "the the the the"),
-        (12, " ".join(["the"] * 16)),
-        (13, "one\n\ntwo\r\nthree\x0bfour\ffive"),
-        (14, "  leading and trailing  "),
-        # NBSP is NOT whitespace to Java's ASCII \s: "a<NBSP>b" is ONE token
-        (15, "a\u00a0b " + " ".join(["the"] * 15)),
-    ]
-    df = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    cols = ("n_tokens", "dup_bigram_frac", "stop_ratio", "quality_reject")
-    want = {
-        r["doc_id"]: tuple(r[c] for c in cols)
-        for r in quality_gate_flags(df, "text").collect()
-    }
-    got = {
-        r["doc_id"]: tuple(r[c] for c in cols)
-        for r in quality_gate_flags(df, "text", engine="arrow").collect()
-    }
-    assert got == want
-    # same column set out (scratch columns dropped on both engines)
-    assert (
-        quality_gate_flags(df, "text", engine="arrow").columns
-        == quality_gate_flags(df, "text").columns
-    )
-    with _pytest.raises(ValueError, match="engine"):
-        quality_gate_flags(df, "text", engine="bogus")

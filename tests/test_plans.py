@@ -296,6 +296,15 @@ def test_range_overlap_spans_has_both_branches(spark, sf_oracle):
     assert "Union" in p, p
 
 
+def test_range_overlap_keyed_plans_shuffled_hash_join(spark, sf_oracle):
+    """join_range_overlap runs the keyed strategy: one shuffled-hash
+    equi join on (partkey, suppkey) with the overlap as a post-filter —
+    no band explode, no theta legs."""
+    p = plans.physical_plan(QUERIES["join_range_overlap"](spark, sf_oracle))
+    assert "ShuffledHashJoin" in p, p
+    assert "__bucket" not in p and "Union" not in p, p
+
+
 def test_no_cartesian_product_anywhere_in_registry(spark, sf_oracle):
     """Blanket scale pin over EVERY registered query (driver + aux):
     no plan may contain a CartesianProduct — the one join strategy that

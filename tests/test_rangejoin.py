@@ -234,12 +234,11 @@ def test_banded_only_bypass_equals_split_path(spark):
 
 
 def test_keyed_strategy_matches_banded(spark):
-    """strategy='keyed' (plain hash join + overlap filter) returns the
-    identical pair set as the banded strategy on a keyed input, and
-    rejects unkeyed use (an unkeyed theta join is a cartesian product)."""
-    import pytest as _pytest
-
-    from science_datalake_spark.operators.rangejoin import interval_overlap_join
+    """strategy='keyed' (shuffled hash join + overlap filter) returns the
+    identical pair set as the banded strategy on a keyed input, plans a
+    ShuffledHashJoin, and rejects unkeyed use (an unkeyed theta join is
+    a cartesian product) and any other strategy name."""
+    from science_datalake_spark import plans
 
     iv = spark.createDataFrame(
         [(i, i % 3, float(i % 17), float(i % 17 + i % 5)) for i in range(200)],
@@ -252,177 +251,48 @@ def test_keyed_strategy_matches_banded(spark):
         .filter("uid < uid_r")
         .collect()
     }
-    keyed = {
-        (r["uid"], r["uid_r"])
-        for r in interval_overlap_join(iv, iv, strategy="keyed", **kw)
-        .filter("uid < uid_r")
-        .collect()
-    }
+    keyed_df = interval_overlap_join(iv, iv, strategy="keyed", **kw).filter(
+        "uid < uid_r"
+    )
+    keyed = {(r["uid"], r["uid_r"]) for r in keyed_df.collect()}
     assert keyed == banded and len(keyed) > 0
-    with _pytest.raises(ValueError, match="requires equi keys"):
+    assert "ShuffledHashJoin" in plans.physical_plan(keyed_df)
+    with pytest.raises(ValueError, match="requires equi keys"):
         interval_overlap_join(iv, iv, bucket_width=4.0, strategy="keyed")
-    # keyed_join="shuffle_hash": identical pairs, ShuffledHashJoin plan
-    # (the overlap post-filter consumes the join unordered — round 13)
-    shj_df = interval_overlap_join(
-        iv, iv, strategy="keyed", keyed_join="shuffle_hash", **kw
-    ).filter("uid < uid_r")
-    shj = {(r["uid"], r["uid_r"]) for r in shj_df.collect()}
-    assert shj == keyed
-    from science_datalake_spark import plans
-
-    assert "ShuffledHashJoin" in plans.physical_plan(shj_df)
-    with _pytest.raises(ValueError, match="keyed_join"):
-        interval_overlap_join(
-            iv, iv, strategy="keyed", keyed_join="nope", **kw
-        )
+    with pytest.raises(ValueError, match="strategy must be"):
+        interval_overlap_join(iv, iv, strategy="nested_loop", **kw)
 
 
-def test_grouped_strategy_matches_banded(spark):
-    """strategy='grouped' (per-key interval lists, map-side pair
-    enumeration — round 14) returns the identical pair set as the banded
-    strategy on self-joins and two-sided joins, at every
-    grouped_max_size routing (all-small, mixed small/big via the banded
-    fallback, cap=None trust mode), excludes NULL-key rows exactly like
-    the equi-join paths, and validates its arguments."""
-    from science_datalake_spark.operators.rangejoin import interval_overlap_join
-
+@pytest.mark.parametrize("strategy", ["banded", "keyed"])
+@pytest.mark.parametrize("long_span_buckets", [8, None])
+def test_null_keys_and_bounds_never_pair(spark, strategy, long_span_buckets):
+    """Equi-join semantics on every path: a NULL key never joins, and a
+    NULL bound fails the three-valued overlap predicate, so neither row
+    pairs with anything (not even itself) — and the remaining pairs
+    equal the naive theta join on the non-NULL rows."""
     rows = [
-        (i, i % 5, float((i * 37) % 400), float((i * 37) % 400 + (1, 3, 9, 120, 900)[i % 5]))
-        for i in range(240)
+        (
+            i,
+            i % 5,
+            float((i * 37) % 400),
+            float((i * 37) % 400 + (1, 3, 9, 120, 900)[i % 5]),
+        )
+        for i in range(120)
     ]
-    rows.append((9001, None, 5.0, 50.0))  # NULL key: must never pair
+    clean = [dict(zip(("uid", "k", "start", "end"), r)) for r in rows]
+    rows.append((9001, None, 5.0, 50.0))  # NULL key
+    rows.append((9002, 2, None, 50.0))  # NULL bound
     iv = spark.createDataFrame(rows, "uid LONG, k INT, start DOUBLE, end DOUBLE")
-    kw = dict(bucket_width=10.0, on=["k"], long_span_buckets=8)
-    base = {
-        (r["uid"], r["uid_r"])
-        for r in interval_overlap_join(iv, iv, **kw).collect()
-    }
-    assert base and not any(9001 in p for p in base)
-    for cap in (4096, 3, 1, None):
-        got = {
-            (r["uid"], r["uid_r"])
-            for r in interval_overlap_join(
-                iv, iv, strategy="grouped", grouped_max_size=cap, **kw
-            ).collect()
-        }
-        assert got == base, cap
-    # two-sided: group-left + row-stream-right leg
-    other = iv.filter(F.col("uid") % 2 == 0).withColumnRenamed("uid", "uid2")
-    base2 = {
-        (r["uid"], r["uid2"])
-        for r in interval_overlap_join(iv, other, **kw).collect()
-    }
-    for cap in (4096, 3):
-        got2 = {
-            (r["uid"], r["uid2"])
-            for r in interval_overlap_join(
-                iv, other, strategy="grouped", grouped_max_size=cap, **kw
-            ).collect()
-        }
-        assert got2 == base2, cap
-    # long_span_buckets=None: grouped covers the whole pair space alone
-    got3 = {
+    got = [
         (r["uid"], r["uid_r"])
         for r in interval_overlap_join(
-            iv, iv, bucket_width=10.0, on=["k"], long_span_buckets=None,
-            strategy="grouped",
+            iv,
+            iv,
+            bucket_width=10.0,
+            on=["k"],
+            long_span_buckets=long_span_buckets,
+            strategy=strategy,
         ).collect()
-    }
-    assert got3 == base
-    with pytest.raises(ValueError, match="requires equi keys"):
-        interval_overlap_join(iv, iv, bucket_width=10.0, strategy="grouped")
-    with pytest.raises(ValueError, match="grouped_max_size"):
-        interval_overlap_join(
-            iv, iv, bucket_width=10.0, on=["k"], strategy="grouped",
-            grouped_max_size=0,
-        )
-
-
-def test_grouped_arrow_strategy_matches_banded(spark):
-    """strategy='grouped_arrow' (round 15: key-clustered Arrow pair
-    enumeration, shared numpy buffers per group) returns the identical
-    pair MULTISET as the banded strategy on self-joins and two-sided
-    joins, at every grouped_max_size routing (all-small, mixed via the
-    banded fallback, cap=None trust mode), survives groups that straddle
-    Arrow batch boundaries (maxRecordsPerBatch forced tiny), excludes
-    NULL-key rows exactly like the equi-join paths, and treats
-    NULL-bounded intervals as pairing with nothing (three-valued overlap
-    semantics)."""
-    from collections import Counter
-
-    from science_datalake_spark.operators.rangejoin import interval_overlap_join
-
-    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-    try:
-        rows = [
-            (
-                i,
-                i % 5,
-                float((i * 37) % 400),
-                float((i * 37) % 400 + (1, 3, 9, 120, 900)[i % 5]),
-            )
-            for i in range(240)
-        ]
-        rows.append((9001, None, 5.0, 50.0))  # NULL key: must never pair
-        rows.append((9002, 2, None, 50.0))  # NULL bound: pairs with nothing
-        iv = spark.createDataFrame(
-            rows, "uid LONG, k INT, start DOUBLE, end DOUBLE"
-        )
-        kw = dict(bucket_width=10.0, on=["k"], long_span_buckets=8)
-        base = Counter(
-            (r["uid"], r["uid_r"])
-            for r in interval_overlap_join(iv, iv, **kw).collect()
-        )
-        assert base and not any(9001 in p or 9002 in p for p in base)
-        for cap in (4096, 3, 1, None):
-            got = Counter(
-                (r["uid"], r["uid_r"])
-                for r in interval_overlap_join(
-                    iv, iv, strategy="grouped_arrow", grouped_max_size=cap, **kw
-                ).collect()
-            )
-            assert got == base, cap
-        # two-sided: left/right blocks inside each key group
-        other = iv.filter(F.col("uid") % 2 == 0).withColumnRenamed("uid", "uid2")
-        base2 = Counter(
-            (r["uid"], r["uid2"])
-            for r in interval_overlap_join(iv, other, **kw).collect()
-        )
-        for cap in (4096, 3, None):
-            got2 = Counter(
-                (r["uid"], r["uid2"])
-                for r in interval_overlap_join(
-                    iv,
-                    other,
-                    strategy="grouped_arrow",
-                    grouped_max_size=cap,
-                    **kw,
-                ).collect()
-            )
-            assert got2 == base2, cap
-        # long_span_buckets=None: grouped_arrow covers the pair space alone
-        got3 = Counter(
-            (r["uid"], r["uid_r"])
-            for r in interval_overlap_join(
-                iv,
-                iv,
-                bucket_width=10.0,
-                on=["k"],
-                long_span_buckets=None,
-                strategy="grouped_arrow",
-            ).collect()
-        )
-        base3 = Counter(
-            (r["uid"], r["uid_r"])
-            for r in interval_overlap_join(
-                iv, iv, bucket_width=10.0, on=["k"], long_span_buckets=None
-            ).collect()
-        )
-        assert got3 == base3
-        with pytest.raises(ValueError, match="requires equi keys"):
-            interval_overlap_join(
-                iv, iv, bucket_width=10.0, strategy="grouped_arrow"
-            )
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    ]
+    assert len(got) == len(set(got)), "pair emitted more than once"
+    assert set(got) == _naive_pairs(clean, clean, keyed=True)
