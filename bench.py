@@ -124,19 +124,14 @@ def main() -> None:
 
     # Result transfer uses Arrow (toPandas) — the path any real consumer
     # of a 100 TB engine uses; row-pickling collect() measured +0.85 s on
-    # a 95k-row result (pure serialization, not engine work). Queries
-    # whose result types Arrow can't carry fall back to collect().
-    def _fetch(df) -> None:
-        try:
-            df.toPandas()
-        except Exception:
-            df.collect()
-
+    # a 95k-row result (pure serialization, not engine work). An Arrow
+    # error is that query's failure (-1.0) like any other: no collect()
+    # retry that would run the query twice and hide the Arrow bug.
     timings: dict[str, float] = {}
     for name in sorted(queries):
         fn = queries[name]
         try:
-            timings[name] = round(_time_best_of(lambda: _fetch(fn(spark, sf_dir))), 3)
+            timings[name] = round(_time_best_of(lambda: fn(spark, sf_dir).toPandas()), 3)
         except Exception as e:  # report failures but keep the line parseable
             timings[name] = -1.0
             print(f"# bench error in {name}: {e}", file=sys.stderr)

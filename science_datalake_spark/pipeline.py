@@ -2,31 +2,62 @@
 lifecycle (datalake_cli.py:264-312: download → convert → views →
 materialize) as a single-session Spark job graph.
 
-Stages:
-1. ingest: NDJSON source dirs → parquet shards (incremental, checkpointed)
+Stages 1-3 run per source, each source's chain on its own thread, all
+sources at once (the reference's per-file process pool,
+convert_openalex.py:747-751):
+1. ingest: NDJSON source dir → parquet shards (incremental, checkpointed);
+   the rows written are observed during the shard writes
 2. compact: merge NEW shards holding more than one data file (count-verified
    atomic swap); a single-file shard is already compact and stays untouched
-3. read: all shards, after crash recovery of any half-swapped compaction
+3. read: all shards, after crash recovery of any half-swapped compaction;
+   the source's row count is summed from the shards' parquet footers
+Then, on the calling thread:
 4. materialize: unified papers + fulltext dedup → verified parquet
 5. validate: the core sanity checks, one action over the read-back table
 
 The reference runs these as subprocesses with per-process DuckDB budgets;
 here they are one SparkSession with lazy plans materialized at write
-points, so the scheduler overlaps stages where dependencies allow.
+points. Each source chain is a string of small one-task jobs, so running
+the chains concurrently is what keeps the local cores busy.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import SparkSession
+from pyspark import inheritable_thread_target
+from pyspark.sql import DataFrame, SparkSession
 
 from science_datalake_spark import sanity
 from science_datalake_spark.fulltext import unify_fulltext
 from science_datalake_spark.sources.incremental import IncrementalJsonIngest
 from science_datalake_spark.sources.sinks import compact, data_file_count, write_parquet
 from science_datalake_spark.unify import build_unified_papers
+
+
+def _ingest_source(
+    spark: SparkSession, name: str, src: str, work_dir: str, schema: str | None
+) -> tuple[DataFrame, int]:
+    """Stages 1-3 for one source: (all of its shards, their row count)."""
+    out = os.path.join(work_dir, "converted", name)
+    ing = IncrementalJsonIngest(
+        spark,
+        src,
+        out,
+        os.path.join(work_dir, "checkpoints", f"{name}.json"),
+        schema=schema,
+    )
+    os.makedirs(os.path.dirname(ing.checkpoint_path), exist_ok=True)
+    # compact only NEW shards (re-compacting the rest would make a no-op
+    # run a full rewrite) written as several files: rewriting one file
+    # into one file costs a verified write and changes nothing
+    for fname in ing.run().converted:
+        shard = os.path.join(out, ing._shard_name(fname))
+        if os.path.isdir(shard) and data_file_count(shard) > 1:
+            compact(spark, shard, target_files=1)
+    return ing.read_all(), ing.rows()
 
 
 @dataclass
@@ -55,26 +86,22 @@ def run_pipeline(
     result = PipelineResult()
     tables = {}
 
-    for name, src in source_dirs.items():
-        out = os.path.join(work_dir, "converted", name)
-        ing = IncrementalJsonIngest(
-            spark,
-            src,
-            out,
-            os.path.join(work_dir, "checkpoints", f"{name}.json"),
-            schema=schemas.get(name),
-        )
-        os.makedirs(os.path.dirname(ing.checkpoint_path), exist_ok=True)
-        # compact only NEW shards (re-compacting the rest would make a no-op
-        # run a full rewrite) written as several files: rewriting one file
-        # into one file costs a verified write and changes nothing
-        for fname in ing.run().converted:
-            shard = os.path.join(out, ing._shard_name(fname))
-            if os.path.isdir(shard) and data_file_count(shard) > 1:
-                compact(spark, shard, target_files=1)
-        df = ing.read_all()
-        tables[name] = df
-        result.ingested_rows[name] = df.count()
+    # one thread per source; each wrapper is made here, on the calling
+    # thread, so its chain's jobs carry this thread's job group and tags,
+    # and each chain gets its own copy of the local properties that SQL
+    # executions set while they run. Once every chain has stopped, the
+    # first failure in source order re-raises below, unwrapped.
+    with ThreadPoolExecutor(max_workers=len(source_dirs)) as pool:
+        chains = {
+            name: pool.submit(
+                inheritable_thread_target(spark)(_ingest_source),
+                spark, name, src, work_dir, schemas.get(name),
+            )
+            for name, src in source_dirs.items()
+        }
+    for name, chain in chains.items():
+        tables[name], result.ingested_rows[name] = chain.result()
+    for name, df in tables.items():
         df.createOrReplaceTempView(f"raw_{name}")
 
     unified = build_unified_papers(

@@ -20,7 +20,7 @@ import os
 import re
 from dataclasses import dataclass
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
@@ -28,11 +28,17 @@ from pyspark.sql.types import StructType
 class IngestResult:
     converted: list[str]
     skipped: list[str]
+    #: rows written to this run's new shards, observed during their writes
     rows_written: int
 
 
 class IncrementalJsonIngest:
-    """NDJSON directory → parquet shard directory, file-incremental."""
+    """NDJSON directory → parquet shard directory, file-incremental.
+
+    Row counts cost no extra scan: ``run`` observes the rows flowing into
+    each shard write (one job per converted file, plus one schema-inference
+    job when no schema is declared), and ``rows`` sums the shards' parquet
+    footers."""
 
     def __init__(
         self,
@@ -74,6 +80,7 @@ class IncrementalJsonIngest:
     def run(self) -> IngestResult:
         """Convert new/changed files; skip unchanged (size+mtime match)."""
         from science_datalake_spark.sources.json_source import read_ndjson
+        from science_datalake_spark.sources.sinks import _observe_rows
 
         state = self._load_checkpoint()
         converted: list[str] = []
@@ -97,27 +104,43 @@ class IncrementalJsonIngest:
                 skipped.append(fname)
                 continue
             shard = os.path.join(self.output_dir, self._shard_name(fname))
-            df.write.mode("overwrite").option("compression", "zstd").parquet(shard)
-            n = self.spark.read.parquet(shard).count()
-            rows += n
+            out, obs = _observe_rows(df)
+            out.write.mode("overwrite").option("compression", "zstd").parquet(shard)
+            rows += obs.get["rows"]
             state[fname] = sig
             self._save_checkpoint(state)  # per-file, resumable mid-run
             converted.append(fname)
         return IngestResult(converted=converted, skipped=skipped, rows_written=rows)
 
-    def read_all(self):
-        """All shards as one DataFrame (schema union across shards). A
-        crash in ``sinks.compact``'s swap can leave a converted shard only
-        in ``__old-*``/``__compact-*`` orphans; those shards are recovered
+    def _shards(self) -> list[str]:
+        """The shard directories ``read_all`` reads. A crash in
+        ``sinks.compact``'s swap can leave a converted shard only in
+        ``__old-*``/``__compact-*`` orphans; those shards are recovered
         first (``sinks.recover_shard`` raises if one cannot be)."""
-        from science_datalake_spark.sources.json_source import read_parquet_merged
         from science_datalake_spark.sources.sinks import orphaned_shards, recover_shard
 
         for shard in orphaned_shards(self.output_dir):
             recover_shard(shard)
-        shards = [
+        return [
             os.path.join(self.output_dir, d)
             for d in sorted(os.listdir(self.output_dir))
             if d.endswith(".parquet")
         ]
+
+    def read_all(self) -> DataFrame:
+        """All shards as one DataFrame (schema union across shards). With
+        no shard yet (no source file, or only files with no inferable
+        column) it is an empty frame of the declared schema, if any."""
+        from science_datalake_spark.sources.json_source import read_parquet_merged
+
+        shards = self._shards()
+        if not shards:
+            return self.spark.createDataFrame([], self.schema or StructType())
         return read_parquet_merged(self.spark, shards)
+
+    def rows(self) -> int:
+        """``read_all().count()`` from the shards' parquet footers, without
+        a Spark job."""
+        from science_datalake_spark.sources.sinks import footer_rows
+
+        return footer_rows(self._shards())

@@ -106,10 +106,28 @@ def write_parquet_partitioned(
     )
 
 
+def data_files(table_dir: str) -> list[str]:
+    """Data files directly in a parquet table directory, the ones Spark
+    reads: its commit markers and checksum files (``_``/``.``-prefixed)
+    are skipped."""
+    return [
+        os.path.join(table_dir, f)
+        for f in sorted(os.listdir(table_dir))
+        if not f.startswith(("_", "."))
+    ]
+
+
 def data_file_count(table_dir: str) -> int:
-    """Data files directly in a parquet table directory (Spark's commit
-    markers and checksum files — ``_``/``.``-prefixed — excluded)."""
-    return sum(1 for f in os.listdir(table_dir) if not f.startswith(("_", ".")))
+    return len(data_files(table_dir))
+
+
+def footer_rows(table_dirs: Sequence[str]) -> int:
+    """Rows in the data files of ``table_dirs``, summed from their parquet
+    footers: no scan and no Spark job (Delta Lake answers counts from
+    per-file metadata the same way)."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.read_metadata(f).num_rows for d in table_dirs for f in data_files(d))
 
 
 def orphaned_shards(parent: str) -> list[str]:

@@ -12,7 +12,7 @@ import pytest
 
 from science_datalake_spark.sources.incremental import IncrementalJsonIngest
 from science_datalake_spark.sources.json_source import inline_table, read_ndjson
-from science_datalake_spark.sources.sinks import compact, write_parquet
+from science_datalake_spark.sources.sinks import compact, data_file_count, write_parquet
 
 
 def _write_ndjson(path, records, gz=False):
@@ -189,6 +189,7 @@ def test_read_all_recovers_shard_orphaned_by_compaction_crash(spark, tmp_path):
     os.rename(shard, out / "f1.jsonl.parquet__old-deadbeef")
 
     assert ing.run().converted == []  # the checkpoint already has f1
+    assert ing.rows() == 8  # footers of the recovered shards
     assert ing.read_all().count() == 8
     assert sorted(os.listdir(out)) == ["f1.jsonl.parquet", "f2.jsonl.parquet"]
 
@@ -216,6 +217,85 @@ def test_incremental_ingest_checkpoint(spark, tmp_path):
     r3 = ing.run()
     assert sorted(r3.converted) == ["f1.jsonl", "f3.jsonl"]
     assert ing.read_all().count() == 6 + 3 + 1
+
+
+def _ingest(spark, tmp_path, files: dict[str, str]) -> IncrementalJsonIngest:
+    """Schema-inferring ingest over a fresh source dir holding ``files``
+    (name → NDJSON text)."""
+    src = tmp_path / "src"
+    src.mkdir()
+    for name, text in files.items():
+        (src / name).write_text(text)
+    return IncrementalJsonIngest(
+        spark, str(src), str(tmp_path / "out"), str(tmp_path / "ckpt.json")
+    )
+
+
+def _lines(records) -> str:
+    return "".join(json.dumps(r) + "\n" for r in records)
+
+
+#: 600 rows, ~30 KB: several read splits under an 8 KB maxPartitionBytes
+_WIDE = _lines({"id": i, "t": "x" * 40} for i in range(600))
+_MALFORMED = '{"id": 1}\nNOT JSON AT ALL\n{"id": 3}\n'
+
+
+def _run_small_splits(spark, ing):
+    """``ing.run()`` with small read splits: each file converts to a
+    multi-file shard."""
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "8k")
+    try:
+        return ing.run()
+    finally:
+        spark.conf.unset("spark.sql.files.maxPartitionBytes")
+
+
+@pytest.mark.parametrize("case", ["multi_file_shard", "malformed_line"])
+def test_observed_rows_written_match_shard_readback(spark, tmp_path, case):
+    """``rows_written`` is observed on the shard write, not re-read: it
+    must equal what the written shard reads back as."""
+    if case == "multi_file_shard":
+        ing = _ingest(spark, tmp_path, {"f.jsonl": _WIDE})
+        res, expected = _run_small_splits(spark, ing), 600
+    else:
+        ing = _ingest(spark, tmp_path, {"f.jsonl": _MALFORMED})
+        res, expected = ing.run(), 3
+    shard = os.path.join(ing.output_dir, "f.jsonl.parquet")
+    back = spark.read.parquet(shard)
+    if case == "multi_file_shard":
+        assert data_file_count(shard) > 1
+    else:  # PERMISSIVE: the bad line is a row with only _corrupt_record set
+        assert back.filter(F.col("_corrupt_record").isNotNull()).count() == 1
+    assert res.rows_written == back.count() == expected
+
+
+@pytest.mark.parametrize("case", ["compacted", "merged_schemas", "only_file_empty"])
+def test_footer_rows_match_read_all_count(spark, tmp_path, case):
+    """``rows()`` sums parquet footers instead of scanning; it must agree
+    with a scan of ``read_all()`` (orphan recovery: see
+    test_read_all_recovers_shard_orphaned_by_compaction_crash)."""
+    if case == "compacted":
+        ing = _ingest(spark, tmp_path, {"f.jsonl": _WIDE})
+        _run_small_splits(spark, ing)
+        shard = os.path.join(ing.output_dir, "f.jsonl.parquet")
+        assert data_file_count(shard) > 1
+        compact(spark, shard, target_files=1)
+        assert data_file_count(shard) == 1
+        expected = 600
+    elif case == "merged_schemas":
+        ing = _ingest(spark, tmp_path, {
+            "a.jsonl": _lines([{"id": 1, "title": "x"}, {"id": 2, "title": "y"}]),
+            "b.jsonl": _lines([{"id": 3, "fwci": 1.5}]),
+        })
+        ing.run()
+        assert {"title", "fwci"} <= set(ing.read_all().columns)
+        expected = 3
+    else:  # no inferable column: checkpointed, but no shard is written
+        ing = _ingest(spark, tmp_path, {"f.jsonl": ""})
+        assert ing.run().skipped == ["f.jsonl"]
+        assert os.listdir(ing.output_dir) == []
+        expected = 0
+    assert ing.rows() == ing.read_all().count() == expected
 
 
 @pytest.mark.parametrize(
