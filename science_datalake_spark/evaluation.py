@@ -69,12 +69,6 @@ def evaluate_alignment(
     return out
 
 
-def pr_curve(matches: DataFrame, gold: DataFrame, steps: int = 20) -> list[tuple[float, float, float]]:
-    """(threshold, precision, recall) sweep for the PR curve."""
-    ts = tuple(round(i / steps, 4) for i in range(steps + 1))
-    return [(m.threshold, m.precision, m.recall) for m in evaluate_alignment(matches, gold, ts)]
-
-
 # --- stratified / annotated evaluation (round-10: the reference's full
 # --- compute_metrics shape, DataFrame-native) -------------------------------
 #

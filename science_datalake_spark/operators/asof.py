@@ -2,17 +2,12 @@
 left timestamp, per key.
 
 Spark lacks a native as-of join (the prompt-level example of an operator
-to compose from primitives). Two implementations:
-
-- ``asof_join`` (the default): union both sides tagged, one window pass
-  ordered by (key, ts) carrying the last-seen right row forward
-  (``last(..., ignorenulls=True)``). ONE shuffle on the key — linear, no
-  pair blowup, and robust to any left/right size ratio. This is the plan
-  you want at 100 TB: both sides shuffle once on the key and the window
-  is a single ordered scan per key partition.
-- ``asof_join_broadcast``: when the right side is broadcast-sized, a plain
-  join + top-1-per-left-row window. Quadratic in per-key match count —
-  only for small right sides.
+to compose from primitives). ``asof_join`` unions both sides tagged and
+runs one window pass ordered by (key, ts), carrying the last-seen right
+row forward (``last(..., ignorenulls=True)``). ONE shuffle on the key —
+linear, no pair blowup, and robust to any left/right size ratio. This is
+the plan you want at 100 TB: both sides shuffle once on the key and the
+window is a single ordered scan per key partition.
 
 DuckDB has native ASOF JOIN, which makes this operator oracle-checkable.
 """
@@ -21,8 +16,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from science_datalake_spark.operators.windows import top1_per_key
 
 
 def asof_join(
@@ -74,35 +67,3 @@ def asof_join(
         *[F.col(f"__match.{c}").alias(f"right_{c}") for c in right_value_cols],
     )
     return out
-
-
-def asof_join_broadcast(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    right_value_cols: list[str],
-) -> DataFrame:
-    """Small-right-side variant: broadcast join on the key with the
-    ts-inequality predicate, then keep the latest right row per left row."""
-    lcols = left.columns
-    l = left.withColumn("__lid", F.monotonically_increasing_id())
-    r = right.select(
-        F.col(key).alias("__rk"),
-        F.col(right_ts).alias("__rts"),
-        *[F.col(c).alias(f"right_{c}") for c in right_value_cols],
-    )
-    joined = l.join(
-        F.broadcast(r), (l[key] == F.col("__rk")) & (F.col("__rts") <= l[left_ts]), "left"
-    )
-    # right value columns appended to the order as tie-breaks: equal
-    # timestamps must resolve deterministically (total order requirement
-    # of top1_per_key)
-    best = top1_per_key(
-        joined,
-        keys=["__lid"],
-        order=[F.desc_nulls_last("__rts")]
-        + [F.asc_nulls_last(f"right_{c}") for c in right_value_cols],
-    )
-    return best.select(*lcols, *[f"right_{c}" for c in right_value_cols])

@@ -238,29 +238,3 @@ def incremental_new_docs(
         prior_keys, candidates[fp_col] == F.col("__prior_fp"), "left_anti"
     )
     return clear.unionByName(verified)
-
-
-def bloom_write(model: BloomModel, spark, path: str) -> None:
-    """Persist the filter as ONE parquet row (geometry + word array —
-    ≤ num_bits/8 bytes of payload): the durable release artifact the
-    next ingest batch probes without rescanning the prior corpus (the
-    lsh_index_write discipline applied to the membership tier). Goes
-    through the session's Hadoop filesystem like any table."""
-    spark.createDataFrame(
-        [(model.num_bits, model.num_hashes, model.n_items, model.words)],
-        "num_bits LONG, num_hashes INT, n_items LONG, words ARRAY<BIGINT>",
-    ).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def bloom_read(spark, path: str) -> BloomModel:
-    """Load a :func:`bloom_write` artifact back into a probeable model."""
-    r = spark.read.parquet(path).collect()
-    if len(r) != 1:
-        raise ValueError(f"bloom artifact at {path} must hold exactly 1 row, got {len(r)}")
-    row = r[0]
-    return BloomModel(
-        int(row["num_bits"]),
-        int(row["num_hashes"]),
-        [int(x) for x in row["words"]],
-        int(row["n_items"]),
-    )

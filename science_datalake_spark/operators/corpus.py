@@ -458,35 +458,3 @@ def snapshot_diff(
         status.alias("status"),
         *[F.coalesce(f"__n_{c}", f"__o_{c}").alias(c) for c in shared],
     )
-
-
-def write_sharded_corpus(
-    docs: DataFrame,
-    path: str,
-    id_col: str,
-    seed: int = 42,
-    shard_hex_chars: int = 1,
-) -> None:
-    """The :func:`shard_shuffle` write path, EXECUTED (previously only
-    documented): ``repartition('shard')`` + ``sortWithinPartitions
-    ('order_key')`` + ``partitionBy('shard')`` — exactly ONE exchange
-    and a per-shard sort, never a global sort, at any corpus size. Each
-    shard directory holds its documents in the seeded shuffle order, so
-    a training job reads shard files sequentially and gets the epoch
-    permutation for free; a different seed is a new epoch at the cost of
-    one rewrite. Plan-pinned to a single hash exchange in tests."""
-    sh = shard_shuffle(docs, id_col, seed=seed, shard_hex_chars=shard_hex_chars)
-    (
-        # sort key leads with the PARTITION column: FileFormatWriter
-        # requires its output ordered by the partitionBy columns and
-        # inserts its own (unstable) sort when the child ordering does
-        # not already satisfy that — which would scramble order_key
-        # inside each shard file. (shard, order_key) satisfies the
-        # writer's requirement as a prefix, so its sort is elided and
-        # the epoch order survives into the files.
-        sh.repartition("shard")
-        .sortWithinPartitions("shard", "order_key")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )

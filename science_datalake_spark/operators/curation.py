@@ -5,7 +5,7 @@ Every published LLM corpus build runs the same chain — quality gate →
 exact dedup → eval-set decontamination → leakage-safe split — and audits
 it as a funnel (how many docs each stage dropped, and why). The reference
 has the per-stage pieces spread over notebook cells; here the chain is a
-single operator over the existing stage operators (textops.quality_gate,
+single operator over the existing stage operators (textops.quality_gate_flags,
 dedup.exact_dedup, corpus.decontaminate, corpus.leakage_safe_split) with
 first-failing-stage attribution, so one aggregation yields the whole
 audit.
@@ -38,8 +38,6 @@ def curate(
     text_col: str = "text",
     *,
     dedup_key=None,
-    quality_model=None,
-    model_threshold: float = 0.5,
     eval_docs: DataFrame | None = None,
     fractions: dict[str, float] | None = None,
     seed: int = 42,
@@ -52,16 +50,10 @@ def curate(
     plus per-stage columns and a single ``curation_status``:
 
     - ``quality:<reason>`` — first failing quality rule
-      (``textops.quality_gate``; thresholds via ``gate_kwargs``)
-    - ``model:low_quality`` — heuristic-gate survivor scored below
-      ``model_threshold`` by ``quality_model`` (a fitted
-      ``quality_model.QualityModel``; stage skipped — and the
-      ``quality_prob``/``model_keep`` columns NULL — when no model is
-      passed). Scoring is the classifier's map-only transform chain,
-      so the no-per-stage-actions contract still holds.
+      (``textops.quality_gate_flags``; thresholds via ``gate_kwargs``)
     - ``duplicate`` — non-canonical member of an exact-dup group among
-      quality (and model) survivors (``dedup_key`` column expression
-      over the row; default md5 of the full text)
+      quality survivors (``dedup_key`` column expression over the row;
+      default md5 of the full text)
     - ``contaminated`` — unique survivor sharing > ``max_overlap`` of its
       word ``shingle_n``-grams with ``eval_docs`` (stage skipped when
       ``eval_docs`` is None)
@@ -69,7 +61,7 @@ def curate(
       per duplicate CLUSTER (``kept`` when ``fractions`` is None)
 
     Also keeps the stage evidence columns (n_tokens, dup_bigram_frac,
-    stop_ratio, quality_prob, model_keep, canonical_id, group_size,
+    stop_ratio, canonical_id, group_size,
     overlap, split) so audits can drill past the status label.
     """
     from science_datalake_spark.operators.corpus import (
@@ -85,30 +77,12 @@ def curate(
     # per corpus pass at sf1)
     flagged = quality_gate_flags(docs, text_col, **gate_kwargs)
 
-    if quality_model is not None:
-        from science_datalake_spark.operators.quality_model import score_quality
-
-        flagged = score_quality(
-            quality_model, flagged, keep_threshold=model_threshold
-        )
-        # a NULL probability (no model output for the row) is a reject,
-        # not a silent keep
-        model_pass = F.coalesce(F.col("model_keep"), F.lit(False))
-    else:
-        flagged = flagged.withColumns(
-            {
-                "quality_prob": F.lit(None).cast("double"),
-                "model_keep": F.lit(None).cast("boolean"),
-            }
-        )
-        model_pass = F.lit(True)
-
     # dedup among quality survivors WITHOUT splitting the relation:
     # rejected rows get a per-row unique key, so the dedup window treats
     # them as singleton groups (they can never be, or displace, a
     # canonical). One window, one shuffle.
     key = F.md5(F.col(text_col)) if dedup_key is None else dedup_key
-    gate_pass = F.col("quality_reject").isNull() & model_pass
+    gate_pass = F.col("quality_reject").isNull()
     safe_key = F.when(gate_pass, key).otherwise(
         F.concat(F.lit("!rejected:"), F.col(id_col).cast("string"))
     )
@@ -169,7 +143,6 @@ def curate(
             F.col("quality_reject").isNotNull(),
             F.concat(F.lit("quality:"), F.col("quality_reject")),
         )
-        .when(~model_pass, F.lit("model:low_quality"))
         .when(F.col("is_dup"), F.lit("duplicate"))
         .when(F.coalesce(F.col("is_contaminated"), F.lit(False)), F.lit("contaminated"))
         .otherwise(kept)
@@ -191,10 +164,3 @@ def curation_funnel(curated: DataFrame) -> DataFrame:
         )
         .orderBy("curation_status")
     )
-
-
-def kept_corpus(curated: DataFrame) -> DataFrame:
-    """The surviving training corpus: rows whose status starts with
-    ``kept`` (predicate-pushable prefix filter; split labels remain in
-    ``split`` when a split was requested)."""
-    return curated.filter(F.col("curation_status").startswith("kept"))

@@ -81,8 +81,7 @@ def dsir_log_weights(
 
     Scoring md5s every token occurrence into an (id, array<bucket>)
     relation, broadcasts the ≤B-row ratio onto the exploded stream and
-    sums per doc. ``dsir_score_with_model`` keeps the map-only fold shape
-    for stateless scoring of NEW batches/streams against a frozen model.
+    sums per doc.
 
     The raw corpus is needed TWICE (its feature distribution, then
     per-doc scoring); ``persist_tokens=True`` materializes the hashed
@@ -214,92 +213,3 @@ def dsir_sample(
 # literal, NOT num_buckets chained CASEs — the ARCHITECTURE #14 rule).
 # Buckets never seen while fitting score the closed-form smoothed default
 # ln(a/(T+aB)) - ln(a/(R+aB)).
-
-
-def dsir_model_write(
-    raw,
-    target,
-    id_col: str,
-    text_col: str,
-    path: str,
-    num_buckets: int = 1024,
-    alpha: float = 0.5,
-) -> None:
-    """Fit the DSIR feature model and persist it: rows (__b, __lr) for
-    every bucket seen in either corpus, plus one __b = -1 row carrying the
-    unseen-bucket default. <= num_buckets + 1 rows at ANY corpus size."""
-    tc = feature_counts(target, id_col, text_col, num_buckets)
-    rc = feature_counts(raw, id_col, text_col, num_buckets)
-    t_total = tc.agg(F.sum("__ct").alias("__T"))
-    r_total = rc.agg(F.sum("__ct").alias("__R"))
-    joined = (
-        tc.withColumnRenamed("__ct", "__tc")
-        .join(rc.withColumnRenamed("__ct", "__rc"), "__b", "full_outer")
-        .crossJoin(F.broadcast(t_total))
-        .crossJoin(F.broadcast(r_total))
-    )
-    lr = (
-        F.log(F.coalesce(F.col("__tc"), F.lit(0)).cast("double") + F.lit(alpha))
-        - F.log(F.col("__T").cast("double") + F.lit(alpha * num_buckets))
-        - F.log(F.coalesce(F.col("__rc"), F.lit(0)).cast("double") + F.lit(alpha))
-        + F.log(F.col("__R").cast("double") + F.lit(alpha * num_buckets))
-    )
-    default = (
-        F.log(F.lit(float(alpha)))
-        - F.log(F.col("__T").cast("double") + F.lit(alpha * num_buckets))
-        - F.log(F.lit(float(alpha)))
-        + F.log(F.col("__R").cast("double") + F.lit(alpha * num_buckets))
-    )
-    rows = joined.select("__b", lr.alias("__lr"))
-    default_row = (
-        t_total.crossJoin(F.broadcast(r_total))
-        .select(F.lit(-1).cast("bigint").alias("__b"), default.alias("__lr"))
-    )
-    rows.unionByName(default_row).coalesce(1).write.mode("overwrite").parquet(path)
-
-
-def dsir_model_read(spark, path: str, num_buckets: int = 1024) -> list[float]:
-    """Load the model as a dense bucket->log-ratio list (index = bucket;
-    unseen buckets filled with the stored default). The collect is bounded
-    by num_buckets + 1 rows BY CONSTRUCTION — this is the same bounded-
-    artifact contract as bloom_read."""
-    rows = spark.read.parquet(path).collect()
-    default = next(r["__lr"] for r in rows if r["__b"] == -1)
-    out = [default] * num_buckets
-    for r in rows:
-        if r["__b"] >= 0:
-            out[int(r["__b"])] = r["__lr"]
-    return out
-
-
-def dsir_score_with_model(
-    df,
-    id_col: str,
-    text_col: str,
-    model: list[float],
-) -> DataFrame:
-    """Score documents against a fitted model MAP-ONLY: per-doc log weight
-    = in-row fold over element_at(<array literal>, bucket(token)+1). No
-    shuffle, no aggregation state — the plan runs unchanged on a stream
-    (stateless projection), which is how the next crawl batch gets scored
-    against a frozen target distribution. Returns (id, n_tokens,
-    log_weight) with log_weight UNROUNDED (callers round at the edge)."""
-    num_buckets = len(model)
-    # one ArrayType Literal, not CreateArray-of-B-literals (never folded)
-    arr = F.lit([float(v) for v in model])
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    per_tok = F.transform(
-        toks,
-        lambda t: F.element_at(
-            arr,
-            (
-                (F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("bigint") % num_buckets)
-                + 1
-            ).cast("int"),
-        ),
-    )
-    return df.select(
-        F.col(id_col),
-        F.size(toks).alias("n_tokens"),
-        F.aggregate(per_tok, F.lit(0.0), lambda a, x: a + x).alias("log_weight"),
-    )

@@ -1,4 +1,4 @@
-"""Graph operators over edge-list DataFrames: degrees, k-hop expansion,
+"""Graph operators over edge-list DataFrames: k-hop expansion,
 transitive closure, co-occurrence.
 
 Reference parallel: the citation graph is edge lists (s2ag.citations 2.9B,
@@ -50,16 +50,6 @@ def _release_checkpoint(df: DataFrame | None) -> None:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:
         pass
-
-
-def degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
-    """(node, out_degree, in_degree)."""
-    out_d = edges.groupBy(F.col(src).alias("node")).agg(F.count("*").alias("out_degree"))
-    in_d = edges.groupBy(F.col(dst).alias("node")).agg(F.count("*").alias("in_degree"))
-    return (
-        out_d.join(in_d, "node", "full_outer")
-        .fillna(0, ["out_degree", "in_degree"])
-    )
 
 
 def k_hop(edges: DataFrame, start: DataFrame, k: int, src: str = "src", dst: str = "dst") -> DataFrame:

@@ -93,7 +93,7 @@ def _jw_scorer():
     its Jaro core is wrapped with the SAME 0.7-boost-threshold Winkler
     prefix and the SAME ('', x) → 0.0 empty-string convention as
     jaro_winkler_py, so oracle parity is independent of which path ran."""
-    from science_datalake_spark.models import optional_import
+    from science_datalake_spark.util import optional_import
 
     rf = optional_import("rapidfuzz.distance")
     if rf is None:
@@ -215,7 +215,7 @@ def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     goes through the numpy-vectorized engine (`_jaro_winkler_batch`) —
     both wrapped with the identical Winkler boost and empty-string
     convention, so scores don't depend on which path ran."""
-    from science_datalake_spark.models import optional_import
+    from science_datalake_spark.util import optional_import
 
     valid = a.notna() & b.notna()
     out = pd.Series([None] * len(a), dtype="float64")

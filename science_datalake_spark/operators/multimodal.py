@@ -2,21 +2,19 @@
 by Arrow-batched mapInPandas (BASELINE.json north star).
 
 Design: image/audio/video bytes live in a BINARY column next to a typed
-metadata struct; decode / feature-extract / resize run as mapInPandas so
+metadata struct; decode and perceptual hashing run as mapInPandas so
 each Arrow batch is processed vectorized in Python.
 
 Decode is REAL for the uncompressed formats this container can handle
 without native libraries — PPM/PGM images (numpy header+raster parse)
-and RIFF/WAV audio (stdlib ``wave`` + numpy) — including an actual
-nearest-neighbor resize that re-encodes valid PNM bytes. Compressed
+and RIFF/WAV audio (stdlib ``wave`` + numpy). Compressed
 formats (JPEG/PNG/MP3/video) need PIL/ffmpeg, which are not in this
 container: payloads that sniff as anything else raise
 ``NotImplementedError`` naming the plug-in point. ``fake=True`` keeps
-the deterministic md5-derived features for format-agnostic plumbing
-tests.
+deterministic md5-derived hashes for format-agnostic plumbing tests.
 
 Scale: binary payloads make wide rows — the operators keep payloads out
-of shuffles (features are computed in a map-only stage, then the bytes
+of shuffles (hashes are computed in a map-only stage, then the bytes
 are dropped before any wide transformation), and the asset table would
 be written with small row groups like the reference's fat-text tables
 (convert_s2ag.py:37-70).
@@ -32,11 +30,9 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -60,17 +56,6 @@ ASSET_SCHEMA = StructType(
                 ]
             ),
         ),
-    ]
-)
-
-FEATURE_DIM = 16
-
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("kind", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("features", ArrayType(FloatType())),
     ]
 )
 
@@ -115,7 +100,7 @@ def _pil_decode(data: bytes) -> np.ndarray | None:
     importable (the plug-in the NotImplementedError below names). Probe
     and decode both executor-side; any failure degrades to None so the
     caller's format dispatch continues unchanged."""
-    from science_datalake_spark.models import optional_import
+    from science_datalake_spark.util import optional_import
 
     pil_image = optional_import("PIL.Image")
     if pil_image is None:
@@ -144,15 +129,6 @@ def decode_image(data: bytes) -> np.ndarray | None:
         return raster.reshape((h, w, 3)) if channels == 3 else raster.reshape((h, w))
     except (ValueError, struct.error):
         return None
-
-
-def encode_ppm(img: np.ndarray) -> bytes:
-    """(H, W, 3) or (H, W) uint8 → binary PNM bytes."""
-    if img.ndim == 3:
-        header = f"P6\n{img.shape[1]} {img.shape[0]}\n255\n".encode()
-    else:
-        header = f"P5\n{img.shape[1]} {img.shape[0]}\n255\n".encode()
-    return header + img.astype(np.uint8).tobytes()
 
 
 def resize_nearest(img: np.ndarray, width: int, height: int) -> np.ndarray:
@@ -187,182 +163,7 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int] | None:
         return None
 
 
-def image_features(img: np.ndarray) -> list[float]:
-    """16 floats: mean RGB (3) + std RGB (3) + 8-bin luminance histogram
-    (normalized) + width/4096 + height/4096."""
-    if img.ndim == 2:
-        img = np.stack([img] * 3, axis=-1)
-    px = img.reshape(-1, 3).astype(np.float32) / 255.0
-    lum = px.mean(axis=1)
-    hist, _ = np.histogram(lum, bins=8, range=(0.0, 1.0))
-    hist = hist / max(lum.size, 1)
-    out = [
-        *px.mean(axis=0).tolist(),
-        *px.std(axis=0).tolist(),
-        *hist.tolist(),
-        img.shape[1] / 4096.0,
-        img.shape[0] / 4096.0,
-    ]
-    return [float(v) for v in out]
-
-
-def audio_features(samples: np.ndarray, rate: int) -> list[float]:
-    """16 floats: duration_s/3600, rms, peak, zero-crossing rate + 12-bin
-    normalized magnitude spectrum. Degenerate-but-valid WAVs (zero frames,
-    zero rate) yield an all-zero vector instead of crashing the task."""
-    if samples.size == 0 or rate <= 0:
-        return [0.0] * FEATURE_DIM
-    rms = float(np.sqrt(np.mean(samples**2)))
-    peak = float(np.max(np.abs(samples)))
-    zcr = float(np.mean(np.abs(np.diff(np.signbit(samples))))) if samples.size > 1 else 0.0
-    spec = np.abs(np.fft.rfft(samples))
-    bins = np.array_split(spec, 12)
-    energies = np.array([b.mean() if b.size else 0.0 for b in bins])
-    total = energies.sum() or 1.0
-    return [
-        float(samples.size / rate / 3600.0),
-        rms,
-        peak,
-        zcr,
-        *(energies / total).astype(float).tolist(),
-    ]
-
-
-def _fake_features(payload: bytes) -> list[float]:
-    """Deterministic md5-derived stand-in (format-agnostic plumbing path)."""
-    digest = hashlib.md5(payload).digest()
-    return [(b - 128) / 128.0 for b in digest[:FEATURE_DIM]]
-
-
-def _real_features(payload: bytes) -> list[float]:
-    img = decode_image(payload)
-    if img is not None:
-        return image_features(img)
-    wav = decode_wav(payload)
-    if wav is not None:
-        return audio_features(*wav)
-    raise NotImplementedError(
-        "payload is neither binary PNM nor PCM WAV — compressed formats "
-        "(JPEG/PNG/MP3/video) need PIL/ffmpeg; plug the decoder in here"
-    )
-
-
-def extract_features(assets: DataFrame, fake: bool = True) -> DataFrame:
-    """Decode + featurize binary assets via mapInPandas (map-only stage; no
-    shuffle of payload bytes; output drops the payload).
-
-    ``fake=False`` runs the real decoders (PNM images, WAV audio) and
-    raises on formats that need external libraries."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        featurize = _fake_features if fake else _real_features
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "asset_id": pdf["asset_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": pdf["payload"].map(len).astype("int64"),
-                    "features": pdf["payload"].map(lambda p: featurize(bytes(p))),
-                }
-            )
-
-    return assets.mapInPandas(batches, schema=FEATURE_SCHEMA)
-
-
-def resize_images(
-    assets: DataFrame, width: int, height: int, fake: bool = True
-) -> DataFrame:
-    """Image resize through mapInPandas. ``fake=False`` decodes PNM
-    payloads, nearest-neighbor-resamples with numpy, re-encodes, and
-    updates the metadata struct; non-PNM payloads raise (the PIL plug-in
-    point). ``fake=True`` updates only the metadata (plumbing path)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf = pdf.copy()
-            if not fake:
-
-                def do_resize(payload: bytes) -> bytes:
-                    img = decode_image(bytes(payload))
-                    if img is None:
-                        raise NotImplementedError(
-                            "non-PNM image resize needs PIL; plug it in here"
-                        )
-                    return encode_ppm(resize_nearest(img, width, height))
-
-                pdf["payload"] = pdf["payload"].map(do_resize)
-            pdf["meta"] = pdf["meta"].map(
-                lambda m: {**(m or {}), "width": width, "height": height}
-            )
-            yield pdf
-
-    return assets.mapInPandas(batches, schema=ASSET_SCHEMA)
-
-
-#: backwards-compatible alias (the round-1 name)
-resize_stub = resize_images
-
-
-def sample_assets(spark: SparkSession, n: int = 32) -> DataFrame:
-    """Deterministic binary fixture (payload = repeated md5 bytes —
-    exercises the fake/plumbing path)."""
-    rows = []
-    for i in range(n):
-        payload = hashlib.md5(f"asset-{i}".encode()).digest() * (4 + i % 5)
-        kind = ["image", "audio", "video"][i % 3]
-        rows.append(
-            (i, kind, bytearray(payload), ("application/octet-stream", 64, 64, 1000 + i))
-        )
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
-
-
-def sample_image_assets(spark: SparkSession, n: int = 8, size: int = 16) -> DataFrame:
-    """Real PPM fixture: deterministic per-asset color gradients."""
-    rows = []
-    for i in range(n):
-        y, x = np.mgrid[0:size, 0:size]
-        img = np.stack(
-            [
-                ((x * (i + 1) * 17) % 256),
-                ((y * (i + 3) * 11) % 256),
-                ((x + y + i * 29) % 256),
-            ],
-            axis=-1,
-        ).astype(np.uint8)
-        rows.append(
-            (i, "image", bytearray(encode_ppm(img)), ("image/x-portable-pixmap", size, size, None))
-        )
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
-
-
-def sample_wav_assets(spark: SparkSession, n: int = 4, rate: int = 8000) -> DataFrame:
-    """Real WAV fixture: deterministic sine tones at distinct frequencies."""
-    rows = []
-    for i in range(n):
-        t = np.arange(rate // 4) / rate  # 250 ms
-        tone = (np.sin(2 * np.pi * (220 * (i + 1)) * t) * 0.5 * 32767).astype(np.int16)
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as wf:
-            wf.setnchannels(1)
-            wf.setsampwidth(2)
-            wf.setframerate(rate)
-            wf.writeframes(tone.tobytes())
-        rows.append((i, "audio", bytearray(buf.getvalue()), ("audio/wav", None, None, 250)))
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
-
-
 # --- video: frame splitting + sampling --------------------------------------
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("n_frames", IntegerType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("features", ArrayType(FloatType())),
-    ]
-)
 
 
 def split_pnm_stream(data: bytes) -> list[bytes] | None:
@@ -387,95 +188,6 @@ def split_pnm_stream(data: bytes) -> list[bytes] | None:
     except (ValueError, struct.error):
         return None
     return frames or None
-
-
-def _uniform_indices(n_total: int, n_sample: int) -> list[int]:
-    """Deterministic uniform frame pick: n_sample positions spread over
-    [0, n_total): floor(i * n_total / n_sample)."""
-    n_sample = min(n_sample, n_total)
-    return sorted({(i * n_total) // n_sample for i in range(n_sample)})
-
-
-def sample_frames(assets: DataFrame, n_frames: int = 4, fake: bool = True) -> DataFrame:
-    """Frame-sample video payloads through mapInPandas: one row per KEPT
-    frame — (asset_id, frame_idx, n_frames, width, height, features) —
-    with frames picked uniformly over the clip.
-
-    ``fake=False`` parses concatenated-PNM streams for real (each sampled
-    frame is decoded and featurized via image_features); any other
-    payload raises at the named ffmpeg plug-in point. ``fake=True`` emits
-    ``n_frames`` deterministic md5-derived rows per asset — the plumbing
-    path proving the one-input-row→many-output-rows batch shape without
-    decode libraries.
-
-    Scale: map-only (no shuffle of payload bytes); output rows carry only
-    features + dimensions, never frame bytes, so anything downstream of
-    the sampling stage is narrow."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out: dict[str, list] = {
-                "asset_id": [], "frame_idx": [], "n_frames": [],
-                "width": [], "height": [], "features": [],
-            }
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                data = bytes(payload)
-                if fake:
-                    total = n_frames
-                    for idx in range(n_frames):
-                        digest = hashlib.md5(data + bytes([idx])).digest()
-                        out["asset_id"].append(aid)
-                        out["frame_idx"].append(idx)
-                        out["n_frames"].append(total)
-                        out["width"].append(None)
-                        out["height"].append(None)
-                        out["features"].append(
-                            [(b - 128) / 128.0 for b in digest[:FEATURE_DIM]]
-                        )
-                    continue
-                frames = split_pnm_stream(data)
-                if frames is None:
-                    raise NotImplementedError(
-                        "payload is not a concatenated-PNM stream — real video "
-                        "containers (mp4/webm/mkv) need ffmpeg; plug the "
-                        "demuxer in here"
-                    )
-                for idx in _uniform_indices(len(frames), n_frames):
-                    img = decode_image(frames[idx])
-                    if img is None:
-                        # a frame whose header re-parse fails would otherwise
-                        # surface as an executor AttributeError on img.shape
-                        raise ValueError(
-                            f"asset {aid!r}: frame {idx} of {len(frames)} "
-                            "split from the PNM stream failed to decode"
-                        )
-                    out["asset_id"].append(aid)
-                    out["frame_idx"].append(idx)
-                    out["n_frames"].append(len(frames))
-                    out["width"].append(img.shape[1])
-                    out["height"].append(img.shape[0])
-                    out["features"].append(image_features(img))
-            yield pd.DataFrame(out)
-
-    return assets.mapInPandas(batches, schema=FRAME_SCHEMA)
-
-
-def sample_video_assets(
-    spark: SparkSession, n: int = 4, frames: int = 10, size: int = 8
-) -> DataFrame:
-    """Real concatenated-PNM 'video' fixture: per-asset clips whose frames
-    brighten linearly over time (so sampled features are checkable)."""
-    rows = []
-    for i in range(n):
-        clip = b""
-        for f in range(frames):
-            val = min(255, (f * 255) // max(frames - 1, 1))
-            img = np.full((size, size, 3), val, dtype=np.uint8)
-            clip += encode_ppm(img)
-        rows.append(
-            (i, "video", bytearray(clip), ("video/x-pnm-stream", size, size, frames * 40))
-        )
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
 
 
 # --- perceptual hashing: modality-aware near-dup fingerprints ---------------
@@ -524,17 +236,17 @@ def _fake_hash(payload: bytes, bits: int = PHASH_BITS) -> str:
 
 
 def _real_hash(payload: bytes, bits: int = PHASH_BITS) -> str:
+    frames = split_pnm_stream(payload)
+    if frames and len(frames) > 1:
+        # video: dHash of the middle frame (scene-representative); checked
+        # first because decode_image reads a stream's first frame alone
+        payload = frames[len(frames) // 2]
     img = decode_image(payload)
     if img is not None:
         return image_dhash(img, bits)
     wav = decode_wav(payload)
     if wav is not None:
         return audio_envelope_hash(*wav, bits=bits)
-    frames = split_pnm_stream(payload)
-    if frames:  # video: dHash of the middle frame (scene-representative)
-        mid = decode_image(frames[len(frames) // 2])
-        if mid is not None:
-            return image_dhash(mid, bits)
     raise NotImplementedError(
         "payload is neither PNM, PCM WAV, nor a PNM stream — compressed "
         "formats (JPEG/PNG/MP3/video) need PIL/ffmpeg; plug the decoder in here"

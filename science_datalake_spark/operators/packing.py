@@ -92,11 +92,9 @@ def pack_greedy(
 def greedy_fill(
     tokens, budget: int, b: int, fill: int
 ) -> tuple[list[int], int, int]:
-    """THE first-fit loop — shared by the batch packer above and the
-    streaming stateful packer (streaming/packing.py), whose
-    stream==batch-twin guarantee depends on the two staying
-    bit-identical. Returns (per-row bin ids, open bin id, open fill).
-    NaN/None token counts pack as 0."""
+    """THE first-fit loop of the batch packer above, starting from open
+    bin ``b`` at ``fill``. Returns (per-row bin ids, open bin id, open
+    fill). NaN/None token counts pack as 0."""
     bins: list[int] = []
     for t in tokens:
         t = 0 if t is None or t != t else int(t)

@@ -172,61 +172,3 @@ def interval_overlap_join(
     ):
         out = out.unionByName(part)
     return out
-
-
-def point_in_interval_join(
-    points: DataFrame,
-    intervals: DataFrame,
-    *,
-    bucket_width: float,
-    point_col: str,
-    bounds: tuple[str, str] = ("start", "end"),
-    on: list[str] | None = None,
-    right_suffix: str = "_r",
-    long_span_buckets: int | None = 64,
-) -> DataFrame:
-    """Join each point to every interval CONTAINING it (closed bounds).
-    A point lives in exactly one bucket, so no pair dedup is needed —
-    only the interval side explodes. Same long-interval theta fallback
-    (and same ``long_span_buckets=None`` banded-only bypass for
-    bounded-span callers) as ``interval_overlap_join``. Interval-side
-    non-key columns that clash with point names come back suffixed
-    with ``right_suffix`` (same contract as the overlap join)."""
-    if bucket_width <= 0:
-        raise ValueError("bucket_width must be positive")
-    on = list(on or [])
-    s, e = bounds
-
-    clash = (set(points.columns) & set(intervals.columns)) - set(on)
-    renames = {c: c + right_suffix for c in intervals.columns if c in clash}
-    intervals = intervals.select(
-        *[F.col(c).alias(renames.get(c, c)) for c in intervals.columns]
-    )
-    s, e = renames.get(s, s), renames.get(e, e)
-    contains = (F.col(s) <= F.col(point_col)) & (F.col(point_col) <= F.col(e))
-
-    if long_span_buckets is None:
-        i_short, i_long = intervals, None
-    else:
-        span_buckets = _bucket(F.col(e), bucket_width) - _bucket(
-            F.col(s), bucket_width
-        )
-        i_short = intervals.filter(span_buckets < long_span_buckets)
-        i_long = intervals.filter(span_buckets >= long_span_buckets)
-
-    pb = points.withColumn("__bucket", _bucket(F.col(point_col), bucket_width))
-    ib = i_short.withColumn(
-        "__bucket",
-        F.explode(
-            F.sequence(_bucket(F.col(s), bucket_width), _bucket(F.col(e), bucket_width))
-        ),
-    )
-    banded = pb.join(ib, on=[*on, "__bucket"]).filter(contains).drop("__bucket")
-    if long_span_buckets is None:
-        return banded
-    if on:
-        fallback = points.join(i_long, on=on).filter(contains)
-    else:
-        # long intervals are the documented-rare side -> broadcast build
-        fallback = points.join(F.broadcast(i_long), contains)
-    return banded.unionByName(fallback)

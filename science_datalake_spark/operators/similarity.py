@@ -438,38 +438,6 @@ def exemplar_centroids(
     return local_df(corpus.sparkSession, rows, cents.schema)
 
 
-def kmeans_centroids(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    max_iter: int = 10,
-    seed: int = 42,
-) -> DataFrame:
-    """Learned coarse-quantizer codebook via Spark ML KMeans — the
-    production alternative to ``exemplar_centroids`` (its docstring names
-    this swap). Returns the same (cent_id, cent_vec) shape, materialized
-    driver-local, so every downstream IVF plan is unchanged.
-
-    Scale: KMeans is the standard distributed Lloyd's — each iteration is
-    one broadcast of k centers + one map-side assignment + one tree
-    aggregation; cost O(iters · |C| · k). Train on a sample at 100 TB
-    (``corpus.sample(...)``) — codebook quality needs only a sketch of
-    the distribution."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    from science_datalake_spark.util import local_df
-
-    feats = corpus.select(
-        array_to_vector(as_double_vec(vec_col)).alias("features")
-    )
-    model = KMeans(k=k, maxIter=max_iter, seed=seed).fit(feats)
-    rows = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
-    schema = "cent_id INT, cent_vec ARRAY<DOUBLE>"
-    return local_df(corpus.sparkSession, rows, schema)
-
-
 def ivf_assign(
     corpus: DataFrame, centroids: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
@@ -943,130 +911,3 @@ def late_interaction_topk(
     return top_k_per_key(
         scored, keys=["query_id"], order=[F.desc("score"), F.asc("doc_id")], k=k
     )
-
-
-def mmr_rerank(
-    candidates: DataFrame,
-    k: int,
-    lam: float = 0.7,
-    query_col: str = "query_id",
-    id_col: str = "cand_id",
-    score_col: str = "score",
-    vec_col: str = "vec",
-    max_group_rows: int = 10_000,
-) -> DataFrame:
-    """Maximal Marginal Relevance re-ranking (Carbonell & Goldstein,
-    SIGIR 1998): per query, greedily pick k candidates maximizing
-    ``lam * relevance - (1 - lam) * max cosine to already-selected`` —
-    the diversity stage that keeps a near-duplicate-heavy corpus from
-    filling the whole top-k with one document's clones. The standard
-    post-pass over an ANN/BM25 candidate list (RAG context selection,
-    eval-set construction, dedup-aware retrieval).
-
-    The greedy chain is inherently sequential WITHIN a query, so this is
-    the applyInPandas tier (documented custom-operator ladder): one
-    Arrow batch per query group, numpy cosine matrix inside, O(k·n)
-    selection on a candidate list the upstream retrieval stage already
-    bounded (``max_group_rows`` guards against an unbounded group —
-    MMR over more candidates than that belongs upstream in the ANN cut).
-    Scale: groups hash-partition on the query id; no task sees more than
-    one query's candidates; the corpus is never touched.
-
-    Greedy selection is NOT SQL-expressible (each pick depends on all
-    prior picks), so there is no DuckDB oracle — the operator is pinned
-    by hand-computed tests instead (the documented weaker evidence
-    class, like the streaming-only operators).
-
-    Candidates with an UNUSABLE vector (NULL, ragged, or zero-norm —
-    cosine undefined) are excluded from the greedy MMR chain entirely
-    and appended AFTER every usable candidate, in (relevance desc, id
-    asc) order, with a NULL mmr_score — the engine-wide nulls-last
-    convention. Without this, a cluster of null-vector near-duplicates
-    would compete on pure relevance with a permanent zero diversity
-    penalty and could fill the top-k (round-12 advice).
-    """
-    out_fields = []
-    for f in candidates.select(query_col, id_col, score_col).schema.fields:
-        out_fields.append(f"{f.name} {f.dataType.simpleString()}")
-    out_schema = ", ".join(out_fields + ["rank int", "mmr_score double"])
-
-    def pick(pdf):
-        return _mmr_pick(
-            pdf, k, lam, query_col, id_col, score_col, vec_col, max_group_rows
-        )
-
-    return (
-        candidates.select(query_col, id_col, score_col, vec_col)
-        .groupBy(query_col)
-        .applyInPandas(pick, out_schema)
-    )
-
-
-def _mmr_pick(
-    pdf,
-    k: int,
-    lam: float,
-    query_col: str,
-    id_col: str,
-    score_col: str,
-    vec_col: str,
-    max_group_rows: int,
-):
-    """The per-group greedy MMR kernel behind mmr_rerank — module-level
-    (not a closure) so the Hypothesis property suite can drive it on raw
-    pandas frames without a Spark session. Input-row-order invariant: it
-    sorts on (relevance desc, id asc) before selecting, and all ties
-    resolve through that total order (stable mergesort + first-index
-    argmax)."""
-    import numpy as np
-
-    n = len(pdf)
-    if n > max_group_rows:
-        raise ValueError(
-            f"MMR group for {pdf[query_col].iloc[0]!r} has {n} rows > "
-            f"max_group_rows={max_group_rows}; cut candidates upstream"
-        )
-    pdf = pdf.sort_values(
-        [score_col, id_col], ascending=[False, True], kind="mergesort"
-    ).reset_index(drop=True)
-    dim = max((len(v) for v in pdf[vec_col] if v is not None), default=0)
-    from science_datalake_spark.operators.dedup import _vec_matrix
-
-    v = _vec_matrix(pdf[vec_col], dim)
-    norms = np.sqrt((v * v).sum(axis=1))
-    norms[norms == 0] = np.nan
-    vn = v / norms[:, None]
-    # NULL/ragged rows were zero-filled by _vec_matrix → zero norm →
-    # NaN; unusable vectors sit out the greedy chain (nulls-last)
-    usable = ~np.isnan(norms)
-    rel = pdf[score_col].to_numpy(dtype=float)
-    kk = min(k, n)
-    n_greedy = min(kk, int(usable.sum()))
-    selected: list[int] = []
-    max_sim = np.full(n, -np.inf)
-    mmr_vals: list[float] = []
-    cand = usable.copy()
-    for _ in range(n_greedy):
-        if not selected:
-            mmr = rel.copy()
-        else:
-            penalty = np.where(np.isfinite(max_sim), max_sim, 0.0)
-            mmr = lam * rel - (1.0 - lam) * penalty
-        mmr_masked = np.where(cand, mmr, -np.inf)
-        best = int(np.nanargmax(mmr_masked))
-        selected.append(best)
-        mmr_vals.append(float(mmr_masked[best]))
-        cand[best] = False
-        sims = vn @ vn[best]
-        max_sim = np.where(np.isnan(sims), max_sim, np.maximum(max_sim, sims))
-    # tail-fill with unusable-vector candidates in (rel desc, id asc)
-    # order — pdf is already sorted that way — with NULL mmr_score
-    for i in np.nonzero(~usable)[0][: kk - n_greedy]:
-        selected.append(int(i))
-        mmr_vals.append(np.nan)
-    outp = pdf.iloc[selected][[query_col, id_col, score_col]].reset_index(
-        drop=True
-    )
-    outp["rank"] = np.arange(1, len(selected) + 1, dtype=np.int32)
-    outp["mmr_score"] = np.round(mmr_vals, 6)
-    return outp

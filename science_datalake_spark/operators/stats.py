@@ -1,17 +1,25 @@
-"""Scale-safe statistical profiling: approximate quantiles as the
-exported operator, exact only for oracle parity.
+"""Scale-safe exact quantiles: linear-interpolated (DuckDB
+``quantile_cont``) results without buffering every row of a group.
 
-Exact ``percentile``/``median`` buffer the full per-group value array in
-executor memory (OpenHashMap of every value) — the round-1 bench's two
-slowest aggregations, and an OOM hazard on a 100 TB group. Spark's
-``percentile_approx`` (Greenwald-Khanna sketch, fixed memory ∝ accuracy,
-mergeable partials → map-side combine works) is the right default at
-scale; the relative-error bound is 1/accuracy.
+Exact ``percentile``/``median`` over the raw rows hold the full
+per-group value array in executor memory (OpenHashMap of every value) —
+the round-1 bench's two slowest aggregations, and an OOM hazard on a
+100 TB group. The engines here stay exact, because oracle parity
+demands it, and avoid that buffer:
 
-The driver-checked query ``agg_stats_profile`` keeps exact percentiles —
-DuckDB's ``quantile_cont`` is exact, so parity demands it — and its
-docstring points here, mirroring the reference's own exact-median usage
-at small scale (materialize_fulltext.py:158-164).
+- ``exact_group_quantiles_percentile``: bounded value domains;
+  ``percentile`` over the (group, value) count histogram
+  (``agg_stats_profile``).
+- ``exact_quantiles_histogram``: the global one-action form for bounded
+  domains.
+- ``exact_group_quantiles_parallel``: continuous domains; range-bucketed
+  ranking.
+- ``exact_group_quantiles``: the window path, the reference the other
+  engines are tested against.
+
+For sketch accuracy at fixed memory, call Spark's ``percentile_approx``
+directly (mergeable Greenwald-Khanna partials, relative-error bound
+1/accuracy).
 """
 
 from __future__ import annotations
@@ -20,25 +28,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def approx_quantiles(
-    df: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    quantiles: Sequence[float] = (0.25, 0.5, 0.75, 0.95),
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """Per-group quantile sketch: one shuffle, map-side-mergeable partials,
-    memory bounded by ``accuracy`` (relative rank error ≤ 1/accuracy)
-    regardless of group size. Output columns: ``p25``/``p50``/... derived
-    from the quantile fractions."""
-    qarr = "array(" + ", ".join(f"{q}D" for q in quantiles) + ")"
-    sketched = df.groupBy(*keys).agg(
-        F.expr(f"percentile_approx({value_col}, {qarr}, {accuracy})").alias("__qs")
-    )
-    cols = [F.col("__qs")[i].alias(f"p{int(round(q * 100))}") for i, q in enumerate(quantiles)]
-    return sketched.select(*keys, *cols)
 
 
 def exact_group_quantiles(
@@ -250,9 +239,8 @@ def _value_histogram(df: DataFrame, keys: Sequence[str], value_col: str) -> Data
     """The shared first stage of every histogram quantile engine: one
     map-side-combinable (keys..., value) count shuffle with NULL values
     excluded, output bounded by |key groups| x |value domain| at any
-    corpus size. Extracted so the three engines (global window, grouped
-    window, grouped percentile) cannot silently diverge on histogram
-    semantics (review finding)."""
+    corpus size. Shared so the global and grouped engines cannot
+    silently diverge on histogram semantics (review finding)."""
     return (
         df.select(*keys, F.col(value_col).alias("__v"))
         .filter(F.col("__v").isNotNull())
@@ -314,113 +302,6 @@ def exact_quantiles_histogram(
     return r.agg(*aggs)
 
 
-def exact_group_quantiles_histogram(
-    df: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    quantiles: Sequence[float],
-    out_names: Sequence[str] | None = None,
-    block_width: float | None = None,
-) -> DataFrame:
-    """Exact PER-GROUP quantiles for a BOUNDED-CARDINALITY value domain:
-    :func:`exact_quantiles_histogram` grouped. One value-count histogram
-    per (group, value) — a single map-side-combinable shuffle whose
-    output is bounded by |groups| x |value domain| REGARDLESS of corpus
-    size — then cumulative ranks + group totals over the histogram rows
-    (two window frames riding ONE exchange on the group key) and the
-    same conditional-sum interpolation arithmetic as the row-ranked
-    engines (identical doubles to DuckDB quantile_cont).
-
-    When to use: discretized values — prices with cents, round()-ed
-    scores. The fixture's l_extendedprice has 583,090 distinct values at
-    BOTH 6M and 18M rows (the TPC-H price domain is finite), so this
-    engine's shuffle is constant-size where the row-ranked engines sort
-    the whole corpus; at 100 TB the gap is the whole game. For genuinely
-    continuous domains (distinct ~ rows) use
-    ``exact_group_quantiles_parallel``. NULL values excluded, NULL group
-    keys kept (they are real SQL groups), no sampling action, no
-    row-level window.
-
-    ``block_width``: the cumulative-rank windows partition on the GROUP
-    key, so with few groups (agg_stats_profile: THREE) the whole
-    histogram funnels through that many single-threaded sort tasks
-    however large the value domain or the cluster — the one serial
-    residue this engine had. With ``block_width`` set, the cumsum goes
-    two-level (the classic parallel prefix sum): intra-block running
-    sums window on (group, floor(value/width)) — parallel across
-    |groups| x |blocks| cells — and each block's starting offset plus
-    the group total come from a per-(group, block) totals relation
-    (histogram-pass reuse via exchange reuse; |groups| x |blocks| rows)
-    broadcast-joined back on. Identical integers out, so identical
-    quantiles. Pick width so blocks-per-group is O(100): parallelism
-    without a fat broadcast. None keeps the single-window form (right
-    when groups are many — then the group key already parallelizes).
-    MEASURED locally (round 13, sf0.1, 583k-value histogram, 3 groups,
-    32 cores): blocked 1.75 s vs plain 1.52 s — the second histogram
-    read + broadcast overhead exceeds the 3-task sort it parallelizes at
-    this size, so the driver query keeps the plain form; the option is
-    for per-group histograms large enough that a single task's sort
-    dominates (billions of distinct values on a wide cluster)."""
-    if block_width is not None and block_width <= 0:
-        # a negative width makes block ids DECREASE as values increase, so
-        # the off_w cumulative offsets accumulate from the wrong end and
-        # quantiles come out silently wrong (r13 advice; mirrors
-        # interval_overlap_join's bucket_width check)
-        raise ValueError("block_width must be positive when set")
-    if out_names is None:
-        out_names = [f"p{int(round(q * 100))}" for q in quantiles]
-    keys = list(keys)
-    hist = _value_histogram(df, keys, value_col)
-    if block_width is not None:
-        blk_col = F.floor(F.col("__v") / F.lit(float(block_width))).cast("long")
-        h = hist.withColumn("__blk", blk_col)
-        intra_w = Window.partitionBy(*keys, "__blk").orderBy("__v").rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-        h = h.withColumn("__cum_in", F.sum("__c").over(intra_w))
-        totals = (
-            hist.withColumn("__blk", blk_col)
-            .groupBy(*keys, "__blk")
-            .agg(F.sum("__c").alias("__bc"))
-        )
-        off_w = Window.partitionBy(*keys).orderBy("__blk").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        grp_w = Window.partitionBy(*keys)
-        totals = totals.select(
-            *keys,
-            "__blk",
-            F.coalesce(F.sum("__bc").over(off_w), F.lit(0)).alias("__off"),
-            F.sum("__bc").over(grp_w).alias("__n"),
-        )
-        r = _null_safe_join(h, totals, [*keys, "__blk"]).withColumn(
-            "__cum", F.col("__cum_in") + F.col("__off")
-        )
-    else:
-        cum_w = Window.partitionBy(*keys).orderBy("__v").rowsBetween(
-            Window.unboundedPreceding, 0
-        )
-        all_w = Window.partitionBy(*keys)
-        r = hist.withColumn("__cum", F.sum("__c").over(cum_w)).withColumn(
-            "__n", F.sum("__c").over(all_w)
-        )
-    aggs = []
-    for q, name in zip(quantiles, out_names):
-        pos = (F.col("__n") - 1) * F.lit(float(q))
-        lo = F.floor(pos)
-        frac = pos - lo
-        lo_in = (F.col("__cum") - F.col("__c") <= lo) & (lo < F.col("__cum"))
-        hi_in = (
-            (F.col("__cum") - F.col("__c") <= lo + 1)
-            & (lo + 1 < F.col("__cum"))
-            & (frac > 0)
-        )
-        t1 = F.sum(F.when(lo_in, F.col("__v") * (F.lit(1.0) - frac)))
-        t2 = F.sum(F.when(hi_in, F.col("__v") * frac))
-        aggs.append((t1 + F.coalesce(t2, F.lit(0.0))).alias(name))
-    return r.groupBy(*keys).agg(*aggs)
-
-
 def exact_group_quantiles_percentile(
     df: DataFrame,
     keys: Sequence[str],
@@ -431,8 +312,8 @@ def exact_group_quantiles_percentile(
     """Exact per-group quantiles for a BOUNDED-CARDINALITY value domain
     via Spark's ``percentile(value, array(...), frequency)`` aggregate
     over the (group, value) count histogram — the round-14 successor to
-    :func:`exact_group_quantiles_histogram` for the grouped-profile
-    queries. Same first stage (one map-side-combinable histogram shuffle
+    the window-over-histogram engine for the grouped-profile queries.
+    Same first stage (one map-side-combinable histogram shuffle
     bounded by |groups| x |value domain| at ANY corpus size), but the
     rank/interpolation arithmetic runs inside ONE hash aggregate instead
     of a per-group window sort + per-quantile conditional sums: measured
@@ -495,36 +376,6 @@ def _quantile_contrib_aggs(quantiles: Sequence[float], out_names: Sequence[str])
         )
         aggs.append(F.sum(contrib).alias(name))
     return aggs
-
-
-def approx_stats_profile(
-    df: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    accuracy: int = 10_000,
-) -> DataFrame:
-    """The agg_stats_profile shape with bounded memory: count/avg/min/max
-    (algebraic, exact) + sketched median and p25/p75/p95. Same single
-    shuffle, no per-group value buffering — safe for degenerate groups."""
-    qarr = "array(0.25D, 0.5D, 0.75D, 0.95D)"
-    profiled = df.groupBy(*keys).agg(
-        F.count("*").alias("n"),
-        F.round(F.avg(value_col), 2).alias("avg"),
-        F.min(value_col).alias("min"),
-        F.max(value_col).alias("max"),
-        F.expr(f"percentile_approx({value_col}, {qarr}, {accuracy})").alias("__qs"),
-    )
-    return profiled.select(
-        *keys,
-        "n",
-        "avg",
-        "min",
-        "max",
-        F.round(F.col("__qs")[0], 2).alias("p25"),
-        F.round(F.col("__qs")[1], 2).alias("median"),
-        F.round(F.col("__qs")[2], 2).alias("p75"),
-        F.round(F.col("__qs")[3], 2).alias("p95"),
-    )
 
 
 def wilson_keep_rate(

@@ -46,15 +46,6 @@ def bpe_ish_token_count(text: Column) -> Column:
 BPE_SPLIT_PATTERN = r"'(?:s|t|re|ve|m|ll|d)| ?\p{L}+| ?\p{N}+| ?[^\s\p{L}\p{N}]+"
 
 
-def bpe_regex_token_count(text: Column) -> Column:
-    """Count GPT-2-style pre-token pieces via one regexp_count — the
-    lower bound on real BPE token count (merges only split pieces
-    further, never join across pieces). Use for LLM-context budgeting
-    when the 4-chars/piece estimate (bpe_ish_token_count) is too crude;
-    both are pure codegen, no tokenizer dependency."""
-    return F.regexp_count(text, F.lit(BPE_SPLIT_PATTERN))
-
-
 def stopword_ratio_from_tokens(
     toks: Column, stopwords: tuple[str, ...] = EN_STOPWORDS
 ) -> Column:

@@ -58,20 +58,6 @@ def registrable_domain(host: Column, rules=None) -> Column:
     return public_suffix_registrable(host, rules, fallback_to_host=True)
 
 
-def normalize_url(url: Column) -> Column:
-    """Canonical dedup key for URL-level exact dedup: lowercased
-    www-stripped host + path with query/fragment and any trailing ``/``
-    removed. Two spellings of the same page (scheme case, www, tracking
-    params, trailing slash) collapse to one key. The host half IS
-    ``url_host`` (shared expression, not a re-implementation — the
-    dedup key and ``domain_cap``'s domains must agree on what a host
-    is)."""
-    rest = F.regexp_replace(url, _SCHEME, "")
-    rest = F.regexp_replace(rest, "[#?].*$", "")
-    path = F.regexp_replace(F.regexp_replace(rest, "^[^/]+", ""), "/+$", "")
-    return F.concat(url_host(url), path)
-
-
 #: query parameters that identify a CLICK, not a PAGE — the ad-tech and
 #: newsletter trackers every web-dedup pipeline strips (two crawls of the
 #: same article differ only in these). Anchored full-key regex alternation.
@@ -90,7 +76,7 @@ def canonical_url(
 ) -> Column:
     """Semantic-identity canonical form of a URL — the dedup key for
     URL-level exact dedup when the QUERY STRING can carry meaning
-    (``?id=123`` pages), unlike :func:`normalize_url` which drops it.
+    (``?id=123`` pages) and must survive.
 
     Steps (all codegen string/array expressions in the Java∩RE2 regex
     subset, so a relational twin evaluates the identical pipeline):

@@ -675,7 +675,7 @@ def agg_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bucket-ranked exact_group_quantiles_parallel (4.07 s sf1 /
     7.7 s sf3 — samples boundaries in an extra action and
     row_number-ranks the FULL corpus); NOT the window-over-histogram
-    exact_group_quantiles_histogram that held rounds 11-13 (the r14
+    histogram engine that held rounds 11-13 (the r14
     A/B: percentile-over-histogram is bit-identical and 1.67-1.83 ->
     1.34 s sf1 / 2.51 -> 2.37 sf3 / 1.81 -> 1.31 sf0.1 end-to-end —
     the rank arithmetic fuses into one hash aggregate instead of a
@@ -690,7 +690,7 @@ def agg_stats_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel engine remains the right tool for continuous domains
     (distinct ~ rows). The algebraic aggregates run in a separate
     single-shuffle pass and broadcast-join onto the quantiles.
-    For sketch-accuracy profiling use stats.approx_stats_profile."""
+    For sketch-accuracy profiling use Spark's ``percentile_approx``."""
     from science_datalake_spark.operators.stats import (
         exact_group_quantiles_percentile,
     )
@@ -1128,10 +1128,8 @@ def events_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling (1h) + sliding (1h length / 30min slide) window aggregation
     in one UNION ALL plan (batch form). Every event lands in exactly 2
     overlapping sliding windows; Spark's window() expands rows natively
-    while the oracle reconstructs the same epoch-aligned starts. The same
-    plans run as Structured Streaming with a watermark in
-    streaming/events.py — these batch twins are the oracle-checkable
-    versions (SURVEY §2.10)."""
+    while the oracle reconstructs the same epoch-aligned starts. The
+    reference is pure batch (SURVEY §2.10)."""
     e = table(spark, sf_dir, "events")
     tumbling = (
         e.groupBy(
@@ -1220,8 +1218,7 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization (30-min inactivity gap) via lag + running sum — the
     lead/lag + running-aggregate window shapes the reference never needed
-    (SURVEY §2.5 'not present'), added as first-class coverage. The
-    streaming twin is streaming/sessions.py (applyInPandasWithState)."""
+    (SURVEY §2.5 'not present'), added as first-class coverage."""
     e = table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     run = w.rowsBetween(Window.unboundedPreceding, 0)

@@ -1537,7 +1537,7 @@ def web_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/web.canonical_url): four crawl spellings of each page —
     www + scheme case, trailing slash, tracking params in different
     orders/positions, fragment — collapse to ONE canonical URL while the
-    semantic ``id=`` parameter survives (normalize_url would drop it).
+    semantic ``id=`` parameter survives.
     Per-site rollup of raw spellings vs canonical pages; the DuckDB twin
     evaluates the identical regexp/list pipeline."""
     from science_datalake_spark.operators.web import canonical_url, url_host

@@ -1,5 +1,7 @@
-"""Automated sanity suite — the port of the reference's 10 end-to-end
-validation checks (notebooks/sanity_checks.ipynb; technical_validation.tex:8-30).
+"""Automated sanity suite — the port of the reference's end-to-end
+validation checks over the unified table (notebooks/sanity_checks.ipynb;
+technical_validation.tex:8-30). Golden counts are asserted by the
+callers that know them (the pipeline tests, perfbench's lake_update).
 
 Each check returns (name, passed, detail). All checks are declarative
 Spark aggregations — they run unchanged at 100 TB (counts/aggregations
@@ -97,26 +99,6 @@ def check_pk_unique(unified: DataFrame, **opts) -> CheckResult:
     return _run(unified, _pk_unique(**opts))[0]
 
 
-def check_referential_integrity(child: DataFrame, parent: DataFrame, child_key: str, parent_key: str) -> CheckResult:
-    """#5: no orphan foreign keys (left-anti join)."""
-    orphans = (
-        child.select(F.col(child_key).alias("k"))
-        .filter(F.col("k").isNotNull())
-        .join(parent.select(F.col(parent_key).alias("k")), "k", "left_anti")
-        .count()
-    )
-    return CheckResult("referential_integrity", orphans == 0, f"{orphans} orphans")
-
-
-def check_join_rate(left: DataFrame, right: DataFrame, key: str, min_rate: float = 0.85) -> CheckResult:
-    """#6: cross-dataset join rate floor (the reference requires ≥85% on a
-    RoS→OpenAlex sample)."""
-    n = left.count()
-    joined = left.join(right.select(key).distinct(), key, "left_semi").count()
-    rate = joined / n if n else 0.0
-    return CheckResult("join_rate", rate >= min_rate, f"{rate:.1%} (floor {min_rate:.0%})")
-
-
 def _citation_corr(min_corr: float = 0.8, min_pairs_ok: int = 2) -> _Spec:
     def verdict(r: Row) -> CheckResult:
         vals = [r["corr_a"], r["corr_b"], r["corr_c"]]
@@ -175,12 +157,6 @@ def _retraction_rate(max_rate: float = 0.01) -> _Spec:
 def check_retraction_rate(unified: DataFrame, **thresholds) -> CheckResult:
     """#9b: retraction rate sanity (<1%)."""
     return _run(unified, _retraction_rate(**thresholds))[0]
-
-
-def check_golden_count(df: DataFrame, expected: int, label: str = "rows") -> CheckResult:
-    """#10: exact golden-count reproducibility."""
-    n = df.count()
-    return CheckResult(f"golden_{label}", n == expected, f"{n} (expected {expected})")
 
 
 def run_core(unified: DataFrame) -> list[CheckResult]:

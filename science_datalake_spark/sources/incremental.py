@@ -7,8 +7,8 @@ next run; each converted file becomes one output shard so a partial run is
 resumable at file granularity.
 
 Spark-first note: for streams of files the idiomatic form is the
-Structured Streaming file source (streaming/events.py) whose checkpoint
-dir subsumes this bookkeeping. This batch variant exists because the
+Structured Streaming file source, whose checkpoint dir subsumes this
+bookkeeping. This batch variant exists because the
 reference's pipelines are batch re-runs over a growing snapshot directory,
 and because it gives compaction (sinks.compact) a defined shard layout.
 """

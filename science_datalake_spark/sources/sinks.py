@@ -23,7 +23,8 @@ written files are read back and counted, and any difference raises
 would re-run the whole plan being written just to check it. Spark 4.1
 caveat: after its first Observation a session can no longer be serialized
 (``SparkSession.observationManager`` is not transient), so nothing may
-carry the session into a task closure (see quality_model's LR summary).
+carry the session into a task closure (a fitted Spark ML model that
+keeps its training summary does).
 """
 
 from __future__ import annotations

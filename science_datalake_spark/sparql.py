@@ -1046,12 +1046,6 @@ class _Parser:
         raise SparqlError(f"unexpected FILTER operand: {t[1]!r}")
 
 
-def _parse(query: str):
-    """Parse entry point (kept as a function for the fuzz test surface:
-    any input either parses or raises SparqlError)."""
-    return _Parser(query).parse()
-
-
 def _filter_column(ast, columns: set[str]) -> Column:
     """Filter AST → Spark Column (vars must be bound, except under BOUND)."""
 

@@ -5,8 +5,7 @@ user within a time bound ("click within N minutes after the view").
 Spark's stream-stream join keeps both sides' unmatched rows in state; the
 watermark PLUS the time-range condition is what makes that state bounded
 — without the range the join would buffer both streams forever. Late
-rows beyond the watermark are dropped deterministically, same as the
-windowed aggs in streaming/events.py.
+rows beyond the watermark are dropped deterministically.
 
 The reference is batch-only; this is the additive §2.10 surface for the
 event-correlation queries the batch as-of join (operators/asof.py) serves

@@ -235,42 +235,3 @@ def coverage_upset(unified: DataFrame) -> DataFrame:
     """2^k coverage-combination counts (materialize_unified_papers.py:502-509)."""
     flags = ["has_openalex", "has_s2ag", "has_sciscinet", "has_pwc", "has_retraction"]
     return unified.groupBy(*flags).agg(F.count("*").alias("n")).orderBy(*flags)
-
-
-def materialize_unified_papers(
-    spark,
-    oa: DataFrame,
-    s2: DataFrame,
-    sci: DataFrame,
-    out_path: str,
-    retractions: DataFrame | None = None,
-    code_links: DataFrame | None = None,
-    view_name: str = "unified_papers",
-) -> DataFrame:
-    """Build the unified table ONCE, write it doi-clustered to parquet,
-    register it as a catalog view, and return the read-back DataFrame —
-    the durable twin of the reference's materialize-then-query design
-    (materialize_unified_papers.py:402-429 writes the table; every
-    downstream vignette queries it instead of re-unifying; create_
-    unified_db.py:579-583 adds the doi index our doi-clustering
-    replaces with row-group min/max pruning).
-
-    The session-scoped spine cache (queries/unify_q.py) covers the
-    interactive/bench case; this is the cross-session form: a lake
-    build runs it once per snapshot, and DOI point/range lookups on the
-    registered view prune row groups via the cluster sort. Verified
-    write (count recheck) through sources/sinks.write_parquet's
-    discipline, clustered via write_parquet_partitioned's cluster_cols
-    path without directory partitioning (DOI has no useful directory
-    hierarchy; 2^k coverage flags would explode directories).
-    """
-    from science_datalake_spark.sources.sinks import write_parquet
-
-    unified = build_unified_papers(
-        oa, s2, sci, retractions=retractions, code_links=code_links
-    )
-    clustered = unified.repartitionByRange(F.col("doi")).sortWithinPartitions("doi")
-    write_parquet(clustered, out_path)
-    out = spark.read.parquet(out_path)
-    out.createOrReplaceTempView(view_name)
-    return out

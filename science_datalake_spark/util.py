@@ -52,32 +52,26 @@ def _split_top_level(schema: str) -> list[str]:
     return parts
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) pair for ``path`` through the JVM gateway —
-    resolves the scheme (file://, hdfs://, s3a://, ...) against the
-    session's Hadoop configuration."""
-    jvm = spark._jvm  # type: ignore[attr-defined]
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())  # type: ignore[attr-defined]
-    return fs, hpath
+_OPTIONAL_CACHE: dict[str, object] = {}
 
 
-def fs_exists(spark: SparkSession, path: str) -> bool:
-    """Existence probe via the Hadoop FileSystem API. ``os.path.exists``
-    silently answers False for every non-local URI, which turns "probe
-    the durable index" into "pretend there is no history" on hdfs://
-    or s3a:// — this resolves the scheme instead, so durable-state
-    operators behave identically on any Hadoop-supported filesystem."""
-    fs, hpath = _hadoop_fs(spark, path)
-    return bool(fs.exists(hpath))
+def optional_import(name: str):
+    """``try: import`` upgrade probe — the reference's own pattern for
+    langdetect (convert_fulltext.py:78-87: import, degrade to a heuristic
+    when absent). Returns the module, or None when it is not installed; a
+    module that is installed but fails to import raises. The result is
+    cached per process so hot paths (per-payload decode) don't re-pay the
+    failed-import path scan."""
+    import importlib
 
-
-def fs_mkdirs(spark: SparkSession, path: str) -> None:
-    """Create a (marker) directory via the Hadoop FileSystem API —
-    works on any scheme, used for idempotence markers next to durable
-    state (underscore-prefixed names stay invisible to Spark readers)."""
-    fs, hpath = _hadoop_fs(spark, path)
-    fs.mkdirs(hpath)
+    if name in _OPTIONAL_CACHE:
+        return _OPTIONAL_CACHE[name]
+    try:
+        mod = importlib.import_module(name)
+    except ImportError:
+        mod = None
+    _OPTIONAL_CACHE[name] = mod
+    return mod
 
 
 def round_half_away(x: float, digits: int) -> float:

@@ -1,8 +1,8 @@
-"""Physical-plan inspection: assert the plan you designed is the plan you
-got (SURVEY §4 — the reference delegates to DuckDB's optimizer; here we
-delegate to Catalyst but VERIFY the outcome).
+"""Physical-plan predicates for tests: assert the plan you designed is the
+plan you got (SURVEY §4 — the reference delegates to DuckDB's optimizer;
+here we delegate to Catalyst but VERIFY the outcome).
 
-Used by tests/test_plans.py to pin the scale-critical properties:
+The plan tests use them to pin the scale-critical properties:
 - filters reach the Parquet scan (PushedFilters)
 - scans read only projected columns (ReadSchema)
 - dimension joins broadcast (BroadcastHashJoin), fact joins sort-merge

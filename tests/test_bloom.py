@@ -43,7 +43,7 @@ def test_bloom_null_probes_false(spark):
 
 
 def test_bloom_probe_is_map_only(spark):
-    from science_datalake_spark import plans
+    from tests import plan_helpers as plans
 
     members = spark.createDataFrame([("x",)], "fp STRING")
     model = bloom_build(members, "fp", num_bits=64 * 16, num_hashes=4)
@@ -85,37 +85,6 @@ def test_incremental_null_fingerprint_is_new(spark):
     # 1 is a prior dup; 2 genuinely new; 3 has NULL fp -> new (anti-join
     # semantics: NULL never equals)
     assert got == {2, 3}
-
-
-def test_bloom_write_read_roundtrip(spark, tmp_path):
-    """The persisted filter must probe identically after a round-trip —
-    the durable release artifact the next ingest batch loads instead of
-    rescanning the prior corpus."""
-    from science_datalake_spark.operators.bloom import bloom_read, bloom_write
-
-    members = spark.createDataFrame(
-        [(f"m-{i}",) for i in range(500)], "fp STRING"
-    )
-    model = bloom_build(members, "fp", num_bits=1 << 14, num_hashes=4)
-    path = str(tmp_path / "bloom_release")
-    bloom_write(model, spark, path)
-    loaded = bloom_read(spark, path)
-    assert (
-        loaded.num_bits,
-        loaded.num_hashes,
-        loaded.n_items,
-        loaded.words,
-    ) == (model.num_bits, model.num_hashes, model.n_items, model.words)
-    probe = spark.createDataFrame(
-        [(f"m-{i}",) for i in range(0, 500, 7)] + [(f"x-{i}",) for i in range(100)],
-        "fp STRING",
-    )
-    a = {tuple(r) for r in bloom_might_contain(probe, "fp", model).collect()}
-    b = {tuple(r) for r in bloom_might_contain(probe, "fp", loaded).collect()}
-    assert a == b
-    # all true members positive on the loaded model too
-    got = {r["fp"]: r["might_contain"] for r in bloom_might_contain(probe, "fp", loaded).collect()}
-    assert all(v for k, v in got.items() if k.startswith("m-"))
 
 
 def test_bloom_size_for_math():

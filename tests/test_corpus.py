@@ -325,7 +325,7 @@ def test_snapshot_diff_classifies_all_states(spark):
 
 
 def test_snapshot_diff_single_join(spark):
-    from science_datalake_spark import plans
+    from tests import plan_helpers as plans
     from science_datalake_spark.operators.corpus import snapshot_diff
 
     old = spark.createDataFrame([(1, "s", "a")], "doc_id INT, source STRING, fp STRING")
@@ -373,48 +373,3 @@ def test_snapshot_diff_null_fingerprint_transition_is_changed(spark):
     )
     got = {r["doc_id"]: r["status"] for r in snapshot_diff(old, new, "doc_id", "fp").collect()}
     assert got == {1: "changed", 2: "changed", 3: "unchanged"}
-
-
-def test_write_sharded_corpus_layout_and_order(spark, tmp_path):
-    """write_sharded_corpus must produce a Hive layout partitioned by
-    shard whose per-shard row order IS the seeded shuffle order, with
-    every input row present exactly once — and the pre-write plan must
-    pay exactly ONE hash exchange (repartition by shard; the sort is
-    within partitions, never global)."""
-    import os
-
-    from science_datalake_spark import plans
-    from science_datalake_spark.operators.corpus import (
-        shard_shuffle,
-        write_sharded_corpus,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"text {i}") for i in range(300)], "doc_id LONG, text STRING"
-    )
-    out = str(tmp_path / "release")
-    write_sharded_corpus(docs, out, "doc_id", seed=7)
-    assert any(d.startswith("shard=") for d in os.listdir(out))
-
-    back = spark.read.parquet(out)
-    assert back.count() == 300
-    assert {r["doc_id"] for r in back.select("doc_id").collect()} == set(range(300))
-    # per-shard files are sorted by order_key (the epoch permutation)
-    import glob
-
-    some_shard = sorted(glob.glob(out + "/shard=*/"))[0]
-    import pyarrow.parquet as pq
-
-    for f in glob.glob(some_shard + "*.parquet"):
-        keys = pq.read_table(f, columns=["order_key"])["order_key"].to_pylist()
-        assert keys == sorted(keys), f
-
-    # plan: exactly one hash exchange on the pre-write frame
-    staged = (
-        shard_shuffle(docs, "doc_id", seed=7)
-        .repartition("shard")
-        .sortWithinPartitions("shard", "order_key")
-    )
-    assert plans.count_exchanges(staged) == 1, plans.physical_plan(staged)
-    p = plans.physical_plan(staged)
-    assert "rangepartitioning" not in p  # never a global sort

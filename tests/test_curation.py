@@ -5,11 +5,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from science_datalake_spark.operators.curation import (
-    curate,
-    curation_funnel,
-    kept_corpus,
-)
+from science_datalake_spark.operators.curation import curate, curation_funnel
 
 GOOD = (
     "the study of the data is a good one and the results are in the "
@@ -83,7 +79,7 @@ def test_curate_decontamination_and_split(spark):
     # doc 4 shares most trigrams with eval but has a distinct tail;
     # whatever the flag, its status must be contaminated or kept:<split>
     assert by_id[4]["curation_status"].startswith(("kept:", "contaminated"))
-    kept = kept_corpus(out)
+    kept = out.filter(F.col("curation_status").startswith("kept"))
     assert {r["curation_status"] for r in kept.collect()} <= {
         "kept:train",
         "kept:test",
@@ -103,77 +99,6 @@ def test_funnel_counts_sum_to_input(spark):
     }
     # token sums present per bucket
     assert all(r["n_tokens"] > 0 for r in funnel)
-
-
-_SPAMMY = (
-    "buy cheap now click here the free winner of a casino bonus deal to "
-    "win the cash prize and claim the urgent discount offer in it now"
-)
-
-
-def _spam_model(spark):
-    """A tiny fitted quality classifier: GOOD-style docs labeled 1,
-    spam-vocabulary docs labeled 0 (both pass the heuristic gate)."""
-    from science_datalake_spark.operators.quality_model import train_quality_model
-
-    rows = []
-    for i in range(30):
-        rows.append((2 * i, GOOD + f" tail{i}", 1))
-        rows.append((2 * i + 1, _SPAMMY + f" tail{i}", 0))
-    labeled = spark.createDataFrame(rows, "doc_id LONG, text STRING, label INT")
-    return train_quality_model(labeled, "label", num_features=1 << 12)
-
-
-def test_curate_model_gate_attribution_and_dedup_interaction(spark):
-    """With a quality_model passed, heuristic-gate survivors scored below
-    the threshold get model:low_quality, sit between quality and
-    duplicate in the first-failing order, and cannot be (or displace) a
-    dedup canonical; without a model the columns are NULL and nothing
-    else changes."""
-    model = _spam_model(spark)
-    rows = [
-        (0, GOOD),          # kept
-        (1, GOOD),          # duplicate of 0
-        (2, "short text"),  # quality:too_short (model never consulted)
-        (3, _SPAMMY),       # model:low_quality
-        (4, _SPAMMY),       # same text as 3: model fires BEFORE dedup,
-                            # and neither can be a canonical
-    ]
-    d = spark.createDataFrame(rows, "doc_id LONG, text STRING")
-    out = curate(d, "doc_id", "text", quality_model=model)
-    by_id = {r["doc_id"]: r for r in out.collect()}
-    assert by_id[0]["curation_status"] == "kept"
-    assert by_id[1]["curation_status"] == "duplicate"
-    assert by_id[2]["curation_status"] == "quality:too_short"
-    assert by_id[3]["curation_status"] == "model:low_quality"
-    assert by_id[4]["curation_status"] == "model:low_quality"
-    # model-rejected rows dedup as singletons (per-row key)
-    assert by_id[3]["canonical_id"] == 3 and by_id[4]["canonical_id"] == 4
-    assert by_id[0]["model_keep"] is True and by_id[3]["model_keep"] is False
-    assert 0.0 <= by_id[3]["quality_prob"] < 0.5
-
-    # no model: columns NULL, statuses as before
-    plain = {r["doc_id"]: r for r in curate(d, "doc_id", "text").collect()}
-    assert plain[3]["curation_status"] == "kept"
-    assert plain[4]["curation_status"] == "duplicate"
-    assert plain[3]["quality_prob"] is None and plain[3]["model_keep"] is None
-
-
-def test_curate_model_gate_stays_lazy(spark):
-    """The model stage is a map-only transform chain: adding it must not
-    run jobs at build time (the no-per-stage-actions contract)."""
-    model = _spam_model(spark)
-    d = _docs(spark)
-    before = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
-    curate(
-        d,
-        "doc_id",
-        "text",
-        quality_model=model,
-        fractions={"train": 0.9, "val": 0.05, "test": 0.05},
-    )
-    after = spark.sparkContext.statusTracker().getJobIdsForGroup(None)
-    assert list(before) == list(after)
 
 
 def test_curate_is_fully_lazy(spark):

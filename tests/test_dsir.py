@@ -14,12 +14,12 @@ import pytest
 
 import pyspark.sql.functions as F
 
-from science_datalake_spark import plans
 from science_datalake_spark.operators.dsir import (
     dsir_log_weights,
     dsir_sample,
     feature_counts,
 )
+from tests import plan_helpers as plans
 
 B = 64
 ALPHA = 0.5
@@ -151,107 +151,3 @@ def test_gumbel_sample_varies_with_seed_but_is_deterministic(spark):
         )
     # softmax sampling with noise explores beyond the argmax pair
     assert len(seen) >= 3, seen
-
-
-def test_model_scorer_matches_join_scorer_and_defaults_unseen(spark, tmp_path):
-    """dsir_model_write/read + dsir_score_with_model must reproduce the
-    join-based dsir_log_weights on the fitting corpus, and score a doc of
-    NEVER-SEEN tokens with the stored smoothed default per token."""
-    import math
-
-    from science_datalake_spark.operators.dsir import (
-        dsir_log_weights,
-        dsir_model_read,
-        dsir_model_write,
-        dsir_score_with_model,
-    )
-
-    raw, target = _df(spark, RAW), _df(spark, TARGET)
-    path = str(tmp_path / "dsir_model")
-    dsir_model_write(raw, target, "doc_id", "text", path, num_buckets=B, alpha=ALPHA)
-    model = dsir_model_read(spark, path, num_buckets=B)
-    assert len(model) == B
-
-    want = {
-        r["doc_id"]: r["log_weight"]
-        for r in dsir_log_weights(raw, target, "doc_id", "text", B, ALPHA).collect()
-    }
-    got = {
-        r["doc_id"]: r["log_weight"]
-        for r in dsir_score_with_model(raw, "doc_id", "text", model).collect()
-    }
-    assert set(got) == set(want)
-    for k in want:
-        assert abs(got[k] - want[k]) < 1e-9, (k, got[k], want[k])
-
-    # unseen vocabulary -> per-token default. With 4-token docs over a
-    # 64-bucket space collisions with fitted buckets are possible, so use
-    # tokens chosen to land in buckets absent from BOTH corpora.
-    fitted = {
-        _bucket(t) for d in (*RAW.values(), *TARGET.values()) for t in d.split()
-    }
-    unseen_tokens = [
-        t for t in (f"zzz{i}" for i in range(500)) if _bucket(t) not in fitted
-    ][:4]
-    assert len(unseen_tokens) == 4
-    T = sum(len(t.split()) for t in TARGET.values())
-    R = sum(len(t.split()) for t in RAW.values())
-    default = (
-        math.log(ALPHA) - math.log(T + ALPHA * B)
-        - math.log(ALPHA) + math.log(R + ALPHA * B)
-    )
-    novel = spark.createDataFrame([(99, " ".join(unseen_tokens))], ["doc_id", "text"])
-    got99 = dsir_score_with_model(novel, "doc_id", "text", model).collect()[0]
-    assert abs(got99["log_weight"] - 4 * default) < 1e-9
-
-
-def test_model_scorer_runs_unchanged_on_a_stream(spark, tmp_path):
-    """The map-only scorer is a stateless projection: an availableNow drain
-    over a file stream must produce exactly the batch scores."""
-    import json as _json
-
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from science_datalake_spark.operators.dsir import (
-        dsir_model_read,
-        dsir_model_write,
-        dsir_score_with_model,
-    )
-
-    raw, target = _df(spark, RAW), _df(spark, TARGET)
-    path = str(tmp_path / "model")
-    dsir_model_write(raw, target, "doc_id", "text", path, num_buckets=B, alpha=ALPHA)
-    model = dsir_model_read(spark, path, num_buckets=B)
-
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    for i, (k, v) in enumerate(RAW.items()):
-        with open(src / f"f{i}.json", "w") as f:
-            f.write(_json.dumps({"doc_id": k, "text": v}) + "\n")
-    schema = StructType(
-        [StructField("doc_id", LongType()), StructField("text", StringType())]
-    )
-    stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(
-        str(src)
-    )
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    q = (
-        dsir_score_with_model(stream, "doc_id", "text", model)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["doc_id"]: r["log_weight"] for r in spark.read.parquet(out).collect()
-    }
-    want = {
-        r["doc_id"]: r["log_weight"]
-        for r in dsir_score_with_model(raw, "doc_id", "text", model).collect()
-    }
-    assert got.keys() == want.keys()
-    for k in want:
-        assert abs(got[k] - want[k]) < 1e-12

@@ -114,36 +114,6 @@ def test_ivf_nonbroadcast_probe_fallback_identical(spark, sf_oracle):
     assigned.unpersist()
 
 
-def test_ivf_kmeans_codebook_recall(spark, sf_oracle):
-    """KMeans codebook: same (cent_id, cent_vec) contract, and at equal
-    n_probe a LEARNED codebook should not collapse recall vs brute force
-    (recall-comparison test from the round-3 verdict)."""
-    import pyspark.sql.functions as F
-
-    from science_datalake_spark.catalog import table
-    from science_datalake_spark.operators.similarity import (
-        cosine_topk,
-        ivf_assign,
-        ivf_topk,
-        kmeans_centroids,
-    )
-
-    e = table(spark, sf_oracle, "embeddings").filter(F.col("vec_id") < 200)
-    cents = kmeans_centroids(e, "vec_id", "embedding", k=8, seed=7)
-    assert dict(cents.dtypes) == {"cent_id": "int", "cent_vec": "array<double>"}
-    assert cents.count() == 8
-
-    assigned = ivf_assign(e, cents, "vec_id", "embedding").cache()
-    q = e.filter(F.col("vec_id") < 10)
-    approx = ivf_topk(assigned, cents, q, "vec_id", "embedding", k=5, n_probe=2)
-    brute = cosine_topk(e, q, "vec_id", "embedding", k=5)
-    a = {(r["query_id"], r["cand_id"]) for r in approx.collect()}
-    b = {(r["query_id"], r["cand_id"]) for r in brute.collect()}
-    recall = len(a & b) / len(b)
-    assert recall >= 0.4, f"kmeans-IVF recall collapsed: {recall}"
-    assigned.unpersist()
-
-
 def test_ivf_index_amortizes_build(spark, sf_smoke):
     """ivf_index caches (centroids, assigned) per (session, key): the
     second call returns the SAME persisted assigned frame (no rebuild —
@@ -478,7 +448,7 @@ def test_quantize_int8_roundtrip_and_edge_cases(spark):
 
 def test_quantize_int8_map_only_plan(spark):
     """Quantization must not shuffle — it is a narrow projection."""
-    from science_datalake_spark import plans
+    from tests import plan_helpers as plans
     from science_datalake_spark.operators.embedding import quantize_int8
 
     df = spark.createDataFrame(
@@ -589,7 +559,7 @@ def test_int8_fidelity_sql_engine_is_map_only_single_fold(spark):
     ONCE: the accumulator struct is materialized as one column, so the
     plan contains exactly one `aggregate(` over the zipped array — the
     round-9 form paid five independent HOF passes per vector."""
-    from science_datalake_spark import plans
+    from tests import plan_helpers as plans
     from science_datalake_spark.operators.embedding import (
         int8_fidelity,
         quantize_int8,
@@ -813,61 +783,6 @@ def test_late_interaction_engines_agree_with_nulls(spark):
         rb = sorted(b.collect(), key=key)
         assert [tuple(r) for r in ra] == [tuple(r) for r in rb], ntc
         assert len(ra) == 6 * 4, ntc
-
-
-def test_mmr_null_vector_candidates_rank_last(spark):
-    """Null/ragged/zero-norm-vector candidates must not fill the top-k on
-    pure relevance (their diversity penalty is uncomputable): they sit
-    out the greedy chain and tail-fill AFTER every usable candidate with
-    a NULL mmr_score."""
-    from science_datalake_spark.operators.similarity import mmr_rerank
-
-    cands = spark.createDataFrame(
-        [
-            ("q1", "N1", 0.99, None),          # null vec, huge relevance
-            ("q1", "N2", 0.98, [0.0, 0.0]),    # zero-norm
-            ("q1", "A", 0.9, [1.0, 0.0]),
-            ("q1", "B", 0.2, [0.0, 1.0]),
-        ],
-        "query_id STRING, cand_id STRING, score DOUBLE, vec ARRAY<DOUBLE>",
-    )
-    got = {
-        r["rank"]: (r["cand_id"], r["mmr_score"])
-        for r in mmr_rerank(cands, k=4, lam=0.5).collect()
-    }
-    assert got[1][0] == "A" and got[2][0] == "B"
-    assert got[3] == ("N1", None) and got[4] == ("N2", None)
-
-
-def test_mmr_rerank_demotes_near_duplicates(spark):
-    """Hand-computed MMR (lam=0.5): the near-duplicate of the top pick
-    must fall BEHIND a less-relevant-but-diverse candidate.
-    rel(A,B,C) = 1.0, 0.95, 0.5; B is A's clone ([1,0]), C orthogonal.
-    pick1 = A (mmr 1.0); pick2: B = .5*.95-.5*1 = -0.025 vs
-    C = .5*.5-0 = 0.25 -> C; pick3 = B (-0.025)."""
-    from science_datalake_spark.operators.similarity import mmr_rerank
-
-    cands = spark.createDataFrame(
-        [
-            ("q1", "A", 1.0, [1.0, 0.0]),
-            ("q1", "B", 0.95, [1.0, 0.0]),
-            ("q1", "C", 0.5, [0.0, 1.0]),
-            # second query group: pure relevance order (all orthogonal)
-            ("q2", "X", 0.9, [1.0, 0.0]),
-            ("q2", "Y", 0.8, [0.0, 1.0]),
-        ],
-        "query_id STRING, cand_id STRING, score DOUBLE, vec ARRAY<DOUBLE>",
-    )
-    got = {
-        (r["query_id"], r["rank"]): (r["cand_id"], r["mmr_score"])
-        for r in mmr_rerank(cands, k=3, lam=0.5).collect()
-    }
-    assert got[("q1", 1)] == ("A", 1.0)
-    assert got[("q1", 2)] == ("C", 0.25)
-    assert got[("q1", 3)] == ("B", -0.025)
-    assert got[("q2", 1)] == ("X", 0.9)
-    assert got[("q2", 2)][0] == "Y"
-    assert len(got) == 5
 
 
 def test_pq_codebooks_session_cache(spark):

@@ -1,147 +1,37 @@
-"""Pluggable batch-model contract: lazy per-worker init, drop-in custom
-models, built-in stand-ins agree with their native-column twins."""
+"""util.optional_import: the probe behind the optional-library upgrade
+paths (PIL image decode, rapidfuzz Jaro-Winkler)."""
 
 from __future__ import annotations
 
-import pandas as pd
-import pyspark.sql.functions as F
 import pytest
 
-from science_datalake_spark.models import (
-    BatchModel,
-    HashedEncoderModel,
-    StopwordLangIDModel,
-    apply_model,
-)
-
-TEXTS = [
-    "the quick brown fox jumps over the lazy dog and it is a good day",
-    "zx9 qq7 bb1 kk3",
-    "",
-    None,
-    "a tale of two cities and the best of times",
-]
-
-
-def _docs(spark):
-    return spark.createDataFrame([(i, t) for i, t in enumerate(TEXTS)], "id INT, text STRING")
-
-
-def test_custom_model_plugs_in(spark):
-    """Any object with predict_batch works — no engine changes needed."""
-
-    class ShoutModel:
-        def predict_batch(self, batch: pd.Series) -> pd.Series:
-            return batch.map(lambda t: t.upper() if t else "")
-
-    assert isinstance(ShoutModel(), BatchModel)
-    out = apply_model(_docs(spark), ShoutModel, "string", "text", "shout")
-    rows = {r["id"]: r["shout"] for r in out.collect()}
-    assert rows[0].startswith("THE QUICK")
-    assert rows[2] == "" and rows[3] == ""
-
-
-def test_factory_called_lazily_not_on_driver(spark):
-    """The predict_batch_udf contract: building the column must NOT build
-    the model; only executing a batch does."""
-    calls = []
-
-    class Tracking:
-        def __init__(self):
-            calls.append("built")
-
-        def predict_batch(self, batch: pd.Series) -> pd.Series:
-            return batch.map(lambda t: "x")
-
-    df = apply_model(_docs(spark), Tracking, "string", "text", "o")
-    assert calls == []  # plan construction builds nothing
-    assert df.count() == 5
-    # (the factory then ran inside executor workers, not in this process)
-    assert calls == []
-
-
-def test_langid_model_matches_native_column(spark):
-    from science_datalake_spark.operators.textops import predict_lang
-
-    df = apply_model(_docs(spark), StopwordLangIDModel, "string", "text", "model_lang")
-    both = df.withColumn("native_lang", predict_lang(F.col("text"))).collect()
-    for r in both:
-        assert r["model_lang"] == r["native_lang"], r
-
-
-def test_encoder_model_matches_embed_udf(spark):
-    from science_datalake_spark.operators.embedding import embed
-
-    via_model = apply_model(
-        _docs(spark), HashedEncoderModel, HashedEncoderModel.output_type, "text", "embedding"
-    )
-    via_udf = embed(_docs(spark), "text")
-    m = {r["id"]: r["embedding"] for r in via_model.collect()}
-    u = {r["id"]: r["embedding"] for r in via_udf.collect()}
-    assert m == u
+from science_datalake_spark.util import _OPTIONAL_CACHE, optional_import
 
 
 def test_optional_import_probe():
-    from science_datalake_spark.models import optional_import
-
     assert optional_import("json") is not None
     assert optional_import("definitely_not_a_module_xyz") is None
     # cached: second probe returns the same object without re-importing
     assert optional_import("json") is optional_import("json")
 
 
-@pytest.mark.optional_deps
-def test_auto_langid_factory_upgrades_or_degrades(spark):
-    """The factory returns the real langdetect model when the library is
-    importable, else the stopword stand-in — and EITHER way satisfies the
-    BatchModel contract and calls English text 'en'."""
-    import pandas as pd
-
-    from science_datalake_spark import models
-
-    m = models.auto_langid_factory()()
-    if models.optional_import("langdetect") is not None:
-        assert isinstance(m, models.LangDetectModel)
-    else:
-        assert isinstance(m, models.StopwordLangIDModel)
-    out = m.predict_batch(
-        pd.Series(["the cat sat on the mat and the dog is in the house", "", None])
+def test_optional_import_raises_for_a_broken_module(tmp_path, monkeypatch):
+    """Only an absent module degrades to None: one that is installed but
+    fails while importing raises its own error."""
+    (tmp_path / "broken_optional_mod.py").write_text(
+        'raise RuntimeError("broken at import")\n'
     )
-    assert out.iloc[0] == "en"
-    assert out.iloc[1] == "other" and out.iloc[2] == "other"
-
-
-@pytest.mark.optional_deps
-def test_auto_encoder_factory_upgrades_or_degrades():
-    """Same auto-upgrade shape for the text encoder: sentence-transformers
-    when present, hashed bag-of-words otherwise; both produce normalized
-    float vectors."""
-    import math
-
-    import pandas as pd
-
-    from science_datalake_spark import models
-
-    m = models.auto_encoder_factory()()
-    if models.optional_import("sentence_transformers") is not None:
-        assert isinstance(m, models.SentenceTransformerEncoderModel)
-    else:
-        assert isinstance(m, models.HashedEncoderModel)
-    vecs = m.predict_batch(pd.Series(["hello world", "hello world"]))
-    v0, v1 = vecs.iloc[0], vecs.iloc[1]
-    assert v0 == v1  # deterministic
-    assert abs(math.sqrt(sum(x * x for x in v0)) - 1.0) < 1e-5  # L2-normalized
+    monkeypatch.syspath_prepend(str(tmp_path))
+    with pytest.raises(RuntimeError, match="broken at import"):
+        optional_import("broken_optional_mod")
+    assert "broken_optional_mod" not in _OPTIONAL_CACHE
 
 
 @pytest.mark.optional_deps
 def test_pil_decode_upgrade_or_none():
     """decode_image on a PNG payload: decodes when PIL is importable,
-    returns None (→ the documented NotImplementedError plug-in point)
-    when it is not."""
-    import pytest as _pytest
-
-    from science_datalake_spark import models
-    from science_datalake_spark.operators.multimodal import _real_features, decode_image
+    returns None when it is not."""
+    from science_datalake_spark.operators.multimodal import decode_image
 
     # 1x1 black-pixel PNG (smallest valid PNG, public-domain bytes)
     png = bytes.fromhex(
@@ -149,14 +39,10 @@ def test_pil_decode_upgrade_or_none():
         "0000000a49444154789c636000000002000148afa4710000000049454e44ae426082"
     )
     img = decode_image(png)
-    if models.optional_import("PIL.Image") is not None:
+    if optional_import("PIL.Image") is not None:
         assert img is not None and img.shape[:2] == (1, 1)
-        feats = _real_features(png)
-        assert len(feats) == 16
     else:
         assert img is None
-        with _pytest.raises(NotImplementedError, match="PIL"):
-            _real_features(png)
 
 
 @pytest.mark.optional_deps
@@ -165,11 +51,10 @@ def test_jw_scorer_upgrade_matches_reference_impl():
     portable jaro_winkler_py on a broad sample (same boost threshold,
     same empty-string convention); otherwise the scorer IS
     jaro_winkler_py."""
-    from science_datalake_spark import models
     from science_datalake_spark.operators.linkage import _jw_scorer, jaro_winkler_py
 
     jw = _jw_scorer()
-    if models.optional_import("rapidfuzz.distance") is None:
+    if optional_import("rapidfuzz.distance") is None:
         assert jw is jaro_winkler_py
         return
     samples = [

@@ -2,117 +2,66 @@
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
+import hashlib
+
+import numpy as np
 import pytest
 
-from science_datalake_spark.operators.multimodal import (
-    FEATURE_DIM,
-    extract_features,
-    resize_stub,
-    sample_assets,
-)
+from science_datalake_spark.operators.multimodal import ASSET_SCHEMA
 
 
-def test_feature_extraction_shapes(spark):
-    assets = sample_assets(spark, n=24)
-    feats = extract_features(assets).cache()
-    assert feats.count() == 24
-    row = feats.orderBy("asset_id").first()
-    assert len(row["features"]) == FEATURE_DIM
-    assert all(-1.0 <= v < 1.0 for v in row["features"])
-    # deterministic: same payload → same features
-    again = extract_features(sample_assets(spark, n=24))
-    assert feats.exceptAll(again).count() == 0
+def _encode_ppm(img: np.ndarray) -> bytes:
+    """(H, W, 3) or (H, W) uint8 → binary PNM bytes (P6 / P5)."""
+    magic = "P6" if img.ndim == 3 else "P5"
+    return f"{magic}\n{img.shape[1]} {img.shape[0]}\n255\n".encode() + img.astype(np.uint8).tobytes()
 
 
-def test_features_drop_payload(spark):
-    feats = extract_features(sample_assets(spark, n=4))
-    assert "payload" not in feats.columns  # bytes never reach a shuffle
+def _md5_assets(spark, n: int = 32):
+    """Deterministic binary assets (payload = repeated md5 bytes), for the
+    format-agnostic ``fake=True`` path."""
+    rows = []
+    for i in range(n):
+        payload = hashlib.md5(f"asset-{i}".encode()).digest() * (4 + i % 5)
+        kind = ["image", "audio", "video"][i % 3]
+        rows.append(
+            (i, kind, bytearray(payload), ("application/octet-stream", 64, 64, 1000 + i))
+        )
+    return spark.createDataFrame(rows, ASSET_SCHEMA)
 
 
-def test_resize_updates_meta(spark):
-    out = resize_stub(sample_assets(spark, n=6), 32, 32)
-    metas = out.select("meta.width", "meta.height").distinct().collect()
-    assert [(m["width"], m["height"]) for m in metas] == [(32, 32)]
-
-
-def test_unknown_format_real_decode_raises(spark):
-    """md5-junk payloads are neither PNM nor WAV → the real path names the
-    plug-in point instead of silently fabricating features."""
-    with pytest.raises(Exception) as exc:
-        extract_features(sample_assets(spark, n=2), fake=False).collect()
-    assert "NotImplementedError" in str(exc.value) or isinstance(
-        exc.value, NotImplementedError
-    )
-
-
-def test_real_ppm_decode_features(spark):
-    """fake=False REALLY decodes PPM rasters: features carry channel
-    statistics, deterministic across runs."""
-    from science_datalake_spark.operators.multimodal import (
-        decode_image,
-        encode_ppm,
-        sample_image_assets,
-    )
-    import numpy as np
-
-    feats = extract_features(sample_image_assets(spark, n=6), fake=False).cache()
-    assert feats.count() == 6
-    rows = {r["asset_id"]: r["features"] for r in feats.collect()}
-    assert all(len(v) == FEATURE_DIM for v in rows.values())
-    # cross-check asset 0 against a driver-side decode of the same bytes
-    from science_datalake_spark.operators.multimodal import image_features
-
-    size = 16
-    y, x = np.mgrid[0:size, 0:size]
-    img = np.stack(
-        [(x * 17) % 256, (y * 33) % 256, (x + y) % 256], axis=-1
-    ).astype(np.uint8)
-    roundtrip = decode_image(encode_ppm(img))
-    assert np.array_equal(roundtrip, img)  # encode→decode is lossless
-    expected = image_features(img)
-    got = rows[0]
-    assert got == pytest.approx(expected, abs=1e-6)
-
-
-def test_real_ppm_resize_changes_raster(spark):
-    from science_datalake_spark.operators.multimodal import (
-        decode_image,
-        resize_images,
-        sample_image_assets,
-    )
-
-    out = resize_images(sample_image_assets(spark, n=3, size=16), 8, 4, fake=False)
-    row = out.orderBy("asset_id").first()
-    img = decode_image(bytes(row["payload"]))
-    assert img.shape == (4, 8, 3)  # actually resampled, not just metadata
-    assert (row["meta"]["width"], row["meta"]["height"]) == (8, 4)
+def _pnm_stream_assets(spark, n: int = 4, frames: int = 10, size: int = 8):
+    """Concatenated-PNM 'video' clips whose frames brighten linearly."""
+    rows = []
+    for i in range(n):
+        clip = b""
+        for f in range(frames):
+            val = min(255, (f * 255) // max(frames - 1, 1))
+            clip += _encode_ppm(np.full((size, size, 3), val, dtype=np.uint8))
+        rows.append(
+            (i, "video", bytearray(clip), ("video/x-pnm-stream", size, size, frames * 40))
+        )
+    return spark.createDataFrame(rows, ASSET_SCHEMA)
 
 
 def test_decoder_edge_cases():
-    """Degenerate payloads are rejected or zeroed, never NaN/crash."""
+    """Degenerate payloads are rejected or decoded empty, never crash."""
     import io
     import wave
 
-    import numpy as np
-
     from science_datalake_spark.operators.multimodal import (
-        FEATURE_DIM,
-        audio_features,
         decode_image,
         decode_wav,
-        encode_ppm,
     )
 
-    # 0x0 PNM → rejected (None), not a NaN feature vector
+    # 0x0 PNM → rejected (None)
     assert decode_image(b"P5 0 0 255\n") is None
     # CRLF after maxval (Windows writers) → raster not shifted
     img = np.arange(12, dtype=np.uint8).reshape(2, 2, 3)
     crlf = b"P6 2 2 255\r\n" + img.tobytes()
     assert np.array_equal(decode_image(crlf), img)
     # normal single-\n path still exact
-    assert np.array_equal(decode_image(encode_ppm(img)), img)
-    # zero-frame WAV → all-zero features, no FFT crash
+    assert np.array_equal(decode_image(_encode_ppm(img)), img)
+    # zero-frame WAV → empty sample array at the declared rate
     buf = io.BytesIO()
     with wave.open(buf, "wb") as wf:
         wf.setnchannels(1)
@@ -120,98 +69,170 @@ def test_decoder_edge_cases():
         wf.setframerate(8000)
         wf.writeframes(b"")
     samples, rate = decode_wav(buf.getvalue())
-    assert audio_features(samples, rate) == [0.0] * FEATURE_DIM
-    assert audio_features(np.array([0.5]), 0) == [0.0] * FEATURE_DIM
-
-
-def test_real_wav_decode_features(spark):
-    """Distinct sine frequencies must land energy in distinct spectrum
-    bins — proof the audio path computes real signal features."""
-    from science_datalake_spark.operators.multimodal import sample_wav_assets
-
-    feats = extract_features(sample_wav_assets(spark, n=3), fake=False)
-    rows = {r["asset_id"]: r["features"] for r in feats.collect()}
-    assert all(len(v) == FEATURE_DIM for v in rows.values())
-    for fid, f in rows.items():
-        assert f[1] == pytest.approx(0.3535, abs=0.01), fid  # sine RMS ≈ 0.5/√2
-    spectra = {fid: f[4:] for fid, f in rows.items()}
-    # higher tone → energy center in a later bin
-    centers = {
-        fid: sum(i * e for i, e in enumerate(s)) / sum(s) for fid, s in spectra.items()
-    }
-    assert centers[0] < centers[1] < centers[2]
-
-
-def test_knn_over_extracted_features(spark):
-    """End-to-end: binary assets → features → cosine top-k (the multimodal
-    similarity-search path)."""
-    from science_datalake_spark.operators.similarity import cosine_topk
-
-    feats = extract_features(sample_assets(spark, n=30)).withColumnRenamed(
-        "features", "vec"
-    )
-    queries = feats.filter(F.col("asset_id") < 3)
-    top = cosine_topk(feats, queries, "asset_id", "vec", k=5)
-    assert top.count() == 15
-    assert top.groupBy("query_id").count().agg(F.min("count")).first()[0] == 5
+    assert samples.size == 0 and rate == 8000
 
 
 def test_split_pnm_stream_and_uniform_sampling():
-    import numpy as np
-
-    from science_datalake_spark.operators.multimodal import (
-        _uniform_indices,
-        encode_ppm,
-        split_pnm_stream,
-    )
+    from science_datalake_spark.operators.multimodal import split_pnm_stream
 
     frames = [np.full((4, 4, 3), v, dtype=np.uint8) for v in (0, 100, 200)]
-    stream = b"".join(encode_ppm(f) for f in frames)
+    stream = b"".join(_encode_ppm(f) for f in frames)
     parts = split_pnm_stream(stream)
     assert parts is not None and len(parts) == 3
     assert split_pnm_stream(b"RIFFnotvideo") is None
     assert split_pnm_stream(stream[:-5]) is None  # truncated last frame
-    assert _uniform_indices(10, 4) == [0, 2, 5, 7]
-    assert _uniform_indices(3, 10) == [0, 1, 2]  # clamp to available
+
+
+def _wav_bytes(samples: np.ndarray, rate: int = 8000) -> bytes:
+    """Mono float samples in [-1, 1] → 16-bit PCM WAV bytes."""
+    import io
+    import wave
+
+    buf = io.BytesIO()
+    with wave.open(buf, "wb") as wf:
+        wf.setnchannels(1)
+        wf.setsampwidth(2)
+        wf.setframerate(rate)
+        wf.writeframes((samples * 32767).astype("<i2").tobytes())
+    return buf.getvalue()
+
+
+def _gradient_image(size: int = 16) -> np.ndarray:
+    """RGB raster whose luminance strictly rises left to right."""
+    y, x = np.mgrid[0:size, 0:size]
+    return np.stack([(x * 17) % 256, (y * 33) % 256, (x + y) % 256], axis=-1).astype(np.uint8)
+
+
+def test_feature_extraction_shapes(spark):
+    """Every asset gets one ``bits``-wide 0/1 fingerprint, the same on a
+    re-run; the real image hash rejects a non-square bit count."""
+    from science_datalake_spark.operators.multimodal import image_dhash, perceptual_hashes
+
+    hashes = perceptual_hashes(_md5_assets(spark, n=24)).collect()
+    assert len(hashes) == 24
+    assert all(len(r["simhash"]) == 64 and set(r["simhash"]) <= {"0", "1"} for r in hashes)
+    again = perceptual_hashes(_md5_assets(spark, n=24)).collect()
+    assert sorted(map(tuple, hashes)) == sorted(map(tuple, again))
+    short = perceptual_hashes(_md5_assets(spark, n=3), bits=16).collect()
+    assert all(len(r["simhash"]) == 16 for r in short)
+    with pytest.raises(ValueError, match="perfect square"):
+        image_dhash(_gradient_image(), bits=10)
+
+
+def test_features_drop_payload(spark):
+    """Payload bytes never leave the hashing stage, so they never reach
+    the banding shuffle."""
+    from science_datalake_spark.operators.multimodal import perceptual_hashes
+
+    hashes = perceptual_hashes(_md5_assets(spark, n=4))
+    assert hashes.columns == ["asset_id", "kind", "simhash"]
+    assert hashes.count() == 4
+
+
+def test_unknown_format_real_decode_raises(spark):
+    """md5-junk payloads are neither PNM, WAV nor a PNM stream → the real
+    path names the plug-in point instead of fabricating a hash."""
+    from science_datalake_spark.operators.multimodal import perceptual_hashes
+
+    with pytest.raises(Exception) as exc:
+        perceptual_hashes(_md5_assets(spark, n=2), fake=False).collect()
+    assert "NotImplementedError" in str(exc.value) or isinstance(
+        exc.value, NotImplementedError
+    )
+
+
+def test_real_ppm_decode_features(spark):
+    """fake=False really decodes PPM/PGM rasters (lossless round trip)
+    and hashes the decoded pixels: a rightward-brightening image is all
+    ones, its mirror all zeros."""
+    from science_datalake_spark.operators.multimodal import decode_image, perceptual_hashes
+
+    img = _gradient_image()
+    assert np.array_equal(decode_image(_encode_ppm(img)), img)
+    gray = img[:, :, 0]
+    assert np.array_equal(decode_image(_encode_ppm(gray)), gray)
+
+    rows = [
+        (0, "image", bytearray(_encode_ppm(img)), (None, 16, 16, None)),
+        (1, "image", bytearray(_encode_ppm(img[:, ::-1])), (None, 16, 16, None)),
+        (2, "image", bytearray(_encode_ppm(gray)), (None, 16, 16, None)),
+    ]
+    got = {
+        r["asset_id"]: r["simhash"]
+        for r in perceptual_hashes(spark.createDataFrame(rows, ASSET_SCHEMA), fake=False).collect()
+    }
+    assert got == {0: "1" * 64, 1: "0" * 64, 2: "1" * 64}
+
+
+def test_real_ppm_resize_changes_raster():
+    """resize_nearest actually resamples the decoded raster: new shape,
+    corner pixels kept, every output pixel taken from the input."""
+    from science_datalake_spark.operators.multimodal import decode_image, resize_nearest
+
+    img = decode_image(_encode_ppm(_gradient_image()))
+    out = resize_nearest(img, 8, 4)
+    assert out.shape == (4, 8, 3)
+    assert np.array_equal(out[0, 0], img[0, 0]) and np.array_equal(out[-1, -1], img[-1, -1])
+    rows = np.round(np.linspace(0, 15, 4)).astype(int)
+    cols = np.round(np.linspace(0, 15, 8)).astype(int)
+    assert np.array_equal(out, img[np.ix_(rows, cols)])
+    assert resize_nearest(img[:, :, 0], 8, 4).shape == (4, 8)
+
+
+def test_real_wav_decode_features(spark):
+    """decode_wav really decodes PCM: the declared rate, a sine of
+    amplitude 0.5 at RMS 0.5/√2, higher tones peaking in later FFT bins;
+    the real hash of a silence-then-tone clip is its energy envelope."""
+    from science_datalake_spark.operators.multimodal import decode_wav, perceptual_hashes
+
+    rate = 8000
+    t = np.arange(6400) / rate  # 64 hash windows of 100 samples
+    peaks = []
+    for freq in (220.0, 440.0, 880.0):
+        samples, got_rate = decode_wav(_wav_bytes(0.5 * np.sin(2 * np.pi * freq * t), rate))
+        assert got_rate == rate and samples.size == t.size
+        assert float(np.sqrt(np.mean(samples**2))) == pytest.approx(0.3535, abs=0.01)
+        peaks.append(int(np.argmax(np.abs(np.fft.rfft(samples)))))
+    assert peaks[0] < peaks[1] < peaks[2]
+
+    tone = 0.5 * np.sin(2 * np.pi * 440.0 * t)
+    clip = np.where(np.arange(t.size) < t.size // 2, 0.0, tone)
+    assets = spark.createDataFrame(
+        [(0, "audio", bytearray(_wav_bytes(clip, rate)), ("audio/wav", 0, 0, 800))],
+        ASSET_SCHEMA,
+    )
+    (row,) = perceptual_hashes(assets, fake=False).collect()
+    assert row["simhash"] == "0" * 32 + "1" * 32
 
 
 def test_sample_frames_real_pnm_stream(spark):
-    """fake=False decodes the concatenated-PNM clip: uniformly-sampled
-    frame indices, real per-frame features (brightness rises with idx),
-    and payload bytes never reach the output schema."""
+    """A concatenated-PNM clip splits into its frames in order (brightness
+    rises with the frame index), and the real video hash is the dHash of
+    the middle frame — the only one that brightens rightward."""
     from science_datalake_spark.operators.multimodal import (
-        sample_frames,
-        sample_video_assets,
+        decode_image,
+        perceptual_hashes,
+        split_pnm_stream,
     )
 
-    clips = sample_video_assets(spark, n=2, frames=10, size=8)
-    out = sample_frames(clips, n_frames=4, fake=False)
-    rows = out.orderBy("asset_id", "frame_idx").collect()
-    assert len(rows) == 8  # 2 assets x 4 sampled frames
-    assert "payload" not in out.columns
-    by_asset = {}
-    for r in rows:
-        assert r["n_frames"] == 10 and r["width"] == 8 and r["height"] == 8
-        by_asset.setdefault(r["asset_id"], []).append(r)
-    for aid, rs in by_asset.items():
-        assert [r["frame_idx"] for r in rs] == [0, 2, 5, 7]
-        means = [r["features"][0] for r in rs]  # mean R channel
-        assert means == sorted(means) and means[-1] > means[0]  # brightens
+    n_frames, size = 10, 16
+    ramp = np.arange(size) * 4
+    clip = b""
+    for f in range(n_frames):
+        row = f * 20 + (ramp if f == n_frames // 2 else ramp[::-1])
+        clip += _encode_ppm(np.repeat(np.tile(row, (size, 1))[:, :, None], 3, axis=2))
+    frames = split_pnm_stream(clip)
+    assert frames is not None and len(frames) == n_frames
+    decoded = [decode_image(fr) for fr in frames]
+    assert all(d.shape == (size, size, 3) for d in decoded)
+    means = [float(d.mean()) for d in decoded]
+    assert means == sorted(means) and means[-1] > means[0]
 
-
-def test_sample_frames_fake_path_and_ffmpeg_plug_point(spark):
-    import pytest as _pytest
-
-    from science_datalake_spark.operators.multimodal import (
-        sample_assets,
-        sample_frames,
+    assets = spark.createDataFrame(
+        [(0, "video", bytearray(clip), ("video/x-pnm-stream", size, size, 400))], ASSET_SCHEMA
     )
-
-    assets = sample_assets(spark, n=3)
-    fake = sample_frames(assets, n_frames=3, fake=True)
-    assert fake.count() == 9  # deterministic 3 rows per asset
-    with _pytest.raises(Exception, match="ffmpeg"):
-        sample_frames(assets.limit(1), n_frames=2, fake=False).collect()
+    (row,) = perceptual_hashes(assets, fake=False).collect()
+    assert row["simhash"] == "1" * 64
 
 
 # ---------------------------------------------------------------------------
@@ -222,8 +243,6 @@ def test_sample_frames_fake_path_and_ffmpeg_plug_point(spark):
 def test_image_dhash_invariances():
     """dHash is bit-identical under uniform brightness shift and under an
     upscale that preserves gradient signs, and far from a different image."""
-    import numpy as np
-
     from science_datalake_spark.operators.multimodal import (
         image_dhash,
         resize_nearest,
@@ -246,8 +265,6 @@ def test_image_dhash_invariances():
 
 
 def test_audio_envelope_hash_invariances():
-    import numpy as np
-
     from science_datalake_spark.operators.multimodal import audio_envelope_hash
 
     t = np.arange(8000) / 8000.0
@@ -269,12 +286,8 @@ def test_audio_envelope_hash_invariances():
 def test_perceptual_hashes_real_and_near_dup_pairs(spark):
     """A perturbed copy of each PPM image pairs with its original at small
     Hamming distance; structurally different images don't pair."""
-    import numpy as np
-
     from science_datalake_spark.operators.multimodal import (
-        ASSET_SCHEMA,
         asset_near_dup_pairs,
-        encode_ppm,
         perceptual_hashes,
     )
 
@@ -285,11 +298,11 @@ def test_perceptual_hashes_real_and_near_dup_pairs(spark):
         # monotone-row sign pattern and falsely pair)
         g = np.random.default_rng(i).integers(0, 200, size=(16, 16))
         img = np.stack([g, g, g], axis=-1).astype(np.uint8)
-        rows.append((i, "image", bytearray(encode_ppm(img)), (None, 16, 16, None)))
+        rows.append((i, "image", bytearray(_encode_ppm(img)), (None, 16, 16, None)))
         # near-copy: uniform brightness +25 (gradient-sign preserving,
         # no clipping at max 199+25)
         rows.append(
-            (100 + i, "image", bytearray(encode_ppm((img + 25).astype(np.uint8))), (None, 16, 16, None))
+            (100 + i, "image", bytearray(_encode_ppm((img + 25).astype(np.uint8))), (None, 16, 16, None))
         )
     assets = spark.createDataFrame(rows, ASSET_SCHEMA)
     hashes = perceptual_hashes(assets, fake=False)
@@ -326,16 +339,12 @@ def test_asset_near_dup_pairs_scoped_by_kind(spark):
 def test_perceptual_hash_video_stream_and_plumbing(spark):
     """PNM-stream 'video' payloads hash via their middle frame; the fake
     path stays format-agnostic and deterministic."""
-    from science_datalake_spark.operators.multimodal import (
-        perceptual_hashes,
-        sample_assets,
-        sample_video_assets,
-    )
+    from science_datalake_spark.operators.multimodal import perceptual_hashes
 
-    vids = sample_video_assets(spark, n=2)
+    vids = _pnm_stream_assets(spark, n=2)
     out = perceptual_hashes(vids, fake=False).collect()
     assert len(out) == 2
     assert all(len(r["simhash"]) == 64 for r in out)
-    fake = perceptual_hashes(sample_assets(spark, n=6)).collect()
-    again = perceptual_hashes(sample_assets(spark, n=6)).collect()
+    fake = perceptual_hashes(_md5_assets(spark, n=6)).collect()
+    again = perceptual_hashes(_md5_assets(spark, n=6)).collect()
     assert sorted(map(tuple, fake)) == sorted(map(tuple, again))

@@ -7,41 +7,11 @@ import os
 
 import pyspark.sql.functions as F
 
-from science_datalake_spark import plans
 from science_datalake_spark.catalog import table
 from science_datalake_spark.operators.linkage import fuzzy_label_join, xref_bridge_join
-from science_datalake_spark.operators.skew import salted_aggregate
 from science_datalake_spark.operators.windows import top1_per_key
 from science_datalake_spark.sources.sinks import write_parquet_partitioned
-
-
-def test_salted_aggregate_matches_plain(spark, sf_oracle):
-    li = table(spark, sf_oracle, "lineitem")
-    plain = (
-        li.groupBy("l_returnflag")
-        .agg(
-            F.count("*").alias("n"),
-            F.sum("l_quantity").alias("sum_l_quantity"),
-            F.min("l_extendedprice").alias("min_l_extendedprice"),
-            F.max("l_extendedprice").alias("max_l_extendedprice"),
-        )
-    )
-    salted = salted_aggregate(
-        li,
-        keys=["l_returnflag"],
-        sums=["l_quantity"],
-        mins=["l_extendedprice"],
-        maxs=["l_extendedprice"],
-        salt_buckets=8,
-    )
-    p = {r["l_returnflag"]: r.asDict() for r in plain.collect()}
-    s = {r["l_returnflag"]: r.asDict() for r in salted.collect()}
-    assert p.keys() == s.keys()
-    for k in p:
-        assert p[k]["n"] == s[k]["n"]
-        assert abs(p[k]["sum_l_quantity"] - s[k]["sum_l_quantity"]) < 1e-6
-        assert p[k]["min_l_extendedprice"] == s[k]["min_l_extendedprice"]
-        assert p[k]["max_l_extendedprice"] == s[k]["max_l_extendedprice"]
+from tests import plan_helpers as plans
 
 
 def test_partitioned_write_prunes(spark, sf_oracle, tmp_path):
@@ -147,35 +117,6 @@ def test_cooccurrence_skew_cap(spark):
     assert got == {("a", "b")}  # mega's 1225 pairs suppressed
     uncapped = cooccurrence(m, "grp", "item")
     assert uncapped.count() == 50 * 49 // 2 + 1
-
-
-def test_approx_stats_profile_matches_exact(spark, sf_oracle):
-    """Sketch-based profile ≈ exact on real data (rank error ≤ 1/accuracy)."""
-    from science_datalake_spark.operators.stats import approx_quantiles, approx_stats_profile
-
-    li = table(spark, sf_oracle, "lineitem")
-    approx = {
-        r["l_returnflag"]: r
-        for r in approx_stats_profile(li, ["l_returnflag"], "l_extendedprice").collect()
-    }
-    exact = {
-        r["l_returnflag"]: r
-        for r in li.groupBy("l_returnflag")
-        .agg(
-            F.count("*").alias("n"),
-            F.expr("percentile(l_extendedprice, 0.5)").alias("median"),
-            F.expr("percentile(l_extendedprice, 0.95)").alias("p95"),
-        )
-        .collect()
-    }
-    assert set(approx) == set(exact)
-    for flag, e in exact.items():
-        a = approx[flag]
-        assert a["n"] == e["n"]
-        assert abs(a["median"] - e["median"]) / e["median"] < 0.01
-        assert abs(a["p95"] - e["p95"]) / e["p95"] < 0.01
-    q = approx_quantiles(li, ["l_returnflag"], "l_extendedprice").collect()
-    assert {c for c in q[0].asDict()} == {"l_returnflag", "p25", "p50", "p75", "p95"}
 
 
 def test_xref_bridge_normalizes_aliases(spark):
@@ -457,41 +398,6 @@ def test_winnowing_shared_substring_guarantee(spark):
         }
         assert (1, 2) in pairs and pairs[(1, 2)] >= 1, hf
         assert (1, 3) not in pairs and (2, 3) not in pairs, hf
-
-
-def test_bpe_regex_token_count(spark):
-    """GPT-2-style pre-tokenizer piece counts on hand-tokenized examples,
-    and DuckDB counts the identical pieces with the same pattern (the
-    Java∩RE2 property-class subset)."""
-    import duckdb
-
-    from science_datalake_spark.operators.textops import (
-        BPE_SPLIT_PATTERN,
-        bpe_regex_token_count,
-    )
-
-    cases = [
-        # "don" "'t" " stop" → 3; "hello" " world" "!" → 3
-        (1, "don't stop", 3),
-        (2, "hello world!", 3),
-        # "abc" "123" " x" "." "." → piece runs split letters/digits/punct
-        (3, "abc123 x..", 4),
-        (4, "", 0),
-    ]
-    df = spark.createDataFrame([(i, t) for i, t, _ in cases], "id INT, t STRING")
-    got = {
-        r["id"]: r["n"]
-        for r in df.select("id", bpe_regex_token_count(F.col("t")).alias("n")).collect()
-    }
-    for i, _t, want in cases:
-        assert got[i] == want, (i, got[i], want)
-
-    con = duckdb.connect()
-    for i, t, want in cases:
-        (n,) = con.sql(
-            "SELECT len(regexp_extract_all(?, ?))", params=[t, BPE_SPLIT_PATTERN]
-        ).fetchone()
-        assert n == want, (i, n, want)
 
 
 def test_fuzzy_join_length_blocking_is_sound(spark):
@@ -961,11 +867,12 @@ def test_pack_contiguous_matches_sql_window_twin(spark):
 
 
 def test_url_normalization_collapses_wild_spellings(spark):
-    """normalize_url must map all four wild spellings of one page to a
-    single dedup key; url_host/registrable_domain handle subdomains,
-    scheme case, tracking params, and single-label hosts (localhost)."""
+    """The location key (canonical_url without the query) maps all four
+    wild spellings of one page to one key; url_host/registrable_domain
+    handle subdomains, scheme case, tracking params, and single-label
+    hosts (localhost)."""
     from science_datalake_spark.operators.web import (
-        normalize_url,
+        canonical_url,
         registrable_domain,
         url_host,
     )
@@ -977,7 +884,7 @@ def test_url_normalization_collapses_wild_spellings(spark):
         "https://site3.com/page/7#frag",
     ]
     df = spark.createDataFrame([(u,) for u in spellings], "url STRING")
-    keys = {r[0] for r in df.select(normalize_url(F.col("url"))).collect()}
+    keys = {r[0] for r in df.select(canonical_url(F.col("url"), keep_query=False)).collect()}
     assert keys == {"site3.com/page/7"}, keys
 
     hosts = spark.createDataFrame(
@@ -1010,7 +917,7 @@ def test_url_normalization_collapses_wild_spellings(spark):
 def test_canonical_url_semantics(spark):
     """canonical_url keeps semantic query params (sorted), strips tracking
     params/fragments/trailing slash, and stays NULL-safe — the page-identity
-    key where normalize_url is the page-location key."""
+    key."""
     from science_datalake_spark.operators.web import canonical_url
 
     cases = [
@@ -1036,7 +943,7 @@ def test_canonical_url_semantics(spark):
     got = [r[0] for r in df.select(canonical_url(F.col("url"))).collect()]
     assert got == [want for _, want in cases], got
 
-    # keep_query=False degrades to the normalize_url-style location key
+    # keep_query=False degrades to the page-location key
     df2 = spark.createDataFrame([("https://www.a.com/p/?id=1",)], "url STRING")
     assert df2.select(canonical_url(F.col("url"), keep_query=False)).collect()[0][0] == "a.com/p"
 
@@ -1735,15 +1642,15 @@ def test_bigram_hash_keys_collision_free_on_fixture(spark, sf_oracle):
 
 
 def test_exact_group_quantiles_histogram_matches_parallel(spark, sf_oracle):
-    """The bounded-domain histogram engine returns bit-identical
-    quantiles to the row-ranked parallel engine (and therefore to
-    DuckDB quantile_cont, which the parallel engine is driver-proven
-    against), including NULL group keys and NULL values."""
+    """The bounded-domain percentile-over-histogram engine returns
+    bit-identical quantiles to the row-ranked parallel engine (and
+    therefore to DuckDB quantile_cont, which the parallel engine is
+    driver-proven against), including NULL group keys and NULL values."""
     import pyspark.sql.functions as F
 
     from science_datalake_spark.operators.stats import (
-        exact_group_quantiles_histogram,
         exact_group_quantiles_parallel,
+        exact_group_quantiles_percentile,
     )
 
     li = spark.read.parquet(f"{sf_oracle}/lineitem.parquet").select(
@@ -1755,45 +1662,15 @@ def test_exact_group_quantiles_histogram_matches_parallel(spark, sf_oracle):
         .alias("v"),
     )
     kw = dict(quantiles=(0.25, 0.5, 0.75, 0.95), out_names=("a", "b", "c", "d"))
-    hist = {
-        r["g"]: (r["a"], r["b"], r["c"], r["d"])
-        for r in exact_group_quantiles_histogram(li, ["g"], "v", **kw).collect()
-    }
     par = {
         r["g"]: (r["a"], r["b"], r["c"], r["d"])
         for r in exact_group_quantiles_parallel(li, ["g"], "v", **kw).collect()
     }
-    assert hist == par and len(hist) >= 2 and None in hist
-    # blocked two-level cumsum (round 13): identical results at several
-    # widths, including degenerate ones (width larger than the domain ->
-    # one block per group == the plain path; tiny width -> many blocks)
-    for w in (1024.0, 7.0, 1e9):
-        blk = {
-            r["g"]: (r["a"], r["b"], r["c"], r["d"])
-            for r in exact_group_quantiles_histogram(
-                li, ["g"], "v", block_width=w, **kw
-            ).collect()
-        }
-        assert blk == hist, w
-    # round-14 percentile-over-histogram engine: same histogram stage, rank
-    # arithmetic fused into one percentile(value, array, frequency) aggregate
-    # -> must be value-identical to the window-over-histogram path
-    from science_datalake_spark.operators.stats import (
-        exact_group_quantiles_percentile,
-    )
-
     perc = {
         r["g"]: (r["a"], r["b"], r["c"], r["d"])
         for r in exact_group_quantiles_percentile(li, ["g"], "v", **kw).collect()
     }
-    assert perc == hist
-    # block_width <= 0 would make block ids decrease as values increase and
-    # silently corrupt the cumulative offsets (r13 advice): rejected up front
-    import pytest as _pytest
-
-    for bad in (0, -5.0):
-        with _pytest.raises(ValueError, match="block_width"):
-            exact_group_quantiles_histogram(li, ["g"], "v", block_width=bad, **kw)
+    assert perc == par and len(perc) >= 2 and None in perc
 
 
 def test_trigram_logprob_scores_hand_computed(spark):

@@ -6,9 +6,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from science_datalake_spark import plans
 from science_datalake_spark.catalog import table
 from science_datalake_spark.queries import load_all, load_aux
+from tests import plan_helpers as plans
 
 # plan shapes are pinned regardless of which registry a query currently
 # lives in — driver/aux rotation must never drop a plan test

@@ -143,10 +143,10 @@ def test_turtle_parser_total(garbage):
 def test_sparql_errors_are_typed(garbage):
     """The SPARQL front-end either parses or raises SparqlError — never a
     raw IndexError/ValueError (webapp/CLI catch the typed error)."""
-    from science_datalake_spark.sparql import SparqlError, _parse
+    from science_datalake_spark.sparql import SparqlError, _Parser
 
     try:
-        _parse(garbage)
+        _Parser(garbage).parse()
     except SparqlError:
         pass
 
@@ -172,162 +172,6 @@ def test_jaro_winkler_batch_bit_identical_to_scalar(pairs):
     got = _jaro_winkler_batch(a, b)
     want = [jaro_winkler_py(x, y) for x, y in pairs]
     assert got == want
-
-
-# ---------------------------------------------------------------------------
-# MMR greedy kernel (similarity._mmr_pick) — round-12 verdict #7
-# ---------------------------------------------------------------------------
-
-_MMR_VEC = st.one_of(
-    st.none(),
-    st.lists(
-        st.integers(min_value=-3, max_value=3).map(float), min_size=0, max_size=3
-    ),
-)
-_MMR_GROUP = st.lists(
-    st.tuples(
-        st.integers(min_value=0, max_value=99),  # cand id (may collide -> dedup)
-        st.sampled_from([0.0, 0.1, 0.25, 0.5, 0.5, 0.9, 1.0]),  # rel, ties likely
-        _MMR_VEC,
-    ),
-    min_size=1,
-    max_size=8,
-).map(lambda rows: list({r[0]: r for r in rows}.values()))  # unique cand ids
-
-
-def _mmr_frame(rows):
-    import pandas as pd
-
-    return pd.DataFrame(
-        {
-            "query_id": ["q"] * len(rows),
-            "cand_id": [r[0] for r in rows],
-            "score": [r[1] for r in rows],
-            "vec": [r[2] for r in rows],
-        }
-    )
-
-
-def _run_mmr(rows, k, lam):
-    from science_datalake_spark.operators.similarity import _mmr_pick
-
-    out = _mmr_pick(
-        _mmr_frame(rows), k, lam, "query_id", "cand_id", "score", "vec", 10_000
-    )
-    return list(
-        zip(out["cand_id"].tolist(), out["rank"].tolist(), out["mmr_score"].tolist())
-    )
-
-
-def _usable(vec, dim):
-    return vec is not None and len(vec) == dim and any(x != 0.0 for x in vec)
-
-
-@given(_MMR_GROUP, st.integers(1, 6), st.sampled_from([0.0, 0.3, 0.7, 1.0]),
-       st.randoms(use_true_random=False))
-@settings(max_examples=200, deadline=None)
-def test_mmr_row_order_invariance(rows, k, lam, rng):
-    """The kernel's output must not depend on the incoming row order —
-    groups arrive in whatever order the shuffle delivers; the internal
-    (rel desc, id asc) mergesort plus first-index argmax makes every tie
-    resolve through one total order."""
-    base = _run_mmr(rows, k, lam)
-    shuffled = list(rows)
-    rng.shuffle(shuffled)
-    import math
-
-    def norm(res):
-        return [(c, r, None if (m is None or (isinstance(m, float) and math.isnan(m))) else m)
-                for c, r, m in res]
-
-    assert norm(_run_mmr(shuffled, k, lam)) == norm(base)
-
-
-@given(_MMR_GROUP, st.integers(1, 6))
-@settings(max_examples=150, deadline=None)
-def test_mmr_lam_one_is_pure_relevance(rows, k):
-    """lam=1 degenerates to pure relevance: the usable candidates come out
-    exactly in (rel desc, id asc) order with mmr_score == relevance, and
-    every unusable-vector candidate tail-fills after them (NULL score)."""
-    import math
-
-    res = _run_mmr(rows, k, 1.0)
-    dim = max((len(r[2]) for r in rows if r[2] is not None), default=0)
-    usable = sorted(
-        [r for r in rows if _usable(r[2], dim)], key=lambda r: (-r[1], r[0])
-    )
-    unusable = sorted(
-        [r for r in rows if not _usable(r[2], dim)], key=lambda r: (-r[1], r[0])
-    )
-    want_ids = [r[0] for r in usable + unusable][: min(k, len(rows))]
-    assert [c for c, _, _ in res] == want_ids
-    assert [r for _, r, _ in res] == list(range(1, len(want_ids) + 1))
-    for (c, _, m), src in zip(res, usable + unusable):
-        if _usable(src[2], dim):
-            assert m == round(src[1], 6)
-        else:
-            assert m is None or math.isnan(m)
-
-
-@given(_MMR_GROUP, st.integers(1, 6))
-@settings(max_examples=150, deadline=None)
-def test_mmr_prefix_stability_and_shape(rows, k):
-    """Greedy chains are prefix-stable: the k-result is a prefix of the
-    (k+1)-result; ranks are contiguous from 1; no candidate repeats;
-    output size is min(k, n)."""
-    res_k = _run_mmr(rows, k, 0.7)
-    res_k1 = _run_mmr(rows, k + 1, 0.7)
-    assert len(res_k) == min(k, len(rows))
-    assert len({c for c, _, _ in res_k}) == len(res_k)
-    assert [r for _, r, _ in res_k] == list(range(1, len(res_k) + 1))
-
-    def key3(t):
-        import math
-
-        c, r, m = t
-        return (c, r, None if (m is None or (isinstance(m, float) and math.isnan(m))) else m)
-
-    assert [key3(t) for t in res_k] == [key3(t) for t in res_k1[: len(res_k)]]
-
-
-@given(_MMR_GROUP, st.integers(1, 6))
-@settings(max_examples=150, deadline=None)
-def test_mmr_lam_zero_is_pure_diversity_after_first_pick(rows, k):
-    """lam=0: pick 1 is still max-relevance (pinned convention — the empty
-    selected-set penalty is 0, mmr = rel), but every later pick must
-    MINIMIZE the max cosine to the already-selected set among remaining
-    usable candidates (greedy farthest-point), ties through the
-    (rel desc, id asc) order."""
-    import math
-
-    import numpy as np
-
-    res = _run_mmr(rows, k, 0.0)
-    dim = max((len(r[2]) for r in rows if r[2] is not None), default=0)
-    by_id = {r[0]: r for r in rows}
-    usable_ids = [r[0] for r in rows if _usable(r[2], dim)]
-    picked = [c for c, _, _ in res][: len(usable_ids)][: min(k, len(rows))]
-    picked = [c for c in picked if c in set(usable_ids)]
-
-    def unit(cid):
-        v = np.asarray(by_id[cid][2], dtype=float)
-        return v / math.sqrt(float(v @ v))
-
-    order = sorted(usable_ids, key=lambda c: (-by_id[c][1], c))
-    if picked:
-        assert picked[0] == order[0]
-    for i in range(1, len(picked)):
-        sel = picked[:i]
-        rest = [c for c in order if c not in set(sel)]
-
-        def penalty(cid):
-            return max(float(unit(cid) @ unit(s)) for s in sel)
-
-        chosen = picked[i]
-        best = min(penalty(c) for c in rest)
-        # the chosen candidate's penalty is minimal up to float fuzz from
-        # the independent recomputation path
-        assert penalty(chosen) <= best + 1e-9
 
 
 # --- LSH star edges: connectivity-equivalence property ----------------------

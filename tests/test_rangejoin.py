@@ -1,6 +1,7 @@
 """Banded interval joins: equivalence with the naive theta join on
-randomized inputs (including long-interval fallback traffic), exactly-
-once pair emission, and the point-containment variant."""
+randomized inputs (including long-interval fallback traffic),
+exactly-once pair emission, and point containment as a zero-width
+interval."""
 
 from __future__ import annotations
 
@@ -8,10 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from science_datalake_spark.operators.rangejoin import (
-    interval_overlap_join,
-    point_in_interval_join,
-)
+from science_datalake_spark.operators.rangejoin import interval_overlap_join
 
 
 def _intervals(spark, n, seed, key_card=0, long_frac=0.1, width=1000.0):
@@ -94,7 +92,7 @@ def test_overlap_join_share_scan_result_identical(spark, self_join):
     shared_df = interval_overlap_join(left, right, share_scan=True, **kw)
     shared = {(r["uid"], r["uid_r"]) for r in shared_df.collect()}
     assert shared == base
-    from science_datalake_spark import plans
+    from tests import plan_helpers as plans
 
     assert "InMemoryTableScan" in plans.physical_plan(shared_df)
 
@@ -125,38 +123,57 @@ def test_overlap_join_share_scan_persist_handles(spark, self_join):
 
 
 def test_point_in_interval_matches_naive(spark):
+    """Point containment is the overlap join with a zero-width left
+    interval ``[x, x]``: closed bounds make ``start <= x <= end``."""
     ivals = _intervals(spark, 80, seed=11)
     rng = np.random.default_rng(12)
     pts = spark.createDataFrame(
         [(int(i), float(v)) for i, v in enumerate(rng.uniform(0, 1200.0, 200))],
         "pid LONG, x DOUBLE",
     )
-    got = {
-        (r["pid"], r["uid"])
-        for r in point_in_interval_join(
-            pts,
-            ivals,
-            bucket_width=10.0,
-            point_col="x",
-            bounds=("start", "end"),
-            long_span_buckets=8,
-        ).collect()
-    }
+    out = interval_overlap_join(
+        pts,
+        ivals,
+        bucket_width=10.0,
+        left_bounds=("x", "x"),
+        right_bounds=("start", "end"),
+        long_span_buckets=8,
+    )
+    rows = [(r["pid"], r["uid"]) for r in out.collect()]
     want = {
         (p["pid"], a["uid"])
         for p in pts.collect()
         for a in ivals.collect()
         if a["start"] <= p["x"] <= a["end"]
     }
-    assert got == want
+    assert len(rows) == len(set(rows)), "pair emitted more than once"
+    assert set(rows) == want and want
+
+
+def test_point_in_interval_clashing_columns(spark):
+    """Point-side columns that collide with the interval's names keep
+    their name; the interval's come back suffixed (a shared 'start'
+    column must not raise an ambiguous-reference AnalysisException)."""
+    pts = spark.createDataFrame(
+        [(1, 5.0, "p-meta"), (2, 25.0, "p-meta2")],
+        "pid LONG, x DOUBLE, start STRING",  # 'start' clashes on purpose
+    )
+    ivals = spark.createDataFrame(
+        [(100, 0.0, 10.0), (200, 20.0, 30.0)],
+        "uid LONG, start DOUBLE, end DOUBLE",
+    )
+    out = interval_overlap_join(
+        pts, ivals, bucket_width=10.0, left_bounds=("x", "x"), right_bounds=("start", "end")
+    )
+    assert "start_r" in out.columns and "start" in out.columns
+    got = {(r["pid"], r["uid"], r["start"], r["start_r"]) for r in out.collect()}
+    assert got == {(1, 100, "p-meta", 0.0), (2, 200, "p-meta2", 20.0)}
 
 
 def test_bucket_width_validation(spark):
     df = _intervals(spark, 5, seed=1)
     with pytest.raises(ValueError, match="bucket_width"):
         interval_overlap_join(df, df, bucket_width=0)
-    with pytest.raises(ValueError, match="bucket_width"):
-        point_in_interval_join(df, df, bucket_width=-1, point_col="start")
 
 
 def test_banded_plan_shape(spark):
@@ -172,33 +189,11 @@ def test_banded_plan_shape(spark):
     assert "__bucket" in plan  # band key reaches the join
 
 
-def test_point_in_interval_clashing_columns(spark):
-    """Point-side columns that collide with interval names come back
-    suffixed, same contract as the overlap join (regression: the point
-    variant skipped the rename, so a shared 'start' column raised an
-    ambiguous-reference AnalysisException)."""
-    pts = spark.createDataFrame(
-        [(1, 5.0, "p-meta"), (2, 25.0, "p-meta2")],
-        "pid LONG, x DOUBLE, start STRING",  # 'start' clashes on purpose
-    )
-    ivals = spark.createDataFrame(
-        [(100, 0.0, 10.0), (200, 20.0, 30.0)],
-        "uid LONG, start DOUBLE, end DOUBLE",
-    )
-    out = point_in_interval_join(
-        pts, ivals, bucket_width=10.0, point_col="x", bounds=("start", "end")
-    )
-    assert "start_r" in out.columns and "start" in out.columns
-    got = {(r["pid"], r["uid"], r["start"]) for r in out.collect()}
-    assert got == {(1, 100, "p-meta"), (2, 200, "p-meta2")}
-
-
 def test_banded_only_bypass_equals_split_path(spark):
     """long_span_buckets=None (banded-only, for bounded-span callers)
     returns exactly the split-path result — the split is a cost guard,
-    never a correctness device. Checked for both join flavors,
-    including intervals long enough to take the fallback branch in the
-    split path."""
+    never a correctness device. Checked including intervals long enough
+    to take the fallback branch in the split path."""
     ivals = _intervals(spark, 60, seed=21)  # includes spans > 8 buckets
     got_a = {
         tuple(sorted((r["uid"], r["uid_r"])))
@@ -214,31 +209,13 @@ def test_banded_only_bypass_equals_split_path(spark):
     }
     assert got_a == got_b and got_a
 
-    pts = spark.createDataFrame(
-        [(int(i), float(v)) for i, v in enumerate(range(0, 1200, 37))],
-        "pid LONG, x DOUBLE",
-    )
-    pa = {
-        (r["pid"], r["uid"])
-        for r in point_in_interval_join(
-            pts, ivals, bucket_width=10.0, point_col="x", long_span_buckets=8
-        ).collect()
-    }
-    pb = {
-        (r["pid"], r["uid"])
-        for r in point_in_interval_join(
-            pts, ivals, bucket_width=10.0, point_col="x", long_span_buckets=None
-        ).collect()
-    }
-    assert pa == pb and pa
-
 
 def test_keyed_strategy_matches_banded(spark):
     """strategy='keyed' (shuffled hash join + overlap filter) returns the
     identical pair set as the banded strategy on a keyed input, plans a
     ShuffledHashJoin, and rejects unkeyed use (an unkeyed theta join is
     a cartesian product) and any other strategy name."""
-    from science_datalake_spark import plans
+    from tests import plan_helpers as plans
 
     iv = spark.createDataFrame(
         [(i, i % 3, float(i % 17), float(i % 17 + i % 5)) for i in range(200)],

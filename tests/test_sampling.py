@@ -59,7 +59,7 @@ def test_stratified_gold_design(spark):
 
 def test_weighted_sample_reproducible_and_take_ordered(spark, sf_oracle):
     from science_datalake_spark.operators.sampling import weighted_sample
-    from science_datalake_spark import plans
+    from tests import plan_helpers as plans
 
     o = table(spark, sf_oracle, "orders").withColumn(
         "w", (F.col("o_totalprice") / 100.0)

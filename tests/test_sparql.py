@@ -5,13 +5,13 @@ from __future__ import annotations
 
 import pytest
 
-from science_datalake_spark import plans
 from science_datalake_spark.sources.ontology import parse_turtle
 from science_datalake_spark.sparql import (
     SparqlError,
     quads_to_triples_df,
     sparql_select,
 )
+from tests import plan_helpers as plans
 
 TTL = """
 @prefix skos: <http://www.w3.org/2004/02/skos/core#> .

@@ -1,5 +1,5 @@
-"""Structured Streaming tests: file-source stream → watermark → windowed
-agg, drained with availableNow; result must equal the batch twin."""
+"""Structured Streaming tests: each streaming plan, drained with
+availableNow, must equal its batch twin over the same files."""
 
 from __future__ import annotations
 
@@ -7,177 +7,23 @@ import json
 
 import pyspark.sql.functions as F
 
-from science_datalake_spark.streaming.events import (
-    hourly_counts,
-    read_event_stream,
-    run_available_now,
-    sliding_user_activity,
+EVENT_SCHEMA = (
+    "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING"
 )
 
 
-def _write_event_files(tmp_path, n_files=3, per_file=40):
-    src = tmp_path / "stream_src"
-    src.mkdir()
-    eid = 0
-    for fi in range(n_files):
-        with open(src / f"events-{fi}.json", "w") as f:
-            for i in range(per_file):
-                minute = (eid * 7) % (60 * 6)  # spread over 6 hours
-                f.write(
-                    json.dumps(
-                        {
-                            "event_id": eid,
-                            "ts": f"2024-01-01T{minute // 60:02d}:{minute % 60:02d}:00.000Z",
-                            "user_id": eid % 9,
-                            "event_type": ["click", "view", "error"][eid % 3],
-                            "value": round(eid * 0.5, 2),
-                            "props": json.dumps({"k": eid % 5}),
-                        }
-                    )
-                    + "\n"
-                )
-                eid += 1
-    return str(src)
-
-
-def test_hourly_counts_stream_matches_batch(spark, tmp_path):
-    src = _write_event_files(tmp_path)
-    stream = read_event_stream(spark, src)
-    assert stream.isStreaming
-    run_available_now(hourly_counts(stream), str(tmp_path / "ckpt1"), "hourly_test")
-    got = spark.sql("SELECT * FROM hourly_test").cache()
-
-    batch = (
-        spark.read.schema(
-            "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING"
-        )
-        .json(src)
-        .groupBy(F.date_trunc("hour", "ts").alias("window_start"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
-    )
-    assert got.count() == batch.count() > 0
-    assert got.exceptAll(batch).count() == 0
-
-
-def test_sliding_windows_stream(spark, tmp_path):
-    src = _write_event_files(tmp_path)
-    stream = read_event_stream(spark, src)
-    run_available_now(sliding_user_activity(stream), str(tmp_path / "ckpt2"), "sliding_test")
-    got = spark.sql("SELECT * FROM sliding_test")
-    # each event lands in 2 overlapping 1h/30min windows → strictly more
-    # window rows than the tumbling variant
-    assert got.count() > 0
-    assert got.select("window_start").distinct().count() >= 12
-
-
-def test_stream_checkpoint_resume(spark, tmp_path):
-    """New files after a drain are picked up incrementally, not reprocessed."""
-    src = _write_event_files(tmp_path, n_files=1)
-    ckpt = str(tmp_path / "ckpt3")
-    stream = read_event_stream(spark, src)
-    run_available_now(hourly_counts(stream), ckpt, "resume_test")
-    n1 = spark.sql("SELECT coalesce(sum(n_events),0) AS n FROM resume_test").first()["n"]
-    # append one more file, drain again from the same checkpoint
-    with open(f"{src}/late.json", "w") as f:
-        f.write(
-            json.dumps(
-                {
-                    "event_id": 999,
-                    "ts": "2024-01-01T05:30:00.000Z",
-                    "user_id": 1,
-                    "event_type": "click",
-                    "value": 1.0,
-                    "props": "{}",
-                }
-            )
-            + "\n"
-        )
-    stream2 = read_event_stream(spark, src)
-    run_available_now(hourly_counts(stream2), ckpt, "resume_test2")
-    n2 = spark.sql("SELECT coalesce(sum(n_events),0) AS n FROM resume_test2").first()["n"]
-    assert n1 == 40
-    # resumed state (40) + only the new file (1); a reprocess would give 81
-    assert n2 == 41
-
-
-def test_stateful_sessionization(spark, tmp_path):
-    """applyInPandasWithState sessions must match the batch twin's
-    completed sessions (every session but each user's last)."""
-    import pyspark.sql.functions as F
-
-    from science_datalake_spark.streaming.sessions import sessionize_stream
-
-    # time-ordered files (a real file stream delivers in arrival order);
-    # 6 files / maxFilesPerTrigger=4 → 2 micro-batches → state carry-over
-    import os as _os
-
-    src = tmp_path / "sess_src"
-    src.mkdir()
-    eid = 0
-    for fi in range(6):
-        with open(src / f"events-{fi}.json", "w") as f:
-            for _ in range(30):
-                minute = eid * 2 + (eid // 15) * 40  # 40-min gap every 15 events
-                f.write(
-                    json.dumps(
-                        {
-                            "event_id": eid,
-                            "ts": f"2024-01-01T{minute // 60:02d}:{minute % 60:02d}:00.000Z",
-                            "user_id": eid % 4,
-                            "event_type": "click",
-                            "value": round(eid * 0.5, 2),
-                            "props": "{}",
-                        }
-                    )
-                    + "\n"
-                )
-                eid += 1
-        # FileStreamSource orders by modification time; equal mtimes make
-        # the file→batch assignment nondeterministic, which breaks the
-        # in-order-arrival premise of the simple session operator.
-        _os.utime(src / f"events-{fi}.json", (1700000000 + fi, 1700000000 + fi))
-    src = str(src)
-    stream = read_event_stream(spark, src)
-    out = sessionize_stream(stream)
+def run_available_now(result, checkpoint_dir: str, query_name: str) -> None:
+    """Drain everything currently available into an in-memory append-mode
+    sink named ``query_name``, then stop."""
     q = (
-        out.writeStream.outputMode("append")
+        result.writeStream.outputMode("append")
         .format("memory")
-        .queryName("sessions_test")
-        .option("checkpointLocation", str(tmp_path / "ckpt_sess"))
+        .queryName(query_name)
+        .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    got = spark.sql("SELECT * FROM sessions_test").cache()
-
-    # batch twin: full sessionization, drop each user's final session
-    from pyspark.sql import Window
-
-    batch = spark.read.schema(
-        "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING"
-    ).json(src)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = w.rowsBetween(Window.unboundedPreceding, 0)
-    gap = F.unix_micros(F.col("ts")) - F.unix_micros(F.lag("ts").over(w))
-    new_s = F.when(F.lag("ts").over(w).isNull() | (gap > 1_800_000_000), 1).otherwise(0)
-    sess = (
-        batch.withColumn("__new", new_s)
-        .withColumn("sid", F.sum("__new").over(run))
-        .groupBy("user_id", "sid")
-        .agg(
-            F.min(F.unix_micros("ts")).alias("session_start_us"),
-            F.max(F.unix_micros("ts")).alias("session_end_us"),
-            F.count("*").alias("n_events"),
-        )
-    )
-    last_sid = sess.groupBy("user_id").agg(F.max("sid").alias("sid")).withColumn("__last", F.lit(True))
-    completed = (
-        sess.join(last_sid, ["user_id", "sid"], "left_anti")
-        .select("user_id", "session_start_us", "session_end_us", "n_events")
-    )
-    got_cmp = got.select("user_id", "session_start_us", "session_end_us", "n_events")
-    assert got_cmp.count() == completed.count() > 0
-    assert got_cmp.exceptAll(completed).count() == 0
 
 
 def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
@@ -211,25 +57,15 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
                 )
                 eid += 1
     src = str(src_dir)
-    stream = read_event_stream(spark, src)
+    stream = spark.readStream.schema(EVENT_SCHEMA).option("maxFilesPerTrigger", 4).json(src)
     result = view_click_attribution(stream, max_delay="90 minutes")
     assert result.isStreaming
     # append mode: stream-stream inner joins emit matches as the watermark
     # closes them; availableNow + finite input drains everything
-    q = (
-        result.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("attrib_test")
-        .option("checkpointLocation", str(tmp_path / "ckpt_join"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_available_now(result, str(tmp_path / "ckpt_join"), "attrib_test")
     got = spark.sql("SELECT * FROM attrib_test").cache()
 
-    batch_events = spark.read.schema(
-        "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE, props STRING"
-    ).json(src)
+    batch_events = spark.read.schema(EVENT_SCHEMA).json(src)
     expected = view_click_attribution(batch_events, max_delay="90 minutes")
     assert got.count() == expected.count() > 0
     assert got.exceptAll(expected).count() == 0
@@ -240,84 +76,64 @@ def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
     )
     assert bad.count() == 0
 
-def test_stream_pack_greedy_state_carries_open_bin(spark, tmp_path):
-    """Streaming greedy packing must equal the batch packer run over the
-    arrival-ordered concatenation — in particular, a bin left partially
-    full by micro-batch N must be topped up by batch N+1's first docs
-    (the state carry-over), and bin ids must stay monotone per shard."""
-    import os as _os
 
-    from science_datalake_spark.streaming.packing import pack_stream
-
-    src = tmp_path / "pack_src"
-    src.mkdir()
-    rows_by_file = []
-    doc = 0
-    for fi in range(4):
-        rows = []
-        for _ in range(10):
-            rows.append({"doc_id": doc, "shard": doc % 2, "tok": (doc * 37) % 90 + 10})
-            doc += 1
-        rows_by_file.append(rows)
-        with open(src / f"docs-{fi}.json", "w") as f:
-            for r in rows:
-                f.write(json.dumps(r) + "\n")
-        _os.utime(src / f"docs-{fi}.json", (1700000000 + fi, 1700000000 + fi))
-
-    stream = (
-        spark.readStream.schema("doc_id LONG, shard LONG, tok LONG")
-        .option("maxFilesPerTrigger", 2)
-        .json(str(src))
-    )
-    q = (
-        pack_stream(stream, budget=200)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("pack_test")
-        .option("checkpointLocation", str(tmp_path / "ckpt_pack"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["shard"], r["doc_id"]): r["bin"]
-        for r in spark.sql("SELECT * FROM pack_test").collect()
-    }
-
-    # python mirror over the arrival order: micro-batch = 2 files, docs
-    # sorted by doc_id within (shard, batch)
-    expect = {}
-    state = {}  # shard -> (bin, fill)
-    for batch_files in (rows_by_file[0] + rows_by_file[1], rows_by_file[2] + rows_by_file[3]):
-        for shard in (0, 1):
-            docs = sorted(
-                (r for r in batch_files if r["shard"] == shard),
-                key=lambda r: r["doc_id"],
+def _write_attrib_events(path, first_eid: int, first_minute: int, n: int) -> None:
+    with open(path, "w") as f:
+        for i in range(n):
+            eid, minute = first_eid + i, first_minute + 3 * i
+            f.write(
+                json.dumps(
+                    {
+                        "event_id": eid,
+                        "ts": f"2024-01-01T{minute // 60:02d}:{minute % 60:02d}:00.000Z",
+                        "user_id": eid % 4,
+                        "event_type": ["view", "click"][(eid // 4) % 2],
+                        "value": 1.0,
+                        "props": "{}",
+                    }
+                )
+                + "\n"
             )
-            b, fill = state.get(shard, (0, 0))
-            for r in docs:
-                t = r["tok"]
-                if fill > 0 and fill + t > 200:
-                    b, fill = b + 1, 0
-                fill += t
-                expect[(shard, r["doc_id"])] = b
-            state[shard] = (b, fill)
 
-    assert got == expect
-    # the carry-over actually happened: some bin spans the batch boundary
-    spans = {
-        s
-        for s in (0, 1)
-        if any(
-            expect[(s, r["doc_id"])] == state_bin
-            for r in rows_by_file[2] + rows_by_file[3]
-            if r["shard"] == s
-            for state_bin in [
-                max(expect[(s, r2["doc_id"])] for r2 in rows_by_file[0] + rows_by_file[1] if r2["shard"] == s)
-            ]
+
+def test_stream_checkpoint_resume(spark, tmp_path):
+    """A file that arrives after a drain is picked up from the checkpoint,
+    not reprocessed: the second drain emits only new pairs, including
+    clicks matched to views held in the restored join state, and the two
+    drains together equal the batch join over all files."""
+    from science_datalake_spark.streaming.joins import view_click_attribution
+
+    src = tmp_path / "resume_src"
+    src.mkdir()
+    _write_attrib_events(src / "ev-0.json", 0, 0, 40)  # minutes 0..117
+    out, ckpt = str(tmp_path / "resume_out"), str(tmp_path / "ckpt_resume")
+
+    def drain():
+        stream = spark.readStream.schema(EVENT_SCHEMA).json(str(src))
+        q = (
+            view_click_attribution(stream, max_delay="90 minutes")
+            .writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
         )
-    }
-    assert spans, "test data never exercised the cross-batch bin carry-over"
+        q.awaitTermination()
+        return [tuple(r) for r in spark.read.parquet(out).collect()]
+
+    first = drain()
+    _write_attrib_events(src / "ev-1.json", 40, 120, 20)  # minutes 120..177
+    after = drain()
+
+    batch = view_click_attribution(
+        spark.read.schema(EVENT_SCHEMA).json(str(src)), max_delay="90 minutes"
+    )
+    want = sorted(tuple(r) for r in batch.collect())
+    assert first and sorted(after) == want  # no pair emitted twice or lost
+    new = set(after) - set(first)
+    assert len(new) == len(after) - len(first) > 0
+    # state carried over the restart: a first-file view pairs with a new click
+    assert any(view_id < 40 <= click_id for _, view_id, _, click_id, _, _ in new)
 
 
 def test_shard_shuffle_streams_unchanged(spark, tmp_path):
@@ -341,9 +157,7 @@ def test_shard_shuffle_streams_unchanged(spark, tmp_path):
     assert stream.isStreaming
     sharded = shard_shuffle(stream, "doc_id", seed=11)
     assert sharded.isStreaming  # stateless: still a plain streaming projection
-    run_available_now(
-        sharded, str(tmp_path / "ckpt_shard"), "shard_stream", output_mode="append"
-    )
+    run_available_now(sharded, str(tmp_path / "ckpt_shard"), "shard_stream")
     got = {
         (r["doc_id"], r["order_key"], r["shard"])
         for r in spark.sql("SELECT doc_id, order_key, shard FROM shard_stream").collect()
@@ -385,9 +199,7 @@ def test_bloom_probe_streams_unchanged(spark, tmp_path):
     stream = spark.readStream.schema(schema).json(str(src))
     tagged = bloom_might_contain(stream, "fp", model)
     assert tagged.isStreaming  # stateless: still a plain streaming projection
-    run_available_now(
-        tagged, str(tmp_path / "ckpt_bloom"), "bloom_stream", output_mode="append"
-    )
+    run_available_now(tagged, str(tmp_path / "ckpt_bloom"), "bloom_stream")
     got = {
         (r["doc_id"], r["might_contain"])
         for r in spark.sql("SELECT doc_id, might_contain FROM bloom_stream").collect()

@@ -1,8 +1,8 @@
 """Stale-import guard for the scripts outside the package.
 
-``tools/*.py`` and ``bench.py`` import package names lazily, inside
-functions, so deleting or renaming a package name can strand a script
-that no other test imports. This scans each script's AST — without
+``tools/*.py``, ``perfbench/*.py`` and ``bench.py`` import package names
+lazily, inside functions, so deleting or renaming a package name can
+strand a script that no other test imports. This scans each script's AST — without
 running it — for every ``from science_datalake_spark... import name``
 (at any nesting depth) and asserts that the name still resolves.
 """
@@ -17,7 +17,11 @@ import pytest
 
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = "science_datalake_spark"
-SCRIPTS = sorted(ROOT.glob("tools/*.py")) + [ROOT / "bench.py"]
+SCRIPTS = (
+    sorted(ROOT.glob("tools/*.py"))
+    + sorted(ROOT.glob("perfbench/*.py"))
+    + [ROOT / "bench.py"]
+)
 
 
 def _package_imports(path: Path) -> list[tuple[int, str, str | None]]:

@@ -331,35 +331,3 @@ def test_unified_cache_evicts_oldest(spark, sf_smoke):
     finally:
         uq._UNIFIED_CACHE.clear()
         uq._UNIFIED_CACHE.update(saved)
-
-
-def test_materialize_unified_papers_durable(spark, tmp_path):
-    """The cross-session materialize-once form: build → clustered write →
-    registered view; the read-back relation answers the same coverage
-    rollup as the in-memory build and survives as a catalog view."""
-    from science_datalake_spark.synth import (
-        synth_code_links,
-        synth_openalex,
-        synth_retractions,
-        synth_s2ag,
-        synth_sciscinet,
-    )
-    from science_datalake_spark.unify import materialize_unified_papers
-
-    oa, s2, sci = (
-        synth_openalex(spark, 400),
-        synth_s2ag(spark, 300),
-        synth_sciscinet(spark, 200),
-    )
-    rw, pwc = synth_retractions(spark, 50), synth_code_links(spark, 50)
-    out_dir = str(tmp_path / "unified")
-    got = materialize_unified_papers(
-        spark, oa, s2, sci, out_dir, retractions=rw, code_links=pwc
-    )
-    want = build_unified_papers(oa, s2, sci, retractions=rw, code_links=pwc)
-    a = sorted(map(tuple, coverage_upset(got).collect()))
-    b = sorted(map(tuple, coverage_upset(want).collect()))
-    assert a == b and got.count() == want.count() > 0
-    # registered view is queryable
-    n = spark.sql("SELECT count(*) AS n FROM unified_papers").collect()[0]["n"]
-    assert n == got.count()

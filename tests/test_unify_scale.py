@@ -8,7 +8,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from science_datalake_spark import plans, sanity
+from science_datalake_spark import sanity
 from science_datalake_spark.synth import (
     HOT,
     expected_unified,
@@ -19,6 +19,7 @@ from science_datalake_spark.synth import (
     synth_sciscinet,
 )
 from science_datalake_spark.unify import build_unified_papers, coverage_upset
+from tests import plan_helpers as plans
 
 N_OA, N_S2, N_SCI = 60_000, 45_000, 30_000
 
