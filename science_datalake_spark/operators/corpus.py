@@ -222,7 +222,6 @@ def leakage_safe_split(
     id_col: str,
     fractions: dict[str, float],
     cluster_col: str | None = None,
-    pairs: DataFrame | None = None,
     seed: int = 42,
     u_expr=None,
 ) -> DataFrame:
@@ -236,24 +235,20 @@ def leakage_safe_split(
     assigning by cluster removes the failure mode instead of detecting
     it (the dedup-then-split discipline of every published LLM corpus).
 
-    Cluster source, in precedence order:
-    - ``pairs`` — a (src, dst) near-dup pair relation (any of the
-      dedup family's outputs); clusters are the connected components
-      (``graph.connected_components``, O(log n) rounds), each labeled
-      by its min member id. Documents in no pair form singleton
-      clusters (their own id).
+    Cluster source:
     - ``cluster_col`` — precomputed cluster labels already on ``docs``
-      (e.g. a persisted dedup run). NULL labels fall back to the row's
-      own id (singleton).
-    - neither — every document is its own cluster (plain deterministic
+      (e.g. a persisted dedup run, or ``graph.connected_components_star``
+      over a near-dup pair relation joined back onto the docs). NULL
+      labels fall back to the row's own id (singleton).
+    - none — every document is its own cluster (plain deterministic
       split, still reproducible under any partitioning).
 
     Assignment: u = (xxhash64(cluster, seed) mod 2^20)/2^20 ∈ [0, 1)
     banded by the cumulative ``fractions`` in insertion order (must sum
     to ~1; the last band absorbs rounding residue). Pure column
-    expression — after the (optional) component join, assignment adds
-    NO shuffle and no driver data. Same (data, fractions, seed) ⇒ same
-    split under ANY partitioning (the seeded-hash discipline of
+    expression — assignment adds NO shuffle and no driver data. Same
+    (data, fractions, seed) ⇒ same split under ANY partitioning (the
+    seeded-hash discipline of
     operators/sampling.py). ``u_expr`` overrides the hash with a caller
     expression over ``split_cluster`` → [0, 1) — the systematic-mod
     form a relational twin can evaluate verbatim (the
@@ -262,29 +257,11 @@ def leakage_safe_split(
     skewed low; a plain mod over them is biased, a hash is not).
 
     Returns ``docs`` + ``split_cluster`` + ``split``.
-
-    Scale: the only shuffles are the CC iterations over the PAIR set
-    (bounded by the dedup family's own guards) and one broadcast-able
-    left join of docs against the (node → component) labels — the label
-    relation has one row per PAIRED doc only, typically a small
-    fraction of the corpus. Unpaired docs take the map-side fallback.
     """
     total = sum(fractions.values())
     if not fractions or abs(total - 1.0) > 1e-6:
         raise ValueError(f"fractions must sum to 1, got {total}")
-    if pairs is not None:
-        from science_datalake_spark.operators.graph import connected_components
-
-        labels = connected_components(pairs, src=pairs.columns[0], dst=pairs.columns[1])
-        labels = labels.select(
-            F.col("node").alias("__n"), F.col("comp").alias("__comp")
-        )
-        docs = docs.join(labels, on=F.col(id_col) == F.col("__n"), how="left").drop(
-            "__n"
-        )
-        cluster = F.coalesce(F.col("__comp"), F.col(id_col))
-        docs = docs.withColumn("split_cluster", cluster).drop("__comp")
-    elif cluster_col is not None:
+    if cluster_col is not None:
         docs = docs.withColumn(
             "split_cluster", F.coalesce(F.col(cluster_col), F.col(id_col))
         )

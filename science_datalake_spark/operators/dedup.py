@@ -11,15 +11,9 @@ Four families (BASELINE.json north star):
   scale this runs AFTER LSH candidate generation, never on the cross
   product
 
-Hashing is pluggable (``hash_fn``): the default ``"md5"`` is
-engine-portable (the DuckDB oracle computes the identical signatures,
-which is what the correctness gate hash-checks), while ``"xxhash64"`` is
-the raw-throughput path for 100 TB runs — Spark's native 64-bit
-non-cryptographic hash, one codegen'd long per value instead of a 128-bit
-digest + hex string. The plan shape is identical either way; only the
-signature VALUES differ, so the two paths find the same exact-duplicate
-collisions but (by design of MinHash) independently-sampled near-dup
-candidates.
+Signatures hash with md5, which is engine-portable: the DuckDB oracle
+computes the identical signatures, which is what the correctness gate
+hash-checks.
 
 Reference parallel: the reference dedups only by key priority
 (materialize_fulltext.py:96-120); content-based near-dup is the additive
@@ -200,15 +194,11 @@ def minhash_signatures(
     text_col: str,
     n: int = 3,
     num_hashes: int = 8,
-    hash_fn: str = "md5",
 ) -> DataFrame:
     """Per-document MinHash signature: num_hashes salted-hash minima over
     word n-grams. Documents with fewer than n words drop out (no shingles).
-
-    ``hash_fn="md5"`` salts by string-prefixing the band index (oracle-
-    portable); ``hash_fn="xxhash64"`` salts by passing the band index as a
-    leading hash input — an 8-byte long min instead of a 32-char hex
-    string min, the fast path for corpora where no DuckDB twin is needed.
+    Each hash is md5 salted by string-prefixing the band index (oracle-
+    portable).
 
     Every (doc, shingle) occurrence is hashed map-only, so the only
     exchange is the groupBy(id) agg — one shuffle with map-side partial
@@ -218,18 +208,10 @@ def minhash_signatures(
         with_word_ngrams(_spread(df.select(id_col, text_col), id_col), text_col, n)
         .select(id_col, F.explode("ng").alias("__ng"))
     )
-    if hash_fn == "md5":
-        hashes = [
-            F.md5(F.concat(F.lit(f"{b}:"), F.col("__ng"))).alias(f"__h{b}")
-            for b in range(num_hashes)
-        ]
-    elif hash_fn == "xxhash64":
-        hashes = [
-            F.xxhash64(F.lit(b), F.col("__ng")).alias(f"__h{b}")
-            for b in range(num_hashes)
-        ]
-    else:
-        raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
+    hashes = [
+        F.md5(F.concat(F.lit(f"{b}:"), F.col("__ng"))).alias(f"__h{b}")
+        for b in range(num_hashes)
+    ]
     return ng.select(id_col, *hashes).groupBy(id_col).agg(
         *[F.min(f"__h{b}").alias(f"mh{b}") for b in range(num_hashes)]
     )
@@ -354,17 +336,15 @@ def lsh_star_edges(
 
 
 def simhash(
-    df: DataFrame, id_col: str, text_col: str, bits: int = 16, hash_fn: str = "md5"
+    df: DataFrame, id_col: str, text_col: str, bits: int = 16
 ) -> DataFrame:
     """SimHash signature via hash-parity random hyperplanes: bit b is the
     sign of the sum over tokens of ±1, where the sign of each token's
-    contribution is derived from one hash of the token — the b-th hex
-    digit's parity for md5 (one digest per 32 bits: wider signatures
-    concatenate salt-prefixed digests ``md5('k:' || token)``, the same
-    oracle-portable salting as minhash_signatures; ≤32 bits keeps the
-    historical unsalted single digest), the b-th BIT for xxhash64 (≤64,
-    and the fast path: long bit-tests instead of substring on a hex
-    string). Near-identical token multisets get identical signatures;
+    contribution is the parity of the b-th hex digit of the token's md5
+    (one digest per 32 bits: wider signatures concatenate salt-prefixed
+    digests ``md5('k:' || token)``, the same oracle-portable salting as
+    minhash_signatures; ≤32 bits keeps the historical unsalted single
+    digest). Near-identical token multisets get identical signatures;
     Hamming-close docs are near-dups.
 
     Signature width is the BAND-SATURATION control downstream
@@ -378,63 +358,50 @@ def simhash(
 
     Scale: one explode + one groupBy(id) with ``bits`` tiny aggregates —
     identical shuffle profile to minhash_signatures, ceil(bits/32) md5s
-    (or 1 xxhash64) per token.
+    per token.
     """
     tokens = _spread(df.select(id_col, text_col), id_col).select(
         id_col, F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("__tok")
     )
-    if hash_fn == "md5":
-        if bits <= 32:
-            digest = F.md5(F.col("__tok"))
-        else:
-            digest = F.concat(
-                *[
-                    F.md5(F.concat(F.lit(f"{k}:"), F.col("__tok")))
-                    for k in range((bits + 31) // 32)
-                ]
-            )
-        # Bit b is the parity of hex digit b: digits 0-7 (nibble high bit
-        # clear) contribute +1, 8-f contribute -1. Testing the digit via
-        # substring().isin() costs one interpreted UTF8String slice per
-        # bit per token (64 allocations/token at 64 bits); instead conv
-        # each 8-hex-digit chunk to a long ONCE per token (ceil(bits/8)
-        # codegen'd convs) and read the nibble high bits with shift/and —
-        # identical values, no per-bit string work.
-        n_chunks = (bits + 7) // 8
-        widths = [min(8, bits - 8 * c) for c in range(n_chunks)]
-        # Two-step select keeps the digest computed ONCE per token:
-        # CollapseProject leaves the projections separate because "__h" is
-        # referenced n_chunks times and md5 is not a cheap expression.
-        hashed = tokens.select(id_col, digest.alias("__h")).select(
-            id_col,
-            *[
-                F.conv(F.substring(F.col("__h"), c * 8 + 1, widths[c]), 16, 10)
-                .cast("bigint")
-                .alias(f"__c{c}")
-                for c in range(n_chunks)
-            ],
-        )
-        contribs = []
-        for b in range(bits):
-            c, j = divmod(b, 8)
-            shift = 4 * (widths[c] - 1 - j) + 3
-            contribs.append(
-                F.sum(
-                    F.when(F.expr(f"(__c{c} >> {shift}) & 1 = 1"), -1).otherwise(1)
-                ).alias(f"s{b}")
-            )
-    elif hash_fn == "xxhash64":
-        if bits > 64:
-            raise ValueError("simhash derives bits from one xxhash64; max 64")
-        hashed = tokens.select(id_col, F.xxhash64(F.col("__tok")).alias("__h"))
-        contribs = [
-            F.sum(
-                F.when(F.expr(f"(__h >> {b}) & 1 = 1"), 1).otherwise(-1)
-            ).alias(f"s{b}")
-            for b in range(bits)
-        ]
+    if bits <= 32:
+        digest = F.md5(F.col("__tok"))
     else:
-        raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
+        digest = F.concat(
+            *[
+                F.md5(F.concat(F.lit(f"{k}:"), F.col("__tok")))
+                for k in range((bits + 31) // 32)
+            ]
+        )
+    # Bit b is the parity of hex digit b: digits 0-7 (nibble high bit
+    # clear) contribute +1, 8-f contribute -1. Testing the digit via
+    # substring().isin() costs one interpreted UTF8String slice per
+    # bit per token (64 allocations/token at 64 bits); instead conv
+    # each 8-hex-digit chunk to a long ONCE per token (ceil(bits/8)
+    # codegen'd convs) and read the nibble high bits with shift/and —
+    # identical values, no per-bit string work.
+    n_chunks = (bits + 7) // 8
+    widths = [min(8, bits - 8 * c) for c in range(n_chunks)]
+    # Two-step select keeps the digest computed ONCE per token:
+    # CollapseProject leaves the projections separate because "__h" is
+    # referenced n_chunks times and md5 is not a cheap expression.
+    hashed = tokens.select(id_col, digest.alias("__h")).select(
+        id_col,
+        *[
+            F.conv(F.substring(F.col("__h"), c * 8 + 1, widths[c]), 16, 10)
+            .cast("bigint")
+            .alias(f"__c{c}")
+            for c in range(n_chunks)
+        ],
+    )
+    contribs = []
+    for b in range(bits):
+        c, j = divmod(b, 8)
+        shift = 4 * (widths[c] - 1 - j) + 3
+        contribs.append(
+            F.sum(
+                F.when(F.expr(f"(__c{c} >> {shift}) & 1 = 1"), -1).otherwise(1)
+            ).alias(f"s{b}")
+        )
     summed = hashed.groupBy(id_col).agg(*contribs)
     bit_chars = [F.when(F.col(f"s{b}") > 0, "1").otherwise("0") for b in range(bits)]
     return summed.select(id_col, F.concat(*bit_chars).alias("simhash"))
@@ -535,7 +502,6 @@ def winnowing_fingerprints(
     text_col: str,
     k: int = 8,
     w: int = 4,
-    hash_fn: str = "md5",
     max_chars: int = 256 * 1024,
 ) -> DataFrame:
     """Winnowing document fingerprints (the MOSS rolling-hash scheme):
@@ -552,9 +518,8 @@ def winnowing_fingerprints(
     All native expressions: the k-gram enumeration, per-gram hash, and
     window-min selection are transform/slice/array_min lambdas inside one
     projection — no UDF, no shuffle until the caller aggregates. md5
-    (hex-string mins, engine-portable for the DuckDB twin) or xxhash64
-    (long mins, the fast path — ~12x smaller per-row intermediates; prefer
-    it at scale). Scale: O(len·w) comparisons per document, map-only;
+    hex-string mins keep it engine-portable for the DuckDB twin. Scale:
+    O(len·w) comparisons per document, map-only;
     _spread the input first when files are few (same guidance as
     minhash_signatures).
 
@@ -573,14 +538,6 @@ def winnowing_fingerprints(
     and byte-identical to before. Output row-set is equal for any split
     (equality-tested).
     """
-    if hash_fn == "md5":
-        hash_expr = "md5(substring(__t, i, {k}))"
-        hash_type = "STRING"
-    elif hash_fn == "xxhash64":
-        hash_expr = "xxhash64(substring(__t, i, {k}))"
-        hash_type = "BIGINT"
-    else:
-        raise ValueError(f"hash_fn must be 'md5' or 'xxhash64', got {hash_fn!r}")
     # CASE guards, not greatest(..., 0): Spark's sequence(1, 0) yields the
     # DESCENDING [1, 0], so the 'empty' case would feed slice() a start of
     # 0 and crash the job on any document shorter than k+w-1 chars (NULL
@@ -589,14 +546,15 @@ def winnowing_fingerprints(
     # chars, no fingerprints below w hashes.
     grams = (
         f"CASE WHEN length(__t) >= {k} THEN "
-        f"transform(sequence(1, length(__t) - {k - 1}), i -> {hash_expr.format(k=k)}) "
-        f"ELSE CAST(array() AS ARRAY<{hash_type}>) END"
+        f"transform(sequence(1, length(__t) - {k - 1}), "
+        f"i -> md5(substring(__t, i, {k}))) "
+        "ELSE CAST(array() AS ARRAY<STRING>) END"
     )
     mins = (
         f"CASE WHEN size(__h) >= {w} THEN "
         f"array_distinct(transform(sequence(1, size(__h) - {w - 1}), "
         f"i -> array_min(slice(__h, i, {w})))) "
-        f"ELSE CAST(array() AS ARRAY<{hash_type}>) END"
+        "ELSE CAST(array() AS ARRAY<STRING>) END"
     )
     src = df.select(F.col(id_col), F.col(text_col).alias("__t"))
 

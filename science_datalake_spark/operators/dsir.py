@@ -199,17 +199,3 @@ def dsir_sample(
     )
     scored = w.withColumn("score", F.col("log_weight") + gumbel_noise(F.col(id_col), seed))
     return scored.orderBy(F.desc("score"), id_col).limit(n)
-
-
-# ---------------------------------------------------------------------------
-# Durable DSIR model artifact + map-only scoring (the streaming-safe tier)
-# ---------------------------------------------------------------------------
-#
-# The fitted model IS the bucket->log-ratio relation — at most num_buckets
-# rows regardless of corpus size — so it persists as a tiny parquet table
-# and scoring NEW documents (the next crawl batch, or a stream) needs no
-# corpus aggregation at all: one in-row fold per document over an
-# element_at lookup into the collected model array (a single wide array
-# literal, NOT num_buckets chained CASEs — the ARCHITECTURE #14 rule).
-# Buckets never seen while fitting score the closed-form smoothed default
-# ln(a/(T+aB)) - ln(a/(R+aB)).

@@ -8,9 +8,11 @@ self-joins; ontology hierarchies traverse parent/child edges
 iterative DataFrame joins (GraphFrames is the same thing packaged).
 
 Scale: every hop is one shuffle on the join key. Transitive closure
-checkpoints each iteration (breaks lineage growth) and stops at a fixed
-point — on a 3B-edge citation graph you bound depth and pre-partition both
-sides on the join key so hops reuse the partitioning.
+checkpoints each iteration (breaks lineage growth) and runs to its fixed
+point: each round doubles the reachable path length, so a graph of
+diameter D closes in about log2(D)+1 rounds and the answer is never
+truncated. On a 3B-edge citation graph, pre-partition both sides on the
+join key so hops reuse the partitioning.
 """
 
 from __future__ import annotations
@@ -71,65 +73,71 @@ def k_hop(edges: DataFrame, start: DataFrame, k: int, src: str = "src", dst: str
     return seen
 
 
+#: transitive_closure's driver tier: edge sets of at most this many rows
+#: are collected and closed in-process
+_CLOSURE_SMALL_GRAPH_ROWS = 65536
+#: ... unless the closure itself outgrows this many pairs on the driver
+_CLOSURE_PAIR_CAP = 2_000_000
+
+
 def transitive_closure(
     edges: DataFrame,
-    max_iters: int = 10,
     src: str = "src",
     dst: str = "dst",
-    small_graph_rows: int | None = 65536,
 ) -> DataFrame:
     """All (ancestor, descendant) pairs by iterated self-join to a fixed
     point (ontology ancestor expansion). Each iteration doubles reachable
-    path length; localCheckpoint truncates the exploding lineage.
+    path length; localCheckpoint truncates the exploding lineage. The
+    loop runs until the pair count stops growing: the closure is finite
+    and grows monotonically, so it ends after about log2(diameter)+1
+    rounds with every path, however long.
 
-    ``small_graph_rows``: bounded driver fast path. Ontology taxonomies —
-    the operator's actual workload (SKOS broader*, OBO is_a walks) — are
-    small by contract, yet the distributed loop pays ~2 scheduled jobs
-    PER DOUBLING round just to reach its fixpoint (the sparql family's
-    floor-class bench rows were 26 jobs for a 7-edge fixture). A
-    ``limit(cap+1)`` probe (short-circuits, never scans a big relation)
-    collects edge sets up to the cap and closes them in-process —
-    ONE job total; bigger graphs fall through to the distributed loop
-    unchanged. Pass None to force the distributed path. The in-process
-    closure is exact (not length-capped by ``max_iters``); expansion
-    never traverses a NULL endpoint, matching the join's null semantics,
-    and pair dedup is null-safe, matching ``distinct()``."""
+    Bounded driver fast path: ontology taxonomies — the operator's actual
+    workload (SKOS broader*, OBO is_a walks) — are small by contract, yet
+    the distributed loop pays ~2 scheduled jobs PER DOUBLING round just
+    to reach its fixpoint (the sparql family's floor-class bench rows
+    were 26 jobs for a 7-edge fixture). A ``limit(cap+1)`` probe
+    (short-circuits, never scans a big relation) collects edge sets of up
+    to ``_CLOSURE_SMALL_GRAPH_ROWS`` rows and closes them in-process —
+    ONE job total. Bigger graphs, and small ones whose closure exceeds
+    ``_CLOSURE_PAIR_CAP`` pairs, take the distributed loop. Both tiers
+    return the identical pair set: expansion never traverses a NULL
+    endpoint, matching the join's null semantics, and pair dedup is
+    null-safe, matching ``distinct()``."""
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("d"))
-    if small_graph_rows:
-        head = e.limit(small_graph_rows + 1).collect()
-        if len(head) <= small_graph_rows:
-            # the CLOSURE can still be quadratic in a deep chain even
-            # when the edge set is small; bail to the distributed loop
-            # (which spills) if the pair set outgrows driver comfort
-            pair_cap = 2_000_000
-            base = {(r["a"], r["d"]) for r in head}
-            adj: dict = {}
-            for a, d in base:
-                adj.setdefault(a, set()).add(d)
-            out: set = set()
-            for a in {p[0] for p in base}:
-                seen = set(adj[a])
-                stack = [d for d in seen if d is not None]
-                while stack:
-                    mid = stack.pop()
-                    for d2 in adj.get(mid, ()):
-                        if d2 not in seen:
-                            seen.add(d2)
-                            if d2 is not None:
-                                stack.append(d2)
-                out.update((a, d) for d in seen)
-                if len(out) > pair_cap:
-                    out = None  # type: ignore[assignment]
-                    break
-            if out is not None:
-                return e.sparkSession.createDataFrame(list(out), schema=e.schema)
+    head = e.limit(_CLOSURE_SMALL_GRAPH_ROWS + 1).collect()
+    if len(head) <= _CLOSURE_SMALL_GRAPH_ROWS:
+        # the CLOSURE can still be quadratic in a deep chain even when the
+        # edge set is small; bail to the distributed loop (which spills)
+        # if the pair set outgrows driver comfort
+        base = {(r["a"], r["d"]) for r in head}
+        adj: dict = {}
+        for a, d in base:
+            adj.setdefault(a, set()).add(d)
+        out: set | None = set()
+        for a in {p[0] for p in base}:
+            seen = set(adj[a])
+            stack = [d for d in seen if d is not None]
+            while stack:
+                mid = stack.pop()
+                for d2 in adj.get(mid, ()):
+                    if d2 not in seen:
+                        seen.add(d2)
+                        if d2 is not None:
+                            stack.append(d2)
+            out.update((a, d) for d in seen)
+            if len(out) > _CLOSURE_PAIR_CAP:
+                out = None
+                break
+        if out is not None:
+            return e.sparkSession.createDataFrame(list(out), schema=e.schema)
     closure = e.distinct()
     prev_ckpt: DataFrame | None = None
     # carry the previous size in a Python variable, and materialize each
     # round's LAZY checkpoint through its count: ONE action per iteration
     # (eager-checkpoint + count was two jobs per round)
     prev_n = closure.count()
-    for _ in range(max_iters):
+    while True:
         hop = (
             closure.alias("l")
             .join(closure.alias("r"), F.col("l.d") == F.col("r.a"))
@@ -143,159 +151,27 @@ def transitive_closure(
             return grown
         prev_n = n
         closure = grown
-    return closure
-
-
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iters: int = 20,
-    fallback_star: bool = True,
-) -> DataFrame:
-    """(node, component) labels — the stage that turns near-dup candidate
-    PAIRS into duplicate CLUSTERS (each component keeps min(node) as its
-    canonical id).
-
-    Strategy: iterative min-label propagation first. Each iteration pushes
-    every node's current label to its neighbors (one join on the
-    symmetrized edge list) and takes the min (one agg); localCheckpoint
-    truncates the growing lineage (and each round releases the previous
-    round's checkpoint blocks, so the cache footprint is flat, not linear
-    in rounds); stops at the fixpoint (no label changed). Iterations
-    needed = component diameter — small for dedup clusters (near-dup
-    graphs are dense blobs), so this is the cheap common case.
-
-    If the diameter exceeds ``max_iters`` (long chains — e.g. citation
-    threads), the partial labels are discarded and the computation
-    switches to ``connected_components_star`` (O(log n) rounds regardless
-    of diameter) instead of failing — set ``fallback_star=False`` to get
-    the old fail-loudly behavior."""
-    # Persist the symmetrized edge list: it is joined EVERY iteration, and
-    # without a persist each round re-executes the edge relation's entire
-    # upstream lineage — for dedup clustering that is the full
-    # minhash/LSH candidate-pair pipeline re-run per round (the labels
-    # frame was checkpoint-truncated all along, but the OTHER join input
-    # never was). Pregel-style invariant cache, MEMORY_AND_DISK so a
-    # 100 TB-derived pair list spills instead of OOMing.
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    labels = (
-        sym.select(F.col("a").alias("node")).distinct().withColumn("comp", F.col("node"))
-    )
-    converged = False
-    prev_ckpt: DataFrame | None = None
-    for _ in range(max_iters):
-        pushed = (
-            labels.join(sym, labels["node"] == sym["a"])
-            .select(F.col("b").alias("node"), F.col("comp"))
-        )
-        # lazy checkpoint: the convergence probe below is the action that
-        # materializes it, so each iteration runs ONE job (the old
-        # eager-checkpoint + isEmpty pair ran two — round-3 verdict's
-        # count-actions-per-iteration class of finding)
-        new = (
-            labels.unionByName(pushed)
-            .groupBy("node")
-            .agg(F.min("comp").alias("comp"))
-            .localCheckpoint(eager=False)
-        )
-        changed = (
-            new.alias("n")
-            .join(labels.alias("o"), "node")
-            .agg(
-                F.sum(
-                    F.when(F.col("n.comp") != F.col("o.comp"), 1).otherwise(0)
-                ).alias("c")
-            )
-            .first()["c"]
-        )
-        converged = not changed
-        _release_checkpoint(prev_ckpt)
-        prev_ckpt = new
-        labels = new
-        if converged:
-            break
-    if not converged:
-        _release_checkpoint(prev_ckpt)
-        sym.unpersist()
-        if fallback_star:
-            # unconverged propagation labels look exactly like converged
-            # ones, so they must not be returned — re-derive exactly with
-            # the diameter-independent algorithm
-            return connected_components_star(edges, src=src, dst=dst)
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iters} "
-            "iterations (component diameter exceeds max_iters); raise "
-            "max_iters or use connected_components_star"
-        )
-    # the convergence probe already materialized the final labels into
-    # checkpoint blocks (independent of the cache), so the invariant edge
-    # cache can be released NOW instead of leaking for the session
-    sym.unpersist()
-    return labels
 
 
 def _large_star(sym: DataFrame) -> DataFrame:
     """One large-star round: every node u connects each strictly-LARGER
-    neighbor to m = min(N(u) ∪ {u}). One groupBy + one join, both on u.
+    neighbor to m = min(N(u) ∪ {u}).
+
+    The per-node minimum is a window aggregate over the SAME relation,
+    not a groupBy + self-join. Inside the star loop the STATIC planner
+    auto-broadcasts the tiny min relations of the join form (AQE is
+    gated off at small scales; one round planned 3 BroadcastHashJoins fed
+    by 4 BroadcastExchanges), and each BroadcastExchange materializes as
+    its own job — at the loop's small per-round volumes those extra jobs
+    cost more than the round's data work (26 -> 8 jobs per CC at sf0.1,
+    identical labels; BENCH_NOTES.md r14). The window form is one
+    exchange on u, no join. Its trade: AQE can split a skewed join but
+    not a skewed window partition; the dedup consumer's star edges have
+    construction-bounded degrees (max_bucket caps bucket size).
 
     The output is deliberately NOT distinct'd: its only consumer is
     ``_small_star``, whose min-aggregate is duplicate-insensitive and
-    whose terminal distinct produces the round's set anyway — the
-    removed (u,v) exchange was ~15-25% of the round (interleaved sf3
-    A/B, identical labels), and the duplicate volume is bounded at one
-    row per oriented input edge by construction."""
-    m = (
-        sym.groupBy("u")
-        .agg(F.min("v").alias("__mv"))
-        .select("u", F.least("u", "__mv").alias("__m"))
-    )
-    return (
-        sym.join(m, "u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), F.col("__m").alias("v"))
-    )
-
-
-def _small_star(sym: DataFrame) -> DataFrame:
-    """One small-star round: orient edges toward the smaller endpoint, then
-    every node u connects each smaller neighbor AND itself to
-    m = min of its smaller neighbors."""
-    dn = sym.filter(F.col("v") < F.col("u"))
-    m = dn.groupBy("u").agg(F.min("v").alias("__m"))
-    nbr_edges = (
-        dn.join(m, "u")
-        .select(F.col("v").alias("u"), F.col("__m").alias("v"))
-    )
-    self_edges = m.select("u", F.col("__m").alias("v"))
-    return (
-        nbr_edges.unionByName(self_edges)
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _large_star_window(sym: DataFrame) -> DataFrame:
-    """``_large_star`` with the per-node minimum attached by a window
-    aggregate over the SAME relation instead of a groupBy + self-join.
-
-    Why (round-14): inside the star loop the STATIC planner
-    auto-broadcasts the tiny min relations (AQE is gated off at small
-    scales; one round plans 3 BroadcastHashJoins fed by 4
-    BroadcastExchanges — the large-star subtree is re-planned in both
-    small-star legs), and each BroadcastExchange materializes as its
-    own future job; at the loop's small per-round volumes those 4
-    extra jobs per round cost more than the round's data work
-    (26 -> 8 jobs per CC at sf0.1, identical labels, measured faster
-    at sf0.1/sf1/sf3). The window form computes
-    min(v) over the partition without re-reading or re-shuffling a
-    second relation: one exchange on u, no join. Trade documented on
-    ``connected_components_star``: AQE can split a skewed JOIN but not a
-    skewed window partition, so the join form stays available."""
+    whose terminal distinct produces the round's set anyway."""
     w = Window.partitionBy("u")
     s = sym.withColumn("__m", F.least(F.col("u"), F.min("v").over(w)))
     return (
@@ -304,10 +180,12 @@ def _large_star_window(sym: DataFrame) -> DataFrame:
     )
 
 
-def _small_star_window(sym: DataFrame) -> DataFrame:
-    """``_small_star`` via a window aggregate — see ``_large_star_window``.
-    The self-edge leg is deduped before the union (one row per u, as the
-    groupBy form emits) so the final distinct sees the same volume."""
+def _small_star(sym: DataFrame) -> DataFrame:
+    """One small-star round: orient edges toward the smaller endpoint, then
+    every node u connects each smaller neighbor AND itself to m = min of
+    its smaller neighbors (a window aggregate — see ``_large_star``). The
+    self-edge leg is deduped before the union (one row per u) so the
+    final distinct sees no extra volume."""
     dn = sym.filter(F.col("v") < F.col("u"))
     w = Window.partitionBy("u")
     s = dn.withColumn("__m", F.min("v").over(w))
@@ -362,12 +240,15 @@ def _union_find_labels_local(us: list, vs: list) -> dict:
     return labels
 
 
+#: star rounds before connected_components_star fails loudly; O(log n)
+#: rounds suffice, so 30 covers any graph that fits a cluster
+_STAR_MAX_ROUNDS = 30
+
+
 def connected_components_star(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_rounds: int = 30,
-    round_shape: str = "window",
     small_graph_edges: int = 200_000,
     small_graph_bytes: int = 64 * 1024 * 1024,
 ) -> DataFrame:
@@ -375,31 +256,17 @@ def connected_components_star(
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
     converges in O(log n) rounds INDEPENDENT of component diameter, so a
     billion-node citation chain costs ~30 rounds where min-label
-    propagation would need a billion. Labels are identical to
-    ``connected_components``: every node maps to its component's minimum.
+    propagation would need a billion. Every node maps to its component's
+    minimum — the stage that turns near-dup candidate PAIRS into
+    duplicate CLUSTERS with a canonical id.
 
-    Each round is two min-per-node attachments on the node key — the
-    same shuffle profile as one propagation step, just alternating edge
-    orientations. Convergence = the edge multiset is a fixed set of stars
-    (small-star changes nothing). Per-round localCheckpoint truncates
-    lineage; the previous round's blocks are released each time.
-
-    ``round_shape`` picks how the per-node minimum is attached
-    (round-14, labels pinned identical by test at every shape/scale):
-
-    - ``"window"`` (default): min(v) as a window aggregate over the
-      round relation — no second relation, no join, and crucially no
-      per-round BroadcastExchange FUTURE JOBS (the planner broadcasts
-      the tiny min side every round otherwise; 26 -> 8 jobs per CC at
-      sf0.1 and window won EVERY paired rep of the interleaved warm
-      A/Bs on the dedup star edges, localCheckpoint-materialized input:
-      3.32 vs 4.33 s sf0.1, 3.19 vs 3.90 s sf1, 5.13 vs 6.10 s sf3
-      best-of-3).
-    - ``"join"``: the groupBy + join form. Keep for graphs with extreme
-      degree skew: AQE's skew-join splitting can break up a hot node's
-      partition in the join form, while a window partition cannot be
-      split. (The dedup consumer's star edges have construction-bounded
-      degrees — max_bucket caps bucket size — so the default applies.)
+    Each round is two min-per-node window attachments on the node key
+    (``_large_star``, ``_small_star``), alternating edge orientations.
+    Convergence = the edge multiset is a fixed set of stars (small-star
+    changes nothing); a graph that has not converged after
+    ``_STAR_MAX_ROUNDS`` rounds raises instead of returning partial
+    labels. Per-round localCheckpoint truncates lineage; the previous
+    round's blocks are released each time.
 
     ``small_graph_edges`` (round-14 optimization 1, guide §3.1's
     "broadcast the side that fits" applied to graphs): when the
@@ -435,14 +302,6 @@ def connected_components_star(
       supported fast-path id types are string/integral/binary/date/
       timestamp/decimal, whose Python ``<`` agrees with Spark's
       ordering."""
-    if round_shape == "window":
-        large, small = _large_star_window, _small_star_window
-    elif round_shape == "join":
-        large, small = _large_star, _small_star
-    else:
-        raise ValueError(
-            f"round_shape must be 'window' or 'join', got {round_shape!r}"
-        )
     # One normalization both engines share: drop null endpoints (a null
     # src/dst never survived the src==dst / src!=dst comparisons of the
     # pre-r14 shape either), orient u >= v, dedup, checkpoint. Self-loops
@@ -501,14 +360,14 @@ def connected_components_star(
     cur = norm.filter(F.col("u") != F.col("v"))
     prev_ckpt: DataFrame = norm
     converged = False
-    for _ in range(max_rounds):
+    for _ in range(_STAR_MAX_ROUNDS):
         sym = cur.unionByName(cur.select(F.col("v").alias("u"), F.col("u").alias("v")))
         # large-star output is already oriented larger→smaller, which is
         # exactly the grouping small-star wants — no re-symmetrization.
         # Lazy checkpoint + one full-outer set-difference probe = ONE job
         # per round (both sides are distinct edge sets, so any row missing
         # from either side means the sets differ).
-        nxt = small(large(sym)).localCheckpoint(eager=False)
+        nxt = _small_star(_large_star(sym)).localCheckpoint(eager=False)
         diff = (
             nxt.withColumn("__n", F.lit(1))
             .join(cur.withColumn("__c", F.lit(1)), ["u", "v"], "full_outer")
@@ -528,7 +387,8 @@ def connected_components_star(
     if not converged:
         _release_checkpoint(prev_ckpt)
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_rounds} rounds"
+            "connected_components_star did not converge in "
+            f"{_STAR_MAX_ROUNDS} rounds"
         )
     # cur is a star forest pointing at component minima: (u → root).
     # Roots label themselves; nodes only ever seen as isolated self-loops
@@ -678,6 +538,10 @@ def cooccurrence(
     )
 
 
+#: pagerank truncates its rank lineage every this many iterations
+_PAGERANK_CHECKPOINT_EVERY = 5
+
+
 def pagerank(
     edges: DataFrame,
     src: str = "src",
@@ -685,12 +549,11 @@ def pagerank(
     iters: int = 10,
     damping: float = 0.85,
     iter_round: int | None = None,
-    checkpoint_every: int = 5,
     dedup_edges: bool = True,
     tol: float | None = None,
 ) -> DataFrame:
     """PageRank by power iteration — the second iterative graph workload
-    beside connected_components (citation-impact ranking over a 100 TB
+    beside connected_components_star (citation-impact ranking over a 100 TB
     citation graph is the scholarly-analytics flagship this serves).
 
     Per iteration: one rank⨝edges join keyed on the source (both sides
@@ -707,10 +570,10 @@ def pagerank(
     like SQL ROUND). For cross-engine oracle parity the twin must round
     identically per iteration so both engines iterate on IDENTICAL
     inputs — float summation order inside one iteration's aggregation
-    then cannot accumulate across iterations. ``checkpoint_every``
-    truncates lineage with a localCheckpoint every N rounds (the plan
+    then cannot accumulate across iterations. A localCheckpoint every
+    ``_PAGERANK_CHECKPOINT_EVERY`` rounds truncates lineage (the plan
     doubles per iteration otherwise; same discipline as
-    connected_components).
+    connected_components_star).
 
     ``dedup_edges=True`` (default) treats the input as a SIMPLE graph —
     repeated (src, dst) rows collapse to one edge. A citation MULTIGRAPH
@@ -770,7 +633,7 @@ def pagerank(
                 .crossJoin(F.broadcast(nn))
                 .select("node", new_rank.alias("rank"))
             )
-            if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < iters:
+            if (i + 1) % _PAGERANK_CHECKPOINT_EVERY == 0 and i + 1 < iters:
                 ranks = ranks.localCheckpoint(eager=False)
             continue
         # convergence mode: build from the rank frame itself (same node

@@ -31,34 +31,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.types import (
-    BinaryType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
-
-ASSET_SCHEMA = StructType(
-    [
-        StructField("asset_id", LongType()),
-        StructField("kind", StringType()),  # image | audio | video
-        StructField("payload", BinaryType()),
-        StructField(
-            "meta",
-            StructType(
-                [
-                    StructField("mime", StringType()),
-                    StructField("width", IntegerType()),
-                    StructField("height", IntegerType()),
-                    StructField("duration_ms", IntegerType()),
-                ]
-            ),
-        ),
-    ]
-)
-
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 # --- real decoders (dependency-free formats) --------------------------------
 

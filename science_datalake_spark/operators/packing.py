@@ -82,27 +82,18 @@ def pack_greedy(
 
     def pack(pdf):
         pdf = pdf.sort_values(order, kind="mergesort").reset_index(drop=True)
-        bins, _, _ = greedy_fill(pdf[tokens_col], budget, 0, 0)
+        bins: list[int] = []
+        b = fill = 0
+        for t in pdf[tokens_col]:
+            t = 0 if t is None or t != t else int(t)  # NaN/None pack as 0
+            if fill > 0 and fill + t > budget:
+                b, fill = b + 1, 0
+            fill += t
+            bins.append(b)
         pdf["bin"] = bins
         return pdf
 
     return df.groupBy(shard_col).applyInPandas(pack, schema)
-
-
-def greedy_fill(
-    tokens, budget: int, b: int, fill: int
-) -> tuple[list[int], int, int]:
-    """THE first-fit loop of the batch packer above, starting from open
-    bin ``b`` at ``fill``. Returns (per-row bin ids, open bin id, open
-    fill). NaN/None token counts pack as 0."""
-    bins: list[int] = []
-    for t in tokens:
-        t = 0 if t is None or t != t else int(t)
-        if fill > 0 and fill + t > budget:
-            b, fill = b + 1, 0
-        fill += t
-        bins.append(b)
-    return bins, b, fill
 
 
 def packing_stats(packed: DataFrame, tokens_col: str, shard_col: str) -> DataFrame:

@@ -357,8 +357,6 @@ def score_buckets(
     cuts: Sequence[float] = (1.0 / 3.0, 2.0 / 3.0),
     labels: Sequence[str] = ("head", "middle", "tail"),
     round_digits: int = 3,
-    num_partitions: int | None = None,
-    cache_input: bool = True,
     threshold_pass: str = "parallel",
 ) -> DataFrame:
     """CCNet-style quality bucketing: split a scored corpus into
@@ -410,18 +408,17 @@ def score_buckets(
     # result cached per slot (the dedup cache-lifetime discipline); the
     # cached relation is the caller's input handle, typically the narrow
     # (id, score) projection, which spills to disk at scale.
-    if cache_input:
-        prev = _SCORE_BUCKETS_CACHE.pop("slot", None)
-        if prev is not None:
-            try:
-                prev.unpersist()
-            except Exception:
-                pass  # handle may belong to a stopped session
-        scores = scores.persist()
-        # no eager count: the boundary-sampler action materializes the
-        # cache as a side effect (an explicit count A/B'd 0.4 s SLOWER
-        # at sf0.1 — one more per-action plan compile than it saves)
-        _SCORE_BUCKETS_CACHE["slot"] = scores
+    prev = _SCORE_BUCKETS_CACHE.pop("slot", None)
+    if prev is not None:
+        try:
+            prev.unpersist()
+        except Exception:
+            pass  # handle may belong to a stopped session
+    scores = scores.persist()
+    # no eager count: the boundary-sampler action materializes the cache
+    # as a side effect (an explicit count A/B'd 0.4 s SLOWER at sf0.1 —
+    # one more per-action plan compile than it saves)
+    _SCORE_BUCKETS_CACHE["slot"] = scores
 
     # NaN -> NULL before anything touches the scores: NaN sorts above
     # every double, so it would poison the upper-quantile interpolation
@@ -440,7 +437,6 @@ def score_buckets(
             score_col,
             cuts,
             out_names=names,
-            num_partitions=num_partitions,
         ).first()
     if row is None or any(row[n] is None for n in names):
         # empty input: no thresholds, everything NULL-scored

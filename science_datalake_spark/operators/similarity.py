@@ -409,7 +409,7 @@ def sign_bucket(vec: Column, dims: int = 6) -> Column:
 
 
 def exemplar_centroids(
-    corpus: DataFrame, id_col: str, vec_col: str, k: int, materialize: bool = True
+    corpus: DataFrame, id_col: str, vec_col: str, k: int
 ) -> DataFrame:
     """Deterministic coarse-quantizer codebook: the ``k`` corpus vectors
     with the smallest ids, as (cent_id, cent_vec).
@@ -421,17 +421,14 @@ def exemplar_centroids(
     hash-sampled exemplar set); every downstream plan is unchanged —
     centroids are just a small broadcast relation.
 
-    ``materialize`` (default) collects the k rows and rebuilds them as a
-    driver-local relation: the codebook is consumed by TWO broadcasts
-    (assignment + probing), and left lazy each would re-run the
-    corpus-wide TakeOrdered scan."""
+    The k rows are collected and rebuilt as a driver-local relation: the
+    codebook is consumed by TWO broadcasts (assignment + probing), and
+    left lazy each would re-run the corpus-wide TakeOrdered scan."""
     cents = (
         corpus.select(F.col(id_col).alias("cent_id"), as_double_vec(vec_col).alias("cent_vec"))
         .orderBy("cent_id")
         .limit(k)
     )
-    if not materialize:
-        return cents
     from science_datalake_spark.util import local_df
 
     rows = [(r["cent_id"], list(r["cent_vec"])) for r in cents.collect()]
@@ -612,24 +609,15 @@ def ivf_topk(
     vec_col: str,
     k: int = 5,
     n_probe: int = 2,
-    broadcast_probes: bool = True,
-    probe_salts: int = 32,
 ) -> DataFrame:
     """IVF search: each query ranks the centroids (broadcast), keeps its
     ``n_probe`` nearest, then scans ONLY those buckets' posting lists
     (join on bucket) and ranks candidates. Exact within probed buckets;
     recall grows with n_probe (n_probe = K degenerates to brute force).
 
-    ``broadcast_probes=True`` (default): the |Q|·n_probe probe set is
-    broadcast, so the corpus posting lists are never shuffled — right
-    whenever the query set fits an executor (the common ANN-service
-    shape). ``broadcast_probes=False`` is the big-|Q| fallback the
-    round-2/3 verdicts asked for: a shuffle join on bucket alone would
-    funnel the whole corpus into ≤K partitions, so the corpus side is
-    salted into ``probe_salts`` shards per bucket (deterministic
-    xxhash64 of the id) and each probe row is replicated across the
-    shards — join key (bucket, salt) has K·probe_salts values and both
-    sides spread evenly. Cost: corpus shuffle ×1, probe rows ×salts."""
+    The |Q|·n_probe probe set is broadcast, so the corpus posting lists
+    are never shuffled — right whenever the query set fits an executor
+    (the common ANN-service shape, and every registry caller)."""
     q = queries.select(F.col(id_col).alias("query_id"), as_double_vec(vec_col).alias("__qv"))
     probes = q.join(F.broadcast(centroids), F.lit(True)).withColumn(
         "__csim", F.round(cosine(F.col("__qv"), F.col("cent_vec")), 6)
@@ -637,17 +625,11 @@ def ivf_topk(
     probed = top_k_per_key(
         probes, keys=["query_id"], order=[F.desc("__csim"), F.asc("cent_id")], k=n_probe
     ).select("query_id", "__qv", F.col("cent_id").alias("bucket"))
-    if broadcast_probes:
-        cands = F.broadcast(probed).join(assigned, "bucket")
-    else:
-        salted_corpus = assigned.withColumn(
-            "__salt", F.pmod(F.xxhash64(F.col(id_col)), F.lit(probe_salts))
-        )
-        salted_probes = probed.withColumn(
-            "__salt", F.explode(F.expr(f"sequence(0, {probe_salts - 1})"))
-        ).withColumn("__salt", F.col("__salt").cast("long"))
-        cands = salted_probes.join(salted_corpus, ["bucket", "__salt"]).drop("__salt")
-    cands = cands.filter(F.col("query_id") != F.col(id_col))
+    cands = (
+        F.broadcast(probed)
+        .join(assigned, "bucket")
+        .filter(F.col("query_id") != F.col(id_col))
+    )
     scored = cands.select(
         "query_id",
         F.col(id_col).alias("cand_id"),

@@ -179,16 +179,15 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     same 4-source shard (see _CLUSTER_SOURCES for why the demo is
     sharded).
 
-    Round-14 engine choice: ``connected_components_star`` directly, not
-    the min-label default. The K-copy crawl's LSH graph is CHAIN-shaped
+    Round-14 engine choice: ``connected_components_star``, not min-label
+    propagation (since deleted: no other caller needed it). The K-copy crawl's LSH graph is CHAIN-shaped
     (measured diameter 8 at sf0.1 — 9 propagation rounds at ~0.5 s fixed
     job cost each), exactly the regime the star alternation's O(log n)
     rounds exist for: measured identical labels and 4.47 -> 3.11 s
     sf0.1, 10.5 -> 7.3 s sf3 (2.27M pairs) warm. A label-of-label
     pointer-doubling variant of min-label was also measured and
     rejected (rounds 9 -> 6 but the extra shortcut join made each round
-    dearer: net 7.9 s). Min-label remains the operator default for the
-    dense-blob dedup graphs it assumed; this corpus is not one.
+    dearer: net 7.9 s).
 
     Round-14b edge choice: the CC consumes ``lsh_star_edges`` (one star
     per band bucket) instead of the full clique pairs — a bucket is a

@@ -114,14 +114,23 @@ def _split_docs(spark):
 
 
 def test_leakage_safe_split_pairs_keep_clusters_together(spark):
+    """A caller with near-dup PAIRS labels them with connected components
+    and splits on the labels through ``cluster_col``."""
     from science_datalake_spark.operators.corpus import leakage_safe_split
+    from science_datalake_spark.operators.graph import connected_components_star
 
     d = _split_docs(spark)
     pairs = spark.createDataFrame(
         [(0, 1), (1, 2), (5, 6)], "src LONG, dst LONG"
     )
+    labels = connected_components_star(pairs).select(
+        F.col("node").alias("doc_id"), F.col("comp").alias("cluster")
+    )
     out = leakage_safe_split(
-        d, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}, pairs=pairs
+        d.join(labels, "doc_id", "left"),
+        "doc_id",
+        {"train": 0.8, "val": 0.1, "test": 0.1},
+        cluster_col="cluster",
     ).collect()
     by_id = {r["doc_id"]: r for r in out}
     # connected components labeled by min member; unpaired fall back to self

@@ -88,32 +88,6 @@ def test_ivf_nprobe_full_probe_equals_brute_force(spark, sf_oracle):
         assert -1.0 <= r["sim"] <= 1.0
 
 
-def test_ivf_nonbroadcast_probe_fallback_identical(spark, sf_oracle):
-    """The big-|Q| fallback (salted shuffle join instead of broadcasting
-    the probe set) must return the identical result set, and its plan must
-    not contain a broadcast of the probe side."""
-    import pyspark.sql.functions as F
-
-    from science_datalake_spark.catalog import table
-    from science_datalake_spark.operators.similarity import (
-        exemplar_centroids,
-        ivf_assign,
-        ivf_topk,
-    )
-
-    e = table(spark, sf_oracle, "embeddings")
-    cents = exemplar_centroids(e, "vec_id", "embedding", k=8)
-    assigned = ivf_assign(e, cents, "vec_id", "embedding").cache()
-    q = e.filter(F.col("vec_id") < 6)
-    bc = ivf_topk(assigned, cents, q, "vec_id", "embedding", k=4, n_probe=2)
-    shuf = ivf_topk(
-        assigned, cents, q, "vec_id", "embedding", k=4, n_probe=2,
-        broadcast_probes=False, probe_salts=4,
-    )
-    assert {tuple(r) for r in bc.collect()} == {tuple(r) for r in shuf.collect()}
-    assigned.unpersist()
-
-
 def test_ivf_index_amortizes_build(spark, sf_smoke):
     """ivf_index caches (centroids, assigned) per (session, key): the
     second call returns the SAME persisted assigned frame (no rebuild —

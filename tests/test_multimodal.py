@@ -6,8 +6,35 @@ import hashlib
 
 import numpy as np
 import pytest
+from pyspark.sql.types import (
+    BinaryType,
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
 
-from science_datalake_spark.operators.multimodal import ASSET_SCHEMA
+#: the asset-table layout the multimodal operators read: opaque binary
+#: payload next to a typed metadata struct
+ASSET_SCHEMA = StructType(
+    [
+        StructField("asset_id", LongType()),
+        StructField("kind", StringType()),  # image | audio | video
+        StructField("payload", BinaryType()),
+        StructField(
+            "meta",
+            StructType(
+                [
+                    StructField("mime", StringType()),
+                    StructField("width", IntegerType()),
+                    StructField("height", IntegerType()),
+                    StructField("duration_ms", IntegerType()),
+                ]
+            ),
+        ),
+    ]
+)
 
 
 def _encode_ppm(img: np.ndarray) -> bytes:

@@ -326,6 +326,80 @@ def test_hierarchy_traversal(spark):
     assert {r["node"] for r in reach.collect()} == {"TOY:0001", "TOY:0002", "TOY:0003"}
 
 
+def _closure_with_tier(monkeypatch, edges):
+    """(transitive_closure(edges), tier): the distributed loop releases a
+    checkpoint every round, the driver tier never does."""
+    from science_datalake_spark.operators import graph as G
+
+    released = []
+    real = G._release_checkpoint
+    with monkeypatch.context() as m:
+        m.setattr(G, "_release_checkpoint", lambda df: (released.append(df), real(df)))
+        out = G.transitive_closure(edges)
+    return out, "distributed" if released else "driver"
+
+
+def test_transitive_closure_tiers_agree_at_the_edge_gate(spark, monkeypatch):
+    """At exactly the driver tier's row cap the closure is computed
+    in-process; one more row (a duplicate edge, so the graph is the same)
+    routes to the distributed loop. Both return the identical pair set:
+    16,384 disjoint 5-node chains, 10 ancestor pairs each."""
+    from science_datalake_spark.operators import graph as G
+
+    cap = G._CLOSURE_SMALL_GRAPH_ROWS
+    assert cap == 65536
+    n_nodes = cap // 4 * 5
+    edges = (
+        spark.range(n_nodes)
+        .filter(F.col("id") % 5 != 4)
+        .select(F.col("id").alias("src"), (F.col("id") + 1).alias("dst"))
+    )
+    want = {
+        (c + i, c + j) for c in range(0, n_nodes, 5) for i in range(5) for j in range(i + 1, 5)
+    }
+    at_cap, tier = _closure_with_tier(monkeypatch, edges)
+    assert tier == "driver"
+    over, tier = _closure_with_tier(
+        monkeypatch,
+        edges.unionByName(spark.createDataFrame([(0, 1)], edges.schema)),
+    )
+    assert tier == "distributed"
+    got_at_cap = {(r["a"], r["d"]) for r in at_cap.collect()}
+    got_over = {(r["a"], r["d"]) for r in over.collect()}
+    assert len(want) == 163_840
+    assert got_at_cap == got_over == want
+
+
+def test_transitive_closure_over_the_pair_guard(spark, monkeypatch):
+    """A small edge set whose closure outgrows the driver's pair guard
+    (1,500 parents -> 1 hub -> 1,500 children: 3,000 edges, 2,253,000
+    pairs) falls through to the distributed loop and still returns
+    exactly the expected pairs."""
+    import numpy as np
+
+    from science_datalake_spark.operators import graph as G
+
+    n = 1500
+    hub = n
+    parents = range(n)
+    children = range(n + 1, 2 * n + 1)
+    rows = [(p, hub) for p in parents] + [(hub, c) for c in children]
+    edges = spark.createDataFrame(rows, "src LONG, dst LONG")
+    want = (
+        [(p, hub) for p in parents]
+        + [(hub, c) for c in children]
+        + [(p, c) for p in parents for c in children]
+    )
+    assert len(want) > G._CLOSURE_PAIR_CAP
+    out, tier = _closure_with_tier(monkeypatch, edges)
+    assert tier == "distributed"
+    pdf = out.toPandas()
+    width = 2 * n + 2  # pack (a, d) into one sortable int64 code
+    got = np.sort(pdf["a"].to_numpy(np.int64) * width + pdf["d"].to_numpy(np.int64))
+    exp = np.sort(np.array([a * width + d for a, d in want], dtype=np.int64))
+    assert np.array_equal(got, exp)
+
+
 def test_alignment_end_to_end_with_eval(spark):
     """OBO terms × topic labels → fuzzy linkage → gold-standard P/R/F1."""
     t = obo_to_tables(spark, OBO_SAMPLE)
@@ -360,15 +434,15 @@ def test_alignment_end_to_end_with_eval(spark):
 
 
 def test_connected_components(spark):
-    """Two components + a 4-hop chain (propagation must run to the
-    diameter, not stop early)."""
-    from science_datalake_spark.operators.graph import connected_components
+    """Two components + a 4-hop chain: every node is labeled with its
+    component minimum."""
+    from science_datalake_spark.operators.graph import connected_components_star
 
     edges = spark.createDataFrame(
         [("b", "a"), ("b", "c"), ("x", "y"), ("p", "q"), ("q", "r"), ("r", "s"), ("s", "t")],
         "src STRING, dst STRING",
     )
-    comp = {r["node"]: r["comp"] for r in connected_components(edges).collect()}
+    comp = {r["node"]: r["comp"] for r in connected_components_star(edges).collect()}
     assert comp == {
         "a": "a", "b": "a", "c": "a",
         "x": "x", "y": "x",
@@ -376,62 +450,23 @@ def test_connected_components(spark):
     }
 
 
-def test_connected_components_raises_on_non_convergence(spark):
+def test_connected_components_raises_on_non_convergence(spark, monkeypatch):
     """Unconverged labels are indistinguishable from converged ones, so
-    with the star fallback disabled loop exhaustion must fail loudly, not
-    return split components."""
+    exhausting the star-round cap must fail loudly, not return split
+    components. A chain needs more than one round, so a cap of 1 trips."""
     import pytest as _pytest
 
-    from science_datalake_spark.operators.graph import connected_components
+    from science_datalake_spark.operators import graph as G
 
     chain = spark.createDataFrame(
         [(f"n{i}", f"n{i+1}") for i in range(6)], "src STRING, dst STRING"
     )
+    monkeypatch.setattr(G, "_STAR_MAX_ROUNDS", 1)
     with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iters=2, fallback_star=False)
-    ok = connected_components(chain, max_iters=10)
+        G.connected_components_star(chain, small_graph_edges=0)
+    monkeypatch.undo()
+    ok = G.connected_components_star(chain, small_graph_edges=0)
     assert {r["comp"] for r in ok.collect()} == {"n0"}
-
-
-def test_connected_components_star_fallback_on_long_chain(spark):
-    """A path graph whose diameter exceeds direct-propagation max_iters:
-    the default now answers (via star contraction) instead of refusing."""
-    from science_datalake_spark.operators.graph import connected_components
-
-    # zero-padded ids so lexicographic min == numeric min
-    chain = spark.createDataFrame(
-        [(f"n{i:03d}", f"n{i+1:03d}") for i in range(60)], "src STRING, dst STRING"
-    )
-    out = connected_components(chain, max_iters=5)
-    rows = out.collect()
-    assert len(rows) == 61
-    assert {r["comp"] for r in rows} == {"n000"}
-
-
-def test_connected_components_star_matches_propagation(spark):
-    """Star contraction must produce the identical (node, comp) labeling
-    as min-label propagation on a mixed graph: dense blob + chain +
-    isolated self-loop + singleton pair."""
-    from science_datalake_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
-
-    edges = spark.createDataFrame(
-        [
-            # dense blob
-            ("b", "a"), ("b", "c"), ("a", "c"), ("c", "d"),
-            # 5-chain
-            ("p", "q"), ("q", "r"), ("r", "s"), ("s", "t"),
-            # pair + self-loop
-            ("x", "y"), ("z", "z"),
-        ],
-        "src STRING, dst STRING",
-    )
-    prop = {r["node"]: r["comp"] for r in connected_components(edges).collect()}
-    star = {r["node"]: r["comp"] for r in connected_components_star(edges).collect()}
-    assert star == prop
-    assert star["z"] == "z" and star["t"] == "p"
 
 
 def test_connected_components_star_small_graph_gate(spark):
@@ -475,8 +510,9 @@ def test_connected_components_star_small_graph_gate(spark):
 
 def test_connected_components_cache_flat_across_iterations(spark):
     """The per-iteration localCheckpoint must not accumulate cached RDDs
-    (round-3 advice finding): a 60-hop chain needs dozens of rounds, but
-    at most the FINAL result's blocks may remain cached afterwards."""
+    (round-3 advice finding): a 60-hop chain needs several rounds, but
+    at most the FINAL result's blocks may remain cached afterwards. The
+    chain still closes into one component labeled by its minimum."""
     from science_datalake_spark.operators.graph import connected_components_star
 
     spark.catalog.clearCache()
@@ -493,7 +529,9 @@ def test_connected_components_cache_flat_across_iterations(spark):
     # small_graph_edges=0 forces the distributed rounds — the per-round
     # cache discipline is exactly what this test pins
     out = connected_components_star(chain, small_graph_edges=0)
-    assert out.count() == 61
+    rows = out.collect()
+    assert len(rows) == 61
+    assert {r["comp"] for r in rows} == {"n000"}
     after = spark.sparkContext._jsc.getPersistentRDDs().size()
     assert after - base <= 1  # only the live result, never one-per-round
 
@@ -749,47 +787,32 @@ def test_calibration_report_perfect_and_random(spark):
     assert got["o"]["ece"] == 0.4 and got["o"]["brier"] == 0.41
 
 
-def test_connected_components_star_round_shapes_identical(spark):
-    """The window round shape (round-14 default — no per-round broadcast
-    future jobs) labels identically to the join shape on every graph
-    class: dense blob, long chain, degree-skewed hub star, pair,
-    self-loop singleton. Also pins the invalid-shape error."""
-    import pytest
-
+def test_connected_components_star_rounds_match_fast_path(spark):
+    """The distributed star rounds label identically to the union-find
+    tier on every graph class — dense blob, 5-chain, 41-hop chain,
+    degree-skewed hub star, pair, self-loop singleton — and both equal
+    the component minima computed in plain Python."""
     from science_datalake_spark.operators.graph import connected_components_star
 
-    edges = spark.createDataFrame(
-        [("b", "a"), ("b", "c"), ("a", "c"), ("c", "d")]
-        + [(f"n{i:03d}", f"n{i+1:03d}") for i in range(40)]
-        + [("hub", f"leaf{i:02d}") for i in range(50)]
-        + [("x", "y"), ("z", "z")],
-        "src STRING, dst STRING",
-    )
+    blob = [("b", "a"), ("b", "c"), ("a", "c"), ("c", "d")]
+    chain5 = [("p", "q"), ("q", "r"), ("r", "s"), ("s", "t")]
+    chain41 = [(f"n{i:03d}", f"n{i+1:03d}") for i in range(40)]
+    hub = [("hub", f"leaf{i:02d}") for i in range(50)]
+    rows = blob + chain5 + chain41 + hub + [("x", "y"), ("z", "z")]
+    edges = spark.createDataFrame(rows, "src STRING, dst STRING")
+    want = {n: "a" for n in "abcd"}
+    want.update({n: "p" for n in "pqrst"})
+    want.update({f"n{i:03d}": "n000" for i in range(41)})
+    want.update({n: "hub" for _, n in hub})
+    want["hub"] = "hub"
+    want.update({"x": "x", "y": "x", "z": "z"})
     # small_graph_edges=0 forces the distributed rounds: with the default
-    # gate this fixture would take the union-find fast path and never
-    # exercise either round shape
-    win = sorted(
-        map(
-            tuple,
-            connected_components_star(
-                edges, round_shape="window", small_graph_edges=0
-            ).collect(),
-        )
+    # gate this fixture takes the union-find fast path
+    rounds = sorted(
+        map(tuple, connected_components_star(edges, small_graph_edges=0).collect())
     )
-    jon = sorted(
-        map(
-            tuple,
-            connected_components_star(
-                edges, round_shape="join", small_graph_edges=0
-            ).collect(),
-        )
-    )
-    assert win == jon and len(win) > 0
-    # the bounded fast path (default gate) must label identically to both
     fast = sorted(map(tuple, connected_components_star(edges).collect()))
-    assert fast == win
-    with pytest.raises(ValueError, match="round_shape"):
-        connected_components_star(edges, round_shape="broadcast")
+    assert rounds == fast == sorted(want.items())
 
 
 def test_connected_components_star_fast_path_guards(spark, monkeypatch):

@@ -157,12 +157,10 @@ def test_asof_join_null_right_values_no_frankenrow(spark):
     assert r["right_ts"] == 2 and r["right_v"] is None  # the real ts=2 row
 
 
-def test_minhash_xxhash64_fast_path(spark):
-    """The xxhash64 signature path: exact-duplicate documents collide in
-    every band (so LSH finds them) exactly as on the md5 path, signatures
-    are longs not hex strings, and unknown hash_fn values are rejected."""
-    import pytest as _pytest
-
+def test_minhash_and_simhash_md5_signatures(spark):
+    """md5 signatures: exact-duplicate documents collide in every band (so
+    LSH finds them), MinHash minima are 32-char hex digests, and simhash
+    widens past one digest by salted concatenation."""
     from science_datalake_spark.operators.dedup import (
         lsh_candidate_pairs,
         minhash_signatures,
@@ -178,34 +176,27 @@ def test_minhash_xxhash64_fast_path(spark):
         ],
         "doc_id INT, text STRING",
     )
-    sigs = minhash_signatures(docs, "doc_id", "text", hash_fn="xxhash64")
-    assert dict(sigs.dtypes)["mh0"] == "bigint"
-    assert sorted(r["doc_id"] for r in sigs.collect()) == [1, 2, 3]
+    sigs = minhash_signatures(docs, "doc_id", "text")
+    assert dict(sigs.dtypes)["mh0"] == "string"
+    rows = sigs.collect()
+    assert sorted(r["doc_id"] for r in rows) == [1, 2, 3]
+    assert all(len(r["mh0"]) == 32 for r in rows)
     pairs = lsh_candidate_pairs(sigs, "doc_id")
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (1, 2) in got and (1, 3) not in got
     pairs.unpersist()
 
-    sh = simhash(docs, "doc_id", "text", bits=48, hash_fn="xxhash64")
-    by_id = {r["doc_id"]: r["simhash"] for r in sh.collect()}
-    assert by_id[1] == by_id[2] and len(by_id[1]) == 48
-    assert by_id[1] != by_id[3]
-
-    with _pytest.raises(ValueError, match="hash_fn"):
-        minhash_signatures(docs, "doc_id", "text", hash_fn="sha9")
-    with _pytest.raises(ValueError, match="max 64"):
-        simhash(docs, "doc_id", "text", bits=65, hash_fn="xxhash64")
-    # md5 path widens past one digest via salted concatenation (round 8):
+    # simhash widens past one digest via salted concatenation (round 8):
     # near-identical docs still collide, distinct docs still separate
-    sh64 = simhash(docs, "doc_id", "text", bits=64, hash_fn="md5")
+    sh64 = simhash(docs, "doc_id", "text", bits=64)
     by64 = {r["doc_id"]: r["simhash"] for r in sh64.collect()}
     assert by64[1] == by64[2] and len(by64[1]) == 64
     assert by64[1] != by64[3]
     # <=32 keeps the historical unsalted single-digest bits as a PREFIX
-    sh16 = simhash(docs, "doc_id", "text", bits=16, hash_fn="md5")
+    sh16 = simhash(docs, "doc_id", "text", bits=16)
     by16 = {r["doc_id"]: r["simhash"] for r in sh16.collect()}
     assert len(by16[1]) == 16
-    sh32 = simhash(docs, "doc_id", "text", bits=32, hash_fn="md5")
+    sh32 = simhash(docs, "doc_id", "text", bits=32)
     assert all(
         r["simhash"][:16] == by16[r["doc_id"]]
         for r in sh32.collect()
@@ -373,9 +364,7 @@ def test_redact_pii_replaces_all_classes(spark):
 
 def test_winnowing_shared_substring_guarantee(spark):
     """Winnowing's core property: documents sharing a substring of length
-    >= k+w-1 share at least one fingerprint; disjoint texts share none.
-    xxhash64 fast path yields the same OVERLAP STRUCTURE (different
-    values)."""
+    >= k+w-1 share at least one fingerprint; disjoint texts share none."""
     from science_datalake_spark.operators.dedup import (
         fingerprint_overlap_pairs,
         winnowing_fingerprints,
@@ -390,14 +379,13 @@ def test_winnowing_shared_substring_guarantee(spark):
         ],
         "doc_id INT, text STRING",
     )
-    for hf in ("md5", "xxhash64"):
-        fps = winnowing_fingerprints(docs, "doc_id", "text", k=8, w=4, hash_fn=hf)
-        pairs = {
-            (r["id_a"], r["id_b"]): r["n_shared"]
-            for r in fingerprint_overlap_pairs(fps, "doc_id").collect()
-        }
-        assert (1, 2) in pairs and pairs[(1, 2)] >= 1, hf
-        assert (1, 3) not in pairs and (2, 3) not in pairs, hf
+    fps = winnowing_fingerprints(docs, "doc_id", "text", k=8, w=4)
+    pairs = {
+        (r["id_a"], r["id_b"]): r["n_shared"]
+        for r in fingerprint_overlap_pairs(fps, "doc_id").collect()
+    }
+    assert (1, 2) in pairs and pairs[(1, 2)] >= 1
+    assert (1, 3) not in pairs and (2, 3) not in pairs
 
 
 def test_fuzzy_join_length_blocking_is_sound(spark):
@@ -487,27 +475,26 @@ def test_winnowing_chunked_giant_doc_equals_unchunked(spark):
         ],
         "doc_id INT, text STRING",
     )
-    for hf in ("md5", "xxhash64"):
-        # MULTISET equality, not set: downstream fingerprint_overlap_pairs
-        # counts (id, fp) row multiplicity, so the chunked branch's
-        # per-doc distinct must see the same multiplicities the map-only
-        # path emits (both are exactly 1 per (id, fp): the mins
-        # expression array_distincts within the doc/chunk and the
-        # chunked branch distincts across chunks — review finding)
-        want = sorted(
-            (r["doc_id"], r["fp"])
-            for r in winnowing_fingerprints(
-                docs, "doc_id", "text", k=8, w=4, hash_fn=hf, max_chars=10**9
-            ).collect()
-        )
-        got = sorted(
-            (r["doc_id"], r["fp"])
-            for r in winnowing_fingerprints(
-                docs, "doc_id", "text", k=8, w=4, hash_fn=hf, max_chars=1000
-            ).collect()
-        )
-        assert got == want, hf
-        assert len(want) == len(set(want))  # exactly one row per (id, fp)
+    # MULTISET equality, not set: downstream fingerprint_overlap_pairs
+    # counts (id, fp) row multiplicity, so the chunked branch's per-doc
+    # distinct must see the same multiplicities the map-only path emits
+    # (both are exactly 1 per (id, fp): the mins expression
+    # array_distincts within the doc/chunk and the chunked branch
+    # distincts across chunks — review finding)
+    want = sorted(
+        (r["doc_id"], r["fp"])
+        for r in winnowing_fingerprints(
+            docs, "doc_id", "text", k=8, w=4, max_chars=10**9
+        ).collect()
+    )
+    got = sorted(
+        (r["doc_id"], r["fp"])
+        for r in winnowing_fingerprints(
+            docs, "doc_id", "text", k=8, w=4, max_chars=1000
+        ).collect()
+    )
+    assert got == want
+    assert len(want) == len(set(want))  # exactly one row per (id, fp)
 
 
 def test_pii_counts_shielded_by_redaction_order(spark):
@@ -576,7 +563,7 @@ def test_lsh_star_edges_connectivity_equals_clique_pairs(spark):
         lsh_star_edges,
         minhash_signatures,
     )
-    from science_datalake_spark.operators.graph import connected_components
+    from science_datalake_spark.operators.graph import connected_components_star
 
     docs = [
         # two K-copy clusters + chain-ish overlap + singletons
@@ -598,11 +585,11 @@ def test_lsh_star_edges_connectivity_equals_clique_pairs(spark):
         assert star.filter(F.col("id_a") >= F.col("id_b")).count() == 0
         comp_pairs = {
             (r["node"], r["comp"])
-            for r in connected_components(pairs, "id_a", "id_b").collect()
+            for r in connected_components_star(pairs, "id_a", "id_b").collect()
         }
         comp_star = {
             (r["node"], r["comp"])
-            for r in connected_components(star, "id_a", "id_b").collect()
+            for r in connected_components_star(star, "id_a", "id_b").collect()
         }
         assert comp_star == comp_pairs
         # the max_bucket guard drops the same oversized buckets

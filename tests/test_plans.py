@@ -346,11 +346,14 @@ def test_shared_relation_queries_reuse_cached_blocks(spark, sf_oracle):
 
 def test_iterative_graph_ops_persist_invariant_relations(spark):
     """pagerank joins the degree-annotated edge relation and the node set
-    every iteration; connected_components joins the symmetrized edge list
-    every round. Without a persist each round re-executes the edge
-    relation's entire upstream lineage (for dedup clustering: the whole
-    minhash/LSH pipeline per round). Pin the invariant cache."""
-    from science_datalake_spark.operators.graph import connected_components, pagerank
+    every iteration. Without a persist each round re-executes the edge
+    relation's entire upstream lineage. Pin the invariant cache; and pin
+    that connected_components_star, whose rounds read localCheckpoints
+    instead, leaves nothing in the CacheManager."""
+    from science_datalake_spark.operators.graph import (
+        connected_components_star,
+        pagerank,
+    )
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (4, 5)], ["src", "dst"]
@@ -361,16 +364,18 @@ def test_iterative_graph_ops_persist_invariant_relations(spark):
     # CacheManager deduplicates by canonical plan so repeated runs share
     # one entry rather than accumulating
     assert "InMemoryTableScan" in plans.physical_plan(pr)
-    # connected_components' labels are checkpoint-materialized by its own
-    # convergence probe, so the round-12 discipline is: the symmetrized
-    # edge cache lives only DURING iteration and is released at return
-    # (the r11 advisor's session-lifetime-leak finding). Assert both that
+    # connected components must not leave a session-lifetime cache behind
+    # (the r11 advisor's leak finding), on either tier. Assert both that
     # the result is right and that nothing stays cached behind it.
     spark.catalog.clearCache()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    labels = {
-        (r["node"], r["comp"]) for r in connected_components(edges).collect()
-    }
-    assert labels == {(1, 1), (2, 1), (3, 1), (4, 4), (5, 4)}
+    for gate in (200_000, 0):
+        labels = {
+            (r["node"], r["comp"])
+            for r in connected_components_star(
+                edges, small_graph_edges=gate
+            ).collect()
+        }
+        assert labels == {(1, 1), (2, 1), (3, 1), (4, 4), (5, 4)}
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     spark.catalog.clearCache()

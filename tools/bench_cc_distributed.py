@@ -8,14 +8,11 @@ fixture's lineitem relation (deterministic, no RNG): edges
 (l_orderkey*8+i, l_partkey*8+j) over a modulus fold that yields long
 chains AND big stars — >200k distinct normalized edges at sf1+. Times:
 
-  fast_gate_check   the one-job gate aggregation alone
-  star_window       distributed rounds, round_shape="window" (default)
-  star_join         distributed rounds, round_shape="join"
+  star_window       distributed rounds
   union_find        the driver tier FORCED (gate raised above the edge
-                    count) — the A/B baseline the verdict asked to see
-                    beside the rounds
+                    count) — the A/B baseline beside the rounds
 
-and checks all three label sets are identical before timing.
+and checks both label sets are identical before timing.
 
 Usage: python tools/bench_cc_distributed.py [sf_dir] [reps] [mult]
 """
@@ -96,11 +93,6 @@ def main() -> None:
     variants = {
         "star_window": lambda: labels(
             connected_components_star(edges(), small_graph_edges=0)
-        ),
-        "star_join": lambda: labels(
-            connected_components_star(
-                edges(), small_graph_edges=0, round_shape="join"
-            )
         ),
         "union_find": lambda: labels(
             connected_components_star(
