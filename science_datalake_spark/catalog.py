@@ -4,16 +4,20 @@ views-only DuckDB catalog.
 Reference parallel: ``scripts/create_unified_db.py`` builds a 268 KB DuckDB
 file holding 159 ``CREATE VIEW x AS SELECT ... FROM read_parquet(glob)``
 definitions over ~1.3 TB of Parquet (create_unified_db.py:63-92,340-344) —
-data is never copied. Here the same contract is ``register_views``: every
-table is a temp view over ``spark.read.parquet(dir)``; derived/convenience
-views are plain ``CREATE OR REPLACE TEMPORARY VIEW`` on top. Views are lazy
-logical plans, so Catalyst pushes filters/column pruning through them into
-the Parquet scan exactly like DuckDB does through its view definitions.
+data is never copied, and registering a view reads no data. Here the same
+contract is ``register_views``: every table is a temp view over a Parquet
+read whose schema is declared from the table's footers on the driver
+(``sinks.read_parquet``), so registration starts no Spark job; layouts the
+footers cannot settle (remote, partitioned, disagreeing files) fall back
+to Spark's inference. Derived/convenience views are plain ``CREATE OR
+REPLACE TEMPORARY VIEW`` on top. Views are lazy logical plans, so
+Catalyst pushes filters/column pruning through them into the Parquet scan
+exactly like DuckDB does through its view definitions.
 
-Scale notes: ``spark.read.parquet`` on a directory does distributed file
-listing and partition discovery; at 100 TB the views would point at
-Hive-partitioned / Delta paths and partition pruning stays free. Nothing in
-this module materializes data.
+Scale notes: a Parquet read of a directory lists its files on the driver
+(in parallel above Spark's partition-discovery threshold); at 100 TB the
+views would point at Hive-partitioned / Delta paths and partition pruning
+stays free. Nothing in this module materializes data.
 """
 
 from __future__ import annotations
@@ -22,6 +26,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from science_datalake_spark.sources.sinks import read_footer, read_parquet, table_signature
 
 #: Tables the driver testdata provides (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -147,7 +153,8 @@ def _register_convenience_views(spark: SparkSession, present: set[str]) -> None:
         )
 
 
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+#: (applicationId, sf_dir, table) → (the table's ``table_signature``, plan)
+_TABLE_CACHE: dict[tuple[str, str, str], tuple[tuple, DataFrame]] = {}
 
 #: operator declaration of events.ts's physical shape for stores whose
 #: Parquet footer the driver cannot probe (values: nanos | ntz | tz | absent)
@@ -163,11 +170,15 @@ def _events_ts_kind(path: str) -> str:
     adjustment — read by Spark as TIMESTAMP_NTZ (``'ntz'``) — and
     UTC-adjusted micros (``'tz'``). ``'absent'`` = no such column / not a
     timestamp; callers then leave the frame untouched. ``'unknown'`` = the
-    footer could not be probed (e.g. a remote URI whose filesystem pyarrow
+    footer could not be probed (a remote URI whose filesystem pyarrow
     cannot reach from the driver); ``table()`` then reads tolerantly and —
     if the column comes back as ambiguous int64 — refuses to guess between
     nanos and epoch-micros (a 1000× misscale either way) unless the
-    operator declares the shape via ``EVENTS_TS_KIND_ENV``.
+    operator declares the shape via ``EVENTS_TS_KIND_ENV``. A missing
+    local table is ``'absent'``; a local footer that cannot be read
+    raises pyarrow's error. Local footers are read
+    once per file version (``sinks.read_footer``), so ``bootstrap_session``
+    and ``table()`` share one read.
     """
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -206,10 +217,15 @@ def _events_ts_kind(path: str) -> str:
                     return "absent"
                 probe = parts[0]
             schema = pq.read_schema(probe, filesystem=filesystem)
-        except Exception:
+        except (OSError, pa.ArrowInvalid, pa.ArrowNotImplementedError):
+            # OSError: connector library or host unreachable (libhdfs,
+            # credentials); Invalid / NotImplemented: a scheme this
+            # pyarrow build does not know or was built without
             return "unknown"
         return classify(schema)
 
+    if not os.path.exists(path):
+        return "absent"
     probe = path
     if os.path.isdir(path):
         # recurse: a partitioned layout nests part files under key=value
@@ -224,19 +240,25 @@ def _events_ts_kind(path: str) -> str:
                 break
         if probe is None:
             return "absent"
-    try:
-        schema = pq.read_schema(probe)
-    except Exception:
-        return "absent"
-    return classify(schema)
+    md = read_footer(probe)
+    columns = (md.schema.column(i) for i in range(md.num_columns))
+    if any(c.path == "ts" and c.physical_type == "INT96" for c in columns):
+        # INT96, Spark's legacy timestamp encoding, reads as TIMESTAMP
+        # although pyarrow reports it in nanoseconds
+        return "tz"
+    return classify(md.schema.to_arrow_schema())
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Direct DataFrame accessor (no view registration needed).
 
-    The logical plan (not the data) is memoized per (session, dir, table):
-    repeated queries skip file listing / footer reads — the same role the
-    reference's persistent view catalog plays (create_unified_db.py:63-92).
+    The logical plan (not the data) is memoized per (session, dir, table)
+    and checked against the table's data-file ``(size, mtime_ns)``
+    signature on every call: repeated queries skip file listing and
+    footer reads — the same role the reference's persistent view catalog
+    plays (create_unified_db.py:63-92) — and a rewritten file replaces
+    the entry. The schema is declared from the footers
+    (``sinks.read_parquet``), so building the plan starts no Spark job.
 
     ``events.ts`` is normalized to TIMESTAMP whatever the file's physical
     shape (see ``_events_ts_kind``), so downstream timestamp math
@@ -252,10 +274,11 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # applicationId (not id(spark)): CPython recycles object addresses, so
     # a dead session's cache entries could alias a new session's key
     key = (spark.sparkContext.applicationId, sf_dir, name)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
     path = os.path.join(sf_dir, f"{name}.parquet")
+    signature = table_signature(path)
+    cached = _TABLE_CACHE.get(key)
+    if cached is not None and cached[0] == signature:
+        return cached[1]
     kind = _events_ts_kind(path) if name == "events" else "absent"
     if kind == "unknown":
         # unprobeable remote footer: the operator may declare the shape
@@ -277,7 +300,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # TIMESTAMP(NANOS) otherwise); it only changes how NANOS columns
         # decode, so micros/ntz files read under it come out identical
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     if name == "events":
         dt = dict(df.dtypes).get("ts")
         if dt == "bigint" and kind == "nanos":
@@ -299,5 +322,5 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
         elif dt == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _TABLE_CACHE[key] = df
+    _TABLE_CACHE[key] = (signature, df)
     return df

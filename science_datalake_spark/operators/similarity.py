@@ -589,15 +589,16 @@ def ivf_index_read(
     """Load a persisted IVF index (see ivf_index_write): centroids come
     back materialized driver-local (k rows, consumed by two broadcasts),
     the assignment as a lazy partition-pruned scan."""
+    from science_datalake_spark.sources.sinks import read_parquet
     from science_datalake_spark.util import local_df
 
-    cents_scan = spark.read.parquet(os.path.join(path, "centroids"))
+    cents_scan = read_parquet(spark, os.path.join(path, "centroids"))
     rows = [
         (r["cent_id"], list(r["cent_vec"]))
         for r in cents_scan.orderBy("cent_id").collect()
     ]
     cents = local_df(spark, rows, cents_scan.schema)
-    assigned = spark.read.parquet(os.path.join(path, "assigned"))
+    assigned = read_parquet(spark, os.path.join(path, "assigned"))
     return cents, assigned
 
 

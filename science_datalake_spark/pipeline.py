@@ -9,8 +9,9 @@ convert_openalex.py:747-751):
    the rows written are observed during the shard writes
 2. compact: merge NEW shards holding more than one data file (count-verified
    atomic swap); a single-file shard is already compact and stays untouched
-3. read: all shards, after crash recovery of any half-swapped compaction;
-   the source's row count is summed from the shards' parquet footers
+3. read: all shards, after crash recovery of any half-swapped compaction,
+   under the schema their footers declare (no inference job); the
+   source's row count is summed from the same footers
 Then, on the calling thread:
 4. materialize: unified papers + fulltext dedup → verified parquet
 5. validate: the core sanity checks, one action over the read-back table
@@ -33,7 +34,12 @@ from pyspark.sql import DataFrame, SparkSession
 from science_datalake_spark import sanity
 from science_datalake_spark.fulltext import unify_fulltext
 from science_datalake_spark.sources.incremental import IncrementalJsonIngest
-from science_datalake_spark.sources.sinks import compact, data_file_count, write_parquet
+from science_datalake_spark.sources.sinks import (
+    compact,
+    data_file_count,
+    read_parquet,
+    write_parquet,
+)
 from science_datalake_spark.unify import build_unified_papers
 
 
@@ -111,10 +117,9 @@ def run_pipeline(
         retractions=tables.get("retractions"),
         code_links=tables.get("code_links"),
     )
-    result.unified_rows = write_parquet(
-        unified, os.path.join(work_dir, "unified_papers.parquet")
-    )
-    unified_readback = spark.read.parquet(os.path.join(work_dir, "unified_papers.parquet"))
+    unified_path = os.path.join(work_dir, "unified_papers.parquet")
+    result.unified_rows = write_parquet(unified, unified_path)
+    unified_readback = read_parquet(spark, unified_path)
     unified_readback.createOrReplaceTempView("unified_papers")
 
     if "fulltext" in tables:

@@ -19,12 +19,15 @@ both sides; every dedup order carries a unique id tiebreak.
 
 from __future__ import annotations
 
+import os
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from science_datalake_spark.catalog import table
 from science_datalake_spark.functions import synth_doi
 from science_datalake_spark.queries import query
+from science_datalake_spark.sources.sinks import table_signature
 from science_datalake_spark.unify import build_unified_papers, coverage_upset
 
 #: Shared DOI key domains: oa 0..599, s2 0..399, sci 100..599 — pairwise
@@ -178,20 +181,30 @@ def _unify_oracle() -> str:
 #: row per distinct DOI; the synth DOI domain is modulo-bounded) — the
 #: savings is the BUILD (windows/aggregates over the full orders/customer/
 #: part scans), not the storage. Keyed by applicationId so a new session
-#: never sees a handle bound to a stopped context; bounded like the IVF
+#: never sees a handle bound to a stopped context; each entry carries the
+#: data-file signatures of its source tables (as ``catalog.table``'s
+#: cache does), and a rewritten source replaces it; bounded like the IVF
 #: index registry so long-lived sessions can't accumulate spines.
-_UNIFIED_CACHE: dict[tuple[str, str], DataFrame] = {}
+_UNIFIED_CACHE: dict[tuple[str, str], tuple[tuple, DataFrame]] = {}
 _UNIFIED_CACHE_CAP = 4
+_UNIFIED_SOURCES = ("orders", "customer", "part", "supplier", "nation")
 
 
 def _synth_unified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The synthetic unified-papers table (shared by unify_coverage and
     the vignette queries — one construction, one oracle CTE block),
-    materialized once per (session, sf_dir); see _UNIFIED_CACHE."""
+    materialized once per (session, sf_dir, source file versions); see
+    _UNIFIED_CACHE."""
     key = (spark.sparkContext.applicationId, sf_dir)
+    signature = tuple(
+        table_signature(os.path.join(sf_dir, f"{t}.parquet")) for t in _UNIFIED_SOURCES
+    )
     hit = _UNIFIED_CACHE.get(key)
     if hit is not None:
-        return hit
+        if hit[0] == signature:
+            return hit[1]
+        del _UNIFIED_CACHE[key]
+        hit[1].unpersist()
     o = table(spark, sf_dir, "orders")
     c = table(spark, sf_dir, "customer")
     p = table(spark, sf_dir, "part")
@@ -239,14 +252,14 @@ def _synth_unified(spark: SparkSession, sf_dir: str) -> DataFrame:
         # evict the OLDEST entry (FIFO, like the IVF index registry in
         # similarity.py) — dict.popitem() would drop the newest and let
         # stale spines from stopped sessions linger
-        old = _UNIFIED_CACHE.pop(next(iter(_UNIFIED_CACHE)))
+        _, old = _UNIFIED_CACHE.pop(next(iter(_UNIFIED_CACHE)))
         try:
             old.unpersist()
         except Exception:
             # evicted handle may belong to a stopped session; dropping the
             # reference is all that is needed
             pass
-    _UNIFIED_CACHE[key] = u
+    _UNIFIED_CACHE[key] = (signature, u)
     return u
 
 

@@ -128,15 +128,17 @@ class IncrementalJsonIngest:
         ]
 
     def read_all(self) -> DataFrame:
-        """All shards as one DataFrame (schema union across shards). With
-        no shard yet (no source file, or only files with no inferable
-        column) it is an empty frame of the declared schema, if any."""
-        from science_datalake_spark.sources.json_source import read_parquet_merged
+        """All shards as one DataFrame (schema union across shards; shards
+        whose footers agree are read under that schema, with no inference
+        job). With no shard yet (no source file, or only files with no
+        inferable column) it is an empty frame of the declared schema, if
+        any."""
+        from science_datalake_spark.sources.sinks import read_parquet
 
         shards = self._shards()
         if not shards:
             return self.spark.createDataFrame([], self.schema or StructType())
-        return read_parquet_merged(self.spark, shards)
+        return read_parquet(self.spark, shards, merge_schema=True)
 
     def rows(self) -> int:
         """``read_all().count()`` from the shards' parquet footers, without

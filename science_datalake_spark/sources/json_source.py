@@ -7,8 +7,13 @@ read_json calls (SURVEY §2.1 S3/S4, §1.3 schema system).
 - inferred read ≈ ``read_json_auto(ignore_errors=true, union_by_name=true)``
   (convert_openalex.py:798-809): PERMISSIVE mode + Spark's schema union
   across files.
-- merged parquet read ≈ ``read_parquet(glob, union_by_name=true)``
-  (convert_openalex.py:1456-1464): mergeSchema for heterogeneous shards.
+
+The parquet side of the same union (``read_parquet(glob,
+union_by_name=true)``, convert_openalex.py:1456-1464) is
+``sinks.read_parquet(merge_schema=True)``: shards whose footers agree are
+read under that one declared schema, heterogeneous shards with
+mergeSchema. NDJSON keeps Spark's inference on purpose: a declared source
+shape would drop every field the declaration does not name.
 
 Scale: Spark's JSON source splits gzip members per file and distributes
 file lists across executors — the reference's ProcessPoolExecutor per-file
@@ -37,13 +42,6 @@ def read_ndjson(
     if schema is not None:
         reader = reader.schema(schema)
     return reader.json(paths)
-
-
-def read_parquet_merged(spark: SparkSession, path: str | list[str]) -> DataFrame:
-    """Parquet with schema union across heterogeneous shards."""
-    return spark.read.option("mergeSchema", "true").parquet(
-        *(path if isinstance(path, list) else [path])
-    )
 
 
 def ensure_columns(df: DataFrame, required: str | StructType) -> DataFrame:

@@ -18,17 +18,26 @@ compaction, where we keep it (write-new → verify → swap).
 
 Verification contract (``write_parquet``, ``compact``): an ``Observation``
 counts the rows the plan hands to the writer, in the write's own job; the
-written files are read back and counted, and any difference raises
-``RuntimeError`` (``compact`` then does not swap). A separate ``count()``
-would re-run the whole plan being written just to check it. Spark 4.1
+written files are read back and counted by Spark, and any difference
+raises ``RuntimeError`` (``compact`` then does not swap). A separate
+``count()`` would re-run the whole plan being written just to check it.
+The read-back declares its schema from the written footers
+(``read_parquet``), so the count is the check's only job. Spark 4.1
 caveat: after its first Observation a session can no longer be serialized
 (``SparkSession.observationManager`` is not transient), so nothing may
 carry the session into a task closure (a fitted Spark ML model that
 keeps its training summary does).
+
+Reads: every flat parquet read in the package goes through
+``read_parquet``, which takes the schema from the files' footers on the
+driver instead of starting a Spark schema-inference job (Delta Lake takes
+a table's schema from its log the same way, never from a scan).
 """
 
 from __future__ import annotations
 
+import functools
+import json
 import os
 import re
 import shutil
@@ -37,6 +46,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: Row-group byte targets per table shape (parquet.block.size).
 ROW_GROUP_FAT_TEXT = 8 * 1024 * 1024
@@ -70,7 +80,7 @@ def write_parquet(
         .option("parquet.block.size", str(row_group_bytes))
         .parquet(path)
     )
-    written = df.sparkSession.read.parquet(path).count()
+    written = read_parquet(df.sparkSession, path).count()
     expected = obs.get["rows"]
     if written != expected:
         raise RuntimeError(f"write verification failed: {written} != {expected}")
@@ -126,9 +136,169 @@ def footer_rows(table_dirs: Sequence[str]) -> int:
     """Rows in the data files of ``table_dirs``, summed from their parquet
     footers: no scan and no Spark job (Delta Lake answers counts from
     per-file metadata the same way)."""
+    return sum(read_footer(f).num_rows for d in table_dirs for f in data_files(d))
+
+
+def table_signature(path: str) -> tuple:
+    """``(file, size, mtime_ns)`` of every data file under a local table
+    path (a file, or a directory walked recursively, hidden names
+    skipped); ``()`` for a remote URI or a missing path. Rewriting a data
+    file changes it, so it keys caches of plans over the table."""
+    if _is_remote(path):
+        return ()
+    if os.path.isfile(path):
+        return (_stat(path),)
+    out = []
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        out += [
+            _stat(os.path.join(root, f))
+            for f in sorted(files)
+            if not f.startswith(("_", "."))
+        ]
+    return tuple(out)
+
+
+def _stat(path: str) -> tuple:
+    st = os.stat(path)
+    return path, st.st_size, st.st_mtime_ns
+
+
+def _is_remote(path: str) -> bool:
+    from urllib.parse import urlparse
+
+    return urlparse(path).scheme not in ("", "file")
+
+
+def read_footer(path: str):
+    """The parquet footer of a local data file, read once per
+    ``(size, mtime_ns)``; an unreadable footer raises pyarrow's error."""
+    return _footer_at(*_stat(path))
+
+
+@functools.lru_cache(maxsize=1024)
+def _footer_at(path: str, size: int, mtime_ns: int):
     import pyarrow.parquet as pq
 
-    return sum(pq.read_metadata(f).num_rows for d in table_dirs for f in data_files(d))
+    return pq.read_metadata(path)
+
+
+#: the footer key under which Spark stores the schema of a file it wrote
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _flat_files(paths: Sequence[str]) -> list[str] | None:
+    """The data files of flat local parquet tables (files, or directories
+    holding only data files); None for a remote URI, a missing path or a
+    nested (``key=value`` partitioned) directory."""
+    files: list[str] = []
+    for p in paths:
+        if _is_remote(p):
+            return None
+        if os.path.isfile(p):
+            files.append(p)
+        elif os.path.isdir(p):
+            found = data_files(p)
+            if any(os.path.isdir(f) for f in found):
+                return None
+            files += found
+        else:
+            return None
+    return files
+
+
+def _declarable(t, ns_ok: bool = False) -> bool:
+    """Arrow types whose Spark type ``from_arrow_schema`` gives exactly as
+    Spark's parquet inference does. Not: unsigned ints (widened by
+    Spark), time, duration and null (typed differently) and
+    ``timestamp[ns]`` (INT96 or TIMESTAMP(NANOS), which Spark types
+    apart); ``ns_ok`` admits the latter where the caller handles it."""
+    import pyarrow as pa
+
+    if pa.types.is_timestamp(t):
+        return t.unit != "ns" or ns_ok
+    if pa.types.is_dictionary(t):
+        return _declarable(t.value_type)
+    if pa.types.is_map(t):
+        return _declarable(t.key_type) and _declarable(t.item_type)
+    if pa.types.is_list(t) or pa.types.is_large_list(t) or pa.types.is_fixed_size_list(t):
+        return _declarable(t.value_type)
+    if pa.types.is_struct(t):
+        return all(_declarable(t.field(i).type) for i in range(t.num_fields))
+    return (
+        pa.types.is_boolean(t)
+        or pa.types.is_signed_integer(t)
+        or pa.types.is_float32(t)
+        or pa.types.is_float64(t)
+        or pa.types.is_decimal128(t)
+        or pa.types.is_date(t)
+        or pa.types.is_string(t)
+        or pa.types.is_large_string(t)
+        or pa.types.is_binary(t)
+        or pa.types.is_large_binary(t)
+        or pa.types.is_fixed_size_binary(t)
+    )
+
+
+def _footer_struct(md, nanos_as_long: bool, prefer_ntz: bool) -> StructType | None:
+    """The Spark schema of one file from its footer: the schema Spark
+    stored there when it wrote the file, else the Arrow schema mapped
+    type by type; None when a column's Spark type cannot be told from
+    the footer alone."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    stored = (md.metadata or {}).get(_SPARK_ROW_METADATA)
+    if stored is not None:
+        return StructType.fromJson(json.loads(stored))
+    columns = (md.schema.column(i) for i in range(md.num_columns))
+    physical = {c.path: c.physical_type for c in columns}
+    if "INT96" in physical.values():
+        return None
+    fields = []
+    for f in md.schema.to_arrow_schema():
+        if not _declarable(f.type, ns_ok=nanos_as_long and physical.get(f.name) == "INT64"):
+            return None
+        if pa.types.is_timestamp(f.type) and f.type.unit == "ns":
+            # TIMESTAMP(NANOS) under nanosAsLong: Spark reads epoch nanos
+            f = f.with_type(pa.int64())
+        fields.append(f)
+    return from_arrow_schema(pa.schema(fields), prefer_timestamp_ntz=prefer_ntz)
+
+
+def footer_schema(spark: SparkSession, paths: Sequence[str]) -> StructType | None:
+    """The schema Spark's parquet inference would give the flat local
+    tables at ``paths``, taken from their footers on the driver: no Spark
+    job. Nullability is as the footers say; a read under it reads every
+    column as nullable, as an inferring read does. None when the footers
+    cannot settle it: a remote or partitioned layout, no data file, a
+    column type the footer does not settle (see ``_footer_struct``), or
+    footers that disagree."""
+    files = _flat_files(paths)
+    if not files:
+        return None
+    conf = spark.conf
+    nanos_as_long = conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "true"
+    prefer_ntz = conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true") == "true"
+    schemas = {_footer_struct(read_footer(f), nanos_as_long, prefer_ntz) for f in files}
+    return schemas.pop() if len(schemas) == 1 else None
+
+
+def read_parquet(
+    spark: SparkSession, paths: str | Sequence[str], merge_schema: bool = False
+) -> DataFrame:
+    """``spark.read.parquet(*paths)`` with its schema declared from the
+    files' footers (``footer_schema``), so no schema-inference job runs.
+    Where the footers cannot settle the schema, Spark infers it as
+    before: from one file, or with ``merge_schema`` as the union of all
+    of them (the reference's ``read_parquet(glob, union_by_name=true)``,
+    convert_openalex.py:1456-1464). Footers that agree need no union."""
+    paths = [paths] if isinstance(paths, str) else list(paths)
+    schema = footer_schema(spark, paths)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(*paths)
+    reader = spark.read.option("mergeSchema", "true") if merge_schema else spark.read
+    return reader.parquet(*paths)
 
 
 def orphaned_shards(parent: str) -> list[str]:
@@ -188,14 +358,14 @@ def compact(
     base = os.path.basename(shard_dir.rstrip("/"))
     # observed AFTER the shuffle: the counter sits in the write stage,
     # whose task results are applied once per partition
-    out, obs = _observe_rows(spark.read.parquet(shard_dir).repartition(target_files))
+    out, obs = _observe_rows(read_parquet(spark, shard_dir).repartition(target_files))
     tmp = os.path.join(parent, f"{base}__compact-{uuid.uuid4().hex[:8]}")
     (
         out.write.mode("overwrite")
         .option("compression", compression)
         .parquet(tmp)
     )
-    actual = spark.read.parquet(tmp).count()
+    actual = read_parquet(spark, tmp).count()
     expected = obs.get["rows"]
     if actual != expected:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -265,12 +435,12 @@ def upsert_parquet(
         return df.count()
 
     if partition_col is None:
-        existing = spark.read.parquet(path)
+        existing = read_parquet(spark, path)
         kept = existing.join(df.select(*keys), on=keys, how="left_anti")
         merged = kept.unionByName(df.select(*existing.columns))
         tmp = f"{path}__compact-{uuid.uuid4().hex[:8]}"
         write_dir(merged, tmp)
-        merged_count = spark.read.parquet(tmp).count()
+        merged_count = read_parquet(spark, tmp).count()
         expected = kept.count() + df.count()
         if merged_count != expected:
             shutil.rmtree(tmp, ignore_errors=True)
@@ -301,7 +471,7 @@ def upsert_parquet(
             # read the partition DIRECTORY directly: a fresh file
             # listing per swap (the root-table index would go stale as
             # the loop renames sibling partitions)
-            current = spark.read.parquet(part_dir).select(*data_cols)
+            current = read_parquet(spark, part_dir).select(*data_cols)
             kept = current.join(
                 incoming.select(*merge_keys), on=merge_keys, how="left_anti"
             )
@@ -315,7 +485,7 @@ def upsert_parquet(
         # dot-prefixed dirs cannot be read back even as a read root
         tmp = f"{path}__upsertpart-{uuid.uuid4().hex[:8]}"
         merged.write.mode("overwrite").parquet(tmp)
-        n = spark.read.parquet(tmp).count()
+        n = read_parquet(spark, tmp).count()
         if n != expected:
             shutil.rmtree(tmp, ignore_errors=True)
             raise RuntimeError(

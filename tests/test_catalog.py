@@ -3,6 +3,9 @@ schema-namespace model) + temp-view bootstrap."""
 
 from __future__ import annotations
 
+import os
+import uuid
+
 import pyspark.sql.functions as F
 
 from science_datalake_spark.catalog import register_views
@@ -246,3 +249,97 @@ def test_unknown_ts_kind_int64_raises_unless_declared(spark, tmp_path, monkeypat
     cat._TABLE_CACHE.clear()
     # don't leak the nanos conf into later tests (sibling-test discipline)
     spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+
+
+def _copy_testdata(src, dst):
+    import shutil
+
+    dst.mkdir()
+    for name in os.listdir(src):
+        shutil.copy(os.path.join(src, name), dst / name)
+    return str(dst)
+
+
+def test_register_views_starts_no_spark_job(spark, sf_oracle, tmp_path):
+    """Every table's schema is declared from its footer (the reference's
+    views-only catalog reads no data to register a view). A fresh copy
+    keeps the plan and footer caches cold."""
+    d = _copy_testdata(sf_oracle, tmp_path / "sf")
+    sc = spark.sparkContext
+    group = f"register-views-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "register_views over a fresh testdata copy")
+    try:
+        out = register_views(spark, d)
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(out) == 10
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    assert spark.sql("SELECT count(*) FROM orders").first()[0] == 15000
+
+
+def test_table_cache_follows_rewritten_file(spark, sf_oracle, tmp_path):
+    """Rewriting a table's file in place replaces its cached plan: the
+    next table() has the new schema and the new rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    import science_datalake_spark.catalog as cat
+
+    d = _copy_testdata(sf_oracle, tmp_path / "sf")
+    before = cat.table(spark, d, "orders")
+    assert cat.table(spark, d, "orders") is before
+    assert before.count() == 15000
+
+    path = os.path.join(d, "orders.parquet")
+    old = pq.read_table(path).slice(0, 7)
+    pq.write_table(old.append_column("note", pa.array(["new"] * 7)), path)
+    after = cat.table(spark, d, "orders")
+    assert after is not before
+    assert after.columns == before.columns + ["note"]
+    assert after.count() == 7
+    assert {r["note"] for r in after.select("note").collect()} == {"new"}
+    keys = [k for k in cat._TABLE_CACHE if k[1:] == (d, "orders")]
+    assert len(keys) == 1 and cat._TABLE_CACHE[keys[0]][1] is after
+
+
+def test_events_ts_kind_unreadable_local_footer_raises(spark, tmp_path):
+    """A local footer that cannot be read is an error, not 'absent' (which
+    would skip the nanos handling the file may need). A lake without an
+    events table is still 'absent', and bootstrap_session accepts it."""
+    import pyarrow as pa
+    import pytest
+
+    from science_datalake_spark.catalog import _events_ts_kind, bootstrap_session
+
+    assert _events_ts_kind(str(tmp_path / "events.parquet")) == "absent"
+    assert bootstrap_session(spark, str(tmp_path)) is spark
+    d = _write_events(tmp_path, "trunc_sf", pa.timestamp("ns"), [1, 2])
+    path = d + "/events.parquet"
+    with open(path, "rb") as f:
+        head = f.read(64)
+    with open(path, "wb") as f:
+        f.write(head)
+    with pytest.raises(pa.ArrowInvalid):
+        _events_ts_kind(path)
+
+
+def test_events_ts_spark_int96_is_tz(spark, tmp_path):
+    """Spark's INT96 timestamps read as TIMESTAMP: they classify 'tz'
+    (pyarrow reports them in nanoseconds, which is not the nanos shape),
+    and table() passes them through."""
+    from science_datalake_spark.catalog import _events_ts_kind, table
+
+    d = tmp_path / "int96_sf"
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try:
+        spark.range(2).select(
+            F.col("id").alias("event_id"),
+            F.timestamp_seconds(F.col("id") + 1_700_000_000).alias("ts"),
+        ).write.parquet(str(d / "events.parquet"))
+    finally:
+        spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    assert _events_ts_kind(str(d / "events.parquet")) == "tz"
+    df = table(spark, str(d), "events")
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    got = [r[0] for r in df.select(F.unix_seconds("ts")).orderBy("event_id").collect()]
+    assert got == [1_700_000_000, 1_700_000_001]

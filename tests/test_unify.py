@@ -318,7 +318,7 @@ def test_unified_cache_evicts_oldest(spark, sf_smoke):
     try:
         dummy = spark.range(1)
         for i in range(uq._UNIFIED_CACHE_CAP):
-            uq._UNIFIED_CACHE[("app", f"dir{i}")] = dummy
+            uq._UNIFIED_CACHE[("app", f"dir{i}")] = ((), dummy)
         oldest = next(iter(uq._UNIFIED_CACHE))
         # a real insert through the cache path triggers eviction
         got = uq._synth_unified(spark, sf_smoke)
