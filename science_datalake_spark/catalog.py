@@ -45,17 +45,13 @@ TESTDATA_TABLES = (
 
 
 def bootstrap_session(spark: SparkSession, sf_dir: str) -> SparkSession:
-    """Set the session confs a FRESH session needs before it touches any
-    view over ``sf_dir`` — call this before querying PERSISTENT views
-    (``register_views(database=...)``).
-
-    ``table()`` sets ``nanosAsLong`` lazily when its own footer probe
-    proves the nanos shape, but a session that queries a persistent
-    DB-namespace view goes straight to the metastore definition and never
-    passes through ``table()`` — on a nanos-shaped events file the read
-    then fails (the round-4 fresh-session caveat, now closed). Probing is
-    one footer read; 'unknown' (unprobeable remote URI) also sets the
-    conf, which is harmless for non-nanos shapes. Returns ``spark`` for
+    """Set the session confs a fresh session needs before it reads the
+    tables under ``sf_dir``: probe the events footer once and set
+    ``spark.sql.legacy.parquet.nanosAsLong`` when the file is
+    TIMESTAMP(NANOS)-shaped (or cannot be probed — harmless for other
+    shapes). ``table()`` sets the same conf lazily on its own read; the
+    entry points call this up front so every read in the session, not
+    only those through ``table()``, sees the conf. Returns ``spark`` for
     chaining."""
     path = os.path.join(sf_dir, "events.parquet")
     if _events_ts_kind(path) in ("nanos", "unknown"):
@@ -67,62 +63,23 @@ def register_views(
     spark: SparkSession,
     sf_dir: str,
     tables: tuple[str, ...] = TESTDATA_TABLES,
-    database: str | None = None,
 ) -> dict[str, DataFrame]:
-    """Register one view per Parquet table under ``sf_dir``.
+    """Register one temp view per Parquet table under ``sf_dir``, plus the
+    convenience views over them.
 
     Mirrors create_unified_db.py:332-344's auto-discovery: only files that
     exist are registered; missing tables are skipped silently so the same
     bootstrap works across scale factors.
-
-    ``database``: register PERSISTENT views inside a catalog database
-    instead of session temp views — the Spark analogue of the reference's
-    22 DuckDB schema namespaces (``s2ag.papers`` → ``s2ag.papers``,
-    create_unified_db.py:57,220). Persistent views live in the metastore
-    and survive sessions, like the reference's views-only .duckdb file.
     """
     out: dict[str, DataFrame] = {}
-    if database is not None:
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {database}")
     for name in tables:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if not os.path.exists(path):
             continue
         df = table(spark, sf_dir, name)
-        if database is not None:
-            if name == "events":
-                # Bake the same ts normalization table() applies into the
-                # view so both registration modes agree, whatever the
-                # physical shape the generator chose (see _events_ts_kind).
-                kind = _events_ts_kind(path)
-                if kind == "nanos":
-                    # Requires nanosAsLong=true in the reading session
-                    # (table() sets it when it sees this shape; a FRESH
-                    # session querying this persistent view must call
-                    # bootstrap_session(spark, sf_dir) first — the cli
-                    # and webapp entry points do).
-                    ts_expr = "timestamp_micros(ts DIV 1000)"
-                elif kind == "ntz":
-                    ts_expr = "CAST(ts AS TIMESTAMP)"
-                else:
-                    ts_expr = "ts"
-                sel = ", ".join(
-                    f"{ts_expr} AS ts" if c == "ts" else c for c in df.columns
-                )
-                spark.sql(
-                    f"CREATE OR REPLACE VIEW {database}.{name} AS "
-                    f"SELECT {sel} FROM parquet.`{path}`"
-                )
-            else:
-                spark.sql(
-                    f"CREATE OR REPLACE VIEW {database}.{name} "
-                    f"AS SELECT * FROM parquet.`{path}`"
-                )
-        else:
-            df.createOrReplaceTempView(name)
+        df.createOrReplaceTempView(name)
         out[name] = df
-    if database is None:
-        _register_convenience_views(spark, set(out))
+    _register_convenience_views(spark, set(out))
     return out
 
 

@@ -299,6 +299,8 @@ def _int8_fidelity_numpy(
 # RESIDENT data — FAISS composes them as IVF-PQ).
 
 
+#: (applicationId, cache_key, m, k) → (the corpus files'
+#: ``frame_signature``, codebooks)
 _PQ_BOOK_CACHE: dict = {}
 _PQ_BOOK_CACHE_CAP = 64  # FIFO-bounded like _IVF_INDEX_CACHE (entries are
 # m*k*(d/m) python floats — small, but a registry should never be unbounded)
@@ -327,14 +329,19 @@ def pq_codebooks(
     TakeOrdered JOB at call time, re-paid by every PQ query in a session
     without it (round-13 profile: ~0.2-0.3 s per construction at sf0.1).
     The key must identify the CORPUS (plus any filters baked into it);
-    m and k are folded in automatically. None (default) opts out."""
+    m and k are folded in automatically, and a rewritten corpus file
+    (its ``frame_signature``) rebuilds the entry. None (default) opts
+    out."""
     from science_datalake_spark.operators.similarity import as_double_vec
+    from science_datalake_spark.sources.sinks import frame_signature
 
     if cache_key is not None:
         key = (corpus.sparkSession.sparkContext.applicationId, cache_key, m, k)
+        signature = frame_signature(corpus)
         hit = _PQ_BOOK_CACHE.get(key)
-        if hit is not None:
-            return hit
+        if hit is not None and hit[0] == signature:
+            return hit[1]
+        _PQ_BOOK_CACHE.pop(key, None)
 
     rows = (
         corpus.filter(F.col(vec_col).isNotNull())
@@ -356,7 +363,7 @@ def pq_codebooks(
     if cache_key is not None:
         while len(_PQ_BOOK_CACHE) >= _PQ_BOOK_CACHE_CAP:
             _PQ_BOOK_CACHE.pop(next(iter(_PQ_BOOK_CACHE)))
-        _PQ_BOOK_CACHE[key] = books
+        _PQ_BOOK_CACHE[key] = (signature, books)
     return books
 
 

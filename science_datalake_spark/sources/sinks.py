@@ -159,6 +159,19 @@ def table_signature(path: str) -> tuple:
     return tuple(out)
 
 
+def frame_signature(df: DataFrame) -> tuple:
+    """``table_signature`` over every file ``df`` reads (its
+    ``inputFiles()``); ``()`` for a frame over no local file. Keys caches
+    of results computed from ``df``, as ``table_signature`` keys plans."""
+    from urllib.parse import unquote, urlparse
+
+    out: list = []
+    for uri in sorted(df.inputFiles()):
+        u = urlparse(uri)
+        out += table_signature(unquote(u.path) if u.scheme == "file" else uri)
+    return tuple(out)
+
+
 def _stat(path: str) -> tuple:
     st = os.stat(path)
     return path, st.st_size, st.st_mtime_ns

@@ -106,27 +106,6 @@ def test_nanos_conf_scoped_to_events(spark, sf_oracle, tmp_path):
         spark.read.parquet(d + "/events.parquet").collect()
 
 
-def test_database_namespace_views(spark, sf_oracle):
-    spark.sql("DROP DATABASE IF EXISTS lake_sf001 CASCADE")
-    register_views(spark, sf_oracle, database="lake_sf001")
-    n = spark.sql("SELECT count(*) AS n FROM lake_sf001.orders").first()["n"]
-    assert n == 15000
-    # namespaced join across two schema-qualified views
-    joined = spark.sql(
-        """
-        SELECT r.r_name, count(*) AS n
-        FROM lake_sf001.nation n JOIN lake_sf001.region r
-          ON n.n_regionkey = r.r_regionkey
-        GROUP BY r.r_name
-        """
-    )
-    assert joined.count() == 5
-    # the view is lazy — it must reflect the file, not a copy
-    dbs = [d.name for d in spark.catalog.listDatabases()]
-    assert "lake_sf001" in dbs
-    spark.sql("DROP DATABASE IF EXISTS lake_sf001 CASCADE")
-
-
 def test_events_ts_kind_probes_partitioned_layout(spark, tmp_path):
     """A partitioned events directory (part files nested under key=value
     subdirs) must still classify from the first footer found."""
@@ -153,39 +132,32 @@ def test_events_ts_kind_unreachable_remote_uri_is_unknown():
 
 
 def test_bootstrap_session_closes_fresh_session_nanos_caveat(spark, tmp_path):
-    """A FRESH session querying a persistent DB view over nanos-shaped
-    events bypasses table(); bootstrap_session must make that read work
-    by probing the footer and setting nanosAsLong up front."""
+    """A fresh session over nanos-shaped events: bootstrap_session probes
+    the footer and sets nanosAsLong up front, and table() then reads the
+    nanos events in that session as the right TIMESTAMPs."""
     import pyarrow as pa
 
-    from science_datalake_spark.catalog import bootstrap_session, register_views
+    from science_datalake_spark.catalog import bootstrap_session, table
 
     d = _write_events(
         tmp_path,
-        "nanos_db_sf",
+        "nanos_fresh_sf",
         pa.timestamp("ns"),
         [1_700_000_000_000_000_000, 1_700_000_001_500_000_000],
     )
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    register_views(spark, d, tables=("events",), database="lake_nanos")
-    try:
-        # newSession shares the metastore catalog but has a FRESH SQLConf —
-        # exactly the fresh-session shape the caveat described
-        fresh = spark.newSession()
-        assert (
-            fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "false"
-        )
-        bootstrap_session(fresh, d)
-        got = [
-            r[0]
-            for r in fresh.sql(
-                "SELECT unix_micros(ts) FROM lake_nanos.events ORDER BY event_id"
-            ).collect()
-        ]
-        assert got == [1_700_000_000_000_000, 1_700_000_001_500_000]
-    finally:
-        spark.sql("DROP DATABASE IF EXISTS lake_nanos CASCADE")
-        spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    # newSession shares the SparkContext but has a FRESH SQLConf — the
+    # fresh-session shape the caveat described
+    fresh = spark.newSession()
+    assert fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false") == "false"
+    assert bootstrap_session(fresh, d) is fresh
+    assert fresh.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"
+    events = table(fresh, d, "events")
+    assert dict(events.dtypes)["ts"] == "timestamp"
+    got = [
+        r[0]
+        for r in events.orderBy("event_id").selectExpr("unix_micros(ts)").collect()
+    ]
+    assert got == [1_700_000_000_000_000, 1_700_000_001_500_000]
 
 
 def test_plain_int64_ts_stays_bigint(spark, tmp_path):

@@ -115,6 +115,46 @@ def test_ivf_index_amortizes_build(spark, sf_smoke):
     assert not a1.storageLevel.useMemory  # k1 evicted and unpersisted
 
 
+def test_ivf_and_pq_caches_follow_rewritten_embeddings(spark, sf_oracle, tmp_path):
+    """The IVF index and PQ codebook caches are keyed by the caller's
+    sf_dir string; a rewrite of embeddings.parquet in place must rebuild
+    them. After the vectors are rotated by one row, sim_ivf_topk and
+    sim_ivfpq_topk in the same session equal a run with those entries
+    cleared (and differ from the first run, so the rewrite is seen)."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from science_datalake_spark.operators import embedding as E
+    from science_datalake_spark.operators import similarity as S
+    from science_datalake_spark.queries import load_all, load_aux
+
+    registry = {**load_aux()[0], **load_all()[0]}
+    names = ("sim_ivf_topk", "sim_ivfpq_topk")
+    sf = str(tmp_path)
+    path = str(tmp_path / "embeddings.parquet")
+    shutil.copy(f"{sf_oracle}/embeddings.parquet", path)
+
+    def run():
+        return {n: [tuple(r) for r in registry[n](spark, sf).collect()] for n in names}
+
+    first = run()
+    tbl = pq.read_table(path)
+    vecs = tbl.column("embedding").combine_chunks()
+    rotated = pa.concat_arrays([vecs.slice(1), vecs.slice(0, 1)])
+    i = tbl.schema.get_field_index("embedding")
+    pq.write_table(tbl.set_column(i, tbl.schema.field(i), rotated), path)
+    after = run()
+    for key in [k for k in S._IVF_INDEX_CACHE if k[1].startswith(sf)]:
+        S._IVF_INDEX_CACHE.pop(key)[-1].unpersist()
+    for key in [k for k in E._PQ_BOOK_CACHE if k[1].startswith(sf)]:
+        del E._PQ_BOOK_CACHE[key]
+    cleared = run()
+    assert after == cleared
+    assert all(after[n] != first[n] for n in names)
+
+
 def test_ivf_index_write_read_roundtrip_and_pruning(spark, sf_smoke, tmp_path):
     """Persisted IVF layout: results through the written index equal the
     in-memory index exactly, and the bucket-partitioned assignment prunes
