@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from science_datalake_spark.util import unpersist
+
 
 #: last persisted result per operator slot — released on the next call
 _LIVE_HANDLES: dict[str, DataFrame] = {}
@@ -48,13 +50,8 @@ def _materialize_release(out: DataFrame, *inputs: DataFrame, slot: str) -> DataF
     returned handle themselves."""
     prev = _LIVE_HANDLES.pop(slot, None)
     if prev is not None:
-        try:
-            prev.unpersist()
-        except Exception:
-            # the previous handle may belong to a stopped SparkSession
-            # (CLI restart); its cache died with the session — dropping
-            # the reference is all that is needed
-            pass
+        # it may belong to a stopped SparkSession (CLI restart)
+        unpersist(prev)
     out = out.persist()
     out.count()
     for df in inputs:
@@ -620,7 +617,6 @@ def semantic_dedup(
     centroids: DataFrame,
     threshold: float,
     round_digits: int = 4,
-    engine: str = "numpy",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): embedding-space
     near-duplicate pruning made tractable by clustering — pairwise cosine
@@ -646,117 +642,22 @@ def semantic_dedup(
     ~corpus/k vectors). The dropped-id set is near-linear and joins back
     with one broadcastable left join. No all-pairs stage anywhere.
 
-    ``engine``: vector math is the one workload where Spark SQL
-    expressions genuinely lose to Arrow-batched numpy — interpreted
-    higher-order lambdas evaluate ~5M element-ops/s vs BLAS's billions.
-    ``"numpy"`` (default) runs assignment as a broadcast-centroid matmul
-    inside mapInPandas and the intra-cluster pair scan as one
-    ``Vn @ Vn.T`` per bucket group (applyInPandas) — measured ~2.4 s →
-    ~0.9 s at 5k×64-dim, and the gap widens with dimensionality.
-    ``"sql"`` keeps everything as JVM column expressions, whose float
-    summation ORDER matches the DuckDB oracle exactly; the numpy path's
-    blocked/SIMD summation can differ in the last ulp, which flips a
-    rounded boundary only if a true cosine sits within ~1e-15 of a
-    0.5·10^-round_digits grid line (checked empirically against the
-    sequential-order oracle on the test corpora; use "sql" where
-    bit-reproducibility against a relational twin matters more than
-    speed).
+    Engine: vector math is the one workload where Spark SQL expressions
+    lose to Arrow-batched numpy — interpreted higher-order lambdas
+    evaluate ~5M element-ops/s vs BLAS's billions. Assignment is a
+    broadcast-centroid matmul inside mapInPandas and the intra-cluster
+    pair scan is one ``Vn @ Vn.T`` per bucket group (applyInPandas) —
+    measured ~2.4 s → ~0.9 s against the column-expression form at
+    5k×64-dim, and the gap widens with dimensionality. The BLAS
+    summation order can differ from the DuckDB oracle's sequential
+    order in the last ulp, which flips a rounded boundary only if a
+    true cosine sits within ~1e-15 of a 0.5·10^-round_digits grid line.
     """
-    if engine == "numpy":
-        return _semantic_dedup_numpy(
-            corpus, id_col, vec_col, centroids, threshold, round_digits
-        )
-    if engine != "sql":
-        raise ValueError(f"engine must be 'numpy' or 'sql', got {engine!r}")
-    from science_datalake_spark.operators.similarity import dot, ivf_assign
-
-    # assigned feeds BOTH self-join sides and the final join-back — persist
-    # for the op's duration (the LSH cache-lifetime discipline); the norm is
-    # precomputed per VECTOR, not per pair: cos(a,b) = dot(a,b)/(‖a‖·‖b‖)
-    # does 1/3 the per-pair float work of the naive dot/sqrt(dot·dot) form
-    # (measured 4.2 s → ~1.3 s at 5k×64-dim). The DuckDB oracle uses the
-    # identical norm formulation so the round-4 boundary decision matches.
-    assigned = (
-        ivf_assign(corpus, centroids, id_col, vec_col)
-        .withColumn("__nrm", F.sqrt(dot(F.col("vec"), F.col("vec"))))
-        .persist()
-    )
-    a = assigned.select(
-        "bucket", F.col(id_col).alias("__ia"), F.col("vec").alias("__va"),
-        F.col("__nrm").alias("__na"),
-    )
-    b = assigned.select(
-        "bucket", F.col(id_col).alias("__ib"), F.col("vec").alias("__vb"),
-        F.col("__nrm").alias("__nb"),
-    )
-    dropped = (
-        a.join(b, "bucket")
-        .filter(F.col("__ia") < F.col("__ib"))
-        .filter(
-            F.round(
-                dot(F.col("__va"), F.col("__vb")) / (F.col("__na") * F.col("__nb")),
-                round_digits,
-            )
-            >= F.lit(threshold)
-        )
-        .select(F.col("__ib").alias(id_col))
-        .distinct()
-        .withColumn("__dup", F.lit(True))
-    )
-    out = assigned.select(id_col, "bucket").join(dropped, id_col, "left").select(
-        id_col, "bucket", F.coalesce("__dup", F.lit(False)).alias("semantic_dup")
-    )
-    return _materialize_release(out, assigned, slot="semantic_dedup")
-
-
-def _round_half_away(x, digits: int):
-    """Vectorized round-half-away-from-zero (SQL ROUND semantics —
-    np.round is banker's rounding and WOULD diverge at exact .5 grid
-    values)."""
-    import numpy as np
-
-    p = 10.0**digits
-    return np.sign(x) * np.floor(np.abs(x) * p + 0.5) / p
-
-
-def _vec_matrix(series, dim: int):
-    """NULL/ragged-tolerant (n, dim) float64 matrix from a pandas Series of
-    array rows. ``np.array(series.tolist())`` crashes (or silently builds an
-    object-dtype array) on None or wrong-length rows; here those rows become
-    ZERO vectors, whose zero norm yields NaN sims downstream — reproducing
-    the SQL engine's NULL-sim semantics exactly: the row assigns to the
-    lowest cent_id (NaN → -inf before argmax) and is never marked a dup nor
-    marks another row (NaN >= threshold is False), matching ivf_assign's
-    nulls-last coalesce and the pair filter dropping NULL sims. Rows whose
-    length differs from the codebook dim are treated as NULL (the SQL
-    zip_with pads with NULL → NULL dot → same outcome)."""
-    import numpy as np
-
-    vals = series.tolist()
-    m = np.zeros((len(vals), dim), dtype=np.float64)
-    for i, v in enumerate(vals):
-        if v is not None and len(v) == dim:
-            m[i] = v
-    return m
-
-
-def _semantic_dedup_numpy(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    centroids: DataFrame,
-    threshold: float,
-    round_digits: int,
-) -> DataFrame:
-    """The Arrow/numpy engine: assignment = one batch matmul against the
-    broadcast codebook (mapInPandas, map-only); pair scan = one
-    ``Vn @ Vn.T`` per bucket (applyInPandas — the bucket is the group,
-    exactly the parallelism unit the SQL plan shuffles on). Tie-breaks
-    replicate the SQL path: rounded sim desc, cent_id asc (centroid
-    columns sorted by id so argmax's first-hit IS the lowest id)."""
     import numpy as np
     import pandas as pd
 
+    # tie-breaks: rounded sim desc, cent_id asc (centroid columns sorted
+    # by id so argmax's first hit IS the lowest id), as in ivf_assign
     cent_rows = sorted(
         (
             r
@@ -783,7 +684,7 @@ def _semantic_dedup_numpy(
             # NaN (zero-norm vector OR degenerate centroid column) must
             # never win: np.argmax treats NaN as max (review finding) —
             # map to -inf so the tie falls to the lowest cent_id, like
-            # the SQL engine's nulls-last ordering
+            # ivf_assign's nulls-last ordering
             sims = np.where(np.isnan(sims), -np.inf, sims)
             best = np.argmax(_round_half_away(sims, 6), axis=1)
             yield pd.DataFrame(
@@ -813,12 +714,42 @@ def _semantic_dedup_numpy(
             }
         )
 
-    out = assigned.groupBy("bucket").applyInPandas(
+    return assigned.groupBy("bucket").applyInPandas(
         scan_bucket,
         f"{id_col} {src.schema[id_col].dataType.simpleString()}, bucket bigint, "
         "semantic_dup boolean",
     )
-    return out
+
+
+def _round_half_away(x, digits: int):
+    """Vectorized round-half-away-from-zero (SQL ROUND semantics —
+    np.round is banker's rounding and WOULD diverge at exact .5 grid
+    values)."""
+    import numpy as np
+
+    p = 10.0**digits
+    return np.sign(x) * np.floor(np.abs(x) * p + 0.5) / p
+
+
+def _vec_matrix(series, dim: int):
+    """NULL/ragged-tolerant (n, dim) float64 matrix from a pandas Series of
+    array rows. ``np.array(series.tolist())`` crashes (or silently builds an
+    object-dtype array) on None or wrong-length rows; here those rows become
+    ZERO vectors, whose zero norm yields NaN sims downstream — reproducing
+    the column expressions' NULL-sim semantics exactly: the row assigns to the
+    lowest cent_id (NaN → -inf before argmax) and is never marked a dup nor
+    marks another row (NaN >= threshold is False), matching ivf_assign's
+    nulls-last coalesce and the pair filter dropping NULL sims. Rows whose
+    length differs from the codebook dim are treated as NULL (the SQL
+    zip_with pads with NULL → NULL dot → same outcome)."""
+    import numpy as np
+
+    vals = series.tolist()
+    m = np.zeros((len(vals), dim), dtype=np.float64)
+    for i, v in enumerate(vals):
+        if v is not None and len(v) == dim:
+            m[i] = v
+    return m
 
 
 def simhash_candidate_pairs(

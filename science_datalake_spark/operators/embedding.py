@@ -133,7 +133,6 @@ def int8_fidelity(
     mse_col: str = "mse",
     maxe_col: str = "maxe",
     cos_col: str = "cosf",
-    engine: str = "numpy",
     project: list[str] | None = None,
 ) -> DataFrame:
     """Per-vector int8 reconstruction-fidelity metrics — MSE (rounded
@@ -142,95 +141,28 @@ def int8_fidelity(
     :func:`quantize_int8`.
 
     ``project``: optional list of INPUT columns to retain in the output
-    (the three metric columns are always appended). For the numpy engine
-    this shrinks the Arrow return batches — an audit that only rolls up
-    (id, metrics) has no reason to serialize the float and int8 arrays
-    back out of the Python worker (they are ~16× the metric payload).
+    (the three metric columns are always appended). This shrinks the
+    Arrow return batches — an audit that only rolls up (id, metrics) has
+    no reason to serialize the float and int8 arrays back out of the
+    Python worker (they are ~16× the metric payload).
 
-    ``engine`` follows the dual-engine discipline (pq_encode):
+    Engine: Arrow batches, whole-batch BLAS — one ``mapInPandas`` pass.
+    The round-9 form evaluated FIVE independent aggregate/transform HOF
+    passes per vector, each paying the per-expression-node lambda
+    interpretation tax (round-9 verdict item 2 — the same tax pq_encode
+    removed for 11×). Rows are grouped by vector length inside each
+    batch so the math runs as stacked matrix ops. Pairwise vs sequential
+    summation differs in the last ulp, absorbed by the per-vector 10/8-dp
+    rounds before any cohort aggregate; np.round half-even vs SQL
+    half-up only differ on exact decimal midpoints, which continuous
+    data does not produce at 8/10 dp.
 
-    - ``"numpy"`` (default): Arrow batches, whole-batch BLAS — one
-      ``mapInPandas`` pass. The round-9 form evaluated FIVE independent
-      aggregate/transform HOF passes per vector, each paying the
-      per-expression-node lambda interpretation tax (round-9 verdict
-      item 2 — the same tax pq_encode's numpy engine removed for 11×).
-      Pairwise vs sequential summation differs in the last ulp, absorbed
-      by the per-vector 10/8-dp rounds before any cohort aggregate (the
-      pq_encode argument; engines are equality-tested).
-    - ``"sql"``: pure codegen column expressions whose SEQUENTIAL
-      summation matches a relational twin bit-for-bit — and even here the
-      five passes are fused into ONE ``F.aggregate`` over a struct
-      accumulator (se, ma, sv, sq, sd) on a single ``zip_with``'d array,
-      materialized as one column so the three metric projections don't
-      re-run the fold (lambdas block codegen CSE — the
-      quality_gate_flags lesson).
-
-    Contract: NULL vector/codes/scale, length mismatch, or empty arrays
-    → all three metrics NULL (element-level NULLs are outside the
-    contract, as for pq_encode). Map-only at any corpus size.
+    Contract: the retained input columns must be Arrow-convertible (they
+    are re-emitted through Arrow). NULL vector/codes/scale, length
+    mismatch, or empty arrays → all three metrics NULL (element-level
+    NULLs are outside the contract, as for pq_encode). Map-only at any
+    corpus size.
     """
-    if engine == "numpy":
-        return _int8_fidelity_numpy(
-            df, vec_col, q_col, scale_col, mse_col, maxe_col, cos_col, project
-        )
-    if engine != "sql":
-        raise ValueError(f"engine must be 'numpy' or 'sql', got {engine!r}")
-    v, qv, s = F.col(vec_col), F.col(q_col), F.col(scale_col)
-    zipped = F.zip_with(
-        v, qv, lambda a, b: F.struct(a.cast("double").alias("a"), (b.cast("double") * s).alias("b"))
-    )
-    init = F.struct(*[F.lit(0.0).alias(n) for n in ("se", "ma", "sv", "sq", "sd")])
-
-    def step(acc, x):
-        e = x["a"] - x["b"]
-        return F.struct(
-            (acc["se"] + e * e).alias("se"),
-            F.greatest(acc["ma"], F.abs(e)).alias("ma"),
-            (acc["sv"] + x["a"] * x["a"]).alias("sv"),
-            (acc["sq"] + x["b"] * x["b"]).alias("sq"),
-            (acc["sd"] + x["a"] * x["b"]).alias("sd"),
-        )
-
-    valid = (
-        v.isNotNull() & qv.isNotNull() & s.isNotNull()
-        & (F.size(v) == F.size(qv)) & (F.size(v) > 0)
-    )
-    staged = df.withColumn("__i8acc", F.when(valid, F.aggregate(zipped, init, step)))
-    a = F.col("__i8acc")
-    out = (
-        staged.withColumn(mse_col, F.round(a["se"] / F.size(v), 10))
-        .withColumn(maxe_col, a["ma"])
-        .withColumn(
-            cos_col,
-            F.when(
-                (a["sv"] > 0) & (a["sq"] > 0),
-                F.round(a["sd"] / (F.sqrt(a["sv"]) * F.sqrt(a["sq"])), 8),
-            ),
-        )
-        .drop("__i8acc")
-    )
-    if project is not None:
-        out = out.select(*project, mse_col, maxe_col, cos_col)
-    return out
-
-
-def _int8_fidelity_numpy(
-    df: DataFrame,
-    vec_col: str,
-    q_col: str,
-    scale_col: str,
-    mse_col: str,
-    maxe_col: str,
-    cos_col: str,
-    project: list[str] | None = None,
-) -> DataFrame:
-    """The Arrow/numpy engine behind int8_fidelity (see its docstring).
-    Rows are grouped by vector length inside each batch so the math runs
-    as stacked matrix ops (the fixture is uniform-d → one stack per
-    batch); per-element arithmetic replicates the SQL engine exactly
-    (float64 widening is exact; np.round half-even vs SQL half-up only
-    differ on exact decimal midpoints, which continuous data does not
-    produce at 8/10 dp)."""
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -386,110 +318,25 @@ def pq_encode(
     books: list[list[list[float]]],
     vec_col: str = "embedding",
     code_col: str = "pq_code",
-    engine: str = "numpy",
 ) -> DataFrame:
     """Encode vectors to PQ codes: per subspace j, the index of the
-    nearest centroid by squared L2 (rounded to 6 dp BEFORE the argmin
-    with centroid-index tie-break, so engines agree on boundaries).
+    nearest centroid by squared L2 (rounded to 6 dp BEFORE the argmin,
+    whose first-minimum rule IS the centroid-index tie-break).
 
-    ``engine``: the dual-engine discipline (cosine_topk/semantic_dedup).
-    ``"numpy"`` (default) runs the n×k×m distance tensor as vectorized
-    BLAS inside mapInPandas — the argmin workload is exactly where
-    interpreted per-centroid lambdas lose (measured 3.2 s → 0.2 s per
-    2k-vector pass at sf0.1; the HOF tree pays per expression NODE, not
-    per element). ``"sql"`` keeps the pure column-expression form whose
-    sequential float summation matches a relational twin bit-for-bit;
-    the numpy path's pairwise summation can differ in the last ulp,
-    which flips a code only when a true distance sits within ~1e-15 of
-    the 6-dp rounding grid (engines are equality-tested on the
-    fixtures). The numpy path re-emits the input schema through Arrow,
-    so exotic non-Arrow column types need ``engine="sql"``.
-    Map-only — the codebook rides a 1-row broadcast; nothing shuffles.
-    A NULL (or wrong-length) vector yields a NULL code array: its
-    per-subspace distances are NULL, which must LOSE the argmin (the
-    ivf_assign nulls-last guard), leaving no winner.
+    Engine: the n×k×m distance tensor runs as vectorized BLAS inside
+    mapInPandas — the argmin workload is exactly where interpreted
+    per-centroid lambdas lose (measured 3.2 s → 0.2 s per 2k-vector pass
+    at sf0.1 against the column-expression form; the HOF tree pays per
+    expression NODE, not per element). Distances are float64 (the
+    float32→float64 widening is exact); pairwise summation can differ
+    from a relational twin's sequential order in the last ulp, which
+    flips a code only when a true distance sits within ~1e-15 of the
+    6-dp rounding grid. Map-only; nothing shuffles.
 
-    The double-cast and the m subvector slices are materialized as ONE
-    layered column before the per-centroid lambdas: a slice expression
-    referenced from inside the transform-over-centroids is re-evaluated
-    PER CENTROID (the HOF outer-expression trap — k× the cast+slice
-    work; measured 6.2 → 2.9 s on the sf0.1 recall audit), while a
-    column attribute access is free."""
-    if engine == "numpy":
-        return _pq_encode_numpy(df, books, vec_col, code_col)
-    if engine != "sql":
-        raise ValueError(f"engine must be 'numpy' or 'sql', got {engine!r}")
-    m = len(books)
-    w = len(books[0][0])
-    spark = df.sparkSession
-    staged = df.crossJoin(F.broadcast(_pq_book_df(spark, books)))
-    v = F.col(vec_col)
-    staged = staged.withColumn(
-        "__vd", F.transform(v, lambda x: x.cast("double"))
-    ).withColumn(
-        "__subs",
-        F.array(*[F.slice(F.col("__vd"), j * w + 1, w) for j in range(m)]),
-    )
-
-    def code_for(j: int):
-        sub = F.col("__subs")[j]
-        cents = F.col("__pqbook")[j]
-
-        def scored(c):
-            dist = F.round(
-                F.aggregate(
-                    F.zip_with(sub, c["v"], lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                ),
-                6,
-            )
-            # NULL/short subvector → NULL dist: sort LAST, never win
-            nd = F.coalesce(dist, F.lit(float("inf")))
-            return F.struct(nd.alias("nd"), c["c"].alias("c"))
-
-        best = F.array_min(F.transform(cents, scored))
-        # an all-NULL scoring (impossible with a non-empty codebook) or a
-        # NULL input vector must produce a NULL code, not centroid 0.
-        # The length gate is EXACT (== m*w, round-9 ADVICE): a per-subspace
-        # `size >= (j+1)*w` silently encoded the first d dims of an
-        # OVER-length vector, contradicting the wrong-length-to-NULL
-        # contract the numpy engine enforces.
-        return F.when(
-            (F.size(v) == m * w) & best["nd"].isNotNull()
-            & (best["nd"] != float("inf")),
-            best["c"],
-        )
-
-    codes = F.array(*[code_for(j) for j in range(m)])
-    out = staged.withColumn(
-        code_col,
-        F.when(
-            v.isNotNull() & ~F.array_contains(
-                F.transform(codes, lambda c: c.isNull()), True
-            ),
-            codes,
-        ),
-    )
-    return out.drop("__pqbook", "__vd", "__subs")
-
-
-def _pq_encode_numpy(
-    df: DataFrame,
-    books: list[list[list[float]]],
-    vec_col: str,
-    code_col: str,
-) -> DataFrame:
-    """The Arrow/numpy engine behind pq_encode (see its docstring).
-    Replicates the SQL path row-for-row: distances in float64 (the
-    explicit double cast — float32→float64 widening is exact) rounded
-    at 6 dp before the argmin, whose first-minimum rule IS the
-    centroid-index tie-break (genuine ties come from duplicate
-    subvectors, where both engines round the identical double; np.round
-    half-even vs SQL half-up only disagrees for a sum landing exactly
-    on a half-digit boundary, which continuous squared-L2 data does not
-    produce — engines are equality-tested). NULL / wrong-length vectors
-    code to NULL."""
+    Contract: every input column must be Arrow-convertible (the rows are
+    re-emitted through Arrow). A NULL (or wrong-length) vector yields a
+    NULL code array — never centroid 0.
+    """
     import numpy as np
 
     m = len(books)

@@ -311,8 +311,6 @@ def knn_embedding_join(
     left_vec: str,
     right_vec: str,
     threshold: float = 0.65,
-    engine: str = "numpy",
-    query_rows: list[tuple] | None = None,
 ) -> DataFrame:
     """Embedding kNN linkage: cosine-score right candidates per left
     entity, similarity floor, keep the single best match per left id.
@@ -323,56 +321,45 @@ def knn_embedding_join(
 
     Scale: left (queries) broadcasts; right streams — no corpus shuffle.
 
-    ``engine``: ``"numpy"`` (default) delegates the |L|·|R| scoring to
-    the Arrow/BLAS engine shared with cosine_topk (threshold pushed into
-    the per-batch scan, best-per-left as a k=1 partial top-k); ``"sql"``
-    keeps the column-expression form whose float summation order matches
-    a relational twin bit-for-bit (the cosine_topk dual-engine contract).
-
-    ``query_rows`` (numpy engine only): pre-collected (id, vector)
-    pairs standing in for the engine's own collect of ``left`` — one
-    collect job shared across several passes over variants of the same
-    cohort (see _cosine_topk_numpy).
+    Tiers (cosine_topk's): one ``limit(cap+1)`` collect of the left side
+    picks them. At most ``similarity._COSINE_MAX_QUERY_ROWS`` left rows
+    are scored on the driver-collected Arrow/BLAS tier (threshold pushed
+    into the per-batch scan, best-per-left as a k=1 partial top-k); more
+    take the distributed column-expression tier. Both round similarity
+    half-away to 6 digits before the threshold and the ranking, so they
+    return the same rows.
     """
-    from science_datalake_spark.operators.similarity import (
-        _cosine_topk_numpy,
-        as_double_vec,
-        cosine,
-    )
+    from science_datalake_spark.operators import similarity as S
 
-    if engine == "numpy":
-        out = _cosine_topk_numpy(
+    q = left.select(F.col(left_id).alias("__id"), F.col(left_vec).alias("__v"))
+    qrows = S._probe_query_side(q, "__id", "__v", S._COSINE_MAX_QUERY_ROWS)
+    if len(qrows) <= S._COSINE_MAX_QUERY_ROWS:
+        out = S._cosine_topk_numpy(
             right.select(F.col(right_id).alias("__id"), F.col(right_vec).alias("__v")),
-            left.select(F.col(left_id).alias("__id"), F.col(left_vec).alias("__v")),
+            q,
+            qrows,
             "__id",
             "__v",
             k=1,
             exclude_self=False,
             round_digits=6,
             threshold=threshold,
-            query_rows=query_rows,
         )
         return out.select(
             F.col("query_id").alias("left_id"),
             F.col("cand_id").alias("right_id"),
             F.col("sim").alias("similarity"),
         )
-    if engine != "sql":
-        raise ValueError(f"engine must be 'numpy' or 'sql', got {engine!r}")
-    if query_rows is not None:
-        raise ValueError(
-            "query_rows is a numpy-engine device (one driver collect shared "
-            "across passes); the sql engine broadcasts the relation lazily"
-        )
 
-    q = left.select(F.col(left_id).alias("left_id"), as_double_vec(left_vec).alias("__lv"))
-    c = right.select(F.col(right_id).alias("right_id"), as_double_vec(right_vec).alias("__rv"))
+    q = left.select(F.col(left_id).alias("left_id"), S.as_double_vec(left_vec).alias("__lv"))
+    c = right.select(F.col(right_id).alias("right_id"), S.as_double_vec(right_vec).alias("__rv"))
+    sim = F.round(S.cosine(F.col("__lv"), F.col("__rv")), 6)
     scored = (
         c.join(F.broadcast(q), F.lit(True))
         .select(
             "left_id",
             "right_id",
-            F.round(cosine(F.col("__lv"), F.col("__rv")), 6).alias("similarity"),
+            F.when(F.size("__lv") == S._query_width(qrows), sim).alias("similarity"),
         )
         .filter(F.col("similarity") >= threshold)
     )

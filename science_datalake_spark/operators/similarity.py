@@ -13,14 +13,18 @@ Three tiers (BASELINE.json north star):
   keyed on bucket). This is the FAISS IVF design as a DataFrame plan —
   recall tunable via n_probe, cost O(|C|·K) once + O(|Q|·probed lists).
 
-Vector math engines: the ANN tiers (sign-LSH, IVF) stay native Spark SQL
+Vector math: the ANN tiers (sign-LSH, IVF) stay native Spark SQL
 higher-order functions (zip_with + aggregate) over DOUBLE — JVM-side,
-bucket-pruned, cheap per probed candidate. The exact brute-force tier
-scores |Q|·|C| pairs, which is precisely the workload where interpreted
-lambdas lose to BLAS (~5M element-ops/s vs billions — the semantic_dedup
-measurement), so ``cosine_topk`` defaults to an Arrow/numpy matmul engine
-with the column-expression form kept for bit-level oracle parity
-(``engine="sql"``).
+bucket-pruned, cheap per probed candidate. The exact operators
+(``cosine_topk``, ``late_interaction_topk``, and ``knn_embedding_join``
+in linkage.py) score |Q|·|C| pairs, which is precisely the workload
+where interpreted lambdas lose to BLAS (~5M element-ops/s vs billions —
+the semantic_dedup measurement). Each collects its query side with one
+``limit(cap+1)`` job: at or under the cap it runs an Arrow/numpy matmul
+against the collected query matrix; over it, the column-expression form
+with a lazily broadcast query relation, which needs no driver memory.
+Both return the same rows (ARCHITECTURE.md, "tier picked by the capped
+collect").
 """
 
 from __future__ import annotations
@@ -31,6 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from science_datalake_spark.operators.windows import top_k_per_key
+from science_datalake_spark.util import unpersist
 
 
 def as_double_vec(col: str | Column) -> Column:
@@ -49,6 +54,37 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / F.sqrt(dot(a, a) * dot(b, b))
 
 
+#: the exact operators' driver cap: ``cosine_topk`` and ``knn_embedding_join``
+#: score a query side of at most this many rows on the driver-collected
+#: numpy tier and a bigger one on the distributed tier;
+#: ``cosine_top1_prefix_dims`` has no distributed tier and raises over it
+_COSINE_MAX_QUERY_ROWS = 65536
+#: ``late_interaction_topk``'s driver cap (its query matrix holds every
+#: token vector of every query)
+_LATE_INTERACTION_MAX_QUERY_ROWS = 4096
+
+
+def _probe_query_side(
+    queries: DataFrame, id_col: str, vec_col: str, cap: int
+) -> list[tuple]:
+    """Up to ``cap + 1`` (id, vector) rows of the query side. This one
+    ``limit(cap+1)`` collect both picks the tier (more than ``cap`` rows:
+    distributed) and, at or under the cap, is the driver tier's query
+    batch, so no probe job is added and the driver never holds more than
+    ``cap + 1`` rows."""
+    return [
+        (r[0], r[1])
+        for r in queries.select(id_col, vec_col).limit(cap + 1).collect()
+    ]
+
+
+def _query_width(qrows: list[tuple]) -> int:
+    """The vector width both tiers score at: the first non-null probed
+    query vector's. A vector of any other width, on either side, scores
+    NULL on both tiers (the driver tier's query matrix has this width)."""
+    return next((len(v) for _, v in qrows if v is not None), 0)
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -56,8 +92,6 @@ def cosine_topk(
     vec_col: str,
     k: int = 10,
     exclude_self: bool = True,
-    engine: str = "numpy",
-    max_query_rows: int = 65536,
     carry_cols: list[str] | None = None,
 ) -> DataFrame:
     """Brute-force cosine top-k: broadcast queries × corpus.
@@ -69,42 +103,38 @@ def cosine_topk(
     back onto the top-k ids (the sim_knn_label_vote round-12 profile —
     the labels join re-read the whole corpus to label 100 winners).
 
-    Scale: queries broadcast (small side), corpus streams — no shuffle of
-    the corpus at all; the per-query top-k is a window over (query_id),
-    which shuffles only (query, candidate, sim) triples, k-prunable by AQE.
+    Scale: no shuffle of the corpus at all; the per-query top-k is a
+    window over (query_id), which shuffles only (query, candidate, sim)
+    triples.
 
-    ``engine``: the semantic_dedup dual-engine discipline, applied to the
-    exact tier (round-7 verdict "Next round" #4). ``"numpy"`` (default)
-    streams the corpus through ``mapInPandas``: one BLAS matmul per Arrow
-    batch against the driver-collected query matrix, with a per-batch
-    partial top-k so the final window sees only ``batches × |Q| × k``
-    rows instead of ``|C| × |Q|`` — the partial is safe because each
-    candidate's score is batch-independent and the order (sim desc,
-    cand_id asc) is total. ``"sql"`` keeps the higher-order-lambda column
-    expressions, whose float summation ORDER matches the DuckDB oracle
-    exactly; the numpy path's blocked/SIMD summation can differ in the
-    last ulp, which flips a rounded boundary only when a true cosine sits
-    within ~1e-15 of the 4-digit rounding grid (engines are
-    equality-tested on the fixtures; use "sql" where bit-reproducibility
-    against a relational twin matters more than speed).
+    Two tiers, picked by the size of the query side (eager: building the
+    returned DataFrame runs one ``limit(cap+1)`` collect job):
 
-    NOTE (eager action): ``engine="numpy"`` collects the query relation to
-    the driver AT CALL TIME — constructing the returned DataFrame runs a
-    Spark job. The collect is bounded by ``max_query_rows`` (collection
-    stops at the cap and raises rather than materializing an oversized
-    query side); callers with a large query relation should pass
-    ``engine="sql"``, whose broadcast degrades gracefully instead.
+    - at most ``_COSINE_MAX_QUERY_ROWS`` query rows: the driver tier
+      streams the corpus through ``mapInPandas``, one BLAS matmul per
+      Arrow batch against the collected query matrix, with a per-batch
+      partial top-k so the final window sees only ``batches × |Q| × k``
+      rows instead of ``|C| × |Q|`` — the partial is safe because each
+      candidate's score is batch-independent and the order (sim desc,
+      cand_id asc) is total.
+    - more: the distributed tier broadcasts the query relation lazily
+      and scores each pair with column expressions.
+
+    Both tiers round sims half-away to 4 digits before ranking and give
+    NULL, ragged and zero-norm vectors a NULL sim ranked last, so they
+    return the same rows; the BLAS summation order can differ from the
+    column expressions' in the last ulp, which flips a rounded boundary
+    only when a true cosine sits within ~1e-15 of the rounding grid.
     """
     carry = list(carry_cols or [])
     if bad := set(carry) & {"query_id", "cand_id", "sim", id_col, vec_col}:
         raise ValueError(f"carry_cols clash with output/input columns: {bad}")
-    if engine == "numpy":
+    qrows = _probe_query_side(queries, id_col, vec_col, _COSINE_MAX_QUERY_ROWS)
+    if len(qrows) <= _COSINE_MAX_QUERY_ROWS:
         return _cosine_topk_numpy(
-            corpus, queries, id_col, vec_col, k, exclude_self,
-            max_query_rows=max_query_rows, carry_cols=carry,
+            corpus, queries, qrows, id_col, vec_col, k, exclude_self,
+            carry_cols=carry,
         )
-    if engine != "sql":
-        raise ValueError(f"engine must be 'numpy' or 'sql', got {engine!r}")
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double_vec(vec_col).alias("__qv")
     )
@@ -114,10 +144,11 @@ def cosine_topk(
     pairs = c.join(F.broadcast(q), F.lit(True))
     if exclude_self:
         pairs = pairs.filter(F.col("query_id") != F.col("cand_id"))
+    sim = F.round(cosine(F.col("__qv"), F.col("__cv")), 4)
     scored = pairs.select(
         "query_id",
         "cand_id",
-        F.round(cosine(F.col("__qv"), F.col("__cv")), 4).alias("sim"),
+        F.when(F.size("__qv") == _query_width(qrows), sim).alias("sim"),
         *carry,
     )
     return top_k_per_key(
@@ -128,28 +159,21 @@ def cosine_topk(
 def _cosine_topk_numpy(
     corpus: DataFrame,
     queries: DataFrame,
+    qrows: list[tuple],
     id_col: str,
     vec_col: str,
     k: int,
     exclude_self: bool,
     round_digits: int = 4,
     threshold: float | None = None,
-    max_query_rows: int = 65536,
     carry_cols: list[str] | None = None,
-    query_rows: list[tuple] | None = None,
 ) -> DataFrame:
-    """The Arrow/numpy engine behind cosine_topk (see its docstring) and
-    knn_embedding_join (linkage.py — which passes ``threshold``).
+    """The driver tier of cosine_topk and knn_embedding_join (linkage.py —
+    which passes ``threshold``): the corpus scored against ``qrows``, the
+    collected (id, vector) query batch. ``queries`` gives the output id
+    type.
 
-    ``query_rows``: optional pre-collected query batch as (id, vector)
-    pairs, replacing the engine's own driver collect of ``queries``.
-    For callers that run SEVERAL passes over variants of one cohort
-    (sim_matryoshka_fidelity: full + three prefix-sliced retrievals),
-    each engine call is otherwise a separate collect JOB whose cost is
-    fixed per run — collect once, slice driver-side, pass the pairs.
-    ``queries`` is still required for its schema (output id type).
-
-    Semantics replicate the SQL path row-for-row: sims are rounded
+    Semantics replicate the distributed tier row-for-row: sims are rounded
     half-away-from-zero to ``round_digits`` BEFORE ranking; a NULL,
     ragged, or zero-norm vector on either side yields a NULL sim (the
     zip_with-pads-NULL / divide-by-zero-is-NULL behavior of the column
@@ -163,26 +187,9 @@ def _cosine_topk_numpy(
 
     from science_datalake_spark.operators.dedup import _round_half_away, _vec_matrix
 
-    # the query set is driver-collected: it is the SAME relation the SQL
-    # path broadcasts, small by contract (an ANN/linkage query batch).
-    # The collect is CAPPED — limit(cap+1) bounds what the driver ever
-    # materializes, and an over-cap query side raises with a pointer to
-    # the lazy engine instead of OOMing the driver (ADVICE round 8)
-    if query_rows is None:
-        qrows = queries.select(id_col, vec_col).limit(max_query_rows + 1).collect()
-        q_ids = [r[id_col] for r in qrows]
-        qvecs = [r[vec_col] for r in qrows]
-    else:
-        qrows = query_rows
-        q_ids = [t[0] for t in qrows]
-        qvecs = [t[1] for t in qrows]
-    if len(qrows) > max_query_rows:
-        raise ValueError(
-            f"numpy cosine engine collects the query side to the driver, "
-            f"but it exceeds max_query_rows={max_query_rows}; pass "
-            f'engine="sql" (lazy broadcast) or raise max_query_rows'
-        )
-    dim = next((len(v) for v in qvecs if v is not None), 0)
+    q_ids = [t[0] for t in qrows]
+    qvecs = [t[1] for t in qrows]
+    dim = _query_width(qrows)
     nq = len(qrows)
     qmat = _vec_matrix(pd.Series(qvecs), dim) if nq else None
     qq = (qmat * qmat).sum(axis=1) if nq else None
@@ -262,7 +269,6 @@ def cosine_top1_prefix_dims(
     dims: list[int | None],
     round_digits: int = 6,
     threshold: float | None = None,
-    max_query_rows: int = 65536,
     query_rows: list[tuple] | None = None,
 ) -> DataFrame:
     """Top-1 cosine retrieval for SEVERAL prefix-truncated variants of one
@@ -288,22 +294,25 @@ def cosine_top1_prefix_dims(
     engine calls are N corpus scans, N Python boundary crossings and N
     plan-construction rounds for one decision; here the corpus parquet
     is read once, each Arrow batch is sliced as numpy views, and the
-    merge is one window instead of N."""
+    merge is one window instead of N.
+
+    ``query_rows``: the query side as pre-collected (id, vector) pairs,
+    for a caller that already holds its cohort on the driver; ``queries``
+    then gives only the output id type. There is no distributed tier:
+    a query side of more than ``_COSINE_MAX_QUERY_ROWS`` rows, collected
+    here or passed in, raises."""
     import numpy as np
     import pandas as pd
 
     from science_datalake_spark.operators.dedup import _round_half_away, _vec_matrix
-    from science_datalake_spark.operators.windows import top_k_per_key
 
-    if query_rows is None:
-        qraw = queries.select(id_col, vec_col).limit(max_query_rows + 1).collect()
-        qpairs = [(r[id_col], r[vec_col]) for r in qraw]
-    else:
-        qpairs = query_rows
-    if len(qpairs) > max_query_rows:
+    qpairs = query_rows
+    if qpairs is None:
+        qpairs = _probe_query_side(queries, id_col, vec_col, _COSINE_MAX_QUERY_ROWS)
+    if len(qpairs) > _COSINE_MAX_QUERY_ROWS:
         raise ValueError(
             f"cosine_top1_prefix_dims collects the query side to the driver, "
-            f"but it exceeds max_query_rows={max_query_rows}"
+            f"but it exceeds {_COSINE_MAX_QUERY_ROWS} rows"
         )
     q_ids = [t[0] for t in qpairs]
     nq = len(qpairs)
@@ -549,7 +558,7 @@ def ivf_index(
         if hit is not None:
             # before the rebuild: a persist of an equal plan would
             # otherwise find the stale cached data
-            _unpersist(_IVF_INDEX_CACHE.pop(key)[2])
+            unpersist(_IVF_INDEX_CACHE.pop(key)[2])
     cents = exemplar_centroids(corpus, id_col, vec_col, k=k)
     assigned = ivf_assign(corpus, cents, id_col, vec_col)
     if cache_key is None:
@@ -557,18 +566,9 @@ def ivf_index(
     assigned = assigned.persist()
     assigned.count()
     while len(_IVF_INDEX_CACHE) >= _IVF_INDEX_CACHE_CAP:
-        _unpersist(_IVF_INDEX_CACHE.pop(next(iter(_IVF_INDEX_CACHE)))[2])
+        unpersist(_IVF_INDEX_CACHE.pop(next(iter(_IVF_INDEX_CACHE)))[2])
     _IVF_INDEX_CACHE[key] = (signature, cents, assigned)
     return cents, assigned
-
-
-def _unpersist(df: DataFrame) -> None:
-    try:
-        df.unpersist()
-    except Exception:
-        # the evicted handle may belong to a stopped session; dropping
-        # the reference is all that is needed
-        pass
 
 
 def ivf_index_write(
@@ -697,20 +697,21 @@ def token_slices(vec: Column, num_tokens: int) -> Column:
 def _late_interaction_numpy(
     docs: DataFrame,
     queries: DataFrame,
+    qrows: list[tuple],
     id_col: str,
     vec_col: str,
     num_tokens: int,
     k: int,
     round_digits: int,
-    max_query_rows: int = 4096,
     num_tokens_col: str | None = None,
 ) -> DataFrame:
-    """BLAS engine behind late_interaction_topk (see its docstring).
+    """The driver tier of late_interaction_topk (see its docstring): the
+    docs scored against ``qrows``, the collected (id, vector) query batch.
     Per Arrow batch: one (batch·nt, td) × (td, nq·nt) matmul, max over
     the doc-token axis, sum over the query-token axis, per-batch partial
     top-k per query. Scores are rounded half-away BEFORE ranking, like
-    the SQL path; a NULL/ragged vector on EITHER side yields a NULL
-    score ranked last — enforced explicitly (bad rows are detected
+    the distributed tier; a NULL/ragged vector on EITHER side yields a
+    NULL score ranked last — enforced explicitly (bad rows are detected
     before _vec_matrix zero-fills them: a zero vector is indistinguishable
     from NULL only under cosine's zero-norm NaN, not under raw MaxSim
     dot products, where it would silently score 0.0 — round-12 advice).
@@ -722,18 +723,11 @@ def _late_interaction_numpy(
 
     from science_datalake_spark.operators.dedup import _round_half_away, _vec_matrix
 
-    qrows = queries.select(id_col, vec_col).limit(max_query_rows + 1).collect()
-    if len(qrows) > max_query_rows:
-        raise ValueError(
-            f"late-interaction collects the query batch to the driver, but "
-            f"it exceeds max_query_rows={max_query_rows}; pass engine='sql' "
-            f"(lazy broadcast) or raise max_query_rows"
-        )
-    q_ids = [r[id_col] for r in qrows]
-    qvecs = [r[vec_col] for r in qrows]
-    dim = next((len(v) for v in qvecs if v is not None), 0)
+    q_ids = [t[0] for t in qrows]
+    qvecs = [t[1] for t in qrows]
+    dim = _query_width(qrows)
     nq = len(qrows)
-    td = dim // num_tokens if num_tokens else 0
+    td = dim // num_tokens
     qmat = _vec_matrix(pd.Series(qvecs), dim) if nq else None
     # (nq*nt, td): query token vectors stacked in (query, token) order
     qtok = qmat.reshape(nq * num_tokens, td) if nq else None
@@ -816,7 +810,6 @@ def late_interaction_topk(
     vec_col: str,
     num_tokens: int,
     k: int,
-    engine: str = "numpy",
     round_digits: int = 6,
     num_tokens_col: str | None = None,
 ) -> DataFrame:
@@ -830,35 +823,42 @@ def late_interaction_topk(
     Input layout: each row's ``vec_col`` holds the document's
     ``num_tokens`` token embeddings FLAT in one array (token dim =
     size/num_tokens) — the storage shape a 100 TB corpus wants (one
-    fixed-width array column, no per-token rows to shuffle). Real
-    ColBERT corpora are RAGGED — documents shorter than ``num_tokens``
-    are zero/garbage-padded to the fixed width — so ``num_tokens_col``
-    (optional, an int column on ``docs``) declares each row's REAL token
-    count: padding positions are excluded from the per-query-token max
-    on BOTH engines (an unmasked zero pad wrongly wins the max whenever
-    every real dot product is negative), and a doc with zero real tokens
-    scores NULL. NULL/ragged vectors on either side score NULL (ranked
-    last), identically on both engines.
+    fixed-width array column, no per-token rows to shuffle). The first
+    non-null query vector's width must divide by ``num_tokens``, or the
+    call raises ``ValueError``. Real ColBERT corpora are RAGGED —
+    documents shorter than ``num_tokens`` are zero/garbage-padded to the
+    fixed width — so ``num_tokens_col`` (optional, an int column on
+    ``docs``) declares each row's REAL token count: padding positions
+    are excluded from the per-query-token max (an unmasked zero pad
+    wrongly wins the max whenever every real dot product is negative),
+    and a doc with zero real tokens scores NULL. NULL/ragged vectors on
+    either side score NULL (ranked last).
 
-    ``engine="numpy"`` (default) streams doc batches through one BLAS
-    matmul + axis-max + axis-sum with per-batch partial top-k — the
-    dual-engine contract shared with cosine_topk (scores rounded
-    half-away to ``round_digits`` before ranking on BOTH paths, so the
-    engines and the DuckDB twin agree). ``engine="sql"`` keeps the pure
-    column-expression form: queries broadcast, ONE map-only pass
-    computes MaxSim in-row with array HOFs (the per-token max is
-    order-free; the query-token sum is an explicit left-associated add
-    chain the twin replays bit-for-bit). Either way no shuffle touches
-    the corpus — only scored (query, doc) pairs move, and only to the
-    top-k window.
+    Two tiers, picked like cosine_topk's by one ``limit(cap+1)`` collect
+    of the query side (``_LATE_INTERACTION_MAX_QUERY_ROWS``). At or under
+    the cap, doc batches stream through one BLAS matmul + axis-max +
+    axis-sum with a per-batch partial top-k. Over it, queries broadcast
+    lazily and ONE map-only pass computes MaxSim in-row with array HOFs
+    (the per-token max is order-free; the query-token sum is an explicit
+    left-associated add chain). Both round scores half-away to
+    ``round_digits`` before ranking, so they return the same rows.
+    Either way no shuffle touches the corpus — only scored (query, doc)
+    pairs move, and only to the top-k window.
     """
-    if engine == "numpy":
+    qrows = _probe_query_side(
+        queries, id_col, vec_col, _LATE_INTERACTION_MAX_QUERY_ROWS
+    )
+    width = _query_width(qrows)
+    if num_tokens < 1 or width % num_tokens:
+        raise ValueError(
+            f"query vectors of width {width} do not split into "
+            f"num_tokens={num_tokens} equal token vectors"
+        )
+    if len(qrows) <= _LATE_INTERACTION_MAX_QUERY_ROWS:
         return _late_interaction_numpy(
-            docs, queries, id_col, vec_col, num_tokens, k, round_digits,
+            docs, queries, qrows, id_col, vec_col, num_tokens, k, round_digits,
             num_tokens_col=num_tokens_col,
         )
-    if engine != "sql":
-        raise ValueError(f"engine must be 'numpy' or 'sql', got {engine!r}")
     q = queries.select(
         F.col(id_col).alias("query_id"), as_double_vec(vec_col).alias("__qv")
     )
@@ -894,12 +894,14 @@ def late_interaction_topk(
     score = maxes[0]
     for m in maxes[1:]:
         score = score + m
-    # a RAGGED (wrong-length) doc vector scores NULL, matching the BLAS
-    # engine — without the guard, slice() silently truncates and scores
-    # the partial tokens (size(NULL) is NULL, so NULL vecs pass through
-    # the when() as NULL too)
-    score = F.when(F.size("__dv") == F.size("__qv"), score)
-    # round BEFORE ranking — the dual-engine/oracle agreement point
+    # a RAGGED (wrong-length) vector on either side scores NULL, matching
+    # the driver tier — without the guard, slice() silently truncates and
+    # scores the partial tokens (size(NULL) is NULL or -1, so NULL vecs
+    # fail the when() too)
+    score = F.when(
+        (F.size("__dv") == F.size("__qv")) & (F.size("__qv") == width), score
+    )
+    # round BEFORE ranking — the tier/oracle agreement point
     scored = pairs.select(
         "query_id", "doc_id", F.round(score, round_digits).alias("score")
     )

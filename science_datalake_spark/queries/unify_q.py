@@ -29,6 +29,7 @@ from science_datalake_spark.functions import synth_doi
 from science_datalake_spark.queries import query
 from science_datalake_spark.sources.sinks import table_signature
 from science_datalake_spark.unify import build_unified_papers, coverage_upset
+from science_datalake_spark.util import unpersist
 
 #: Shared DOI key domains: oa 0..599, s2 0..399, sci 100..599 — pairwise
 #: overlaps and per-source exclusives, so all flag combinations appear.
@@ -252,13 +253,7 @@ def _synth_unified(spark: SparkSession, sf_dir: str) -> DataFrame:
         # evict the OLDEST entry (FIFO, like the IVF index registry in
         # similarity.py) — dict.popitem() would drop the newest and let
         # stale spines from stopped sessions linger
-        _, old = _UNIFIED_CACHE.pop(next(iter(_UNIFIED_CACHE)))
-        try:
-            old.unpersist()
-        except Exception:
-            # evicted handle may belong to a stopped session; dropping the
-            # reference is all that is needed
-            pass
+        unpersist(_UNIFIED_CACHE.pop(next(iter(_UNIFIED_CACHE)))[1])
     _UNIFIED_CACHE[key] = (signature, u)
     return u
 

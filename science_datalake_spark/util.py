@@ -86,3 +86,17 @@ def round_half_away(x: float, digits: int) -> float:
     p = 10.0**digits
     s = 1.0 if x >= 0 else -1.0
     return s * math.floor(abs(x) * p + 0.5) / p
+
+
+def unpersist(df: DataFrame) -> None:
+    """Release a cached handle that a session cache is dropping. A handle
+    whose session was stopped raises ``Py4JJavaError`` (the stopped block
+    manager has no driver endpoint); its cache died with that session, so
+    dropping the reference is all that is needed. Any other error
+    propagates."""
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        df.unpersist()
+    except Py4JJavaError:
+        pass

@@ -216,30 +216,46 @@ def test_sim_ivf_durable_query_matches_in_memory(spark, sf_smoke):
 
 
 # ---------------------------------------------------------------------------
-# Dual-engine exact cosine tier (round-8: numpy default, sql for oracle parity)
+# Exact tiers: the capped driver collect picks the numpy tier (at or under
+# the cap) or the distributed column-expression tier (over it)
 # ---------------------------------------------------------------------------
 
 
-def test_cosine_topk_engines_equal_on_fixture(spark, sf_oracle):
-    """The Arrow/numpy engine must return row-for-row what the column-
-    expression engine returns on the real fixture (the rounded-to-4-digits
-    boundary contract of the dual-engine discipline)."""
+def _at_and_over_cap(monkeypatch, cap_name, n_queries, build):
+    """``build()``'s sorted rows with the driver cap ``cap_name`` at
+    ``n_queries`` (the numpy tier), then at ``n_queries - 1`` (the same
+    query relation, now over the cap: the distributed tier). Each plan is
+    checked for the tier it names."""
+    from science_datalake_spark.operators import similarity as S
+    from tests import plan_helpers as plans
+
+    out = []
+    for cap, numpy_tier in ((n_queries, True), (n_queries - 1, False)):
+        monkeypatch.setattr(S, cap_name, cap)
+        df = build()
+        assert ("MapInPandas" in plans.physical_plan(df)) == numpy_tier, cap
+        out.append(sorted(map(tuple, df.collect())))
+    return out
+
+
+def test_cosine_topk_engines_equal_on_fixture(spark, sf_oracle, monkeypatch):
+    """The numpy tier must return row-for-row what the distributed
+    column-expression tier returns on the real fixture (the
+    rounded-to-4-digits boundary contract)."""
     e = table(spark, sf_oracle, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    sql_rows = sorted(
-        map(tuple, cosine_topk(e, q, "vec_id", "embedding", k=10, engine="sql").collect())
-    )
-    np_rows = sorted(
-        map(tuple, cosine_topk(e, q, "vec_id", "embedding", k=10, engine="numpy").collect())
+    np_rows, sql_rows = _at_and_over_cap(
+        monkeypatch, "_COSINE_MAX_QUERY_ROWS", 5,
+        lambda: cosine_topk(e, q, "vec_id", "embedding", k=10),
     )
     assert np_rows == sql_rows
     assert len(np_rows) == 50
 
 
-def test_cosine_topk_engines_equal_on_degenerate_rows(spark):
+def test_cosine_topk_engines_equal_on_degenerate_rows(spark, monkeypatch):
     """NULL, zero-norm, and wrong-length vectors must produce identical
-    (NULL-sim, nulls-last, cand_id-tiebreak) rankings in both engines —
-    the numpy path reproduces zip_with-pads-NULL / divide-by-zero-is-NULL
+    (NULL-sim, nulls-last, cand_id-tiebreak) rankings in both tiers —
+    the numpy tier reproduces zip_with-pads-NULL / divide-by-zero-is-NULL
     semantics, not just the happy path."""
     rows = [
         (0, [1.0, 0.0, 0.0]),
@@ -248,12 +264,18 @@ def test_cosine_topk_engines_equal_on_degenerate_rows(spark):
         (3, [0.0, 0.0, 0.0]),      # zero norm -> NULL sim
         (4, [1.0, 0.0]),           # ragged -> NULL sim
         (5, [-1.0, 0.0, 0.0]),
+        (6, [0.5, 0.5]),           # ragged, the same width as 4
     ]
     e = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
-    q = e.filter(F.col("vec_id").isin(0, 2))  # one real query, one NULL query
-    a = sorted(map(tuple, cosine_topk(e, q, "vec_id", "embedding", k=4, engine="sql").collect()))
-    b = sorted(map(tuple, cosine_topk(e, q, "vec_id", "embedding", k=4, engine="numpy").collect()))
-    assert b == a
+    # a real, a NULL, a zero-norm and a ragged query: the ragged one
+    # scores NULL against the equally ragged row 6 on both tiers too
+    q = e.filter(F.col("vec_id").isin(0, 2, 3, 4))
+    b, a = _at_and_over_cap(
+        monkeypatch, "_COSINE_MAX_QUERY_ROWS", 4,
+        lambda: cosine_topk(e, q, "vec_id", "embedding", k=4),
+    )
+    assert b == a and len(b) == 16
+    assert all(sim is None for qid, _, sim, _ in b if qid != 0)
 
 
 def test_pq_encode_decode_matches_numpy_mirror(spark):
@@ -273,9 +295,9 @@ def test_pq_encode_decode_matches_numpy_mirror(spark):
     rows = [(i, rng.randn(8).astype(float).tolist()) for i in range(40)]
     rows.append((100, None))
     rows.append((101, [1.0, 2.0]))  # ragged (short)
-    # OVER-length (round-9 ADVICE): the SQL engine's per-subspace
-    # `size >= (j+1)*w` guard silently encoded the first d dims; the
-    # wrong-length-to-NULL contract demands NULL from BOTH engines
+    # OVER-length (round-9 ADVICE): a per-subspace `size >= (j+1)*w`
+    # guard would silently encode the first d dims; the wrong-length-to-
+    # NULL contract demands NULL
     rows.append((102, rng.randn(12).astype(float).tolist()))
     df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
     books = pq_codebooks(df, "vec_id", "embedding", m=4, k=5)
@@ -284,13 +306,6 @@ def test_pq_encode_decode_matches_numpy_mirror(spark):
         r["vec_id"]: (r["pq_code"], r["pq_vec"])
         for r in pq_decode(pq_encode(df, books), books).collect()
     }
-    # dual-engine discipline: the SQL column-expression engine must emit
-    # the identical codes (incl. NULL/ragged degenerates)
-    sql_codes = {
-        r["vec_id"]: r["pq_code"]
-        for r in pq_encode(df, books, engine="sql").collect()
-    }
-    assert sql_codes == {i: c for i, (c, _) in got.items()}
     B = [np.array(b) for b in books]
     for i, v in rows:
         code, rec = got[i]
@@ -337,50 +352,79 @@ def test_pq_codebooks_validation(spark):
         pq_codebooks(empty, "vec_id", "embedding", m=3, k=1)
 
 
-def test_cosine_topk_numpy_query_cap(spark):
-    """The numpy engine's driver collect of the query side is bounded:
-    an over-cap query relation raises (pointing at engine='sql') instead
-    of materializing it on the driver (round-8 ADVICE), and the collect
-    itself is limit-capped so even the failing path never pulls the full
-    relation."""
-    import pytest
+def test_cosine_topk_numpy_query_cap(spark, monkeypatch):
+    """The numpy tier's driver collect of the query side is bounded: the
+    one ``limit(cap+1)`` collect job that picks the tier never pulls more
+    than cap+1 rows, and an over-cap query relation runs the distributed
+    tier with the same rows instead of raising."""
+    from science_datalake_spark.operators import similarity as S
 
     e = spark.range(20).select(
         F.col("id").alias("vec_id"),
         F.array(F.rand(seed=1), F.rand(seed=2)).alias("embedding"),
     )
-    with pytest.raises(ValueError, match="max_query_rows"):
-        cosine_topk(e, e, "vec_id", "embedding", k=2, max_query_rows=5)
-    # at or under the cap still works
-    q = e.filter(F.col("vec_id") < 3)
-    assert cosine_topk(e, q, "vec_id", "embedding", k=2, max_query_rows=3).count() == 6
+    assert S._COSINE_MAX_QUERY_ROWS == 65536
+    seen = []
+    probe = S._probe_query_side
+    monkeypatch.setattr(
+        S, "_probe_query_side",
+        lambda *a: seen.append(len(rows := probe(*a))) or rows,
+    )
+    at_cap, over_cap = _at_and_over_cap(
+        monkeypatch, "_COSINE_MAX_QUERY_ROWS", 20,
+        lambda: cosine_topk(e, e, "vec_id", "embedding", k=2),
+    )
+    assert seen == [20, 20]  # at the cap 20 rows; over it cap+1 = 20
+    assert at_cap == over_cap and len(at_cap) == 40
 
 
-def test_knn_embedding_join_engines_equal(spark, sf_oracle):
+def test_knn_embedding_join_engines_equal(spark, sf_oracle, monkeypatch):
+    """knn_embedding_join's two tiers return the same rows on the real
+    fixture: 10 left rows at a cap of 10 (numpy), then at 9 (distributed)."""
     from science_datalake_spark.operators.linkage import knn_embedding_join
 
     e = table(spark, sf_oracle, "embeddings")
     left = e.filter(F.col("vec_id") < 10)
     right = e.filter(F.col("vec_id") >= 10)
-    a = sorted(
-        map(
-            tuple,
-            knn_embedding_join(
-                left, right, "vec_id", "vec_id", "embedding", "embedding",
-                threshold=0.2, engine="sql",
-            ).collect(),
-        )
-    )
-    b = sorted(
-        map(
-            tuple,
-            knn_embedding_join(
-                left, right, "vec_id", "vec_id", "embedding", "embedding",
-                threshold=0.2, engine="numpy",
-            ).collect(),
-        )
+    b, a = _at_and_over_cap(
+        monkeypatch, "_COSINE_MAX_QUERY_ROWS", 10,
+        lambda: knn_embedding_join(
+            left, right, "vec_id", "vec_id", "embedding", "embedding", threshold=0.2
+        ),
     )
     assert b == a and len(b) == 10
+
+
+def test_knn_embedding_join_tiers_agree_on_degenerate_rows(spark, monkeypatch):
+    """NULL, ragged and zero-norm vectors on BOTH sides: a NULL sim never
+    passes the threshold on either tier, so the left rows with no finite
+    candidate drop out identically."""
+    from science_datalake_spark.operators.linkage import knn_embedding_join
+
+    rows = [
+        (0, [1.0, 0.0, 0.0]),
+        (1, [0.9, 0.1, 0.0]),
+        (2, None),
+        (3, [0.0, 0.0, 0.0]),
+        (4, [1.0, 0.0]),
+        (5, [-1.0, 0.5, 0.0]),
+        (10, [0.8, 0.2, 0.1]),
+        (11, None),
+        (12, [0.0, 0.0, 0.0]),
+        (13, [1.0, 1.0]),
+        (14, [-0.5, 0.5, 0.2]),
+    ]
+    df = spark.createDataFrame(rows, "vec_id LONG, embedding ARRAY<DOUBLE>")
+    left = df.filter(F.col("vec_id") < 10)
+    right = df.filter(F.col("vec_id") >= 10)
+    b, a = _at_and_over_cap(
+        monkeypatch, "_COSINE_MAX_QUERY_ROWS", 6,
+        lambda: knn_embedding_join(
+            left, right, "vec_id", "vec_id", "embedding", "embedding", threshold=-2.0
+        ),
+    )
+    assert b == a
+    assert [r[0] for r in b] == [0, 1, 5]
 
 
 def _walk_plan(node, out):
@@ -501,12 +545,11 @@ def test_quantized_ann_recall(spark):
     assert agree / len(exact) >= 0.9, (agree, len(exact))
 
 
-def test_int8_fidelity_engines_equal_and_match_numpy_mirror(spark):
-    """int8_fidelity's numpy (default) and sql engines must agree
-    row-for-row — including the degenerates the contract names (NULL
+def test_int8_fidelity_matches_numpy_mirror(spark):
+    """int8_fidelity must give the degenerates the contract names (NULL
     vector/codes/scale, empty arrays, length mismatch → all-NULL
-    metrics; zero-norm → NULL cosine) — and the happy-path values must
-    match a plain-numpy mirror of the spec."""
+    metrics; zero-norm → NULL cosine) and match a plain-numpy mirror of
+    the spec on every other row."""
     import math
 
     import numpy as np
@@ -535,22 +578,13 @@ def test_int8_fidelity_engines_equal_and_match_numpy_mirror(spark):
 
     cols = ("vec_id", "mse", "maxe", "cosf")
     got_np = {r["vec_id"]: r for r in int8_fidelity(full).select(*cols).collect()}
-    got_sql = {
-        r["vec_id"]: r
-        for r in int8_fidelity(full, engine="sql").select(*cols).collect()
-    }
-    assert got_np.keys() == got_sql.keys()
-    for vid in got_np:
-        a, b = got_np[vid], got_sql[vid]
-        for c in ("mse", "maxe", "cosf"):
-            x, y = a[c], b[c]
-            assert (x is None) == (y is None), (vid, c, x, y)
-            if x is not None:
-                assert math.isclose(x, y, rel_tol=0, abs_tol=2e-8), (vid, c, x, y)
+    assert set(got_np) == set(range(25)) | {100, 101, 200, 201, 202}
 
     # contract rows
     for vid in (101, 200, 201, 202):
-        assert got_np[vid]["mse"] is None and got_np[vid]["cosf"] is None, vid
+        assert (got_np[vid]["mse"], got_np[vid]["maxe"], got_np[vid]["cosf"]) == (
+            None, None, None
+        ), vid
     assert got_np[100]["mse"] == 0.0 and got_np[100]["maxe"] == 0.0
     assert got_np[100]["cosf"] is None  # zero norm
 
@@ -568,11 +602,9 @@ def test_int8_fidelity_engines_equal_and_match_numpy_mirror(spark):
         assert math.isclose(got_np[vid]["cosf"], round(cos, 8), abs_tol=2e-8, rel_tol=0), vid
 
 
-def test_int8_fidelity_sql_engine_is_map_only_single_fold(spark):
-    """The sql engine must stay shuffle-free AND evaluate the fused fold
-    ONCE: the accumulator struct is materialized as one column, so the
-    plan contains exactly one `aggregate(` over the zipped array — the
-    round-9 form paid five independent HOF passes per vector."""
+def test_int8_fidelity_is_map_only(spark):
+    """int8_fidelity must stay shuffle-free: one MapInPandas pass over
+    the quantized rows."""
     from tests import plan_helpers as plans
     from science_datalake_spark.operators.embedding import (
         int8_fidelity,
@@ -582,11 +614,8 @@ def test_int8_fidelity_sql_engine_is_map_only_single_fold(spark):
     df = spark.createDataFrame(
         [(1, [0.1, -0.4, 0.25])], "vec_id LONG, embedding ARRAY<FLOAT>"
     )
-    out = int8_fidelity(quantize_int8(df), engine="sql")
-    plan = plans.physical_plan(out)
-    assert "Exchange" not in plan
-    out_np = int8_fidelity(quantize_int8(df))
-    assert "Exchange" not in plans.physical_plan(out_np)
+    plan = plans.physical_plan(int8_fidelity(quantize_int8(df)))
+    assert "Exchange" not in plan and "MapInPandas" in plan
 
 
 def test_late_interaction_topk_matches_hand_maxsim(spark):
@@ -625,10 +654,10 @@ def test_late_interaction_topk_matches_hand_maxsim(spark):
     assert len(got) == 4
 
 
-def test_late_interaction_engines_agree(spark):
-    """The BLAS engine and the HOF column-expression twin must return the
+def test_late_interaction_engines_agree(spark, monkeypatch):
+    """The BLAS tier and the HOF column-expression tier must return the
     IDENTICAL ranked result (both round half-away to 6 dp before
-    ranking) — the dual-engine contract shared with cosine_topk."""
+    ranking) — the tier contract shared with cosine_topk."""
     import random
 
     from science_datalake_spark.operators.similarity import late_interaction_topk
@@ -640,23 +669,20 @@ def test_late_interaction_engines_agree(spark):
     df = spark.createDataFrame(rows, "vec_id INT, embedding ARRAY<DOUBLE>")
     docs = df.filter("vec_id >= 6")
     queries = df.filter("vec_id < 6")
-    a = late_interaction_topk(
-        docs, queries, "vec_id", "embedding", num_tokens=3, k=4, engine="numpy"
+    ra, rb = _at_and_over_cap(
+        monkeypatch, "_LATE_INTERACTION_MAX_QUERY_ROWS", 6,
+        lambda: late_interaction_topk(
+            docs, queries, "vec_id", "embedding", num_tokens=3, k=4
+        ),
     )
-    b = late_interaction_topk(
-        docs, queries, "vec_id", "embedding", num_tokens=3, k=4, engine="sql"
-    )
-    key = lambda r: (r["query_id"], r["rank"])
-    ra = sorted(a.collect(), key=key)
-    rb = sorted(b.collect(), key=key)
-    assert [tuple(r) for r in ra] == [tuple(r) for r in rb]
+    assert ra == rb
     assert len(ra) == 6 * 4
 
 
-def test_cosine_topk_carry_cols_both_engines(spark):
+def test_cosine_topk_carry_cols_both_engines(spark, monkeypatch):
     """carry_cols rides corpus metadata through the scoring scan into the
     top-k output — identical rows to the join-it-back-on formulation, on
-    both engines (the sim_knn_label_vote round-13 rework)."""
+    both tiers (the sim_knn_label_vote round-13 rework)."""
     import random
 
     from science_datalake_spark.operators.similarity import cosine_topk
@@ -668,36 +694,36 @@ def test_cosine_topk_carry_cols_both_engines(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id INT, embedding ARRAY<DOUBLE>, label STRING")
     q = df.filter("vec_id < 4")
-    want = None
-    for eng in ("numpy", "sql"):
-        top = cosine_topk(
-            df, q, "vec_id", "embedding", k=3, engine=eng, carry_cols=["label"]
-        )
-        got = sorted(
-            (r["query_id"], r["cand_id"], r["sim"], r["label"]) for r in top.collect()
-        )
+    tiers = _at_and_over_cap(
+        monkeypatch, "_COSINE_MAX_QUERY_ROWS", 4,
+        lambda: cosine_topk(
+            df, q, "vec_id", "embedding", k=3, carry_cols=["label"]
+        ).select("query_id", "cand_id", "sim", "label"),
+    )
+    plain = _at_and_over_cap(
+        monkeypatch, "_COSINE_MAX_QUERY_ROWS", 4,
+        lambda: cosine_topk(df, q, "vec_id", "embedding", k=3).select(
+            "query_id", "cand_id", "sim"
+        ),
+    )
+    for got, no_carry in zip(tiers, plain):
         # carried label must equal the candidate's own label
-        assert all(lab == f"lab{cid % 3}" for _, cid, _, lab in got), eng
+        assert all(lab == f"lab{cid % 3}" for _, cid, _, lab in got)
         # and the ranked (query, cand, sim) triples must be unchanged vs
         # the no-carry call
-        plain = sorted(
-            (r["query_id"], r["cand_id"], r["sim"])
-            for r in cosine_topk(df, q, "vec_id", "embedding", k=3, engine=eng).collect()
-        )
-        assert [(a, b, c) for a, b, c, _ in got] == plain, eng
-        want = want or got
-        assert got == want  # engines agree
+        assert [(a, b, c) for a, b, c, _ in got] == no_carry
+    assert tiers[0] == tiers[1] and len(tiers[0]) == 12  # tiers agree
     import pytest
 
     with pytest.raises(ValueError, match="carry_cols"):
         cosine_topk(df, q, "vec_id", "embedding", k=3, carry_cols=["sim"])
 
 
-def test_late_interaction_null_ragged_rank_last_when_scores_negative(spark):
+def test_late_interaction_null_ragged_rank_last_when_scores_negative(spark, monkeypatch):
     """The round-12 advice scenario: raw MaxSim has no normalization, so a
     NULL/ragged doc vector zero-filled by the matrix builder would score
     exactly 0.0 and BEAT every real doc whenever all real dot products
-    are negative. Both engines must rank NULL and ragged docs last with a
+    are negative. Both tiers must rank NULL and ragged docs last with a
     NULL score instead."""
     from science_datalake_spark.operators.similarity import late_interaction_topk
 
@@ -716,21 +742,19 @@ def test_late_interaction_null_ragged_rank_last_when_scores_negative(spark):
         ],
         "vec_id INT, embedding ARRAY<DOUBLE>",
     )
-    for eng in ("numpy", "sql"):
-        rows = late_interaction_topk(
-            docs, queries, "vec_id", "embedding", num_tokens=2, k=4, engine=eng
-        ).collect()
-        by_rank = {r["rank"]: (r["doc_id"], r["score"]) for r in rows}
-        assert by_rank[1] == (10, -2.0), eng
-        assert by_rank[2] == (11, -4.0), eng
+    for rows in _at_and_over_cap(
+        monkeypatch, "_LATE_INTERACTION_MAX_QUERY_ROWS", 1,
+        lambda: late_interaction_topk(
+            docs, queries, "vec_id", "embedding", num_tokens=2, k=4
+        ).select("rank", "doc_id", "score"),
+    ):
         # null/ragged docs take ranks 3-4 (doc_id asc) with NULL scores
-        assert by_rank[3] == (12, None), eng
-        assert by_rank[4] == (13, None), eng
+        assert rows == [(1, 10, -2.0), (2, 11, -4.0), (3, 12, None), (4, 13, None)]
 
 
-def test_late_interaction_ragged_mask_num_tokens_col(spark):
+def test_late_interaction_ragged_mask_num_tokens_col(spark, monkeypatch):
     """num_tokens_col excludes padding token positions from the MaxSim
-    max on BOTH engines. d10 has 1 real token [-1,0] padded with a zero
+    max on BOTH tiers. d10 has 1 real token [-1,0] padded with a zero
     token: unmasked, the zero pad wins the max (0 > -1); masked, the
     score is the real token's dot. A doc with 0 real tokens scores NULL,
     ranked last."""
@@ -747,22 +771,22 @@ def test_late_interaction_ragged_mask_num_tokens_col(spark):
         ],
         "vec_id INT, embedding ARRAY<DOUBLE>, n_tok INT",
     )
-    for eng in ("numpy", "sql"):
-        rows = late_interaction_topk(
+    for rows in _at_and_over_cap(
+        monkeypatch, "_LATE_INTERACTION_MAX_QUERY_ROWS", 1,
+        lambda: late_interaction_topk(
             docs, queries, "vec_id", "embedding", num_tokens=2, k=3,
-            engine=eng, num_tokens_col="n_tok",
-        ).collect()
-        by_rank = {r["rank"]: (r["doc_id"], r["score"]) for r in rows}
-        assert by_rank[1] == (10, -2.0), eng
-        assert by_rank[2] == (11, -6.0), eng
-        assert by_rank[3][0] == 12 and by_rank[3][1] is None, eng
+            num_tokens_col="n_tok",
+        ).select("rank", "doc_id", "score"),
+    ):
+        assert rows == [(1, 10, -2.0), (2, 11, -6.0), (3, 12, None)]
 
 
-def test_late_interaction_engines_agree_with_nulls(spark):
-    """Dual-engine agreement on a fixture that CONTAINS null, ragged and
+def test_late_interaction_engines_agree_with_nulls(spark, monkeypatch):
+    """Tier agreement on a fixture that CONTAINS null, ragged and
     zero-padded rows on both sides (the round-12 engines-agree test used
     only clean vectors, which is exactly why the null-vector divergence
-    survived review)."""
+    survived review). The ragged query 7 matches the width of the ragged
+    docs, and still scores NULL on both tiers."""
     import random
 
     from science_datalake_spark.operators.similarity import late_interaction_topk
@@ -782,21 +806,18 @@ def test_late_interaction_engines_agree_with_nulls(spark):
         rows, "vec_id INT, embedding ARRAY<DOUBLE>, n_tok INT"
     )
     docs = df.filter("vec_id >= 6")
-    queries = df.filter("vec_id < 6")
+    queries = df.filter("vec_id < 6 OR vec_id = 7")
     for ntc in (None, "n_tok"):
-        a = late_interaction_topk(
-            docs, queries, "vec_id", "embedding", num_tokens=3, k=4,
-            engine="numpy", num_tokens_col=ntc,
+        ra, rb = _at_and_over_cap(
+            monkeypatch, "_LATE_INTERACTION_MAX_QUERY_ROWS", 7,
+            lambda: late_interaction_topk(
+                docs, queries, "vec_id", "embedding", num_tokens=3, k=4,
+                num_tokens_col=ntc,
+            ),
         )
-        b = late_interaction_topk(
-            docs, queries, "vec_id", "embedding", num_tokens=3, k=4,
-            engine="sql", num_tokens_col=ntc,
-        )
-        key = lambda r: (r["query_id"], r["rank"])
-        ra = sorted(a.collect(), key=key)
-        rb = sorted(b.collect(), key=key)
-        assert [tuple(r) for r in ra] == [tuple(r) for r in rb], ntc
-        assert len(ra) == 6 * 4, ntc
+        assert ra == rb, ntc
+        assert len(ra) == 7 * 4, ntc
+        assert all(score is None for qid, _, score, _ in ra if qid in (3, 7)), ntc
 
 
 def test_pq_codebooks_session_cache(spark):
@@ -868,40 +889,65 @@ def test_cosine_top1_prefix_dims_equals_independent_passes(spark):
             (tag, r["left_id"]): (r["right_id"], r["similarity"])
             for r in knn_embedding_join(
                 qd, cd, "vec_id", "vec_id", "embedding", "embedding",
-                threshold=-2.0, engine="numpy",
+                threshold=-2.0,
             ).collect()
         }
         got = {k: v for k, v in fused.items() if k[0] == tag}
         assert got == ref, f"variant d={d}: {got} != {ref}"
 
 
-def test_knn_embedding_join_query_rows_matches_own_collect(spark):
-    """query_rows (the shared-collect device) yields the identical result
-    to letting the engine collect the query side itself, and is rejected
-    by the sql engine, whose broadcast is already lazy."""
+def test_cosine_top1_prefix_dims_raises_over_its_cap(spark, monkeypatch):
+    """cosine_top1_prefix_dims has no distributed tier: a query side over
+    the driver cap raises, whether collected by the operator itself or
+    passed in pre-collected as query_rows; at the cap it scores."""
     import pytest
 
-    from science_datalake_spark.operators.linkage import knn_embedding_join
+    from science_datalake_spark.operators import similarity as S
 
-    df = spark.range(30).select(
+    df = spark.range(12).select(
         F.col("id").alias("vec_id"),
         F.array(
             (F.col("id") % 7 + 1).cast("double"), (F.col("id") % 5).cast("double")
         ).alias("embedding"),
     )
-    q = df.filter(F.col("vec_id") < 5)
-    c = df.filter(F.col("vec_id") >= 5)
+    q = df.filter(F.col("vec_id") < 4)
+    c = df.filter(F.col("vec_id") >= 4)
     qrows = [(r["vec_id"], r["embedding"]) for r in q.collect()]
-    a = sorted(map(tuple, knn_embedding_join(
-        q, c, "vec_id", "vec_id", "embedding", "embedding", threshold=0.1
-    ).collect()))
-    b = sorted(map(tuple, knn_embedding_join(
-        q, c, "vec_id", "vec_id", "embedding", "embedding", threshold=0.1,
-        query_rows=qrows,
-    ).collect()))
-    assert a == b and len(a) == 5
-    with pytest.raises(ValueError, match="numpy-engine"):
-        knn_embedding_join(
-            q, c, "vec_id", "vec_id", "embedding", "embedding",
-            threshold=0.1, engine="sql", query_rows=qrows,
+    monkeypatch.setattr(S, "_COSINE_MAX_QUERY_ROWS", 4)
+    own = S.cosine_top1_prefix_dims(c, q, "vec_id", "embedding", dims=[1, None])
+    given = S.cosine_top1_prefix_dims(
+        c, q, "vec_id", "embedding", dims=[1, None], query_rows=qrows
+    )
+    assert sorted(map(tuple, own.collect())) == sorted(map(tuple, given.collect()))
+    assert own.count() == 8
+    monkeypatch.setattr(S, "_COSINE_MAX_QUERY_ROWS", 3)
+    with pytest.raises(ValueError, match="exceeds 3 rows"):
+        S.cosine_top1_prefix_dims(c, q, "vec_id", "embedding", dims=[1, None])
+    with pytest.raises(ValueError, match="exceeds 3 rows"):
+        S.cosine_top1_prefix_dims(
+            c, q, "vec_id", "embedding", dims=[1, None], query_rows=qrows
         )
+
+
+def test_late_interaction_width_must_split_into_num_tokens(spark, monkeypatch):
+    """10-dim vectors do not split into 4 tokens: both tiers raise one
+    ValueError naming num_tokens before any plan is built, instead of the
+    driver tier failing in a reshape and the distributed tier scoring the
+    first 8 dims."""
+    import pytest
+
+    from science_datalake_spark.operators import similarity as S
+
+    df = spark.range(6).select(
+        F.col("id").cast("int").alias("vec_id"),
+        F.array(*[(F.col("id") + i).cast("double") for i in range(10)]).alias("embedding"),
+    )
+    queries = df.filter("vec_id < 2")
+    for cap in (2, 1):
+        monkeypatch.setattr(S, "_LATE_INTERACTION_MAX_QUERY_ROWS", cap)
+        with pytest.raises(ValueError, match="num_tokens=4"):
+            S.late_interaction_topk(df, queries, "vec_id", "embedding", num_tokens=4, k=2)
+        # a width that splits still scores on this tier
+        assert S.late_interaction_topk(
+            df, queries, "vec_id", "embedding", num_tokens=5, k=2
+        ).count() == 4

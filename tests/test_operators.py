@@ -613,7 +613,7 @@ def test_semantic_dedup_dominated_rule(spark):
     mirror: a row is dropped IFF some smaller-id row in its cluster is
     within cosine >= threshold. Cross-cluster near-identical vectors must
     NOT pair (that is the SemDeDup cost model — candidate search never
-    leaves the cluster), and the centroid relation must broadcast."""
+    leaves the cluster), and no join may be a cartesian."""
     import math
 
     from science_datalake_spark.operators.dedup import semantic_dedup
@@ -636,14 +636,6 @@ def test_semantic_dedup_dominated_rule(spark):
     rows = {r["vec_id"]: (r["bucket"], r["semantic_dup"]) for r in out.collect()}
     assert set(rows) == set(vecs)
 
-    # the numpy (default) and sql engines must agree row-for-row
-    sql_out = semantic_dedup(
-        df, "vec_id", "embedding", cents, threshold=0.9, engine="sql"
-    )
-    assert rows == {
-        r["vec_id"]: (r["bucket"], r["semantic_dup"]) for r in sql_out.collect()
-    }
-
     def cos(a, b):
         d = sum(x * y for x, y in zip(a, b))
         return d / math.sqrt(sum(x * x for x in a) * sum(y * y for y in b))
@@ -663,11 +655,11 @@ def test_semantic_dedup_dominated_rule(spark):
         )
         assert rows[i] == (expect_bucket, expect_drop), (i, rows[i])
 
-    # sql engine: the intra-cluster join must not be a cartesian — the
-    # small side broadcasts (numpy engine has no join at all: mapInPandas
-    # + per-bucket applyInPandas)
-    plan = sql_out._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+    # no join at all, so no cartesian: a map-only assignment, then the
+    # pair scan per bucket group
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan and "FlatMapGroupsInPandas" in plan
+    assert "Join" not in plan and "CartesianProduct" not in plan
 
 
 def test_exact_group_quantiles_null_key_group_with_counts(spark):
@@ -1067,7 +1059,8 @@ def test_ivf_assign_degenerate_centroid_never_captures(spark):
     """A zero-norm (or NULL) centroid yields NULL/NaN cosine for every
     vector; it must rank LAST (the window formulation's desc-nulls-last),
     never capture the corpus — regression for the array_min NULL-struct
-    ordering bug in both the SQL expression path and the numpy engine."""
+    ordering bug in both ivf_assign's column expressions and
+    semantic_dedup's numpy assignment."""
     from science_datalake_spark.operators.dedup import semantic_dedup
     from science_datalake_spark.operators.similarity import ivf_assign
     from science_datalake_spark.util import local_df
@@ -1086,22 +1079,20 @@ def test_ivf_assign_degenerate_centroid_never_captures(spark):
     }
     assert got == {1: 1, 2: 2}, got
 
-    for engine in ("numpy", "sql"):
-        sem = {
-            r["vec_id"]: r["bucket"]
-            for r in semantic_dedup(
-                corpus, "vec_id", "embedding", cents, 0.9, engine=engine
-            ).collect()
-        }
-        assert sem == {1: 1, 2: 2}, (engine, sem)
+    sem = {
+        r["vec_id"]: r["bucket"]
+        for r in semantic_dedup(corpus, "vec_id", "embedding", cents, 0.9).collect()
+    }
+    assert sem == {1: 1, 2: 2}, sem
 
 
 def test_semantic_dedup_null_and_ragged_vectors(spark):
     """NULL / wrong-length embedding rows must not crash the numpy engine
     (np.array on None/ragged lists throws or goes object-dtype — advisor
-    finding) and must match the SQL engine's NULL-sim semantics on BOTH
-    engines: the row assigns to the lowest cent_id, is never marked a dup,
-    and never causes a real vector to be dropped."""
+    finding) and must get the column expressions' NULL-sim semantics
+    (ivf_assign, the DuckDB oracle): the row assigns to the lowest
+    cent_id, is never marked a dup, and never causes a real vector to be
+    dropped."""
     from science_datalake_spark.operators.dedup import semantic_dedup
     from science_datalake_spark.util import local_df
 
@@ -1119,16 +1110,11 @@ def test_semantic_dedup_null_and_ragged_vectors(spark):
         [(0, [1.0, 0.0]), (1, [0.0, 1.0])],
         "cent_id BIGINT, cent_vec ARRAY<DOUBLE>",
     )
-    results = {}
-    for engine in ("numpy", "sql"):
-        results[engine] = {
-            r["vec_id"]: (r["bucket"], r["semantic_dup"])
-            for r in semantic_dedup(
-                corpus, "vec_id", "embedding", cents, 0.9, engine=engine
-            ).collect()
-        }
-    assert results["numpy"] == results["sql"], results
-    got = results["numpy"]
+    got = {
+        r["vec_id"]: (r["bucket"], r["semantic_dup"])
+        for r in semantic_dedup(corpus, "vec_id", "embedding", cents, 0.9).collect()
+    }
+    assert set(got) == {1, 2, 3, 4}, got
     assert got[2] == (0, False), got  # NULL → lowest cent_id, never dup
     assert got[3] == (0, False), got  # ragged → same NULL-sim treatment
     assert got[1] == (0, False) and got[4] == (0, True), got

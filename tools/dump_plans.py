@@ -29,17 +29,7 @@ def main() -> None:
     if len(sys.argv) > 4:
         names = [n.strip() for n in sys.argv[4].split(",") if n.strip()]
 
-    from science_datalake_spark.queries import load_all, load_aux
-    from science_datalake_spark.session import (
-        SCAN_OPEN_COST_BYTES,
-        get_spark,
-        suggest_aqe,
-        suggest_shuffle_partitions,
-    )
-
-    queries, _ = load_all()
-    aux_q, _ = load_aux()
-    queries = {**aux_q, **queries}
+    queries = registry()
     if names is None:
         names = sorted(queries)
     unknown = [n for n in names if n not in queries]
@@ -47,9 +37,36 @@ def main() -> None:
         print(f"unknown queries: {unknown}", file=sys.stderr)
         sys.exit(2)
 
+    spark = bench_session(sf_dir)
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        path = os.path.join(out_dir, f"{name}{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(plan_text(queries[name], spark, sf_dir))
+        print(f"wrote {path}")
+
+
+def registry() -> dict:
+    """Every registered query (aux and main) by name."""
+    from science_datalake_spark.queries import load_all, load_aux
+
+    queries, _ = load_all()
+    aux_q, _ = load_aux()
+    return {**aux_q, **queries}
+
+
+def bench_session(sf_dir: str, app_name: str = "sds-plan-dump"):
+    """The session bench.py runs ``sf_dir`` under."""
+    from science_datalake_spark.session import (
+        SCAN_OPEN_COST_BYTES,
+        get_spark,
+        suggest_aqe,
+        suggest_shuffle_partitions,
+    )
+
     parts = suggest_shuffle_partitions(sf_dir)
     spark = get_spark(
-        "sds-plan-dump",
+        app_name,
         **{
             "spark.sql.shuffle.partitions": str(parts),
             "spark.sql.files.openCostInBytes": str(SCAN_OPEN_COST_BYTES),
@@ -63,20 +80,18 @@ def main() -> None:
     )
     spark.conf.set("spark.sql.shuffle.partitions", str(parts))
     spark.conf.set("spark.sql.maxMetadataStringLength", "100000")
+    return spark
 
-    os.makedirs(out_dir, exist_ok=True)
-    for name in names:
-        try:
-            df = queries[name](spark, sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-        except Exception as e:  # keep going; record the failure
-            plan = f"PLAN DUMP FAILED: {e}\n"
-        path = os.path.join(out_dir, f"{name}{suffix}.txt")
-        with open(path, "w") as f:
-            f.write(plan)
-        print(f"wrote {path}")
+
+def plan_text(query, spark, sf_dir: str) -> str:
+    """The query's formatted physical plan, or one failure line."""
+    try:
+        df = query(spark, sf_dir)
+        return df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+    except Exception as e:  # keep going; record the failure
+        return f"PLAN DUMP FAILED: {e}\n"
 
 
 if __name__ == "__main__":
