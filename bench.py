@@ -136,11 +136,12 @@ def main() -> None:
             timings[name] = -1.0
             print(f"# bench error in {name}: {e}", file=sys.stderr)
         # No blanket clearCache here (tried in r12, reverted same round):
-        # it destroyed the DELIBERATE session-scoped materializations —
-        # the unify spine (_UNIFIED_CACHE, the analog of the reference's
-        # materialized unified-papers table), the LM model and LSH/IVF
-        # registries — forcing every consumer query to rebuild them
-        # (vignettes 0.15 s -> 4.7 s each at sf1). Transient per-query
+        # it destroyed the DELIBERATE session-scoped materializations of
+        # the session-cache registry (cache.py) — the unify spine (the
+        # analog of the reference's materialized unified-papers table),
+        # the IVF indexes and the dedup/ranking slots — forcing every
+        # consumer query to rebuild them (vignettes 0.15 s -> 4.7 s each
+        # at sf1). Transient per-query
         # relations release themselves instead: operators use
         # localCheckpoint (ContextCleaner frees blocks when the handles
         # are GC'd) or unpersist explicitly once results are

@@ -156,7 +156,7 @@ class ManifestAcquirer:
         for attempt in range(1, self.max_attempts + 1):
             try:
                 self.fetcher(item.url, part)
-            except Exception as e:
+            except Exception as e:  # boundary: a user-supplied fetcher's error is a retried attempt
                 last_error = f"fetch: {e}"
                 # the .part file is deliberately KEPT on fetch failure —
                 # a later attempt or a whole new run hands it back to the

@@ -27,6 +27,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from science_datalake_spark.cache import cached
 from science_datalake_spark.sources.sinks import read_footer, read_parquet, table_signature
 
 #: Tables the driver testdata provides (TESTDATA.md).
@@ -109,9 +110,6 @@ def _register_convenience_views(spark: SparkSession, present: set[str]) -> None:
             """
         )
 
-
-#: (applicationId, sf_dir, table) → (the table's ``table_signature``, plan)
-_TABLE_CACHE: dict[tuple[str, str, str], tuple[tuple, DataFrame]] = {}
 
 #: operator declaration of events.ts's physical shape for stores whose
 #: Parquet footer the driver cannot probe (values: nanos | ntz | tz | absent)
@@ -210,11 +208,12 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Direct DataFrame accessor (no view registration needed).
 
     The logical plan (not the data) is memoized per (session, dir, table)
-    and checked against the table's data-file ``(size, mtime_ns)``
-    signature on every call: repeated queries skip file listing and
-    footer reads — the same role the reference's persistent view catalog
-    plays (create_unified_db.py:63-92) — and a rewritten file replaces
-    the entry. The schema is declared from the footers
+    in the session-cache registry (``cache.cached``) and checked against
+    the table's data-file ``(size, mtime_ns)`` signature on every call:
+    repeated queries skip file listing and footer reads — the same role
+    the reference's persistent view catalog plays
+    (create_unified_db.py:63-92) — and a rewritten file replaces the
+    entry. The schema is declared from the footers
     (``sinks.read_parquet``), so building the plan starts no Spark job.
 
     ``events.ts`` is normalized to TIMESTAMP whatever the file's physical
@@ -228,14 +227,18 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     NTZ micros are cast to TIMESTAMP under the session's UTC zone, which
     preserves the wall-clock value bit-for-bit.
     """
-    # applicationId (not id(spark)): CPython recycles object addresses, so
-    # a dead session's cache entries could alias a new session's key
-    key = (spark.sparkContext.applicationId, sf_dir, name)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    signature = table_signature(path)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None and cached[0] == signature:
-        return cached[1]
+    return cached(
+        spark,
+        "catalog.table",
+        (sf_dir, name),
+        table_signature(path),
+        lambda: _read_table(spark, path, name),
+        cap=64,
+    )
+
+
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     kind = _events_ts_kind(path) if name == "events" else "absent"
     if kind == "unknown":
         # unprobeable remote footer: the operator may declare the shape
@@ -279,5 +282,4 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
         elif dt == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _TABLE_CACHE[key] = (signature, df)
     return df

@@ -25,38 +25,24 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from science_datalake_spark.util import unpersist
-
-
-#: last persisted result per operator slot — released on the next call
-_LIVE_HANDLES: dict[str, DataFrame] = {}
+from science_datalake_spark.cache import hold
 
 
 def _materialize_release(out: DataFrame, *inputs: DataFrame, slot: str) -> DataFrame:
-    """Eagerly materialize ``out`` (persist + count), then unpersist the
-    ``inputs`` it consumed — and the PREVIOUS call's result for the same
-    ``slot``.
+    """Eagerly materialize ``out`` (persist + count) as the one result
+    ``slot`` keeps (``cache.hold``: the previous call's result for the
+    slot is released), then unpersist the ``inputs`` it consumed.
 
-    Cache-lifetime contract for the self-join operators below: the big
-    intermediate (signatures / shingle relation) is cached only for the
-    duration of the join; the *small* result (candidate pairs, near-linear
-    in corpus size) is returned persisted so downstream actions don't
-    recompute the join. Query wrappers typically return a DERIVED frame
-    and drop this handle, so the slot registry keeps at most ONE result
-    cached per operator across repeated calls (bench loops, the CLI
-    shell, the driver harness) — total cache growth is bounded instead of
-    linear in call count (round-1 verdict finding + round-2 review).
-    Callers wanting the cache gone immediately still ``unpersist()`` the
-    returned handle themselves."""
-    prev = _LIVE_HANDLES.pop(slot, None)
-    if prev is not None:
-        # it may belong to a stopped SparkSession (CLI restart)
-        unpersist(prev)
-    out = out.persist()
+    Cache lifetime of the self-join operators below: the big intermediate
+    (signatures / shingle relation) is cached only for the join; the
+    *small* result (candidate pairs, near-linear in corpus size) is
+    returned persisted so downstream actions don't recompute the join,
+    and repeated calls keep at most ONE result per operator (round-1
+    verdict finding + round-2 review)."""
+    out = hold(slot, out)
     out.count()
     for df in inputs:
         df.unpersist()
-    _LIVE_HANDLES[slot] = out
     return out
 
 

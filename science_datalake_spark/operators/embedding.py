@@ -231,20 +231,8 @@ def int8_fidelity(
 # RESIDENT data — FAISS composes them as IVF-PQ).
 
 
-#: (applicationId, cache_key, m, k) → (the corpus files'
-#: ``frame_signature``, codebooks)
-_PQ_BOOK_CACHE: dict = {}
-_PQ_BOOK_CACHE_CAP = 64  # FIFO-bounded like _IVF_INDEX_CACHE (entries are
-# m*k*(d/m) python floats — small, but a registry should never be unbounded)
-
-
 def pq_codebooks(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    m: int = 8,
-    k: int = 16,
-    cache_key: str | None = None,
+    corpus: DataFrame, id_col: str, vec_col: str, m: int = 8, k: int = 16
 ) -> list[list[list[float]]]:
     """Deterministic per-subspace PQ codebooks: the subvectors of the
     ``k`` corpus vectors with the smallest ids (exemplar seeding — the
@@ -257,46 +245,34 @@ def pq_codebooks(
     relational twin derives the identical codebook with
     ``ORDER BY id LIMIT k``.
 
-    ``cache_key``: the ivf_index contract — the codebook collect is a
-    TakeOrdered JOB at call time, re-paid by every PQ query in a session
-    without it (round-13 profile: ~0.2-0.3 s per construction at sf0.1).
-    The key must identify the CORPUS (plus any filters baked into it);
-    m and k are folded in automatically, and a rewritten corpus file
-    (its ``frame_signature``) rebuilds the entry. None (default) opts
-    out."""
+    The codebook collect is a TakeOrdered JOB (~0.2-0.3 s at sf0.1), so
+    the books are cached as ``ivf_index`` caches its index, with ``m``
+    in the key (at most 64 codebooks)."""
+    from science_datalake_spark.cache import cached_over
     from science_datalake_spark.operators.similarity import as_double_vec
-    from science_datalake_spark.sources.sinks import frame_signature
 
-    if cache_key is not None:
-        key = (corpus.sparkSession.sparkContext.applicationId, cache_key, m, k)
-        signature = frame_signature(corpus)
-        hit = _PQ_BOOK_CACHE.get(key)
-        if hit is not None and hit[0] == signature:
-            return hit[1]
-        _PQ_BOOK_CACHE.pop(key, None)
+    def build() -> list[list[list[float]]]:
+        rows = (
+            corpus.filter(F.col(vec_col).isNotNull())
+            .select(F.col(id_col).alias("__i"), as_double_vec(vec_col).alias("__v"))
+            .orderBy("__i")
+            .limit(k)
+            .collect()
+        )
+        if not rows:
+            raise ValueError("pq_codebooks needs a non-empty corpus")
+        d = len(rows[0]["__v"])
+        if d % m != 0:
+            raise ValueError(f"vector dim {d} must divide into m={m} subspaces")
+        w = d // m
+        return [
+            [[float(x) for x in r["__v"][j * w : (j + 1) * w]] for r in rows]
+            for j in range(m)
+        ]
 
-    rows = (
-        corpus.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("__i"), as_double_vec(vec_col).alias("__v"))
-        .orderBy("__i")
-        .limit(k)
-        .collect()
+    return cached_over(
+        corpus, "embedding.pq_codebooks", (id_col, vec_col, m, k), build, cap=64
     )
-    if not rows:
-        raise ValueError("pq_codebooks needs a non-empty corpus")
-    d = len(rows[0]["__v"])
-    if d % m != 0:
-        raise ValueError(f"vector dim {d} must divide into m={m} subspaces")
-    w = d // m
-    books = [
-        [[float(x) for x in r["__v"][j * w : (j + 1) * w]] for r in rows]
-        for j in range(m)
-    ]
-    if cache_key is not None:
-        while len(_PQ_BOOK_CACHE) >= _PQ_BOOK_CACHE_CAP:
-            _PQ_BOOK_CACHE.pop(next(iter(_PQ_BOOK_CACHE)))
-        _PQ_BOOK_CACHE[key] = (signature, books)
-    return books
 
 
 def _pq_book_df(spark, books: list[list[list[float]]]):

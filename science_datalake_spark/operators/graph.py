@@ -43,14 +43,16 @@ def _release_checkpoint(df: DataFrame | None) -> None:
     persistent-RDD count flat. Only call this AFTER the next iteration's
     checkpoint has been eagerly materialized: its blocks no longer read
     the previous ones (that ordering is the same no-recompute assumption
-    localCheckpoint itself makes). Internal-API access is guarded — on any
-    mismatch we degrade to the old leak-until-GC behavior, never to an
-    error."""
+    localCheckpoint itself makes). A plan with no ``LogicalRDD`` at its
+    root fails JVM-side (``Py4JError``) and is left to GC; any other
+    error propagates."""
+    from py4j.protocol import Py4JError
+
     if df is None:
         return
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:
+    except Py4JError:
         pass
 
 
@@ -243,14 +245,15 @@ def _union_find_labels_local(us: list, vs: list) -> dict:
 #: star rounds before connected_components_star fails loudly; O(log n)
 #: rounds suffice, so 30 covers any graph that fits a cluster
 _STAR_MAX_ROUNDS = 30
+#: connected_components_star's driver tier: a normalized edge set of at
+#: most this many rows is collected and labeled by union-find ...
+_CC_SMALL_GRAPH_EDGES = 200_000
+#: ... unless its string/binary ids sum to more than this many bytes
+_CC_SMALL_GRAPH_BYTES = 64 * 1024 * 1024
 
 
 def connected_components_star(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    small_graph_edges: int = 200_000,
-    small_graph_bytes: int = 64 * 1024 * 1024,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """(node, component) labels by the large-star/small-star alternation
     (Kiveris et al., "Connected Components in MapReduce and Beyond") —
@@ -268,7 +271,7 @@ def connected_components_star(
     labels. Per-round localCheckpoint truncates lineage; the previous
     round's blocks are released each time.
 
-    ``small_graph_edges`` (round-14 optimization 1, guide §3.1's
+    ``_CC_SMALL_GRAPH_EDGES`` (round-14 optimization 1, guide §3.1's
     "broadcast the side that fits" applied to graphs): when the
     normalized distinct edge set is at most this many rows, collect it
     via Arrow and label with a driver-side union-find instead of running
@@ -281,15 +284,14 @@ def connected_components_star(
     attaches the larger root under the smaller, so every root is the
     component minimum) and pinned by test against the distributed rounds.
     The gate costs one count on the already-checkpointed normalized
-    relation; above it, the rounds run exactly as before. Set 0 to
-    disable. This is a size-adaptive engine tier, not a local-mode tune:
-    at 100 TB the edge set blows past any such threshold and the O(log n)
-    rounds carry the query, exactly like a sort-merge join past the
-    broadcast threshold.
+    relation; above it, the rounds run exactly as before. This is a
+    size-adaptive engine tier, not a local-mode tune: at 100 TB the edge
+    set blows past any such threshold and the O(log n) rounds carry the
+    query, exactly like a sort-merge join past the broadcast threshold.
 
     Two r15 guards (round-14 ADVICE):
 
-    - ``small_graph_bytes`` caps the COLLECTED size, not just the row
+    - ``_CC_SMALL_GRAPH_BYTES`` caps the COLLECTED size, not just the row
       count — with wide string node ids (long URLs/hashes) 200k edges
       can be hundreds of MB on the driver plus a comparable Python dict.
       For string/binary ids the byte estimate is ``sum(octet_length)``
@@ -317,8 +319,8 @@ def connected_components_star(
         .localCheckpoint(eager=True)
     )
     id_type = norm.schema["u"].dataType
-    fast_path_type = not isinstance(id_type, (DoubleType, FloatType))
-    if small_graph_edges and fast_path_type:
+    use_fast_path = False
+    if not isinstance(id_type, (DoubleType, FloatType)):
         if isinstance(id_type, (StringType, BinaryType)):
             gate = norm.agg(
                 F.count(F.lit(1)).alias("n"),
@@ -331,11 +333,9 @@ def connected_components_star(
         else:
             n_edges = norm.count()
             est_bytes = n_edges * 16  # two fixed-width ids
-        use_fast_path = n_edges <= small_graph_edges and (
-            not small_graph_bytes or est_bytes <= small_graph_bytes
+        use_fast_path = (
+            n_edges <= _CC_SMALL_GRAPH_EDGES and est_bytes <= _CC_SMALL_GRAPH_BYTES
         )
-    else:
-        use_fast_path = False
     if use_fast_path:
         import pandas as pd
 

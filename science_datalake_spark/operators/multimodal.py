@@ -83,7 +83,7 @@ def _pil_decode(data: bytes) -> np.ndarray | None:
         if img.mode not in ("L", "RGB"):
             img = img.convert("RGB")
         return np.asarray(img, dtype=np.uint8)
-    except Exception:
+    except Exception:  # boundary: outside bytes; any decoder error means "cannot decode"
         return None
 
 

@@ -22,7 +22,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from science_datalake_spark.util import unpersist
+from science_datalake_spark.cache import hold
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -350,9 +350,6 @@ def unigram_logprob_scores(df: DataFrame, id_col: str, text_col: str) -> DataFra
     )
 
 
-_SCORE_BUCKETS_CACHE: dict[str, DataFrame] = {}
-
-
 def score_buckets(
     scores: DataFrame,
     score_col: str,
@@ -405,19 +402,11 @@ def score_buckets(
 
     # the scores relation is scanned by the threshold pass (eager: the
     # driver collects len(cuts) doubles) AND by every action the caller
-    # runs on the returned frame — persist it for the op's duration so an
-    # expensive upstream (the unigram-LM pipeline) computes ONCE. One
-    # result cached per slot (the dedup cache-lifetime discipline); the
-    # cached relation is the caller's input handle, typically the narrow
-    # (id, score) projection, which spills to disk at scale.
-    prev = _SCORE_BUCKETS_CACHE.pop("slot", None)
-    if prev is not None:
-        unpersist(prev)
-    scores = scores.persist()
-    # no eager count: the boundary-sampler action materializes the cache
-    # as a side effect (an explicit count A/B'd 0.4 s SLOWER at sf0.1 —
-    # one more per-action plan compile than it saves)
-    _SCORE_BUCKETS_CACHE["slot"] = scores
+    # runs on the returned frame — persist it so an expensive upstream
+    # (the unigram-LM pipeline) computes ONCE, one held per slot. No eager
+    # count: the boundary-sampler action materializes the cache as a side
+    # effect (an explicit count A/B'd 0.4 s SLOWER at sf0.1)
+    scores = hold("ranking.score_buckets", scores)
 
     # NaN -> NULL before anything touches the scores: NaN sorts above
     # every double, so it would poison the upper-quantile interpolation

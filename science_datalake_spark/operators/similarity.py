@@ -34,8 +34,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from science_datalake_spark.cache import cached_over
 from science_datalake_spark.operators.windows import top_k_per_key
-from science_datalake_spark.util import unpersist
 
 
 def as_double_vec(col: str | Column) -> Column:
@@ -516,18 +516,8 @@ def ivf_assign(
     )
 
 
-#: (applicationId, cache_key, k) → (the corpus files' ``frame_signature``,
-#: centroids, persisted assigned)
-_IVF_INDEX_CACHE: dict[tuple[str, str, int], tuple[tuple, DataFrame, DataFrame]] = {}
-_IVF_INDEX_CACHE_CAP = 4
-
-
 def ivf_index(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int = 8,
-    cache_key: str | None = None,
+    corpus: DataFrame, id_col: str, vec_col: str, k: int = 8
 ) -> tuple[DataFrame, DataFrame]:
     """Build (centroids, assigned) — the IVF index — ONCE per corpus.
 
@@ -535,40 +525,21 @@ def ivf_index(
     is the expensive, amortizable half of IVF: FAISS builds it once and
     serves millions of probes against it. At 100 TB the build is a batch
     job whose output is written as a table partitioned/bucketed by
-    ``bucket`` (so probes prune files); here the Spark-local equivalent is
-    a persisted, eagerly materialized ``assigned`` frame cached per
-    (session, cache_key) in a bounded slot registry — repeat queries
-    (bench loops, the CLI shell, an ANN service) measure PROBING, not a
+    ``bucket`` (so probes prune files); here it is a persisted, eagerly
+    materialized ``assigned`` frame in the session-cache registry
+    (``cache.cached_over``: keyed by the corpus plan — every filter baked
+    into it — with the columns and ``k``; at most 4 indexes; a rewritten
+    corpus file rebuilds it), so repeat queries measure PROBING, not a
     rebuild per call (round-4 verdict: the rebuild hid an 8.8x ratio
-    inside the timed path). Each entry keeps the ``frame_signature`` of
-    the files the corpus reads; a rewritten file replaces (and
-    unpersists) the entry. Pass ``cache_key=None`` to opt out.
-    """
-    from science_datalake_spark.sources.sinks import frame_signature
+    inside the timed path)."""
 
-    if cache_key is not None:
-        # k is part of the key (a k=16 request must never get a k=8
-        # codebook back); cache_key itself must identify the corpus and
-        # any filter baked into it
-        key = (corpus.sparkSession.sparkContext.applicationId, cache_key, k)
-        signature = frame_signature(corpus)
-        hit = _IVF_INDEX_CACHE.get(key)
-        if hit is not None and hit[0] == signature:
-            return hit[1], hit[2]
-        if hit is not None:
-            # before the rebuild: a persist of an equal plan would
-            # otherwise find the stale cached data
-            unpersist(_IVF_INDEX_CACHE.pop(key)[2])
-    cents = exemplar_centroids(corpus, id_col, vec_col, k=k)
-    assigned = ivf_assign(corpus, cents, id_col, vec_col)
-    if cache_key is None:
+    def build() -> tuple[DataFrame, DataFrame]:
+        cents = exemplar_centroids(corpus, id_col, vec_col, k=k)
+        assigned = ivf_assign(corpus, cents, id_col, vec_col).persist()
+        assigned.count()
         return cents, assigned
-    assigned = assigned.persist()
-    assigned.count()
-    while len(_IVF_INDEX_CACHE) >= _IVF_INDEX_CACHE_CAP:
-        unpersist(_IVF_INDEX_CACHE.pop(next(iter(_IVF_INDEX_CACHE)))[2])
-    _IVF_INDEX_CACHE[key] = (signature, cents, assigned)
-    return cents, assigned
+
+    return cached_over(corpus, "similarity.ivf_index", (id_col, vec_col, k), build, cap=4)
 
 
 def ivf_index_write(

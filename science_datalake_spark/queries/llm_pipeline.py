@@ -664,9 +664,9 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/similarity.py); the DuckDB oracle replays the identical
     quantize/probe/rank pipeline relationally."""
     e = table(spark, sf_dir, "embeddings")
-    # index build amortized across calls (ivf_index slot cache): repeat
+    # index build amortized across calls (ivf_index session cache): repeat
     # executions — bench best-of-3, a served ANN workload — time PROBING
-    cents, assigned = S.ivf_index(e, "vec_id", "embedding", k=8, cache_key=sf_dir)
+    cents, assigned = S.ivf_index(e, "vec_id", "embedding", k=8)
     q = e.filter(F.col("vec_id") < 12)
     out = S.ivf_topk(assigned, cents, q, "vec_id", "embedding", k=5, n_probe=2)
     return out.select("query_id", "cand_id", "sim", "rank").orderBy("query_id", "rank")
@@ -771,15 +771,12 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL embeddings are excluded up front on BOTH engines (round-9
     # ADVICE: pq_codebooks filtered NULLs internally while the oracle's
     # corpus CTE did not — a latent codebook-parity break the moment the
-    # fixture gains NULL vectors). The cache key carries the filter so a
-    # sibling query's unfiltered index is never returned for this corpus.
+    # fixture gains NULL vectors). The filter is part of the corpus's
+    # semantic hash, which keys the session caches, so a sibling query's
+    # unfiltered index is never returned for this corpus.
     e = table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    books = pq_codebooks(
-        e, "vec_id", "embedding", m=8, k=16, cache_key=sf_dir + "|nonnull"
-    )
-    cents, assigned = S.ivf_index(
-        e, "vec_id", "embedding", k=8, cache_key=sf_dir + "|nonnull"
-    )
+    books = pq_codebooks(e, "vec_id", "embedding", m=8, k=16)
+    cents, assigned = S.ivf_index(e, "vec_id", "embedding", k=8)
     compressed = pq_decode(pq_encode(assigned, books, vec_col="vec"), books).select(
         "vec_id", F.col("pq_vec").alias("vec"), "bucket"
     )
@@ -2417,9 +2414,7 @@ def sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
-    books = pq_codebooks(
-        e, "vec_id", "embedding", m=8, k=16, cache_key=sf_dir + "|nonnull"
-    )
+    books = pq_codebooks(e, "vec_id", "embedding", m=8, k=16)
     dec = pq_decode(pq_encode(e, books, "embedding"), books)
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     rec = F.col("pq_vec")

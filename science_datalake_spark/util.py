@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -52,26 +54,19 @@ def _split_top_level(schema: str) -> list[str]:
     return parts
 
 
-_OPTIONAL_CACHE: dict[str, object] = {}
-
-
+@functools.cache
 def optional_import(name: str):
     """``try: import`` upgrade probe — the reference's own pattern for
     langdetect (convert_fulltext.py:78-87: import, degrade to a heuristic
     when absent). Returns the module, or None when it is not installed; a
-    module that is installed but fails to import raises. The result is
-    cached per process so hot paths (per-payload decode) don't re-pay the
-    failed-import path scan."""
+    module that is installed but fails to import raises. Cached per
+    process: hot paths (per-payload decode) don't re-pay the path scan."""
     import importlib
 
-    if name in _OPTIONAL_CACHE:
-        return _OPTIONAL_CACHE[name]
     try:
-        mod = importlib.import_module(name)
+        return importlib.import_module(name)
     except ImportError:
-        mod = None
-    _OPTIONAL_CACHE[name] = mod
-    return mod
+        return None
 
 
 def round_half_away(x: float, digits: int) -> float:

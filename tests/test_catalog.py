@@ -187,17 +187,18 @@ def test_unknown_ts_kind_int64_raises_unless_declared(spark, tmp_path, monkeypat
     import pytest
 
     import science_datalake_spark.catalog as cat
+    from science_datalake_spark import cache
 
     nanos_dir = _write_events(
         tmp_path, "unk_nanos_sf", pa.timestamp("ns"), [1_700_000_000_000_000_000]
     )
     monkeypatch.setattr(cat, "_events_ts_kind", lambda path: "unknown")
-    cat._TABLE_CACHE.clear()
+    cache.clear()
     with pytest.raises(ValueError, match=cat.EVENTS_TS_KIND_ENV):
         cat.table(spark, nanos_dir, "events")
 
     monkeypatch.setenv(cat.EVENTS_TS_KIND_ENV, "nanos")
-    cat._TABLE_CACHE.clear()
+    cache.clear()
     df = cat.table(spark, nanos_dir, "events")
     assert dict(df.dtypes)["ts"] == "timestamp"
     assert df.select(F.unix_micros("ts")).first()[0] == 1_700_000_000_000_000
@@ -207,18 +208,18 @@ def test_unknown_ts_kind_int64_raises_unless_declared(spark, tmp_path, monkeypat
         tmp_path, "unk_plain_sf", pa.int64(), [1_700_000_000_000_000]
     )
     monkeypatch.setenv(cat.EVENTS_TS_KIND_ENV, "absent")
-    cat._TABLE_CACHE.clear()
+    cache.clear()
     df2 = cat.table(spark, plain_dir, "events")
     assert dict(df2.dtypes)["ts"] == "bigint"
     assert df2.select("ts").first()[0] == 1_700_000_000_000_000
 
     # a typo'd declaration fails loud, naming the bad value
     monkeypatch.setenv(cat.EVENTS_TS_KIND_ENV, "nano")
-    cat._TABLE_CACHE.clear()
+    cache.clear()
     with pytest.raises(ValueError, match="not a recognized"):
         cat.table(spark, nanos_dir, "events")
 
-    cat._TABLE_CACHE.clear()
+    cache.clear()
     # don't leak the nanos conf into later tests (sibling-test discipline)
     spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
 
@@ -270,8 +271,8 @@ def test_table_cache_follows_rewritten_file(spark, sf_oracle, tmp_path):
     assert after.columns == before.columns + ["note"]
     assert after.count() == 7
     assert {r["note"] for r in after.select("note").collect()} == {"new"}
-    keys = [k for k in cat._TABLE_CACHE if k[1:] == (d, "orders")]
-    assert len(keys) == 1 and cat._TABLE_CACHE[keys[0]][1] is after
+    # the new plan replaced the stale entry: the next call hits it
+    assert cat.table(spark, d, "orders") is after
 
 
 def test_events_ts_kind_unreadable_local_footer_raises(spark, tmp_path):

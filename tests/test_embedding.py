@@ -89,45 +89,41 @@ def test_ivf_nprobe_full_probe_equals_brute_force(spark, sf_oracle):
 
 
 def test_ivf_index_amortizes_build(spark, sf_smoke):
-    """ivf_index caches (centroids, assigned) per (session, key): the
-    second call returns the SAME persisted assigned frame (no rebuild —
-    the round-4 verdict's in-loop index-build fix), a different key
-    builds fresh, and eviction keeps the registry bounded."""
+    """ivf_index caches (centroids, assigned) per (session, corpus,
+    columns, k): the second call returns the SAME persisted assigned frame
+    (no rebuild — the round-4 verdict's in-loop index-build fix); another
+    k builds fresh, and eviction keeps the registry bounded."""
     from science_datalake_spark.catalog import table
     from science_datalake_spark.operators import similarity as S
 
     e = table(spark, sf_smoke, "embeddings")
-    c1, a1 = S.ivf_index(e, "vec_id", "embedding", k=4, cache_key="k1")
-    c2, a2 = S.ivf_index(e, "vec_id", "embedding", k=4, cache_key="k1")
+    c1, a1 = S.ivf_index(e, "vec_id", "embedding", k=4)
+    c2, a2 = S.ivf_index(e, "vec_id", "embedding", k=4)
     assert a1 is a2 and c1 is c2
     assert a1.storageLevel.useMemory  # persisted, eagerly materialized
-    _, a3 = S.ivf_index(e, "vec_id", "embedding", k=4, cache_key="k2")
+    _, a3 = S.ivf_index(e, "vec_id", "embedding", k=3)
     assert a3 is not a1
-    # uncached opt-out returns a fresh (uncached-slot) plan object
-    _, a4 = S.ivf_index(e, "vec_id", "embedding", k=4, cache_key=None)
-    assert a4 is not a1
-    # eviction: filling the registry past its cap unpersists the oldest.
-    # Fill entries use a different k so their plans can't alias a1's in
-    # the cache manager's plan-equality lookup.
-    for i in range(S._IVF_INDEX_CACHE_CAP + 1):
-        S.ivf_index(e, "vec_id", "embedding", k=5, cache_key=f"fill{i}")
-    assert len(S._IVF_INDEX_CACHE) <= S._IVF_INDEX_CACHE_CAP
-    assert not a1.storageLevel.useMemory  # k1 evicted and unpersisted
+    # eviction: four more indexes fill the cap of 4 and unpersist the
+    # oldest. Fill entries use other k values so their plans can't alias
+    # a1's in the cache manager's plan-equality lookup.
+    for k in range(5, 9):
+        S.ivf_index(e, "vec_id", "embedding", k=k)
+    assert not a1.storageLevel.useMemory  # evicted and unpersisted
 
 
 def test_ivf_and_pq_caches_follow_rewritten_embeddings(spark, sf_oracle, tmp_path):
-    """The IVF index and PQ codebook caches are keyed by the caller's
-    sf_dir string; a rewrite of embeddings.parquet in place must rebuild
-    them. After the vectors are rotated by one row, sim_ivf_topk and
-    sim_ivfpq_topk in the same session equal a run with those entries
-    cleared (and differ from the first run, so the rewrite is seen)."""
+    """The IVF index and PQ codebook cache entries are keyed by the
+    corpus plan, which a rewrite of embeddings.parquet in place does not
+    change; the files' signature must rebuild them. After the vectors are
+    rotated by one row, sim_ivf_topk and sim_ivfpq_topk in the same
+    session equal a run with the registry cleared (and differ from the
+    first run, so the rewrite is seen)."""
     import shutil
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from science_datalake_spark.operators import embedding as E
-    from science_datalake_spark.operators import similarity as S
+    from science_datalake_spark import cache
     from science_datalake_spark.queries import load_all, load_aux
 
     registry = {**load_aux()[0], **load_all()[0]}
@@ -146,10 +142,7 @@ def test_ivf_and_pq_caches_follow_rewritten_embeddings(spark, sf_oracle, tmp_pat
     i = tbl.schema.get_field_index("embedding")
     pq.write_table(tbl.set_column(i, tbl.schema.field(i), rotated), path)
     after = run()
-    for key in [k for k in S._IVF_INDEX_CACHE if k[1].startswith(sf)]:
-        S._IVF_INDEX_CACHE.pop(key)[-1].unpersist()
-    for key in [k for k in E._PQ_BOOK_CACHE if k[1].startswith(sf)]:
-        del E._PQ_BOOK_CACHE[key]
+    cache.clear()
     cleared = run()
     assert after == cleared
     assert all(after[n] != first[n] for n in names)
@@ -821,22 +814,59 @@ def test_late_interaction_engines_agree_with_nulls(spark, monkeypatch):
 
 
 def test_pq_codebooks_session_cache(spark):
-    """cache_key memoizes the codebook per (app, key, m, k) — the
-    ivf_index contract: repeat PQ queries measure encoding/probing, not a
-    TakeOrdered rebuild per construction. Different m/k never share."""
+    """pq_codebooks memoizes the codebook per (app, corpus, columns, m,
+    k) — the ivf_index contract: repeat PQ queries measure
+    encoding/probing, not a TakeOrdered rebuild per construction.
+    Different m/k never share, and a filtered corpus gets its own entry."""
     from science_datalake_spark.operators.embedding import pq_codebooks
 
     df = spark.createDataFrame(
         [(i, [float(i), float(i + 1), 0.5, 1.5]) for i in range(6)],
         "vec_id LONG, embedding ARRAY<DOUBLE>",
     )
-    a = pq_codebooks(df, "vec_id", "embedding", m=2, k=3, cache_key="t")
-    b = pq_codebooks(df, "vec_id", "embedding", m=2, k=3, cache_key="t")
+    a = pq_codebooks(df, "vec_id", "embedding", m=2, k=3)
+    b = pq_codebooks(df, "vec_id", "embedding", m=2, k=3)
     assert a is b
-    c = pq_codebooks(df, "vec_id", "embedding", m=2, k=2, cache_key="t")
+    c = pq_codebooks(df, "vec_id", "embedding", m=2, k=2)
     assert c is not a and len(c[0]) == 2
-    d = pq_codebooks(df, "vec_id", "embedding", m=2, k=3)  # opt-out
+    d = pq_codebooks(df.filter(F.col("vec_id") >= 0), "vec_id", "embedding", m=2, k=3)
     assert d is not a and d == a
+
+
+def test_vector_caches_key_on_corpus_and_columns(spark, sf_smoke):
+    """ivf_index and pq_codebooks key each entry on the corpus itself and
+    on its columns: two vector columns of one corpus, and a filtered
+    variant of it, each get their own entry and their own result, and
+    equal calls — the corpus built again by a second table() call
+    included — return the same object."""
+    from science_datalake_spark.catalog import table
+    from science_datalake_spark.operators import similarity as S
+    from science_datalake_spark.operators.embedding import pq_codebooks
+
+    def corpus():
+        e = table(spark, sf_smoke, "embeddings").filter(F.col("embedding").isNotNull())
+        return e.withColumn("reversed", F.reverse("embedding"))
+
+    e = corpus()
+    odd = e.filter(F.col("vec_id") % 2 == 1)
+    calls = [(e, "embedding"), (e, "reversed"), (odd, "embedding")]
+
+    first = [S.ivf_index(df, "vec_id", col, k=4) for df, col in calls]
+    assert len({id(assigned) for _, assigned in first}) == 3
+    for (df, col), (cents, assigned) in zip(calls, first):
+        want = {r["vec_id"]: [float(x) for x in r[col]] for r in df.collect()}
+        got = {r["vec_id"]: list(r["vec"]) for r in assigned.collect()}
+        assert got == want, col
+        assert S.ivf_index(df, "vec_id", col, k=4)[1] is assigned
+    assert S.ivf_index(corpus(), "vec_id", "reversed", k=4)[1] is first[1][1]
+
+    books = [pq_codebooks(df, "vec_id", col, m=4, k=3) for df, col in calls]
+    assert books[0] != books[1] and books[0] != books[2]
+    rows = sorted(e.collect(), key=lambda r: r["vec_id"])
+    assert books[1][0][0] == [float(x) for x in rows[0]["reversed"][:16]]
+    for (df, col), b in zip(calls, books):
+        assert pq_codebooks(df, "vec_id", col, m=4, k=3) is b
+    assert pq_codebooks(corpus(), "vec_id", "embedding", m=4, k=3) is books[0]
 
 
 def test_cosine_top1_prefix_dims_equals_independent_passes(spark):

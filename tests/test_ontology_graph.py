@@ -461,20 +461,46 @@ def test_connected_components_raises_on_non_convergence(spark, monkeypatch):
     chain = spark.createDataFrame(
         [(f"n{i}", f"n{i+1}") for i in range(6)], "src STRING, dst STRING"
     )
+    _force_rounds(monkeypatch)
     monkeypatch.setattr(G, "_STAR_MAX_ROUNDS", 1)
     with _pytest.raises(RuntimeError, match="did not converge"):
-        G.connected_components_star(chain, small_graph_edges=0)
+        G.connected_components_star(chain)
     monkeypatch.undo()
-    ok = G.connected_components_star(chain, small_graph_edges=0)
+    _force_rounds(monkeypatch)
+    ok = G.connected_components_star(chain)
     assert {r["comp"] for r in ok.collect()} == {"n0"}
 
 
-def test_connected_components_star_small_graph_gate(spark):
+def _force_rounds(monkeypatch) -> None:
+    """No edge set fits a negative row cap, so connected_components_star
+    runs its distributed rounds (the empty one included)."""
+    from science_datalake_spark.operators import graph as G
+
+    monkeypatch.setattr(G, "_CC_SMALL_GRAPH_EDGES", -1)
+
+
+def _count_union_find(monkeypatch) -> list:
+    """Record each run of connected_components_star's union-find tier."""
+    from science_datalake_spark.operators import graph as G
+
+    calls: list = []
+    real = G._union_find_labels_local
+
+    def counted(u, v):
+        calls.append(len(u))
+        return real(u, v)
+
+    monkeypatch.setattr(G, "_union_find_labels_local", counted)
+    return calls
+
+
+def test_connected_components_star_small_graph_gate(spark, monkeypatch):
     """The round-14-opt bounded fast path (driver union-find when the
-    normalized edge set fits ``small_graph_edges``) must be invisible in
-    the results: identical labels at any gate setting, identical
+    normalized edge set fits ``_CC_SMALL_GRAPH_EDGES``) must be invisible
+    in the results: identical labels at any gate setting, identical
     null-endpoint semantics (dropped, as the comparison filters always
     did), identical schema on non-string ids and on empty input."""
+    from science_datalake_spark.operators import graph as G
     from science_datalake_spark.operators.graph import connected_components_star
 
     edges = spark.createDataFrame(
@@ -483,17 +509,21 @@ def test_connected_components_star_small_graph_gate(spark):
     )
     want = {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x"), ("z", "z")}
     # normalized distinct edge count here is 4 (null rows drop): thresholds
-    # above, exactly at, and below the count, plus disabled
+    # above, exactly at, and below the count, plus none
     for gate in (200_000, 4, 3, 1, 0):
+        monkeypatch.setattr(G, "_CC_SMALL_GRAPH_EDGES", gate)
         got = {
             (r["node"], r["comp"])
-            for r in connected_components_star(edges, small_graph_edges=gate).collect()
+            for r in connected_components_star(edges).collect()
         }
-        assert got == want, f"small_graph_edges={gate}"
+        assert got == want, f"_CC_SMALL_GRAPH_EDGES={gate}"
+    monkeypatch.undo()
 
     ints = spark.createDataFrame([(2, 1), (3, 2), (9, 9)], "src LONG, dst LONG")
     fast = connected_components_star(ints)
-    slow = connected_components_star(ints, small_graph_edges=0)
+    _force_rounds(monkeypatch)
+    slow = connected_components_star(ints)
+    monkeypatch.undo()
     assert fast.schema == slow.schema
     assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, slow.collect())) == [
         (1, 1),
@@ -505,10 +535,66 @@ def test_connected_components_star_small_graph_gate(spark):
     empty = spark.createDataFrame([], "src STRING, dst STRING")
     out = connected_components_star(empty)
     assert out.count() == 0
-    assert out.schema == connected_components_star(empty, small_graph_edges=0).schema
+    _force_rounds(monkeypatch)
+    assert out.schema == connected_components_star(empty).schema
 
 
-def test_connected_components_cache_flat_across_iterations(spark):
+def test_release_checkpoint_swallows_only_py4j_errors(spark):
+    """A frame with no ``LogicalRDD`` at its root (nothing checkpointed to
+    free) fails JVM-side with a ``Py4JError``, which is swallowed; any
+    other error propagates."""
+    import types
+
+    import pytest
+
+    from science_datalake_spark.operators import graph as G
+
+    G._release_checkpoint(None)
+    G._release_checkpoint(spark.range(3))
+    with pytest.raises(AttributeError):
+        G._release_checkpoint(types.SimpleNamespace(_jdf=None))
+
+
+def test_connected_components_star_row_cap_boundary(spark, monkeypatch):
+    """An edge set of exactly ``_CC_SMALL_GRAPH_EDGES`` normalized rows
+    takes the union-find tier; one row more takes the distributed rounds.
+    Both give the same labels."""
+    from science_datalake_spark.operators import graph as G
+
+    edges = spark.createDataFrame(
+        [("b", "a"), ("a", "b"), ("c", "b"), ("x", "y"), ("z", "z")],
+        "src STRING, dst STRING",
+    )  # 4 normalized edges: (b, a) twice folds into one
+    want = {("a", "a"), ("b", "a"), ("c", "a"), ("x", "x"), ("y", "x"), ("z", "z")}
+    calls = _count_union_find(monkeypatch)
+    labels = {}
+    for cap in (4, 3):
+        monkeypatch.setattr(G, "_CC_SMALL_GRAPH_EDGES", cap)
+        labels[cap] = {tuple(r) for r in G.connected_components_star(edges).collect()}
+    assert calls == [4], "union-find at the cap only, the rounds at cap+1"
+    assert labels[4] == labels[3] == want
+
+
+def test_connected_components_star_byte_cap_boundary(spark, monkeypatch):
+    """String ids whose octet lengths sum to exactly
+    ``_CC_SMALL_GRAPH_BYTES`` take the union-find tier; one byte more
+    takes the distributed rounds. Both give the same labels."""
+    from science_datalake_spark.operators import graph as G
+
+    rows = [("u" * 30 + str(i), "v" * 20 + str(i % 3)) for i in range(6)]
+    edges = spark.createDataFrame(rows, "src STRING, dst STRING")
+    total = sum(len(a) + len(b) for a, b in rows)  # 6 distinct normalized edges
+    calls = _count_union_find(monkeypatch)
+    labels = {}
+    for cap in (total, total - 1):
+        monkeypatch.setattr(G, "_CC_SMALL_GRAPH_BYTES", cap)
+        labels[cap] = sorted(map(tuple, G.connected_components_star(edges).collect()))
+    assert calls == [6], "union-find at the cap only, the rounds at cap+1"
+    assert labels[total] == labels[total - 1]
+    assert {c for _, c in labels[total]} == {"u" * 30 + str(j) for j in range(3)}
+
+
+def test_connected_components_cache_flat_across_iterations(spark, monkeypatch):
     """The per-iteration localCheckpoint must not accumulate cached RDDs
     (round-3 advice finding): a 60-hop chain needs several rounds, but
     at most the FINAL result's blocks may remain cached afterwards. The
@@ -526,9 +612,10 @@ def test_connected_components_cache_flat_across_iterations(spark):
     chain = spark.createDataFrame(
         [(f"n{i:03d}", f"n{i+1:03d}") for i in range(60)], "src STRING, dst STRING"
     )
-    # small_graph_edges=0 forces the distributed rounds — the per-round
-    # cache discipline is exactly what this test pins
-    out = connected_components_star(chain, small_graph_edges=0)
+    # the distributed rounds, forced — the per-round cache discipline is
+    # exactly what this test pins
+    _force_rounds(monkeypatch)
+    out = connected_components_star(chain)
     rows = out.collect()
     assert len(rows) == 61
     assert {r["comp"] for r in rows} == {"n000"}
@@ -590,7 +677,7 @@ def test_tfidf_vectors_shape(spark, sf_oracle):
     assert vecs.count() == 50
 
 
-def test_connected_components_star_random_graphs_vs_union_find(spark):
+def test_connected_components_star_random_graphs_vs_union_find(spark, monkeypatch):
     """Star contraction vs a pure-Python union-find oracle on seeded
     random graphs (sparse, dense, and forest-shaped)."""
     import random
@@ -634,10 +721,9 @@ def test_connected_components_star_random_graphs_vs_union_find(spark):
         # distributed rounds forced (the default gate would route these
         # tiny graphs to the driver-side union-find — which this oracle
         # IS, so that comparison would be vacuous)
-        got = {
-            r["node"]: r["comp"]
-            for r in connected_components_star(df, small_graph_edges=0).collect()
-        }
+        _force_rounds(monkeypatch)
+        got = {r["node"]: r["comp"] for r in connected_components_star(df).collect()}
+        monkeypatch.undo()
         assert got == expected, f"seed={seed}"
         # the bounded fast path must agree with both
         fast = {
@@ -787,7 +873,7 @@ def test_calibration_report_perfect_and_random(spark):
     assert got["o"]["ece"] == 0.4 and got["o"]["brier"] == 0.41
 
 
-def test_connected_components_star_rounds_match_fast_path(spark):
+def test_connected_components_star_rounds_match_fast_path(spark, monkeypatch):
     """The distributed star rounds label identically to the union-find
     tier on every graph class — dense blob, 5-chain, 41-hop chain,
     degree-skewed hub star, pair, self-loop singleton — and both equal
@@ -806,11 +892,11 @@ def test_connected_components_star_rounds_match_fast_path(spark):
     want.update({n: "hub" for _, n in hub})
     want["hub"] = "hub"
     want.update({"x": "x", "y": "x", "z": "z"})
-    # small_graph_edges=0 forces the distributed rounds: with the default
-    # gate this fixture takes the union-find fast path
-    rounds = sorted(
-        map(tuple, connected_components_star(edges, small_graph_edges=0).collect())
-    )
+    # the distributed rounds, forced: with the default gate this fixture
+    # takes the union-find fast path
+    _force_rounds(monkeypatch)
+    rounds = sorted(map(tuple, connected_components_star(edges).collect()))
+    monkeypatch.undo()
     fast = sorted(map(tuple, connected_components_star(edges).collect()))
     assert rounds == fast == sorted(want.items())
 
@@ -818,7 +904,7 @@ def test_connected_components_star_rounds_match_fast_path(spark):
 def test_connected_components_star_fast_path_guards(spark, monkeypatch):
     """Round-15 ADVICE guards on the driver union-find tier: (1) the
     fast path is byte-capped, not just row-capped — wide string ids
-    above ``small_graph_bytes`` route to the distributed rounds; (2)
+    above ``_CC_SMALL_GRAPH_BYTES`` route to the distributed rounds; (2)
     fractional node ids skip the fast path entirely (Python NaN
     comparisons disagree with Spark's NaN-largest ordering), with
     identical labels either way on NaN-free data."""
@@ -831,21 +917,17 @@ def test_connected_components_star_fast_path_guards(spark, monkeypatch):
         [("u" * 200 + str(i), "v" * 200 + str(i % 3)) for i in range(6)],
         "src STRING, dst STRING",
     )
-    want = sorted(
-        map(tuple, G.connected_components_star(wide, small_graph_edges=0).collect())
-    )
+    _force_rounds(monkeypatch)
+    want = sorted(map(tuple, G.connected_components_star(wide).collect()))
+    monkeypatch.undo()
     # under the default byte gate this tiny graph IS fast-pathed...
     assert sorted(
         map(tuple, G.connected_components_star(wide).collect())
     ) == want
     # ...but a 100-byte cap routes it to the distributed rounds
     monkeypatch.setattr(G, "_union_find_labels_local", boom)
-    assert sorted(
-        map(
-            tuple,
-            G.connected_components_star(wide, small_graph_bytes=100).collect(),
-        )
-    ) == want
+    monkeypatch.setattr(G, "_CC_SMALL_GRAPH_BYTES", 100)
+    assert sorted(map(tuple, G.connected_components_star(wide).collect())) == want
 
     floats = spark.createDataFrame(
         [(2.0, 1.0), (3.0, 2.0), (9.5, 9.5)], "src DOUBLE, dst DOUBLE"
@@ -855,9 +937,5 @@ def test_connected_components_star_fast_path_guards(spark, monkeypatch):
     assert got == [(1.0, 1.0), (2.0, 1.0), (3.0, 1.0), (9.5, 9.5)]
     monkeypatch.undo()
     # and the labels equal the forced-distributed ones
-    assert got == sorted(
-        map(
-            tuple,
-            G.connected_components_star(floats, small_graph_edges=0).collect(),
-        )
-    )
+    _force_rounds(monkeypatch)
+    assert got == sorted(map(tuple, G.connected_components_star(floats).collect()))

@@ -39,6 +39,7 @@ _BATTERY = "SURVEY §2.8: convert_openalex.py sub-table extraction (LATERAL UNNE
 KEEP: dict[str, str] = {
     "acquisition.ManifestAcquirer": "SURVEY §3.2 download step: resumable, checksum-verified fetch",
     "acquisition.ontology_manifest": "SURVEY §3.2 download step: the ontology sources' manifest",
+    "cache.clear": "ROADMAP item 2: drop the session caches to time a cold build again",
     "config.find_datalake_root": "SURVEY §3.1: DB_PATH resolution (walk up for datalake.json)",
     "config.load_config": "SURVEY §3.1: reads the datalake.json that find_datalake_root finds",
     "evaluation.evaluate_alignment": "SURVEY §5 item 2: alignment P/R/F1 at thresholds",

@@ -344,16 +344,14 @@ def test_shared_relation_queries_reuse_cached_blocks(spark, sf_oracle):
     assert "ExistingRDD" in p, p
 
 
-def test_iterative_graph_ops_persist_invariant_relations(spark):
+def test_iterative_graph_ops_persist_invariant_relations(spark, monkeypatch):
     """pagerank joins the degree-annotated edge relation and the node set
     every iteration. Without a persist each round re-executes the edge
     relation's entire upstream lineage. Pin the invariant cache; and pin
     that connected_components_star, whose rounds read localCheckpoints
     instead, leaves nothing in the CacheManager."""
-    from science_datalake_spark.operators.graph import (
-        connected_components_star,
-        pagerank,
-    )
+    from science_datalake_spark.operators import graph as G
+    from science_datalake_spark.operators.graph import pagerank
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (4, 5)], ["src", "dst"]
@@ -370,12 +368,8 @@ def test_iterative_graph_ops_persist_invariant_relations(spark):
     spark.catalog.clearCache()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     for gate in (200_000, 0):
-        labels = {
-            (r["node"], r["comp"])
-            for r in connected_components_star(
-                edges, small_graph_edges=gate
-            ).collect()
-        }
+        monkeypatch.setattr(G, "_CC_SMALL_GRAPH_EDGES", gate)
+        labels = {(r["node"], r["comp"]) for r in G.connected_components_star(edges).collect()}
         assert labels == {(1, 1), (2, 1), (3, 1), (4, 4), (5, 4)}
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
     spark.catalog.clearCache()

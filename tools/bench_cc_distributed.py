@@ -9,8 +9,9 @@ fixture's lineitem relation (deterministic, no RNG): edges
 chains AND big stars — >200k distinct normalized edges at sf1+. Times:
 
   star_window       distributed rounds
-  union_find        the driver tier FORCED (gate raised above the edge
-                    count) — the A/B baseline beside the rounds
+  union_find        the driver tier FORCED (``graph._CC_SMALL_GRAPH_EDGES``
+                    and ``_CC_SMALL_GRAPH_BYTES`` raised above the edge
+                    set) — the A/B baseline beside the rounds
 
 and checks both label sets are identical before timing.
 
@@ -35,7 +36,7 @@ def main() -> None:
     mult = int(sys.argv[3]) if len(sys.argv) > 3 else 4
 
     from science_datalake_spark.catalog import table
-    from science_datalake_spark.operators.graph import connected_components_star
+    from science_datalake_spark.operators import graph as G
     from science_datalake_spark.session import (
         SCAN_OPEN_COST_BYTES,
         get_spark,
@@ -90,15 +91,18 @@ def main() -> None:
     def labels(df):
         return df.groupBy("comp").count()
 
+    def tier(edge_cap: int, byte_cap: int):
+        def run():
+            G._CC_SMALL_GRAPH_EDGES, G._CC_SMALL_GRAPH_BYTES = edge_cap, byte_cap
+            return labels(G.connected_components_star(edges()))
+
+        return run
+
+    # the rounds run above the caps; the union-find tier's caps are raised
+    # past the edge set (two 8-byte ids per edge)
     variants = {
-        "star_window": lambda: labels(
-            connected_components_star(edges(), small_graph_edges=0)
-        ),
-        "union_find": lambda: labels(
-            connected_components_star(
-                edges(), small_graph_edges=10 * n_norm, small_graph_bytes=0
-            )
-        ),
+        "star_window": tier(0, 0),
+        "union_find": tier(10 * n_norm, 10 * n_norm * 16),
     }
     # identity across engines first
     base = sorted(map(tuple, variants["star_window"]().collect()))
